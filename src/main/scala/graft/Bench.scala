@@ -93,20 +93,30 @@ object Bench {
     def dropBlocks(): Unit =
       try spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       catch { case _: Throwable => }
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
-      (1 to reps).map { _ =>
+    // min over the reps, or None when a rep throws: a failed attempt's
+    // wall time is not a timing, so the query is reported under "failed"
+    def time(name: String,
+             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : Option[Double] = {
+      val ts = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        val ok = try { fn(spark, sfDir).count(); true } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $name failed: $e"); false
+        }
         val dt = (System.nanoTime() - t0) / 1e9
         dropBlocks()
-        dt
-      }.min
+        if (ok) Some(dt) else None
+      }
+      if (ts.contains(None)) None else Some(ts.flatten.min)
+    }
     var qi = 0
-    val results = selected.map { case (name, fn) =>
+    val timed = selected.map { case (name, fn) =>
       qi += 1
       if (qi % 25 == 0) System.gc()
-      name -> time(fn)
+      name -> time(name, fn)
     }
+    val results = timed.collect { case (n, Some(t)) => n -> t }
 
     // Self-adjudication (round-6 verdict ask): suite-order timings inflate
     // 4-6x under late-suite JVM state — q10-q13 in BENCH_r06 measured
@@ -133,16 +143,19 @@ object Bench {
     // fresh driver for the adjudication pass — rerun numbers must measure
     // the query, not the end-of-suite driver state
     if (suspects.nonEmpty) recycle()
-    val reruns = suspects.flatMap { n =>
-      selected.find(_._1 == n).map { case (_, fn) => n -> time(fn) }
+    val rerunTimes = suspects.flatMap { n =>
+      selected.find(_._1 == n).map { case (_, fn) => n -> time(n, fn) }
     }
+    val reruns = rerunTimes.collect { case (n, Some(t)) => n -> t }
+    val failed = (timed ++ rerunTimes).collect { case (n, None) => n }
+    val passed = results.filterNot { case (n, _) => failed.contains(n) }
     // 3-decimal formatting keeps the whole line under ~2 KB so it survives
     // the driver's bounded tail capture intact (BENCH_r03 "parsed": null —
     // the 9-significant-digit line was truncated mid-JSON)
     def f3(v: Double): String = f"$v%.3f"
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + f3(v) }
+    val qs = passed.map { case (k, v) => s"\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val total = if (passed.nonEmpty) passed.map(_._2).sum else 0.0
     // Two stdout lines, full map FIRST and compact summary LAST: the
     // driver's bounded tail capture (~2.5 KB) kept the per-query map in
     // round 4 but the r05 compact-only line left the judge nothing to
@@ -150,8 +163,9 @@ object Bench {
     // tail now holds (most of) the full map plus the complete summary.
     val rr = reruns.map { case (k, v) => s"\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
-    val summary = s"""{"metric":"total","value":${f3(total)},"unit":"sec","reps":$reps,"nqueries":${results.size},"nreruns":${reruns.size},"sf":"$sfDir"}"""
-    val full = s"""{"metric":"total","value":${f3(total)},"unit":"sec","reps":$reps,"queries":$qs,"reruns":$rr,"sf":"$sfDir"}"""
+    val fl = failed.map(n => s"\"" + n + "\"").mkString("[", ",", "]")
+    val summary = s"""{"metric":"total","value":${f3(total)},"unit":"sec","reps":$reps,"nqueries":${passed.size},"nreruns":${reruns.size},"failed":$fl,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":${f3(total)},"unit":"sec","reps":$reps,"queries":$qs,"reruns":$rr,"failed":$fl,"sf":"$sfDir"}"""
     // file copy as well as stdout: the round-1 driver parse missed the
     // stdout line (BENCH_r01 "parsed": null) — belt and braces. Path is
     // per-process so concurrent runs don't clobber each other; failures are

@@ -1,8 +1,12 @@
 package graft.dedup
 
 import graft.fns.Fns
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.ops.DriverSolve
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import scala.collection.mutable
 
 /** Deduplication operators for large-scale training-data pipelines
   * (BASELINE.json north-star; first-class alongside the SURVEY §2 ops).
@@ -1036,78 +1040,75 @@ object Dedup {
     * exchange and the round's remaining exchanges are tiny-data
     * scheduling cost either way.
     */
-  /** `onRound`, when non-null, receives `(round, seconds, converged)` after
+  def components(edges: DataFrame, maxIter: Int = 20): DataFrame = {
+    val sym = symmetrized(edges)
+    // a small edge list is solved on the driver with union-find instead
+    // of paying the loop's fixed costs — every propagation round is 2 jobs
+    // (checkpoint + convergence probe) over a graph that here often holds
+    // a few thousand edges. This is the standard production-CC shape
+    // (GraphFrames' own CC collapses the quotient graph locally once it
+    // fits), and componentsIncremental's label-graph input is O(new
+    // connectivity), exactly the frame it is meant for. Same output: min
+    // node id per component. Long ids only (the LongMap below).
+    val local =
+      if (!sym.schema.fields.forall(_.dataType == LongType)) None
+      else DriverSolve(sym, Seq("u", "v"))(rows =>
+        edges.sparkSession.createDataFrame(localComponents(rows),
+          StructType(Seq(StructField("node", LongType),
+            StructField("comp", LongType)))))
+    local.getOrElse(componentsLoop(sym, maxIter, null))
+  }
+
+  /** [[components]]' distributed loop alone, never the driver path.
+    * `onRound`, when non-null, receives `(round, seconds, converged)` after
     * every propagation+jump round — the instrumentation hook Prof uses for
     * per-round attribution of the REAL loop (a mirrored copy silently
     * measured a stale plan once; round-10 advice).
     */
-  def components(edges: DataFrame, maxIter: Int = 20,
-                 onRound: (Int, Double, Boolean) => Unit = null): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    // eager localCheckpoint (not persist) each round: iterative plans grow
-    // linearly in lineage, so analysis cost goes quadratic and any cache
-    // eviction triggers exponential recompute — checkpointing truncates the
-    // plan to the materialized result (standard iterative-Spark hygiene)
-    val sym = edges.select(col("doc_a").as("u"), col("doc_b").as("v"))
+  private[graft] def componentsDistributed(edges: DataFrame, maxIter: Int = 20,
+      onRound: (Int, Double, Boolean) => Unit = null): DataFrame =
+    componentsLoop(symmetrized(edges), maxIter, onRound)
+
+  // eager localCheckpoint (not persist) each round: iterative plans grow
+  // linearly in lineage, so analysis cost goes quadratic and any cache
+  // eviction triggers exponential recompute — checkpointing truncates the
+  // plan to the materialized result (standard iterative-Spark hygiene)
+  private def symmetrized(edges: DataFrame): DataFrame =
+    edges.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .unionByName(edges.select(col("doc_b").as("u"), col("doc_a").as("v")))
       .localCheckpoint(true)
-    // r20 hybrid: when the (already-materialized) edge list is small,
-    // solve it on the driver with union-find instead of paying the
-    // iterative loop's fixed costs — every propagation round is 2 jobs
-    // (checkpoint + convergence probe) over a graph that here often
-    // holds a few thousand edges, so 5 rounds ≈ 2 s of pure scheduling.
-    // This is the standard production-CC shape (GraphFrames' own CC
-    // collapses the quotient graph locally once it fits): the
-    // distributed loop stays THE path for anything over the cap, and
-    // componentsIncremental's label-graph input — O(new connectivity),
-    // not corpus-sized — is exactly the frame this bound is meant for.
-    // Bit-identical output: min node id per component either way. The
-    // driver transfer is bounded by the cap (2·cap rows of two longs),
-    // read off the sym checkpoint's blocks — never an extra evaluation
-    // of `edges`. Long ids only (the engine's id convention); any other
-    // type, any NULL endpoint, or `spark.graft.cc.localMaxEdges = 0`
-    // (the probes' force-distributed switch) falls through to the loop.
-    val localCap = 2L * edges.sparkSession.conf
-      .get("spark.graft.cc.localMaxEdges", "250000").toLong
-    val symIsLong = sym.schema.fields
-      .forall(_.dataType == org.apache.spark.sql.types.LongType)
-    if (symIsLong && localCap > 0 && sym.count() <= localCap) {
-      val rows = sym.collect()
-      if (!rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-        import scala.collection.mutable
-        val parent = mutable.LongMap.empty[Long]
-        def find(a: Long): Long = {
-          var r = a
-          while (parent(r) != r) r = parent(r)
-          var x = a
-          while (parent(x) != r) { val nx = parent(x); parent(x) = r; x = nx }
-          r
-        }
-        rows.foreach { row =>
-          val u = row.getLong(0); val v = row.getLong(1)
-          if (!parent.contains(u)) parent(u) = u
-          if (!parent.contains(v)) parent(v) = v
-          val ru = find(u); val rv = find(v)
-          if (ru != rv) parent(ru) = rv
-        }
-        val minOf = mutable.LongMap.empty[Long]
-        parent.keysIterator.foreach { n =>
-          val r = find(n)
-          minOf(r) = math.min(minOf.getOrElse(r, n), n)
-        }
-        val out = new java.util.ArrayList[org.apache.spark.sql.Row](parent.size)
-        parent.keysIterator.toSeq.sorted.foreach { n =>
-          out.add(org.apache.spark.sql.Row(n, minOf(find(n))))
-        }
-        Bridge.release(sym)
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("comp",
-            org.apache.spark.sql.types.LongType)))
-        return edges.sparkSession.createDataFrame(out, schema)
-      }
+
+  /** Union-find over (u, v) rows: (node, min node id of its component),
+    * by node. */
+  private def localComponents(rows: Array[Row]): java.util.List[Row] = {
+    val parent = mutable.LongMap.empty[Long]
+    def find(a: Long): Long = {
+      var r = a
+      while (parent(r) != r) r = parent(r)
+      var x = a
+      while (parent(x) != r) { val nx = parent(x); parent(x) = r; x = nx }
+      r
     }
+    rows.foreach { row =>
+      val u = row.getLong(0); val v = row.getLong(1)
+      if (!parent.contains(u)) parent(u) = u
+      if (!parent.contains(v)) parent(v) = v
+      val ru = find(u); val rv = find(v)
+      if (ru != rv) parent(ru) = rv
+    }
+    val minOf = mutable.LongMap.empty[Long]
+    parent.keysIterator.foreach { n =>
+      val r = find(n)
+      minOf(r) = math.min(minOf.getOrElse(r, n), n)
+    }
+    val out = new java.util.ArrayList[Row](parent.size)
+    parent.keysIterator.toSeq.sorted.foreach(n => out.add(Row(n, minOf(find(n)))))
+    out
+  }
+
+  private def componentsLoop(sym: DataFrame, maxIter: Int,
+                             onRound: (Int, Double, Boolean) => Unit): DataFrame = {
+    import org.apache.spark.sql.graftbridge.Bridge
     // Fused init: with identity labels, round 1's propagate ⋈ groupBy(min)
     // reduces to min(self, min-neighbor) straight off the edge list — one
     // aggregation replaces the distinct + identity init + first join round

@@ -34,16 +34,6 @@ object Fns {
       lit(":"),
       lpad(floor((ms % 60000) / 1000).cast("long").cast("string"), 2, "0"))
 
-  /** X6: canonical string-category normalization. */
-  def normCategory(c: Column): Column = lower(trim(c))
-
-  /** F7: current-day slice. `now` is injectable (defaults to the session
-    * clock) so the predicate is testable and replayable — never bake
-    * wall-clock reads into stored results.
-    */
-  def currentDayFilter(ts: Column, now: Column = current_date()): Column =
-    ts >= now.cast(org.apache.spark.sql.types.TimestampType)
-
   /** F9: trailing-window recency slice (reference: last 24 h). */
   def recencyFilter(ts: Column, window: String = "INTERVAL 1 DAY",
                     now: Column = current_timestamp()): Column =

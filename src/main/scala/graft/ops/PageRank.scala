@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import scala.collection.mutable
 
 /** Weighted PageRank in EXACT integer arithmetic — the iterative-graph
   * operator family beyond connected components (Dedup's pointer-jumping).
@@ -34,88 +37,74 @@ object PageRank {
     */
   def ranks(edges: DataFrame, iters: Int,
             scale: Long = 1000000000000L): DataFrame = {
+    val ed = withOutWeights(edges, iters)
+    // a label/category graph is a handful of nodes, yet each iteration
+    // pays a checkpointed join + aggregate: run the IDENTICAL integer
+    // recurrence on the driver (same floor divisions in the same order on
+    // the same longs ⇒ bit-identical ranks). Its output stamps src's type
+    // on the node column, so src and dst types must agree.
+    val nodeType = ed.schema("src").dataType
+    val local =
+      if (nodeType != ed.schema("dst").dataType) None
+      else DriverSolve(ed, ed.columns.toSeq)(rows =>
+        ed.sparkSession.createDataFrame(localRanks(rows, iters, scale),
+          StructType(Seq(StructField("node", nodeType),
+            StructField("rank_scaled", LongType)))))
+    local.getOrElse(loop(ed, iters, scale))
+  }
+
+  /** [[ranks]]' distributed loop alone, never the driver path. */
+  private[graft] def ranksDistributed(edges: DataFrame, iters: Int,
+                                      scale: Long = 1000000000000L): DataFrame =
+    loop(withOutWeights(edges, iters), iters, scale)
+
+  /** (src, dst, w, outw), checkpointed: reused every iteration. */
+  private def withOutWeights(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
     val ed0 = edges.toDF("src", "dst", "w")
     val ow = ed0.groupBy(col("src"))
       .agg(sum(col("w")).cast("long").as("outw"))
-    // LEFT join (r21): an inner join silently dropped NULL-src rows
-    // before the local path's NULL guard could see them, so a degenerate
-    // graph took the driver solve over a node set missing the NULL node
-    // (ADVICE r20). The left join carries them with a NULL outw — the
-    // distributed loop is unchanged by construction (the per-iteration
+    // LEFT join: an inner join would drop NULL-src rows before the driver
+    // solve's guard could see them. The loop is unchanged by it (the
     // contrib join on `src` is null-unsafe either way, and a NULL outw
-    // NULL-propagates the contribution exactly as absence did) — and the
-    // guard below now sees the NULL and falls through.
-    val ed = ed0.join(ow, Seq("src"), "left")
+    // NULL-propagates the contribution exactly as absence did).
+    ed0.join(ow, Seq("src"), "left")
       .select(col("src"), col("dst"), col("w").cast("long").as("w"),
         col("outw"))
-      .localCheckpoint(true) // reused every iteration
-    // r20 hybrid (the components() move): a label/category graph is a
-    // handful of nodes, yet each iteration pays a checkpointed join +
-    // aggregate — pure scheduling cost. When the checkpointed edge frame
-    // is under spark.graft.pagerank.localMaxEdges (0 disables), run the
-    // IDENTICAL integer recurrence on the driver: same floor divisions
-    // in the same order on the same longs ⇒ bit-identical ranks. NULLs
-    // in ANY consumed column fall through to the distributed loop
-    // (join-semantics parity is not worth mirroring for a degenerate
-    // input). Row-size awareness (r21): the 250k default assumes two
-    // longs per endpoint; non-Long node types (strings can be arbitrarily
-    // wide) take a 5x smaller cap, and the local output requires
-    // src/dst types to agree (the union'd node column otherwise needs
-    // the distributed tail's coercion).
-    val rawCap = edges.sparkSession.conf
-      .get("spark.graft.pagerank.localMaxEdges", "250000").toLong
-    val longType = org.apache.spark.sql.types.LongType
-    val endpointsLong = ed.schema("src").dataType == longType &&
-      ed.schema("dst").dataType == longType
-    val sameNodeType =
-      ed.schema("src").dataType == ed.schema("dst").dataType
-    val localCap = if (endpointsLong) rawCap else rawCap / 5
-    if (localCap > 0 && sameNodeType && ed.count() <= localCap) {
-      val rows = ed.collect()
-      // empty graph falls through (the distributed tail returns the
-      // empty frame with the right schema; nn = 0 would divide by zero)
-      if (rows.nonEmpty &&
-          !rows.exists(r => r.isNullAt(0) || r.isNullAt(1) ||
-            r.isNullAt(2) || r.isNullAt(3))) {
-        import scala.collection.mutable
-        val nodeSet = mutable.LinkedHashSet.empty[Any]
-        rows.foreach { r => nodeSet += r.get(0); nodeSet += r.get(1) }
-        val nn = nodeSet.size.toLong
-        var r0 = mutable.AnyRefMap.empty[AnyRef, Long]
-        nodeSet.foreach(n => r0(n.asInstanceOf[AnyRef]) = scale / nn)
-        for (_ <- 1 to iters) {
-          val contrib = mutable.AnyRefMap.empty[AnyRef, Long]
-          rows.foreach { e =>
-            val src = e.get(0).asInstanceOf[AnyRef]
-            val dst = e.get(1).asInstanceOf[AnyRef]
-            val w = e.getLong(2); val outw = e.getLong(3)
-            val c = (((17L * r0(src)) / 20L) * w) / outw
-            contrib(dst) = contrib.getOrElse(dst, 0L) + c
-          }
-          val base = (3L * scale) / (20L * nn)
-          val next = mutable.AnyRefMap.empty[AnyRef, Long]
-          nodeSet.foreach { n0 =>
-            val n = n0.asInstanceOf[AnyRef]
-            next(n) = base + contrib.getOrElse(n, 0L)
-          }
-          r0 = next
-        }
-        val out = new java.util.ArrayList[org.apache.spark.sql.Row](nodeSet.size)
-        nodeSet.foreach { n =>
-          out.add(org.apache.spark.sql.Row(n, r0(n.asInstanceOf[AnyRef])))
-        }
-        org.apache.spark.sql.graftbridge.Bridge.release(ed)
-        val nodeType = ed.schema("src").dataType
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", nodeType),
-          org.apache.spark.sql.types.StructField("rank_scaled",
-            org.apache.spark.sql.types.LongType)))
-        return edges.sparkSession.createDataFrame(out, schema)
+      .localCheckpoint(true)
+  }
+
+  private def localRanks(rows: Array[Row], iters: Int,
+                         scale: Long): java.util.List[Row] = {
+    val nodeSet = mutable.LinkedHashSet.empty[Any]
+    rows.foreach { r => nodeSet += r.get(0); nodeSet += r.get(1) }
+    val nn = nodeSet.size.toLong
+    var r0 = mutable.AnyRefMap.empty[AnyRef, Long]
+    nodeSet.foreach(n => r0(n.asInstanceOf[AnyRef]) = scale / nn)
+    for (_ <- 1 to iters) {
+      val contrib = mutable.AnyRefMap.empty[AnyRef, Long]
+      rows.foreach { e =>
+        val src = e.get(0).asInstanceOf[AnyRef]
+        val dst = e.get(1).asInstanceOf[AnyRef]
+        val c = (((17L * r0(src)) / 20L) * e.getLong(2)) / e.getLong(3)
+        contrib(dst) = contrib.getOrElse(dst, 0L) + c
       }
+      val base = (3L * scale) / (20L * nn)
+      val next = mutable.AnyRefMap.empty[AnyRef, Long]
+      nodeSet.foreach { n0 =>
+        val n = n0.asInstanceOf[AnyRef]
+        next(n) = base + contrib.getOrElse(n, 0L)
+      }
+      r0 = next
     }
-    val nodes = ed0.select(col("src").as("node"))
-      .union(ed0.select(col("dst").as("node"))).distinct()
+    val out = new java.util.ArrayList[Row](nodeSet.size)
+    nodeSet.foreach(n => out.add(Row(n, r0(n.asInstanceOf[AnyRef]))))
+    out
+  }
+
+  private def loop(ed: DataFrame, iters: Int, scale: Long): DataFrame = {
+    val nodes = ed.select(col("src").as("node"))
+      .union(ed.select(col("dst").as("node"))).distinct()
     val nn = nodes.agg(count(lit(1)).cast("long").as("nn"))
     val nd = nodes.crossJoin(broadcast(nn)).localCheckpoint(true)
     var r = nd.select(col("node"), col("nn"),

@@ -29,81 +29,6 @@ object ShortestPath {
     val ed = edges.toDF("src", "dst", "cost")
       .select(col("src"), col("dst"), col("cost").cast("long").as("cost"))
       .localCheckpoint(true) // reused every round
-    // r20 hybrid (the components()/PageRank move): under
-    // spark.graft.sssp.localMaxEdges (0 disables), run the identical
-    // fixed-round Bellman–Ford relaxation on the driver off the
-    // checkpoint's blocks — same min-plus folds on the same longs,
-    // bit-identical distances (NULL = unreached, exactly the frame
-    // semantics). NULLs in ANY consumed column (endpoints AND cost —
-    // ADVICE r20: a NULL cost would throw on the driver where the
-    // distributed plan NULL-propagates) fall through to the loop.
-    // Row-size awareness (r21, the PageRank convention): non-Long node
-    // types take a 5x smaller cap, and src/dst types must agree (the
-    // local output stamps src's type on a node set mixing both).
-    val rawCap = edges.sparkSession.conf
-      .get("spark.graft.sssp.localMaxEdges", "250000").toLong
-    val longType = org.apache.spark.sql.types.LongType
-    val endpointsLong = ed.schema("src").dataType == longType &&
-      ed.schema("dst").dataType == longType
-    val sameNodeType =
-      ed.schema("src").dataType == ed.schema("dst").dataType
-    val localCap = if (endpointsLong) rawCap else rawCap / 5
-    if (localCap > 0 && sameNodeType && ed.count() <= localCap) {
-      val rows = ed.collect()
-      if (rows.nonEmpty &&
-          !rows.exists(r => r.isNullAt(0) || r.isNullAt(1) ||
-            r.isNullAt(2))) {
-        import scala.collection.mutable
-        // resolve the source literal the same way the frame would:
-        // equality against the node values. ADVICE r20: only when the
-        // literal's type equals the node column's type — Catalyst's
-        // `col("node") === source` inserts a cast that Scala equality
-        // does not mirror (a string-node graph probed with a numeric
-        // literal matches distributed, never locally), so any type
-        // mismatch falls through to the distributed loop.
-        val srcVal = {
-          val lit = org.apache.spark.sql.graftbridge.Bridge.expression(source)
-          lit match {
-            case l: org.apache.spark.sql.catalyst.expressions.Literal
-                if l.dataType == ed.schema("src").dataType =>
-              Some(org.apache.spark.sql.catalyst.CatalystTypeConverters
-                .convertToScala(l.value, l.dataType))
-            case _ => None
-          }
-        }
-        if (srcVal.isDefined) {
-          val nodeSet = mutable.LinkedHashSet.empty[Any]
-          rows.foreach { r => nodeSet += r.get(0); nodeSet += r.get(1) }
-          var d = mutable.AnyRefMap.empty[AnyRef, Long]
-          nodeSet.find(_ == srcVal.get)
-            .foreach(n => d(n.asInstanceOf[AnyRef]) = 0L)
-          for (_ <- 1 to iters) {
-            val next = d.clone()
-            rows.foreach { e =>
-              val src = e.get(0).asInstanceOf[AnyRef]
-              val dst = e.get(1).asInstanceOf[AnyRef]
-              d.get(src).foreach { ds =>
-                val cand = ds + e.getLong(2)
-                if (next.get(dst).forall(cand < _)) next(dst) = cand
-              }
-            }
-            d = next
-          }
-          val out = new java.util.ArrayList[org.apache.spark.sql.Row](nodeSet.size)
-          nodeSet.foreach { n =>
-            out.add(org.apache.spark.sql.Row(n,
-              d.get(n.asInstanceOf[AnyRef]).map(Long.box).orNull))
-          }
-          org.apache.spark.sql.graftbridge.Bridge.release(ed)
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node",
-              ed.schema("src").dataType),
-            org.apache.spark.sql.types.StructField("min_cost",
-              org.apache.spark.sql.types.LongType)))
-          return edges.sparkSession.createDataFrame(out, schema)
-        }
-      }
-    }
     val nd = ed.select(col("src").as("node"))
       .union(ed.select(col("dst").as("node"))).distinct()
       .localCheckpoint(true)

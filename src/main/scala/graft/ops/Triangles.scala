@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+
+import scala.collection.mutable
 
 /** Exact triangle counting by degree orientation — the fourth graph
   * primitive beside connected components (Dedup's pointer-jumping),
@@ -30,91 +33,84 @@ object Triangles {
     */
   def countWithCoefficient(pairs: DataFrame): DataFrame = {
     val p = pairs.toDF("a", "b").localCheckpoint(true)
-    // r20 hybrid (the components/PageRank move): three equi-joins + two
-    // checkpoints over a pair set that the dedup graphs keep in the low
-    // thousands is fixed cost. Under spark.graft.triangles.localMaxEdges
-    // (0 disables), run the IDENTICAL degree-oriented enumeration on the
-    // driver off the checkpoint's blocks — same (degree, id) orientation,
-    // same (dv,v)<(dw,w) wedge order, same oriented-edge closing test,
-    // same Σ d(d−1)/2 wedge total, and the coefficient through the same
-    // HALF_UP 6-decimal rounding Spark's round() applies. Long vertex
-    // ids only; NULLs fall through to the distributed joins.
-    val localCap = pairs.sparkSession.conf
-      .get("spark.graft.triangles.localMaxEdges", "250000").toLong
-    val pIsLong = p.schema.fields
-      .forall(_.dataType == org.apache.spark.sql.types.LongType)
-    if (pIsLong && localCap > 0 && p.count() <= localCap) {
-      val rows = p.collect()
-      if (!rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-        import scala.collection.mutable
-        val deg = mutable.LongMap.empty[Long].withDefaultValue(0L)
-        rows.foreach { r =>
-          deg(r.getLong(0)) += 1L; deg(r.getLong(1)) += 1L
-        }
-        val out = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
-        rows.foreach { r =>
-          val a = r.getLong(0); val b = r.getLong(1)
-          val aFirst = deg(a) < deg(b) || (deg(a) == deg(b) && a < b)
-          val (s, d) = if (aFirst) (a, b) else (b, a)
-          out.getOrElseUpdate(s, mutable.ArrayBuffer.empty[Long]) += d
-        }
-        // r21: the wedge loop was O(Σ |out(s)|²) boxed-tuple hash probes —
-        // 0.3–0.5 s on the near-clique graphs the dedup gates produce.
-        // Same count, merge form: a triangle is (s, v, w) with v,w ∈
-        // out(s) and w ∈ out(v), so tri = Σ_s Σ_{v∈out(s), with
-        // multiplicity} |out(s) ∩ out(v)| where the intersect counts
-        // out(s)-side multiplicity, out(v) membership as a set, and
-        // SKIPS w == v — the old loop's orientation precheck rejected
-        // v == w pairs even when a self-loop edge put (v, v) in the
-        // oriented set (the distributed wedge filter dv<dw||(dv==dw&&
-        // v<w) rejects them identically) — via one sorted merge walk
-        // per wedge list pair instead of a hash probe per (i, j).
-        val sortedOut = mutable.LongMap.empty[Array[Long]]
-        out.foreach { case (s, ds) => sortedOut(s) = ds.toArray.sorted }
-        val empty = Array.empty[Long]
-        def interCountExcl(a: Array[Long], b: Array[Long],
-                           excl: Long): Long = {
-          var i = 0; var j = 0; var c = 0L
-          while (i < a.length && j < b.length) {
-            if (a(i) < b(j)) i += 1
-            else if (a(i) > b(j)) j += 1
-            else {
-              val v = a(i)
-              while (i < a.length && a(i) == v) {
-                if (v != excl) c += 1L
-                i += 1
-              }
-              while (j < b.length && b(j) == v) j += 1
-            }
-          }
-          c
-        }
-        var tri = 0L
-        sortedOut.foreach { case (_, ds) =>
-          var i = 0
-          while (i < ds.length) {
-            tri += interCountExcl(ds, sortedOut.getOrElse(ds(i), empty),
-              ds(i))
+    // three equi-joins + two checkpoints over a pair set the dedup graphs
+    // keep in the low thousands is fixed cost: run the IDENTICAL
+    // degree-oriented enumeration on the driver (Long ids for the LongMaps)
+    val local =
+      if (!p.schema.fields.forall(_.dataType == LongType)) None
+      else DriverSolve(p, Seq("a", "b"))(rows =>
+        pairs.sparkSession.createDataFrame(
+          java.util.Arrays.asList(localCount(rows)),
+          StructType(Seq(StructField("n_triangles", LongType),
+            StructField("n_wedges", LongType),
+            StructField("clustering_coeff", DoubleType)))))
+    local.getOrElse(loop(p))
+  }
+
+  /** [[countWithCoefficient]]'s distributed joins alone, never the driver
+    * path. */
+  private[graft] def countDistributed(pairs: DataFrame): DataFrame =
+    loop(pairs.toDF("a", "b").localCheckpoint(true))
+
+  /** Same (degree, id) orientation, same (dv,v)<(dw,w) wedge order, same
+    * oriented-edge closing test, same Σ d(d−1)/2 wedge total, and the
+    * coefficient through the same HALF_UP 6-decimal rounding Spark's
+    * round() applies.
+    */
+  private def localCount(rows: Array[Row]): Row = {
+    val deg = mutable.LongMap.empty[Long].withDefaultValue(0L)
+    rows.foreach { r =>
+      deg(r.getLong(0)) += 1L; deg(r.getLong(1)) += 1L
+    }
+    val out = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
+    rows.foreach { r =>
+      val a = r.getLong(0); val b = r.getLong(1)
+      val aFirst = deg(a) < deg(b) || (deg(a) == deg(b) && a < b)
+      val (s, d) = if (aFirst) (a, b) else (b, a)
+      out.getOrElseUpdate(s, mutable.ArrayBuffer.empty[Long]) += d
+    }
+    // tri = Σ_s Σ_{v∈out(s), with multiplicity} |out(s) ∩ out(v)|, where
+    // the intersect counts out(s)-side multiplicity, out(v) membership as
+    // a set, and SKIPS w == v (a self-loop puts (v, v) in the oriented
+    // lists; the distributed wedge filter dv<dw||(dv==dw&&v<w) rejects
+    // it), via one sorted merge walk per wedge list pair
+    val sortedOut = mutable.LongMap.empty[Array[Long]]
+    out.foreach { case (s, ds) => sortedOut(s) = ds.toArray.sorted }
+    val empty = Array.empty[Long]
+    def interCountExcl(a: Array[Long], b: Array[Long], excl: Long): Long = {
+      var i = 0; var j = 0; var c = 0L
+      while (i < a.length && j < b.length) {
+        if (a(i) < b(j)) i += 1
+        else if (a(i) > b(j)) j += 1
+        else {
+          val v = a(i)
+          while (i < a.length && a(i) == v) {
+            if (v != excl) c += 1L
             i += 1
           }
+          while (j < b.length && b(j) == v) j += 1
         }
-        val wed = deg.valuesIterator.map(d => (d * (d - 1)) / 2).sum
-        val coeff =
-          if (wed > 0)
-            java.math.BigDecimal.valueOf(3.0 * tri / wed)
-              .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-          else 0.0
-        org.apache.spark.sql.graftbridge.Bridge.release(p)
-        import org.apache.spark.sql.types._
-        val schema = StructType(Seq(
-          StructField("n_triangles", LongType),
-          StructField("n_wedges", LongType),
-          StructField("clustering_coeff", DoubleType)))
-        return pairs.sparkSession.createDataFrame(
-          java.util.Arrays.asList(org.apache.spark.sql.Row(tri, wed, coeff)),
-          schema)
+      }
+      c
+    }
+    var tri = 0L
+    sortedOut.foreach { case (_, ds) =>
+      var i = 0
+      while (i < ds.length) {
+        tri += interCountExcl(ds, sortedOut.getOrElse(ds(i), empty), ds(i))
+        i += 1
       }
     }
+    val wed = deg.valuesIterator.map(d => (d * (d - 1)) / 2).sum
+    val coeff =
+      if (wed > 0)
+        java.math.BigDecimal.valueOf(3.0 * tri / wed)
+          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+      else 0.0
+    Row(tri, wed, coeff)
+  }
+
+  private def loop(p: DataFrame): DataFrame = {
     val deg = p.select(col("a").as("v"))
       .unionAll(p.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).cast("long").as("dg"))

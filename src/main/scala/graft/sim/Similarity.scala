@@ -1,8 +1,10 @@
 package graft.sim
 
 import graft.fns.Fns
+import graft.ops.DriverSolve
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -188,13 +190,21 @@ object Similarity {
     * the iters=0 assignment slice (`sim3b`).
     */
   def ivfAnn(emb: DataFrame, queryVecId: Long, k: Int,
-             nCentroids: Int = 16, nProbe: Int = 2, iters: Int = 3): DataFrame = {
+             nCentroids: Int = 16, nProbe: Int = 2, iters: Int = 3): DataFrame =
+    // iters = 0 trains nothing, so a driver copy would only serve the
+    // query lookup — not worth its probe
+    ivfAnnWith(emb, queryVecId, k, nCentroids, nProbe, iters,
+      if (iters >= 1) localVecs(emb) else None)
+
+  /** [[ivfAnn]] on a given [[localVecs]] result; None is the distributed
+    * twin. One driver copy serves the trainer AND the query lookup; the
+    * serving scan stays distributed either way.
+    */
+  private[graft] def ivfAnnWith(emb: DataFrame, queryVecId: Long, k: Int,
+                                nCentroids: Int, nProbe: Int, iters: Int,
+                                lv: Option[Array[(Long, Array[Float])]])
+      : DataFrame = {
     val vecs = emb.select(col("vec_id"), col("label"), col("embedding"))
-    // r21: one conf-capped corpus copy serves the trainer AND the query
-    // lookup (two fewer jobs than per-step collects); the serving scan
-    // below stays distributed either way. iters = 0 trains nothing, so
-    // the copy would only serve the query lookup — not worth its probe
-    val lv = if (iters >= 1) localVecs(emb) else None
     val centroids = ivfTrainWith(emb, nCentroids, iters, lv)
     val assigned = vecs.withColumn("cid", ivfAssignExpr(centroids))
     val qMatches = lv.map(_.filter(_._1 == queryVecId)).getOrElse(
@@ -229,64 +239,28 @@ object Similarity {
     }
   }
 
-  /** Conf-capped driver copy of the embedding corpus — the r20
-    * driver-solve pattern applied to the IVF/PQ TRAINING recurrences
-    * (VERDICT r20 #4): the k-means/PQ codebook updates are tiny-state
-    * loops, but each distributed round pays a corpus scan + a
-    * dim-exploded shuffle + a collect of the reduced sums, which at gate
-    * scale is pure scheduling. When the corpus fits under
-    * `spark.graft.ivf.localMaxCells` (count x vector length, i.e.
-    * row-size-aware — default 4M cells = 16 MB of floats; 0 disables),
-    * collect it ONCE and run the identical integer-scaled recurrences
-    * locally; everything SERVED from the trained artifacts (assignment,
-    * encode, ADC, top-k) stays the distributed scan it always was — at
-    * 100 TB the corpus never fits and the distributed trainer remains
-    * THE path. Falls through (None) on a non-(long, array<float>)
-    * schema, any NULL id/vector/element, an empty corpus, or cap
-    * exceeded.
+  /** Driver copy of the embedding corpus for the IVF/PQ TRAINING
+    * recurrences, through [[DriverSolve]]: the k-means/PQ codebook
+    * updates are tiny-state loops, but each distributed round pays a
+    * corpus scan + a dim-exploded shuffle + a collect of the reduced sums.
+    * Everything SERVED from the trained artifacts (assignment, encode,
+    * ADC, top-k) stays the distributed scan. None on a non-(long,
+    * array<float>) schema, or wherever [[DriverSolve]] declines (NULL or
+    * non-finite values, whose array_min ordering only the distributed
+    * arithmetic is trusted with).
     */
   private[graft] def localVecs(emb: DataFrame)
       : Option[Array[(Long, Array[Float])]] = {
-    import org.apache.spark.sql.types._
-    val cap = emb.sparkSession.conf
-      .get("spark.graft.ivf.localMaxCells", "4000000").toLong
-    if (cap <= 0) return None
-    val sch = emb.schema
-    val idOk = sch.fields.exists(f =>
-      f.name == "vec_id" && f.dataType == LongType)
-    val embOk = sch.fields.find(_.name == "embedding").map(_.dataType) match {
-      case Some(ArrayType(FloatType, _)) => true
-      case _ => false
+    val types = emb.schema.fields.map(f => f.name -> f.dataType).toMap
+    (types.get("vec_id"), types.get("embedding")) match {
+      // a projection, never `emb` itself: the caller still scans `emb`,
+      // so a checkpointed corpus must not be released here
+      case (Some(LongType), Some(ArrayType(FloatType, _))) =>
+        DriverSolve(emb.select(col("vec_id"), col("embedding")),
+            Seq("vec_id", "embedding"))(
+          _.map(r => (r.getLong(0), r.getSeq[Float](1).toArray)))
+      case _ => None
     }
-    if (!idOk || !embOk) return None
-    val probe = emb.agg(
-      sum(size(col("embedding"))).as("cells"),
-      sum(when(col("vec_id").isNull || col("embedding").isNull, 1L)
-        .otherwise(0L)).as("bad")).collect()(0)
-    if (probe.isNullAt(0) || probe.isNullAt(1) || probe.getLong(1) > 0L ||
-      probe.getLong(0) > cap) return None
-    val rows = emb.select(col("vec_id"), col("embedding")).collect()
-    val out = new Array[(Long, Array[Float])](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      val s = rows(i).getSeq[Any](1)
-      if (s == null || s.contains(null)) return None
-      val a = new Array[Float](s.length)
-      var j = 0
-      while (j < a.length) {
-        val f = s(j).asInstanceOf[Float]
-        // non-finite values fall through: NaN/Inf distances order
-        // differently under array_min (NaN sorts last) than a strict
-        // driver-side < walk, so only the distributed arithmetic is
-        // trusted with them
-        if (!java.lang.Float.isFinite(f)) return None
-        a(j) = f
-        j += 1
-      }
-      out(i) = (rows(i).getLong(0), a)
-      i += 1
-    }
-    Some(out)
   }
 
   /** Deterministic IVF coarse-quantizer training — factored so
@@ -295,7 +269,7 @@ object Similarity {
     * rounds. See [[ivfAnn]] for the integer-scaled mean determinism
     * argument. Distributed path: one corpus scan + reduced collect per
     * round (only the nCentroids × dim centroid matrix is ever
-    * collected). Local path (r21, under [[localVecs]]'s cap, or on a
+    * collected). Local path (on a [[localVecs]] corpus copy, or on a
     * caller-provided `pre` copy): the IDENTICAL recurrence — same
     * every-16th-by-id seeding, same assignment arithmetic (the
     * ‖c‖² − 2·c·x argmin with array_min's strict (dist, cid) order,
@@ -304,8 +278,8 @@ object Similarity {
     * sx/(n·10⁹) double mean, empty clusters and missing dimensions
     * behaving exactly as the distributed fold (zero-filled mean for a
     * cid with any surviving dimension row, previous centroid for a cid
-    * with none) ⇒ bit-identical centroids. SimilaritySpec pins the
-    * equivalence against a forced-distributed run.
+    * with none) ⇒ bit-identical centroids. SimilaritySpec and
+    * DriverSolveSpec pin the equivalence against `ivfTrainWith(…, None)`.
     */
   private[graft] def ivfTrain(emb: DataFrame, nCentroids: Int,
                               iters: Int): Array[(Int, Array[Double])] =
@@ -314,7 +288,8 @@ object Similarity {
 
   /** [[ivfTrain]] on a caller-provided [[localVecs]] result — callers
     * that already probed (ivfAnn, ivfPqKnn) pass it through so a
-    * cap-rejected corpus is not probed a second time.
+    * declined corpus is not probed a second time. None is the
+    * distributed twin.
     */
   private[graft] def ivfTrainWith(emb: DataFrame, nCentroids: Int,
                                   iters: Int,
@@ -867,11 +842,18 @@ object Similarity {
     * stays the same scan-fused projection.
     */
   def pqEncodeTrained(emb: DataFrame, m: Int = 4, subDim: Int = 16,
-                      ks: Int = 8, iters: Int = 1): DataFrame = {
-    // r21: under the localVecs cap, seed + refine on one corpus copy
-    // (bit-identical — see pqRefineLocal); the encode below stays the
-    // scan-fused distributed projection either way
-    val lv = if (iters >= 1) localVecs(emb) else None
+                      ks: Int = 8, iters: Int = 1): DataFrame =
+    pqEncodeTrainedWith(emb, m, subDim, ks, iters,
+      if (iters >= 1) localVecs(emb) else None)
+
+  /** [[pqEncodeTrained]] on a given [[localVecs]] result; None is the
+    * distributed twin. A driver copy seeds and refines the codebooks
+    * (bit-identical — see pqRefineLocal); the encode stays the
+    * scan-fused distributed projection either way.
+    */
+  private[graft] def pqEncodeTrainedWith(emb: DataFrame, m: Int, subDim: Int,
+      ks: Int, iters: Int, lv: Option[Array[(Long, Array[Float])]])
+      : DataFrame =
     lv match {
       case Some(vs) =>
         var cb = pqSeedCodebooksLocal(vs, m, subDim, ks)
@@ -882,7 +864,6 @@ object Similarity {
         for (_ <- 0 until iters) cb = pqRefine(emb, cb, m, subDim)
         pqEncodeWith(emb, cb, m, subDim)
     }
-  }
 
   /** Asymmetric-distance (ADC) KNN over the PQ codes: the query stays
     * un-quantized; its squared distance to each centroid of each subspace
@@ -952,13 +933,13 @@ object Similarity {
     ivfPqKnnPre(emb, queryVecId, k, nCentroids, nProbe, iters, m, subDim,
       ks, localVecs(emb))
 
-  private def ivfPqKnnPre(emb: DataFrame, queryVecId: Long, k: Int,
+  private[graft] def ivfPqKnnPre(emb: DataFrame, queryVecId: Long, k: Int,
                           nCentroids: Int, nProbe: Int, iters: Int,
                           m: Int, subDim: Int, ks: Int,
                           lv: Option[Array[(Long, Array[Float])]])
       : DataFrame = {
     val vecs = emb.select(col("vec_id"), col("label"), col("embedding"))
-    // r21: one conf-capped corpus copy serves the trainer, the query
+    // one driver corpus copy serves the trainer, the query
     // lookup AND the codebook seeds (three fewer jobs); the fused
     // assignment + ADC serving scan below stays distributed either way.
     // The pre-change qv collect took the FIRST matching row in scan
@@ -1029,7 +1010,7 @@ object Similarity {
                      nProbe: Int = 2, iters: Int = 1, m: Int = 4,
                      subDim: Int = 16, ks: Int = 8): DataFrame = {
     require(shortlist >= k, "shortlist must cover the final k")
-    // r21: the corpus copy (when the localVecs cap admits it) is shared
+    // the corpus copy (when localVecs admits it) is shared
     // with the ivfPqKnn stage, and for the ordinary unique-query corpus
     // the query subtree becomes a literal — qv as the same float array,
     // q_norm evaluated by the same sqrt(graft_dot) kernel on the same

@@ -1,8 +1,12 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.ops.DriverSolve
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+import scala.collection.mutable
 
 /** BPE merge TRAINING over a corpus — the learn-the-tokenizer step the
   * fixed-vocab counters ([[TextAnalysis.bpeTokenCountCol]], t19/t20) sit
@@ -108,15 +112,8 @@ object BpeTrain {
       .groupBy(col("lft"), col("rgt")).agg(sum(col("cnt")).as("c"))
   }
 
-  /** Train `k` merges over a (syms, cnt) vocab frame. Returns the merge
-    * list (<= k if the corpus runs dry — fewer than k distinct adjacent
-    * pairs) and the final vocab frame (localCheckpoint-materialized; the
-    * caller owns its release). Per iteration: one pair-count shuffle, one
-    * 1-row argmax collect (bounded — the iteration must sequence on the
-    * chosen pair), one map-only fold.
-    */
   /** [[applyMergeCol]]'s greedy fold mirrored on a plain string — the
-    * r20 driver path below must reproduce the Column fold bit-for-bit:
+    * driver paths below must reproduce the Column fold bit-for-bit:
     * the condition `acc == l || acc.endsWith("|" + l)` is exactly "the
     * segment after the last pipe is l" (segments never contain '|'),
     * which `last` tracks across merged (no-separator) appends.
@@ -139,68 +136,71 @@ object BpeTrain {
     }
   }
 
+  /** Train `k` merges over a (syms, cnt) vocab frame. Returns the merge
+    * list (<= k if the corpus runs dry — fewer than k distinct adjacent
+    * pairs) and the final vocab frame (localCheckpoint-materialized; the
+    * caller owns its release). Per iteration: one pair-count shuffle, one
+    * 1-row argmax collect (bounded — the iteration must sequence on the
+    * chosen pair), one map-only fold.
+    */
   def trainMerges(words0: DataFrame, k: Int): (Seq[Merge], DataFrame) = {
     require(k >= 1, s"k must be >= 1, got $k")
-    var words = words0.localCheckpoint(true)
-    // r20 hybrid (the components/PageRank/mixture move): the merge loop
-    // runs k rounds of (pair-count shuffle + 1-row argmax collect +
-    // checkpointed map fold) over the |V|-row vocab frame — for the
-    // corpora where |V| fits the driver, that is k × ~3 jobs of fixed
-    // cost around microseconds of work. Under
-    // spark.graft.bpe.localMaxVocab (0 disables), collect the
-    // checkpointed vocab once and run classic word-freq BPE locally:
-    // the same adjacent-pair counting weighted by cnt, the same
-    // (count DESC, lft ASC, rgt ASC) argmax (lowercase-ASCII symbols,
-    // so JVM and UTF8 string orders agree), and applyMergeLocal
-    // mirroring applyMergeCol's fold — hash-gated t21/t22/t23/t28
-    // pin the equivalence at both SFs. NULLs fall through to the loop.
-    val localCap = words0.sparkSession.conf
-      .get("spark.graft.bpe.localMaxVocab", "200000").toLong
-    if (localCap > 0 && words.count() <= localCap) {
-      val rows = words.collect()
-      if (!rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))) {
-        import scala.collection.mutable
-        var vocab = rows.map(r => (r.getString(0), r.getString(1),
-          r.getLong(2)))
-        val ms = Seq.newBuilder[Merge]
-        var step = 1
-        var dryL = false
-        while (step <= k && !dryL) {
-          val pc = mutable.HashMap.empty[(String, String), Long]
-          vocab.foreach { case (_, syms, cnt) =>
-            val a = syms.split("\\|", -1)
-            var i = 0
-            while (i < a.length - 1) {
-              val key = (a(i), a(i + 1))
-              pc(key) = pc.getOrElse(key, 0L) + cnt
-              i += 1
-            }
-          }
-          if (pc.isEmpty) dryL = true
-          else {
-            val ((l, r), c) = pc.minBy { case ((pl, pr), pcnt) =>
-              (-pcnt, pl, pr)
-            }
-            ms += Merge(step, l, r, c)
-            vocab = vocab.map { case (w, syms, cnt) =>
-              (w, applyMergeLocal(syms, l, r), cnt)
-            }
-            step += 1
-          }
+    val words = words0.localCheckpoint(true)
+    // k rounds of (pair-count shuffle + 1-row argmax collect +
+    // checkpointed map fold) over a vocab that fits the driver is k × ~3
+    // jobs of fixed cost: run classic word-freq BPE locally — the same
+    // adjacent-pair counts weighted by cnt, the same (count DESC, lft ASC,
+    // rgt ASC) argmax (lowercase-ASCII symbols, so JVM and UTF8 string
+    // orders agree), and applyMergeLocal mirroring applyMergeCol's fold
+    DriverSolve(words, Seq("word", "syms", "cnt")) { rows =>
+      val (ms, vocab) = localMerges(rows, k)
+      (ms, words0.sparkSession.createDataFrame(vocab,
+        StructType(Seq(StructField("word", StringType),
+          StructField("syms", StringType), StructField("cnt", LongType)))))
+    }.getOrElse(mergeLoop(words, k))
+  }
+
+  /** [[trainMerges]]' distributed loop alone, never the driver path. */
+  private[graft] def trainMergesDistributed(words0: DataFrame,
+                                            k: Int): (Seq[Merge], DataFrame) = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    mergeLoop(words0.localCheckpoint(true), k)
+  }
+
+  private def localMerges(rows: Array[Row],
+                          k: Int): (Seq[Merge], java.util.List[Row]) = {
+    var vocab = rows.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    val ms = Seq.newBuilder[Merge]
+    var step = 1
+    var dry = false
+    while (step <= k && !dry) {
+      val pc = mutable.HashMap.empty[(String, String), Long]
+      vocab.foreach { case (_, syms, cnt) =>
+        val a = syms.split("\\|", -1)
+        var i = 0
+        while (i < a.length - 1) {
+          val key = (a(i), a(i + 1))
+          pc(key) = pc.getOrElse(key, 0L) + cnt
+          i += 1
         }
-        Bridge.release(words)
-        val out = new java.util.ArrayList[org.apache.spark.sql.Row](vocab.length)
-        vocab.foreach { case (w, syms, cnt) =>
-          out.add(org.apache.spark.sql.Row(w, syms, cnt))
+      }
+      if (pc.isEmpty) dry = true
+      else {
+        val ((l, r), c) = pc.minBy { case ((pl, pr), pcnt) => (-pcnt, pl, pr) }
+        ms += Merge(step, l, r, c)
+        vocab = vocab.map { case (w, syms, cnt) =>
+          (w, applyMergeLocal(syms, l, r), cnt)
         }
-        import org.apache.spark.sql.types._
-        val schema = StructType(Seq(
-          StructField("word", StringType), StructField("syms", StringType),
-          StructField("cnt", LongType)))
-        return (ms.result(),
-          words0.sparkSession.createDataFrame(out, schema))
+        step += 1
       }
     }
+    val out = new java.util.ArrayList[Row](vocab.length)
+    vocab.foreach { case (w, syms, cnt) => out.add(Row(w, syms, cnt)) }
+    (ms.result(), out)
+  }
+
+  private def mergeLoop(words0: DataFrame, k: Int): (Seq[Merge], DataFrame) = {
+    var words = words0
     val merges = Seq.newBuilder[Merge]
     var step = 1
     var dry = false
@@ -491,42 +491,49 @@ object BpeTrain {
     */
   def compressionCurve(words0: DataFrame, merges: Seq[(Int, String, String)])
       : DataFrame = {
-    val spark = words0.sparkSession
-    import spark.implicits._
-    var words = words0.localCheckpoint(true)
-    // r20 hybrid (the trainMerges move, same knob): k checkpointed merge
-    // applications + k census collects over the |V|-row vocab frame are
-    // pure fixed cost when |V| fits the driver — apply the merges with
-    // applyMergeLocal and census locally (long sums, order-independent,
-    // bit-identical). NULLs fall through to the loop.
-    val localCap = spark.conf
-      .get("spark.graft.bpe.localMaxVocab", "200000").toLong
-    if (localCap > 0 && words.count() <= localCap) {
-      val rows = words.collect()
-      if (!rows.exists(r => r.isNullAt(1) || r.isNullAt(2))) {
-        var vocab = rows.map(r => (r.getString(1), r.getLong(2)))
-        def censusL(step: Int): (Int, Long, Long) = {
-          var nw = 0L; var ns = 0L
-          vocab.foreach { case (syms, cnt) =>
-            nw += cnt; ns += cnt * syms.split("\\|", -1).length
-          }
-          (step, nw, ns)
+    val words = words0.localCheckpoint(true)
+    // k checkpointed merge applications + k census collects over a vocab
+    // that fits the driver are pure fixed cost: apply the merges with
+    // applyMergeLocal and census locally (long sums, order-independent)
+    val curve = DriverSolve(words, Seq("syms", "cnt")) { rows =>
+      var vocab = rows.map(r => (r.getString(0), r.getLong(1)))
+      def census(step: Int): (Int, Long, Long) = {
+        var nw = 0L; var ns = 0L
+        vocab.foreach { case (syms, cnt) =>
+          nw += cnt; ns += cnt * syms.split("\\|", -1).length
         }
-        val curveL = Seq.newBuilder[(Int, Long, Long)]
-        curveL += censusL(0)
-        merges.sortBy(_._1).foreach { case (step, lft, rgt) =>
-          vocab = vocab.map { case (syms, cnt) =>
-            (applyMergeLocal(syms, lft, rgt), cnt)
-          }
-          curveL += censusL(step)
-        }
-        Bridge.release(words)
-        return curveL.result()
-          .filter { case (_, nw, _) => nw > 0L }
-          .map { case (s, nw, ns) => (s.toLong, nw, ns, ns * 1000000L / nw) }
-          .toDF("step", "n_words", "n_subwords", "fertility_micro")
+        (step, nw, ns)
       }
-    }
+      census(0) +: merges.sortBy(_._1).map { case (step, lft, rgt) =>
+        vocab = vocab.map { case (syms, cnt) =>
+          (applyMergeLocal(syms, lft, rgt), cnt)
+        }
+        census(step)
+      }
+    }.getOrElse(curveLoop(words, merges))
+    curveFrame(words0.sparkSession, curve)
+  }
+
+  /** [[compressionCurve]]'s distributed loop alone, never the driver path. */
+  private[graft] def compressionCurveDistributed(words0: DataFrame,
+      merges: Seq[(Int, String, String)]): DataFrame =
+    curveFrame(words0.sparkSession,
+      curveLoop(words0.localCheckpoint(true), merges))
+
+  private def curveFrame(spark: SparkSession,
+                         curve: Seq[(Int, Long, Long)]): DataFrame = {
+    import spark.implicits._
+    curve
+      .filter { case (_, nw, _) => nw > 0L }
+      .map { case (s, nw, ns) => (s.toLong, nw, ns, ns * 1000000L / nw) }
+      .toDF("step", "n_words", "n_subwords", "fertility_micro")
+  }
+
+  /** Per-prefix (step, Σ cnt, Σ cnt·|syms|) over the checkpointed merge
+    * applications; releases `words0`. */
+  private def curveLoop(words0: DataFrame, merges: Seq[(Int, String, String)])
+      : Seq[(Int, Long, Long)] = {
+    var words = words0
     // an EMPTY word frame (empty corpus) yields NULL sums — emit the
     // degenerate empty curve instead of NPE-ing on getLong / dividing
     // by a zero word count (word counts are constant across merge
@@ -551,10 +558,6 @@ object BpeTrain {
     }
     Bridge.release(words)
     curve.result()
-      .filter { case (_, nw, _) => nw > 0L }
-      .map { case (s, nw, ns) =>
-        (s.toLong, nw, ns, ns * 1000000L / nw) }
-      .toDF("step", "n_words", "n_subwords", "fertility_micro")
   }
 
   /** t28 oracle: one per-prefix census off each unrolled merge level. */

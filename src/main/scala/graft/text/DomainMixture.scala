@@ -1,8 +1,10 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.ops.DriverSolve
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Domain-mixture weight OPTIMIZATION (DoReMi-lite, after Xie et al.
   * 2023, arXiv:2305.10429): solve for per-domain sampling weights from
@@ -55,12 +57,16 @@ object DomainMixture {
   def solve(docs: DataFrame, domain: Column, lossMicro: Column, k: Int,
             etaPermille: Long = 100L,
             smoothPermille: Long = 200L): DataFrame =
-    // stage 1: the ONE corpus pass
-    solveFromStats(docs
+    solveFromStats(perDomainStats(docs, domain, lossMicro), k, etaPermille,
+      smoothPermille)
+
+  /** Stage 1, the ONE corpus pass: `(domain, n_docs, __sum)`. */
+  private def perDomainStats(docs: DataFrame, domain: Column,
+                             lossMicro: Column): DataFrame =
+    docs
       .select(domain.as("domain"), lossMicro.as("__loss"))
       .groupBy(col("domain"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("__loss")).as("__sum")),
-      k, etaPermille, smoothPermille)
+      .agg(count(lit(1)).as("n_docs"), sum(col("__loss")).as("__sum"))
 
   /** Stages 2–4 over an already-reduced `(domain, n_docs, __sum)` frame
     * — shared by the one-shot [[solve]] and the maintained-store read
@@ -69,62 +75,64 @@ object DomainMixture {
   private def solveFromStats(perDomain0: DataFrame, k: Int,
                              etaPermille: Long,
                              smoothPermille: Long): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(etaPermille >= 0 && smoothPermille >= 0 &&
-      smoothPermille <= 1000, "eta >= 0, 0 <= smooth <= 1000")
-    val perDomain = perDomain0.localCheckpoint(true)
-    // r20 hybrid (the PageRank/components move): the k-step loop runs
-    // over a |D|-row frame — tens of domains — yet pays a checkpoint +
-    // 1-row aggregate + broadcast cross join PER STEP. Under
-    // spark.graft.mixture.localMaxDomains (0 disables), run the
-    // identical integer recurrence on the driver off the checkpoint's
-    // blocks: same floor divisions on the same longs in the same order
-    // ⇒ bit-identical weights. NULL domains or an empty frame fall
-    // through to the unchanged loop (which also keeps ANSI's
-    // divide-by-zero behavior for the degenerate empty corpus).
-    val localCap = perDomain0.sparkSession.conf
-      .get("spark.graft.mixture.localMaxDomains", "100000").toLong
-    if (localCap > 0 && perDomain.count() <= localCap) {
-      val rows = perDomain.collect()
-      if (rows.nonEmpty &&
-          !rows.exists(r => r.isNullAt(0) || r.isNullAt(1) ||
-            r.isNullAt(2))) {
-        val nd = rows.length.toLong
-        val gsum = rows.map(_.getLong(2)).sum
-        val gn = rows.map(_.getLong(1)).sum
-        val gmean = gsum / gn
-        case class D(domain: Any, nDocs: Long, mean: Long, excess: Long,
-                     var w: Long)
-        val uniform = 1000000L / nd
-        val ds = rows.map { r =>
-          val mean = r.getLong(2) / r.getLong(1)
-          D(r.get(0), r.getLong(1), mean, math.max(mean - gmean, 0L),
-            uniform)
-        }
-        for (_ <- 1 to k) {
-          val us = ds.map(d =>
-            (d.w * (1000000L + (etaPermille * d.excess) / 1000L)) / 1000000L)
-          val su = us.sum
-          ds.zip(us).foreach { case (d, u) => d.w = (u * 1000000L) / su }
-        }
-        val out = new java.util.ArrayList[org.apache.spark.sql.Row](ds.length)
-        ds.foreach { d =>
-          out.add(org.apache.spark.sql.Row(d.domain, d.nDocs, d.mean,
-            d.excess,
-            ((1000L - smoothPermille) * d.w) / 1000L +
-              (smoothPermille * uniform) / 1000L))
-        }
-        Bridge.release(perDomain)
-        import org.apache.spark.sql.types._
-        val schema = StructType(Seq(
+    val perDomain = checkpointed(perDomain0, k, etaPermille, smoothPermille)
+    // the k-step loop runs over tens of domains yet pays a checkpoint +
+    // 1-row aggregate + broadcast cross join PER STEP: run the identical
+    // integer recurrence on the driver (same floor divisions on the same
+    // longs in the same order ⇒ bit-identical weights)
+    DriverSolve(perDomain, Seq("domain", "n_docs", "__sum"))(rows =>
+      perDomain.sparkSession.createDataFrame(
+        localWeights(rows, k, etaPermille, smoothPermille),
+        StructType(Seq(
           StructField("domain", perDomain.schema("domain").dataType),
           StructField("n_docs", LongType),
           StructField("mean_loss_micro", LongType),
           StructField("excess_micro", LongType),
-          StructField("weight_micro", LongType)))
-        return perDomain0.sparkSession.createDataFrame(out, schema)
-      }
+          StructField("weight_micro", LongType)))))
+      .getOrElse(loop(perDomain, k, etaPermille, smoothPermille))
+  }
+
+  /** [[solve]]'s distributed k-step loop alone, never the driver path. */
+  private[graft] def solveDistributed(docs: DataFrame, domain: Column,
+                                      lossMicro: Column, k: Int,
+                                      etaPermille: Long = 100L,
+                                      smoothPermille: Long = 200L): DataFrame =
+    loop(checkpointed(perDomainStats(docs, domain, lossMicro), k, etaPermille,
+      smoothPermille), k, etaPermille, smoothPermille)
+
+  private def checkpointed(perDomain0: DataFrame, k: Int, etaPermille: Long,
+                           smoothPermille: Long): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    require(etaPermille >= 0 && smoothPermille >= 0 &&
+      smoothPermille <= 1000, "eta >= 0, 0 <= smooth <= 1000")
+    perDomain0.localCheckpoint(true)
+  }
+
+  private def localWeights(rows: Array[Row], k: Int, etaPermille: Long,
+                           smoothPermille: Long): java.util.List[Row] = {
+    val nd = rows.length.toLong
+    val gmean = rows.map(_.getLong(2)).sum / rows.map(_.getLong(1)).sum
+    val uniform = 1000000L / nd
+    val means = rows.map(r => r.getLong(2) / r.getLong(1))
+    val excess = means.map(m => math.max(m - gmean, 0L))
+    val w = Array.fill(rows.length)(uniform)
+    for (_ <- 1 to k) {
+      val us = w.indices.map(i =>
+        (w(i) * (1000000L + (etaPermille * excess(i)) / 1000L)) / 1000000L)
+      val su = us.sum
+      w.indices.foreach(i => w(i) = (us(i) * 1000000L) / su)
     }
+    val out = new java.util.ArrayList[Row](rows.length)
+    rows.indices.foreach { i =>
+      out.add(Row(rows(i).get(0), rows(i).getLong(1), means(i), excess(i),
+        ((1000L - smoothPermille) * w(i)) / 1000L +
+          (smoothPermille * uniform) / 1000L))
+    }
+    out
+  }
+
+  private def loop(perDomain: DataFrame, k: Int, etaPermille: Long,
+                   smoothPermille: Long): DataFrame = {
     // global mean over the |D|-row frame (1-row broadcast, never a
     // second corpus pass); nDomains rides the same scalar
     val globals = perDomain
@@ -190,20 +198,6 @@ object DomainMixture {
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id").parquet(storePath)
-
-  /** Streaming wrapper: maintain the domain-stats store per micro-batch
-    * ([[domainStatsBatch]] in `foreachBatch`); [[solveFromStore]] is
-    * the read. No compaction hook needed — the store is ≤|D| rows per
-    * batch.
-    */
-  def mixtureIngest(raw: DataFrame, domain: Column, lossMicro: Column,
-                    storePath: String,
-                    queryName: String = "graft_domain_mixture")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    raw.writeStream.queryName(queryName)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        domainStatsBatch(batch, batchId, domain, lossMicro, storePath)
-      }.start()
 
   /** Solve the mixture FROM the maintained store: re-reduce the staged
     * per-batch censuses to per-domain totals (counts and sums are

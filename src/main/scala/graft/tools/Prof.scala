@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   *
   * Attribution runs the PRODUCTION stages — `Dedup.repCollapse`,
   * `Dedup.hashedShingleFrame`, `Dedup.prefixCandidateInstances`,
-  * `Dedup.jaccardPairsPrefix`, and `Dedup.components` with its
+  * `Dedup.jaccardPairsPrefix`, and `Dedup.componentsDistributed` with its
   * per-round `onRound` hook — never a mirrored copy (round-10 advice:
   * a mirror silently measured a stale plan after the row_number→min_by
   * switch).
@@ -59,7 +59,7 @@ object Prof {
     println(s"  edges: ${edges.count()}")
     // per-round attribution via the REAL loop's onRound hook
     val labels = t("components (instrumented)") {
-      Dedup.components(edges, onRound = (i, sec, conv) =>
+      Dedup.componentsDistributed(edges, onRound = (i, sec, conv) =>
         println(f"PROF   cc round $i%-19d $sec%.2f s converged=$conv"))
     }
     println(s"  nodes: ${labels.count()}")

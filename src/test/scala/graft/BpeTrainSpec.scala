@@ -65,9 +65,7 @@ class BpeTrainSpec extends AnyFunSuite {
           .mkString)
       val corpus = Seq.fill(120)(vocabWords(rnd.nextInt(30))).mkString(" ")
       val words = BpeTrain.wordFreq(Seq(corpus).toDF("text"), col("text"))
-      spark.conf.set("spark.graft.bpe.localMaxVocab", "0")
-      val (mD, vD) = try BpeTrain.trainMerges(words, 5)
-        finally spark.conf.set("spark.graft.bpe.localMaxVocab", "200000")
+      val (mD, vD) = BpeTrain.trainMergesDistributed(words, 5)
       val distVocab = vD.select("word", "syms", "cnt")
         .as[(String, String, Long)].collect().sorted.toSeq
       org.apache.spark.sql.graftbridge.Bridge.release(vD)

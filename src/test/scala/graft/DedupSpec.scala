@@ -245,10 +245,8 @@ class DedupSpec extends AnyFunSuite {
       val edges = Seq.fill(70)((rnd.nextLong().abs % n, rnd.nextLong().abs % n))
         .filter { case (a, b) => a != b }.distinct
       val df = edges.toDF("doc_a", "doc_b")
-      spark.conf.set("spark.graft.cc.localMaxEdges", "0") // force the loop
-      val dist = try Dedup.components(df)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        finally spark.conf.set("spark.graft.cc.localMaxEdges", "250000")
+      val dist = Dedup.componentsDistributed(df)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val local = Dedup.components(df)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(local == dist, s"trial $trial")

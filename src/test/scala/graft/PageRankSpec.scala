@@ -59,9 +59,8 @@ class PageRankSpec extends AnyFunSuite {
     val edges = Seq.fill(40)((nodes(rnd.nextInt(12)), nodes(rnd.nextInt(12)),
         (rnd.nextInt(9) + 1).toLong))
       .filter { case (a, b, _) => a != b }.distinct
-    spark.conf.set("spark.graft.pagerank.localMaxEdges", "0")
-    val dist = try ranksOf(edges, iters = 3)
-      finally spark.conf.set("spark.graft.pagerank.localMaxEdges", "250000")
+    val dist = PageRank.ranksDistributed(edges.toDF("src", "dst", "w"), 3)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val local = ranksOf(edges, iters = 3)
     assert(local == dist)
   }

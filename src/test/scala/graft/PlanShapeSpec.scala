@@ -146,11 +146,9 @@ class PlanShapeSpec extends AnyFunSuite {
     val pairs = graft.dedup.Dedup.jaccardPairsPrefix(docs, col("text"),
         col("doc_id"), blockCol = "source", threshold = 0.9)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
-    // force the DISTRIBUTED path — this test pins the at-scale plan's
-    // join strategy; the r20 driver fast path is pinned by TrianglesSpec
-    spark.conf.set("spark.graft.triangles.localMaxEdges", "0")
-    val res = try graft.ops.Triangles.countWithCoefficient(pairs)
-      finally spark.conf.set("spark.graft.triangles.localMaxEdges", "250000")
+    // the DISTRIBUTED joins alone — this test pins the at-scale plan's
+    // join strategy; the driver path is pinned by TrianglesSpec
+    val res = graft.ops.Triangles.countDistributed(pairs)
     res.collect() // finalize the adaptive plan
     // the AQE plan string appends the pre-adaptive "== Initial Plan ==",
     // which legitimately contains the sort-merge fallback — assert on the

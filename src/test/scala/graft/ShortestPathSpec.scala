@@ -35,17 +35,29 @@ class ShortestPathSpec extends AnyFunSuite {
     assert(d("b").isEmpty) // only an edge INTO s — not reachable FROM s
   }
 
-  test("driver path equals the distributed loop on random graphs") {
+  test("random graphs match a reference Bellman-Ford, bounded and exact") {
     val rnd = new scala.util.Random(11)
     val nodes = "s" +: (0 until 10).map(i => s"n$i")
     val edges = Seq.fill(35)((nodes(rnd.nextInt(11)), nodes(rnd.nextInt(11)),
         (rnd.nextInt(7) + 1).toLong))
       .filter { case (a, b, _) => a != b }.distinct
-    spark.conf.set("spark.graft.sssp.localMaxEdges", "0")
-    val dist = try dists(edges, iters = 4)
-      finally spark.conf.set("spark.graft.sssp.localMaxEdges", "250000")
-    val local = dists(edges, iters = 4)
-    assert(local == dist)
+    // synchronous rounds: round k relaxes from round k-1's distances
+    def reference(iters: Int): Map[String, Option[Long]] = {
+      val all = edges.flatMap { case (a, b, _) => Seq(a, b) }.distinct
+      var d = all.map(n => n -> (if (n == "s") Some(0L) else None)).toMap
+      for (_ <- 1 to iters) {
+        val prev = d
+        d = all.map { v =>
+          val via = edges.collect { case (u, `v`, c) if prev(u).isDefined =>
+            prev(u).get + c }
+          v -> (prev(v).toSeq ++ via).reduceOption(_ min _)
+        }.toMap
+      }
+      d
+    }
+    assert(reference(4).values.flatten.count(_ > 0) >= 3) // s reaches others
+    assert(dists(edges, iters = 4) == reference(4))
+    assert(dists(edges, iters = nodes.size) == reference(nodes.size))
   }
 
   test("iters bounds the path length (Bellman-Ford rounds)") {

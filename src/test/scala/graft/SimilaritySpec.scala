@@ -21,40 +21,29 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("ivfTrain / pqEncodeTrained: local solve ≡ forced-distributed, bit for bit") {
-    // r21 driver-solve equivalence (the DedupSpec/PageRankSpec pattern):
-    // spark.graft.ivf.localMaxCells=0 pins the distributed trainer; the
-    // default cap takes the local path on this corpus. Both must produce
-    // identical centroids, codebook-derived codes, and errors.
-    val conf = spark.conf
-    val key = "spark.graft.ivf.localMaxCells"
-    val prev = conf.getOption(key)
-    try {
-      conf.set(key, "0")
-      val distTrain = Similarity.ivfTrain(emb, 4, 2)
-      val distPq = Similarity.pqEncodeTrained(emb, m = 2, subDim = 4,
-        ks = 8, iters = 2).orderBy("vec_id").collect().toSeq
-      val distAnn = Similarity.ivfAnn(emb, queryVecId = 0L, k = 10,
-        nCentroids = 4, nProbe = 2, iters = 2)
-        .collect().toSeq
-      conf.set(key, "4000000")
-      val locTrain = Similarity.ivfTrain(emb, 4, 2)
-      val locPq = Similarity.pqEncodeTrained(emb, m = 2, subDim = 4,
-        ks = 8, iters = 2).orderBy("vec_id").collect().toSeq
-      val locAnn = Similarity.ivfAnn(emb, queryVecId = 0L, k = 10,
-        nCentroids = 4, nProbe = 2, iters = 2)
-        .collect().toSeq
-      assert(distTrain.map(_._1).toSeq == locTrain.map(_._1).toSeq)
-      distTrain.zip(locTrain).foreach { case ((_, d), (_, l)) =>
-        assert(d.toSeq == l.toSeq) // exact doubles, no tolerance
-      }
-      assert(distPq == locPq)
-      assert(distAnn == locAnn)
-    } finally {
-      prev match {
-        case Some(v) => conf.set(key, v)
-        case None => conf.unset(key)
-      }
+    // the driver-solve equivalence (the DedupSpec/PageRankSpec pattern):
+    // this corpus takes the local path; a None corpus copy is the
+    // distributed trainer. Both must produce identical centroids,
+    // codebook-derived codes, and errors.
+    val distTrain = Similarity.ivfTrainWith(emb, 4, 2, None)
+    val distPq = Similarity.pqEncodeTrainedWith(emb, m = 2, subDim = 4,
+      ks = 8, iters = 2, lv = None).orderBy("vec_id").collect().toSeq
+    val distAnn = Similarity.ivfAnnWith(emb, queryVecId = 0L, k = 10,
+      nCentroids = 4, nProbe = 2, iters = 2, lv = None)
+      .collect().toSeq
+    assert(Similarity.localVecs(emb).isDefined)
+    val locTrain = Similarity.ivfTrain(emb, 4, 2)
+    val locPq = Similarity.pqEncodeTrained(emb, m = 2, subDim = 4,
+      ks = 8, iters = 2).orderBy("vec_id").collect().toSeq
+    val locAnn = Similarity.ivfAnn(emb, queryVecId = 0L, k = 10,
+      nCentroids = 4, nProbe = 2, iters = 2)
+      .collect().toSeq
+    assert(distTrain.map(_._1).toSeq == locTrain.map(_._1).toSeq)
+    distTrain.zip(locTrain).foreach { case ((_, d), (_, l)) =>
+      assert(d.toSeq == l.toSeq) // exact doubles, no tolerance
     }
+    assert(distPq == locPq)
+    assert(distAnn == locAnn)
   }
 
   test("clusterStratifiedSample ≡ per-cluster window rank-k on the same assignment") {

@@ -15,9 +15,14 @@ class TrianglesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def count(edges: Seq[(Long, Long)]): (Long, Long, Double) = {
-    val r = Triangles.countWithCoefficient(edges.toDF("a", "b"))
-      .collect().head
+  private def count(edges: Seq[(Long, Long)]): (Long, Long, Double) =
+    triple(Triangles.countWithCoefficient(edges.toDF("a", "b")))
+
+  private def countDistributed(edges: Seq[(Long, Long)]): (Long, Long, Double) =
+    triple(Triangles.countDistributed(edges.toDF("a", "b")))
+
+  private def triple(df: DataFrame): (Long, Long, Double) = {
+    val r = df.collect().head
     (r.getLong(0), r.getLong(1), r.getDouble(2))
   }
 
@@ -49,11 +54,8 @@ class TrianglesSpec extends AnyFunSuite {
     val edges = Seq.fill(60)((rnd.nextLong().abs % 20, rnd.nextLong().abs % 20))
       .filter { case (a, b) => a != b }
       .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
-    spark.conf.set("spark.graft.triangles.localMaxEdges", "0")
-    val dist = try count(edges)
-      finally spark.conf.set("spark.graft.triangles.localMaxEdges", "250000")
     val local = count(edges)
-    assert(local == dist)
+    assert(local == countDistributed(edges))
   }
 
   test("self-loops and duplicate edges: driver path equals distributed") {
@@ -63,10 +65,8 @@ class TrianglesSpec extends AnyFunSuite {
     // duplicate edges must multiply wedge instances identically.
     val edges = Seq((1L, 1L), (1L, 2L), (2L, 3L), (1L, 3L), (2L, 3L),
       (4L, 4L), (1L, 2L))
-    spark.conf.set("spark.graft.triangles.localMaxEdges", "0")
-    val dist = try count(edges)
-      finally spark.conf.set("spark.graft.triangles.localMaxEdges", "250000")
     val local = count(edges)
+    val dist = countDistributed(edges)
     assert(local == dist, s"local $local vs distributed $dist")
   }
 
