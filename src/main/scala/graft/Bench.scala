@@ -12,35 +12,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     def build(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        // Late-suite driver-state control: even with the UI off, the app
-        // and SQL status stores retain the last 1000 jobs/stages/
-        // executions — ~600 query runs × (multi-job iterative loops +
-        // checkpoint jobs) keep thousands of stage/task wrappers and full
-        // plan-graph strings live in the InMemoryStore, and the element-
-        // tracking cleanup itself scans those collections. That standing
-        // heap is the main suspect for the in-suite vs fresh-session
-        // drift the adjudication pass keeps correcting (r8: 2–27×).
-        // Benchmarks need none of that history — keep only a handful.
-        .config("spark.ui.retainedJobs", "50")
-        .config("spark.ui.retainedStages", "50")
-        .config("spark.ui.retainedTasks", "1000")
-        .config("spark.sql.ui.retainedExecutions", "10")
-        .config("spark.worker.ui.retainedExecutors", "10")
-        .getOrCreate()
-      // ERROR, not WARN: the intentional global-window queries (w1 NTILE,
-      // pipeline global row_number) each emit a WindowExec warning per rep,
-      // and ~100 warning lines crowded the per-query JSON out of the
-      // driver's bounded tail capture in round 5
-      s.sparkContext.setLogLevel("ERROR")
+      val s = Session(cpus)
       // untimed warmup: codegen + parquet footer/file-status caches for
       // EVERY table, so neither the first timed query nor the post-recycle
       // rerun pass is charged cold-scan costs (lineitem-only warmup left
@@ -83,16 +58,9 @@ object Bench {
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
     } catch { case _: Throwable => Map.empty }
 
-    // Storage hygiene between runs: localCheckpoint(eager) blocks persist in
-    // the BlockManager until their RDD is GC'd, so 197 queries × 3 reps pile
-    // up hundreds of dead storage blocks. The resulting memory pressure
-    // showed up as 25× inflation on TRIVIAL projections late in the
-    // alphabetical r7 suite (x5/x11/x13) — not plan damage. Unpersist every
-    // persistent RDD after each rep (each rep rebuilds its own checkpoints),
-    // and nudge GC every 25 queries to clear the broadcast/codegen litter.
-    def dropBlocks(): Unit =
-      try spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      catch { case _: Throwable => }
+    // Storage hygiene between runs: drop every rep's checkpoint blocks
+    // (Session.dropBlocks), and nudge GC every 25 queries to clear the
+    // broadcast/codegen litter.
     // min over the reps, or None when a rep throws: a failed attempt's
     // wall time is not a timing, so the query is reported under "failed"
     def time(name: String,
@@ -105,7 +73,7 @@ object Bench {
             System.err.println(s"[bench] $name failed: $e"); false
         }
         val dt = (System.nanoTime() - t0) / 1e9
-        dropBlocks()
+        Session.dropBlocks(spark)
         if (ok) Some(dt) else None
       }
       if (ts.contains(None)) None else Some(ts.flatten.min)

@@ -1,27 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // status stores retain 1000 jobs/stages/executions even with the UI
-      // off — across ~200 query runs that standing history is driver
-      // memory pressure with zero value here (same hygiene as Bench)
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "1000")
-      .config("spark.sql.ui.retainedExecutions", "10")
-      .config("spark.worker.ui.retainedExecutors", "10")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // dev aid: SPARK_GRAFT_VERIFY_ONLY=a,b dumps a subset (driver leaves
@@ -36,10 +21,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // drop dead localCheckpoint blocks so 197 queries of storage litter
-      // can't build memory pressure late in the run (same hygiene as Bench)
-      try spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      catch { case _: Throwable => }
+      Session.dropBlocks(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

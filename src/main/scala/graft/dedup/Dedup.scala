@@ -1073,10 +1073,16 @@ object Dedup {
   // linearly in lineage, so analysis cost goes quadratic and any cache
   // eviction triggers exponential recompute — checkpointing truncates the
   // plan to the materialized result (standard iterative-Spark hygiene)
-  private def symmetrized(edges: DataFrame): DataFrame =
+  // endpoint types must agree: a union would otherwise widen them (Int
+  // and String to String) and fail inside a task on the first cast back
+  private def symmetrized(edges: DataFrame): DataFrame = {
+    require(edges.schema("doc_a").dataType == edges.schema("doc_b").dataType,
+      s"edge endpoint types differ: ${edges.schema("doc_a").dataType} vs " +
+        s"${edges.schema("doc_b").dataType}")
     edges.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .unionByName(edges.select(col("doc_b").as("u"), col("doc_a").as("v")))
       .localCheckpoint(true)
+  }
 
   /** Union-find over (u, v) rows: (node, min node id of its component),
     * by node. */

@@ -42,14 +42,12 @@ object PageRank {
     // pays a checkpointed join + aggregate: run the IDENTICAL integer
     // recurrence on the driver (same floor divisions in the same order on
     // the same longs ⇒ bit-identical ranks). Its output stamps src's type
-    // on the node column, so src and dst types must agree.
+    // on the node column ([[withOutWeights]] holds dst to the same type).
     val nodeType = ed.schema("src").dataType
-    val local =
-      if (nodeType != ed.schema("dst").dataType) None
-      else DriverSolve(ed, ed.columns.toSeq)(rows =>
-        ed.sparkSession.createDataFrame(localRanks(rows, iters, scale),
-          StructType(Seq(StructField("node", nodeType),
-            StructField("rank_scaled", LongType)))))
+    val local = DriverSolve(ed, ed.columns.toSeq)(rows =>
+      ed.sparkSession.createDataFrame(localRanks(rows, iters, scale),
+        StructType(Seq(StructField("node", nodeType),
+          StructField("rank_scaled", LongType)))))
     local.getOrElse(loop(ed, iters, scale))
   }
 
@@ -62,6 +60,11 @@ object PageRank {
   private def withOutWeights(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
     val ed0 = edges.toDF("src", "dst", "w")
+    // a type mismatch would otherwise fail inside a task, on the first
+    // join or cast between the two endpoint columns
+    require(ed0.schema("src").dataType == ed0.schema("dst").dataType,
+      s"edge endpoint types differ: ${ed0.schema("src").dataType} vs " +
+        s"${ed0.schema("dst").dataType}")
     val ow = ed0.groupBy(col("src"))
       .agg(sum(col("w")).cast("long").as("outw"))
     // LEFT join: an inner join would drop NULL-src rows before the driver

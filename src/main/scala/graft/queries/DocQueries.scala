@@ -18,108 +18,53 @@ import org.apache.spark.sql.functions._
   */
 object DocQueries {
 
-  /** Memoized materialization dir for the d9 incremental-dedup drive,
-    * keyed on the fixture dir (see the d9 QDef for the rationale).
+  /** The managed-CDC batch sequence shared by the c55, c59, c62 and c63
+    * drives: the corpus bootstrap (ships), a mass delete of the even ids
+    * (~50% removal, REFUSED by the census rule), the B refresh (~14%
+    * removal, ships) and its at-least-once replay. Each full changelog
+    * goes to `apply(log, batchId)`, which folds it under [[ManagedRules]]
+    * and [[ManagedCensus]]; the verdicts are asserted here, so every
+    * drive pins that the poisoned batch was refused.
     */
-  private val d9DriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private def managedCdc(s: org.apache.spark.sql.SparkSession, dir: String,
+                         what: String)(
+      apply: (org.apache.spark.sql.DataFrame, Long) => Boolean): Unit = {
+    val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
+    def full(a: org.apache.spark.sql.DataFrame,
+             b: org.apache.spark.sql.DataFrame) =
+      graft.curation.Curation.corpusDiffFull(a, b)
+    val refresh = full(docs, vmSnapB(docs))
+    val shipped = Seq(
+      0L -> full(docs.limit(0), docs),                        // bootstrap
+      1L -> full(docs, docs.filter(col("doc_id") % 2 =!= 0)), // REFUSED
+      2L -> refresh,                                          // ships
+      2L -> refresh                           // at-least-once replay
+    ).map { case (bid, log) => apply(log, bid) }
+    assert(shipped == Seq(true, false, true, true),
+      s"$what verdicts: $shipped")
+  }
+  private val ManagedRules = Seq("doc_id_not_null" -> col("doc_id").isNotNull)
+  private val ManagedCensus = Seq("census_removed_max_20pct" ->
+    (col("n_removed") * 5 <= col("n_old")))
 
-  /** Memoized store dir for the SHARED d12c/d12d incremental-LSH drive,
-    * keyed on the fixture dir (same rationale: the drive is the gates'
-    * setup, re-driving it per bench rep re-measures small-file staging).
-    * One drive maintains staging + edges + label snapshots
-    * (Curation.incrementalLshLabelsBatch); d12d reads the maintained
-    * labels (the canonical at-scale read) and d12c re-clusters the edge
-    * store (the recompute/audit read that validates the labels) — both
-    * hash-gated against the same d12b oracle.
-    */
-  private val lshIncDriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Memoized store dir for the c19c incremental span-dedup drive (same
-    * rationale as d12c: the 4-batch drive is the gate's setup).
-    */
-  private val c19cDriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Memoized store dir for the c45 maintained-snapshot drive (same
-    * rationale as d9: the 4-batch changelog drive is the gate's setup,
-    * and re-driving it per bench rep re-measures small-file overwrite
-    * cost, not the engine).
-    */
-  private val c45DriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Memoized report-store dir for the c47b expectations drive (same
-    * rationale as d9: the 4-batch drive incl. replay is gate setup).
-    */
-  private val c47bDriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Memoized store dirs for the c51 census-guard and c52 catch-up
-    * drives (same rationale as c45: the multi-batch drive is setup).
-    */
-  private val c51DriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val c52DriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val c53DriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val c54DriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val c55DriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val c57DriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val c59DriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val c61DriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val c62DriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val c63DriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val c68DriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The c62 managed-ISOLATED drive: the c55 batch sequence (bootstrap,
-    * census-refused mass delete, B refresh, replay) through
+  /** The c62 managed-ISOLATED drive: [[managedCdc]] through
     * [[graft.curation.Curation.managedCorpusApplyBatchIsolated]] — the
     * refused batch must commit NO manifest generation.
     */
   private def c62Drive(s: org.apache.spark.sql.SparkSession,
                        dir: String): String =
-    c62DriveCache.computeIfAbsent(dir, _ => {
-      val b0 = QDef.tempDir("graft_managed_isolated")
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      def diffFull(a: org.apache.spark.sql.DataFrame,
-                   b: org.apache.spark.sql.DataFrame) =
-        graft.curation.Curation.corpusDiffFull(a, b)
-      val massDelete = diffFull(docs, docs.filter(col("doc_id") % 2 =!= 0))
-      val goodRefresh = diffFull(docs, vmSnapB(docs))
-      val rules = Seq("doc_id_not_null" -> col("doc_id").isNotNull)
-      val census = Seq("census_removed_max_20pct" ->
-        (col("n_removed") * 5 <= col("n_old")))
-      val shipped = Seq(
-        0L -> diffFull(docs.limit(0), docs), // bootstrap
-        1L -> massDelete,                    // REFUSED (~50% removal)
-        2L -> goodRefresh,                   // ships (~14% removal)
-        2L -> goodRefresh                    // at-least-once replay
-      ).map { case (bid, log) =>
+    Drives.store("graft_managed_isolated", dir) { b0 =>
+      managedCdc(s, dir, "managed-isolated") { (log, bid) =>
         graft.curation.Curation.managedCorpusApplyBatchIsolated(log, bid,
-          s"$b0/store", s"$b0/sig", s"$b0/report", rules,
-          censusRules = census, nBuckets = 8)
+          s"$b0/store", s"$b0/sig", s"$b0/report", ManagedRules,
+          censusRules = ManagedCensus, nBuckets = 8)
       }
-      assert(shipped == Seq(true, false, true, true),
-        s"managed-isolated verdicts: $shipped")
       graft.curation.Curation.pruneSnapshotGens(s, s"$b0/store",
         retainManifests = 1)
-      b0
-    })
+    }
 
-  /** The shared c63/c64 managed-VERSIONED-ISOLATED drive: the c59
-    * batch sequence (bootstrap, census-refused mass delete archiving
-    * NOTHING, the B refresh, its at-least-once replay) through
+  /** The shared c63/c64 managed-VERSIONED-ISOLATED drive: [[managedCdc]]
+    * (the refused batch archives NOTHING) through
     * [[graft.curation.Curation.managedVersionedApplyBatchIsolated]] —
     * time travel AND reader isolation from one composite. The drive
     * also prunes stale generations mid-history (retain = 1): as-of
@@ -128,27 +73,12 @@ object DocQueries {
     */
   private def c63Drive(s: org.apache.spark.sql.SparkSession,
                        dir: String): String =
-    c63DriveCache.computeIfAbsent(dir, _ => {
-      val b0 = QDef.tempDir("graft_managed_versioned_isolated")
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      def full(a: org.apache.spark.sql.DataFrame,
-               b: org.apache.spark.sql.DataFrame) =
-        graft.curation.Curation.corpusDiffFull(a, b)
-      val rules = Seq("doc_id_not_null" -> col("doc_id").isNotNull)
-      val census = Seq("census_removed_max_20pct" ->
-        (col("n_removed") * 5 <= col("n_old")))
-      val shipped = Seq(
-        0L -> full(docs.limit(0), docs),
-        1L -> full(docs, docs.filter(col("doc_id") % 2 =!= 0)), // refused
-        2L -> full(docs, vmSnapB(docs)),
-        2L -> full(docs, vmSnapB(docs)) // at-least-once replay
-      ).map { case (v, log) =>
+    Drives.store("graft_managed_versioned_isolated", dir) { b0 =>
+      managedCdc(s, dir, "managed-versioned-isolated") { (log, v) =>
         graft.curation.Curation.managedVersionedApplyBatchIsolated(log, v,
-          s"$b0/corpus", s"$b0/sig", s"$b0/report", rules,
-          censusRules = census, nBuckets = 8)
+          s"$b0/corpus", s"$b0/sig", s"$b0/report", ManagedRules,
+          censusRules = ManagedCensus, nBuckets = 8)
       }
-      assert(shipped == Seq(true, false, true, true),
-        s"managed-versioned-isolated verdicts: $shipped")
       graft.curation.Curation.pruneSnapshotGens(s, s"$b0/corpus/snap",
         retainManifests = 1)
       // squash + GC the committed sig store mid-drive too: the c65
@@ -156,39 +86,21 @@ object DocQueries {
       graft.curation.Curation.compactSigStoreCommitted(s, s"$b0/sig")
       graft.curation.Curation.pruneSigStoreSegs(s, s"$b0/sig",
         retainManifests = 1)
-      b0
-    })
+    }
 
-  /** The shared c59/c60 managed-VERSIONED drive: CDC batches through
-    * [[graft.curation.Curation.managedVersionedApplyBatch]] —
-    * bootstrap (v0 ships), a census-refused mass delete (v1 archives
-    * NOTHING), the legitimate B refresh (v2 ships, replayed).
+  /** The shared c59/c60 managed-VERSIONED drive: [[managedCdc]] through
+    * [[graft.curation.Curation.managedVersionedApplyBatch]] — v0 ships,
+    * the refused v1 archives NOTHING, v2 ships and is replayed.
     */
   private def c59Drive(s: org.apache.spark.sql.SparkSession,
                        dir: String): String =
-    c59DriveCache.computeIfAbsent(dir, _ => {
-      val b0 = QDef.tempDir("graft_managed_versioned")
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      def full(a: org.apache.spark.sql.DataFrame,
-               b: org.apache.spark.sql.DataFrame) =
-        graft.curation.Curation.corpusDiffFull(a, b)
-      val rules = Seq("doc_id_not_null" -> col("doc_id").isNotNull)
-      val census = Seq("census_removed_max_20pct" ->
-        (col("n_removed") * 5 <= col("n_old")))
-      val shipped = Seq(
-        0L -> full(docs.limit(0), docs),
-        1L -> full(docs, docs.filter(col("doc_id") % 2 =!= 0)), // refused
-        2L -> full(docs, vmSnapB(docs)),
-        2L -> full(docs, vmSnapB(docs)) // at-least-once replay
-      ).map { case (v, log) =>
+    Drives.store("graft_managed_versioned", dir) { b0 =>
+      managedCdc(s, dir, "managed-versioned") { (log, v) =>
         graft.curation.Curation.managedVersionedApplyBatch(log, v,
-          s"$b0/corpus", s"$b0/sig", s"$b0/report", rules,
-          censusRules = census, nBuckets = 8)
+          s"$b0/corpus", s"$b0/sig", s"$b0/report", ManagedRules,
+          censusRules = ManagedCensus, nBuckets = 8)
       }
-      assert(shipped == Seq(true, false, true, true),
-        s"managed-versioned verdicts: $shipped")
-      b0
-    })
+    }
 
   /** The shared c57/c58 versioned-store drive: bootstrap, A→B
     * (REPLAYED — archive + fold idempotence), B→C, each archived as a
@@ -196,8 +108,7 @@ object DocQueries {
     */
   private def c57Drive(s: org.apache.spark.sql.SparkSession,
                        dir: String): String =
-    c57DriveCache.computeIfAbsent(dir, _ => {
-      val b0 = QDef.tempDir("graft_time_travel_gate")
+    Drives.store("graft_time_travel_gate", dir) { b0 =>
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val snapB = vmSnapB(docs)
       def full(a: org.apache.spark.sql.DataFrame,
@@ -210,43 +121,22 @@ object DocQueries {
           graft.curation.Curation.versionedSnapshotApplyBatch(log, b0, v,
             nBuckets = 8)
         }
-      b0
-    })
+    }
 
-  /** The shared c55/c56 managed-corpus drive: CDC batches through
-    * [[graft.curation.Curation.managedCorpusApplyBatch]] — bootstrap,
-    * a census-refused mass delete, the legitimate B refresh, and a
-    * replay of the B refresh (dual-fold idempotence). Both maintained
-    * artifacts (`snap`, `sig`) come out of ONE drive so the two gates
-    * cannot drift.
+  /** The shared c55/c56 managed-corpus drive: [[managedCdc]] through
+    * [[graft.curation.Curation.managedCorpusApplyBatch]] — the replay
+    * pins dual-fold idempotence. Both maintained artifacts (`snap`,
+    * `sig`) come out of ONE drive so the two gates cannot drift.
     */
   private def c55Drive(s: org.apache.spark.sql.SparkSession,
                        dir: String): String =
-    c55DriveCache.computeIfAbsent(dir, _ => {
-      val b0 = QDef.tempDir("graft_managed_corpus")
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      def diffFull(a: org.apache.spark.sql.DataFrame,
-                   b: org.apache.spark.sql.DataFrame) =
-        graft.curation.Curation.corpusDiffFull(a, b)
-      val massDelete = diffFull(docs, docs.filter(col("doc_id") % 2 =!= 0))
-      val goodRefresh = diffFull(docs, vmSnapB(docs))
-      val rules = Seq("doc_id_not_null" -> col("doc_id").isNotNull)
-      val census = Seq("census_removed_max_20pct" ->
-        (col("n_removed") * 5 <= col("n_old")))
-      val shipped = Seq(
-        0L -> diffFull(docs.limit(0), docs), // bootstrap
-        1L -> massDelete,                    // REFUSED (~50% removal)
-        2L -> goodRefresh,                   // ships (~14% removal)
-        2L -> goodRefresh                    // at-least-once replay
-      ).map { case (bid, log) =>
+    Drives.store("graft_managed_corpus", dir) { b0 =>
+      managedCdc(s, dir, "managed-corpus") { (log, bid) =>
         graft.curation.Curation.managedCorpusApplyBatch(log, bid,
-          s"$b0/snap", s"$b0/sig", s"$b0/report", rules,
-          censusRules = census, nBuckets = 8)
+          s"$b0/snap", s"$b0/sig", s"$b0/report", ManagedRules,
+          censusRules = ManagedCensus, nBuckets = 8)
       }
-      assert(shipped == Seq(true, false, true, true),
-        s"managed-corpus verdicts: $shipped")
-      b0
-    })
+    }
 
   /** The version-management gates' SHARED snapshot fixtures (c42–c46):
     * snapshot B is a deterministic edit of `documents` (ids %7 dropped,
@@ -287,22 +177,21 @@ object DocQueries {
     * batches (doc_id mod 3), batch 1 replayed to prove staged-edge AND
     * label-merge idempotence, each batch through the full canonical
     * maintenance op (staging + touched-bucket edge recompute + versioned
-    * label snapshot).
+    * label snapshot). d12d reads the maintained labels (the canonical
+    * at-scale read) and d12c re-clusters the edge store (the
+    * recompute/audit read that validates the labels) — both hash-gated
+    * against the same d12b oracle.
     */
   private def lshIncDrive(s: org.apache.spark.sql.SparkSession,
                           dir: String): String =
-    lshIncDriveCache.computeIfAbsent(dir, _ => {
-      val b0 = QDef.tempDir("graft_lsh_inc_gate")
+    Drives.store("graft_lsh_inc_gate", dir) { b0 =>
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val parts = (0 to 2).map(r => docs.filter(pmod(col("doc_id"), lit(3)) === r))
-      (Seq(0L -> parts(0), 1L -> parts(1), 1L -> parts(1) /* replay */,
-        2L -> parts(2))).foreach { case (bid, b) =>
+      Drives.replayBatches(docs, col("doc_id"), 3).foreach { case (bid, b) =>
         graft.curation.Curation.incrementalLshLabelsBatch(b, bid,
           s"$b0/staged", s"$b0/edges", s"$b0/labels",
           numHashes = 16, bands = 2, nBuckets = 8)
       }
-      b0
-    })
+    }
 
   /** Memoized cluster-label store `(doc_id, ec, lc, sc)` per fixture dir:
     * the exact ≥0.9-Jaccard component, the 16×2 portable-MinHash-LSH
@@ -321,36 +210,15 @@ object DocQueries {
     * → LSH edges → components → SimHash bands → components on first
     * access, and d12c drives the incremental LSH path end-to-end.
     */
-  private val dedupLabelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def dedupLabelStore(s: org.apache.spark.sql.SparkSession,
-                              dir: String): org.apache.spark.sql.DataFrame = {
-    memoParquet(dedupLabelCache, "graft_dedup_labels", s, dir) {
-      Dedup.tripleClusterLabels(Tables.documents(s, dir),
+                              dir: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(Drives.store("graft_dedup_labels", dir) { p =>
+      val labels = Dedup.tripleClusterLabels(Tables.documents(s, dir),
         col("text"), col("doc_id"), threshold = 0.9,
         numHashes = 16, bands = 2, nBits = 24, maxDist = 2)
-    }
-  }
-
-  /** The memoize-to-parquet idiom shared by the per-fixture stores:
-    * build once per fixture dir, persist under a temp dir (parquet, not
-    * a checkpoint — survives Bench's session recycling), release any
-    * checkpoint the builder materialized (no-op on lazy frames), read
-    * back lazily.
-    */
-  private def memoParquet(
-      cache: java.util.concurrent.ConcurrentHashMap[String, String],
-      prefix: String, s: org.apache.spark.sql.SparkSession, dir: String)(
-      build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val p = cache.computeIfAbsent(dir, _ => {
-      val path = QDef.tempDir(prefix)
-      val df = build
-      df.write.mode("overwrite").parquet(path)
-      org.apache.spark.sql.graftbridge.Bridge.release(df)
-      path
+      labels.write.mode("overwrite").parquet(p)
+      org.apache.spark.sql.graftbridge.Bridge.release(labels)
     })
-    s.read.parquet(p)
-  }
 
   /** Memoized (ec, lc, sc, n) contingency cube per fixture — the
     * serving-side companion of [[dedupLabelStore]]: ONE corpus-sized
@@ -359,15 +227,12 @@ object DocQueries {
     * aggregations with no corpus scan and no checkpoint lifecycle
     * (Dedup.dedupAuditReportFromCube).
     */
-  private val dedupCubeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def dedupAuditCube(s: org.apache.spark.sql.SparkSession,
-                             dir: String): org.apache.spark.sql.DataFrame = {
-    memoParquet(dedupCubeCache, "graft_dedup_cube", s, dir) {
+                             dir: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(Drives.store("graft_dedup_cube", dir) { p =>
       dedupLabelStore(s, dir).groupBy(col("ec"), col("lc"), col("sc"))
-        .agg(count(lit(1)).as("n"))
-    }
-  }
+        .agg(count(lit(1)).as("n")).write.mode("overwrite").parquet(p)
+    })
 
   /** The ONE canonical-URL-groups oracle shared verbatim by c21 (the
     * one-shot groupBy) and c21b (the maintained store) — the d12b/c/d
@@ -386,23 +251,16 @@ object DocQueries {
     * 3 batches with batch 1 replayed, through
     * `Curation.incrementalCrawlBatch`.
     */
-  private val crawlIncDriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def crawlIncDrive(s: org.apache.spark.sql.SparkSession,
                             dir: String): String =
-    crawlIncDriveCache.computeIfAbsent(dir, _ => {
-      val b0 = QDef.tempDir("graft_crawl_inc_gate")
+    Drives.store("graft_crawl_inc_gate", dir) { b0 =>
       val frontier = Tables.documents(s, dir)
         .select(col("doc_id"), gateCrawlUrl.as("url"))
-      val parts =
-        (0 to 2).map(r => frontier.filter(pmod(col("doc_id"), lit(3)) === r))
-      (Seq(0L -> parts(0), 1L -> parts(1), 1L -> parts(1) /* replay */,
-        2L -> parts(2))).foreach { case (bid, b) =>
+      Drives.replayBatches(frontier, col("doc_id"), 3).foreach { case (bid, b) =>
         graft.curation.Curation.incrementalCrawlBatch(b, bid,
           s"$b0/staged", s"$b0/groups", nBuckets = 8)
       }
-      b0
-    })
+    }
 
   /** The c11b/c11d calibrated-budget oracle — ONE definition for the
     * window-exact gate and its distributed-prefix-sum scale twin.
@@ -565,23 +423,16 @@ object DocQueries {
     * REPLAYED (at-least-once idempotence), maintaining the per-batch
     * domain-stats store the solver reads — the crawlIncDrive pattern.
     */
-  private val mixtureIncDriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def mixtureIncDrive(s: org.apache.spark.sql.SparkSession,
                               dir: String): String =
-    mixtureIncDriveCache.computeIfAbsent(dir, _ => {
-      val b0 = QDef.tempDir("graft_mixture_inc_gate")
+    Drives.store("graft_mixture_inc_gate", dir) { b0 =>
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), col("source"), expr(MixtureLossCol).as("loss"))
-      val parts =
-        (0 to 2).map(r => docs.filter(pmod(col("doc_id"), lit(3)) === r))
-      (Seq(0L -> parts(0), 1L -> parts(1), 1L -> parts(1) /* replay */,
-        2L -> parts(2))).foreach { case (bid, b) =>
+      Drives.replayBatches(docs, col("doc_id"), 3).foreach { case (bid, b) =>
         graft.text.DomainMixture.domainStatsBatch(b, bid, col("source"),
           col("loss"), s"$b0/stats")
       }
-      b0
-    })
+    }
 
   /** Merge count for the t21/t22 BPE-training gates — small enough that
     * the k-level unrolled oracle stays readable, large enough that the
@@ -597,12 +448,9 @@ object DocQueries {
     * iterations per bench rep would re-measure driver-side sequencing,
     * not the operator.
     */
-  private val bpeTrainCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def bpeArtifacts(s: org.apache.spark.sql.SparkSession, dir: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val base = bpeTrainCache.computeIfAbsent(dir, _ => {
-      val p = QDef.tempDir("graft_bpe_train")
+    val base = Drives.store("graft_bpe_train", dir) { p =>
       val (mergeDf, vocab) = graft.text.BpeTrain.trainArtifacts(
         s, Tables.documents(s, dir), col("text"), BpeTrainK)
       // the oracle unrolls exactly BpeTrainK levels and a DRY level
@@ -614,8 +462,7 @@ object DocQueries {
       mergeDf.write.mode("overwrite").parquet(s"$p/merges")
       vocab.write.mode("overwrite").parquet(s"$p/vocab")
       org.apache.spark.sql.graftbridge.Bridge.release(vocab)
-      p
-    })
+    }
     (s.read.parquet(s"$base/merges"), s.read.parquet(s"$base/vocab"))
   }
 
@@ -624,45 +471,31 @@ object DocQueries {
     * idempotence), maintaining the per-batch token-census store — the
     * mixtureIncDrive pattern for the t-family.
     */
-  private val bpeIncDriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def bpeIncDrive(s: org.apache.spark.sql.SparkSession,
                           dir: String): String =
-    bpeIncDriveCache.computeIfAbsent(dir, _ => {
-      val b0 = QDef.tempDir("graft_bpe_inc_gate")
+    Drives.store("graft_bpe_inc_gate", dir) { b0 =>
       val vocab = bpeArtifacts(s, dir)._2
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val parts =
-        (0 to 2).map(r => docs.filter(pmod(col("doc_id"), lit(3)) === r))
-      (Seq(0L -> parts(0), 1L -> parts(1), 1L -> parts(1) /* replay */,
-        2L -> parts(2))).foreach { case (bid, b) =>
+      Drives.replayBatches(docs, col("doc_id"), 3).foreach { case (bid, b) =>
         graft.text.BpeTrain.tokenCountBatch(b, bid, col("text"),
           col("doc_id"), vocab, s"$b0/census")
       }
-      b0
-    })
+    }
 
   /** sim16 drive: IVF centroids trained ONCE (one Lloyd round — the
     * sim3c oracle surface), frozen, then the embedding corpus assigned
     * as 3 batches with batch 1 REPLAYED, maintaining the per-batch
     * assignment store — the mixtureIncDrive pattern for the sim family.
     */
-  private val ivfIncDriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ivfIncDrive(s: org.apache.spark.sql.SparkSession,
                           dir: String): String =
-    ivfIncDriveCache.computeIfAbsent(dir, _ => {
-      val b0 = QDef.tempDir("graft_ivf_inc_gate")
+    Drives.store("graft_ivf_inc_gate", dir) { b0 =>
       val emb = Tables.embeddings(s, dir)
       val centroids = Similarity.ivfTrain(emb, nCentroids = 16, iters = 1)
-      val parts =
-        (0 to 2).map(r => emb.filter(pmod(col("vec_id"), lit(3)) === r))
-      (Seq(0L -> parts(0), 1L -> parts(1), 1L -> parts(1) /* replay */,
-        2L -> parts(2))).foreach { case (bid, b) =>
+      Drives.replayBatches(emb, col("vec_id"), 3).foreach { case (bid, b) =>
         Similarity.ivfAssignBatch(b, bid, centroids, s"$b0/assign")
       }
-      b0
-    })
+    }
 
   /** c40b drive: the corpus scored under the FROZEN c25 weights as 5
     * batches (`doc_id % 5`, matching the c38/c40 oracle batching) with
@@ -670,24 +503,17 @@ object DocQueries {
     * retrain decision is gated over the STREAMING store read too (the
     * d12c/d12d symmetry for the monitoring family).
     */
-  private val driftIncDriveCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def driftIncDrive(s: org.apache.spark.sql.SparkSession,
                             dir: String): String =
-    driftIncDriveCache.computeIfAbsent(dir, _ => {
-      val b0 = QDef.tempDir("graft_drift_inc_gate")
+    Drives.store("graft_drift_inc_gate", dir) { b0 =>
       val w = perceptronWeights(s, dir)
       val docs = Tables.documents(s, dir)
       val label = perceptronLabelCol
-      val parts =
-        (0 to 4).map(r => docs.filter(pmod(col("doc_id"), lit(5)) === r))
-      ((0 to 4).map(r => r.toLong -> parts(r)) :+ (1L -> parts(1) /* replay */))
-        .foreach { case (bid, b) =>
-          graft.text.Perceptron.driftBatch(b, bid, col("text"),
-            col("doc_id"), label, PerceptronDims, w, s"$b0/drift")
-        }
-      b0
-    })
+      Drives.replayBatches(docs, col("doc_id"), 5).foreach { case (bid, b) =>
+        graft.text.Perceptron.driftBatch(b, bid, col("text"),
+          col("doc_id"), label, PerceptronDims, w, s"$b0/drift")
+      }
+    }
 
   /** The c25/c26 perceptron-training config: 4 batch iterations over
     * 64 hashed dims, label = (lang = 'en' ? +1 : -1). Weights memoized
@@ -706,21 +532,19 @@ object DocQueries {
   private val DsirBuckets = 256
   private def perceptronLabelCol =
     when(col("lang") === "en", lit(1)).otherwise(lit(-1))
-  private val perceptronCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[Int, Long]]()
   private def perceptronFeatures(s: org.apache.spark.sql.SparkSession,
                                  dir: String): org.apache.spark.sql.DataFrame =
     graft.text.Perceptron.features(Tables.documents(s, dir), col("text"),
       col("doc_id"), perceptronLabelCol, PerceptronDims)
   private def perceptronWeights(s: org.apache.spark.sql.SparkSession,
                                 dir: String): Map[Int, Long] =
-    perceptronCache.computeIfAbsent(dir, _ => {
+    Drives.memo("perceptron_weights", dir) {
       val feats = perceptronFeatures(s, dir)
       val (w, _) = graft.text.Perceptron.train(feats, PerceptronK,
         PerceptronDims)
       org.apache.spark.sql.graftbridge.Bridge.release(feats)
       w
-    })
+    }
 
   /** The c9/c23 shared oracle chain — quality filter over the %47
     * corpus/eval split, eval 3-gram decontamination of the survivors,
@@ -2714,19 +2538,14 @@ object DocQueries {
       // artifact, not the engine. Idempotence (the replay) and bucket
       // pruning are pinned once per JVM here and at ScalaTest scale in
       // CurationSpec.
-      val base = d9DriveCache.computeIfAbsent(dir, _ => {
-        val b0 = QDef.tempDir("graft_dedup_gate")
+      val base = Drives.store("graft_dedup_gate", dir) { b0 =>
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("source"), col("lang"), col("text"))
-        val even = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-        val odd = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-        Seq(0L -> even, 1L -> odd, 1L -> odd /* at-least-once replay */)
-          .foreach { case (id, b) =>
-            graft.curation.Curation.incrementalDedupBatch(
-              b, id, s"$b0/staged", s"$b0/out", nBuckets = 8)
-          }
-        b0
-      })
+        Drives.replayBatches(docs, col("doc_id"), 2).foreach { case (id, b) =>
+          graft.curation.Curation.incrementalDedupBatch(
+            b, id, s"$b0/staged", s"$b0/out", nBuckets = 8)
+        }
+      }
       s.read.parquet(s"$base/out")
         .select(col("doc_id"), col("source"), col("lang"))
         .orderBy(col("doc_id"))
@@ -3733,8 +3552,7 @@ object DocQueries {
         |SELECT doc_id + 2000000000 AS doc_id, text
         |FROM documents WHERE doc_id % 19 = 0
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val base = c45DriveCache.computeIfAbsent(dir, _ => {
-        val b0 = QDef.tempDir("graft_snapshot_gate")
+      val base = Drives.store("graft_snapshot_gate", dir) { b0 =>
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
         val snapB = vmSnapB(docs)
         Seq(vmChangelog(docs.limit(0), docs), vmChangelog(docs, snapB),
@@ -3742,8 +3560,7 @@ object DocQueries {
           vmChangelog(snapB, vmSnapC(docs, snapB)))
           .foreach(c => graft.curation.Curation.snapshotApplyBatch(
             c, s"$b0/snap", nBuckets = 8))
-        b0
-      })
+      }
       graft.curation.Curation.readSnapshot(s, s"$base/snap")
         .orderBy(col("doc_id"))
     },
@@ -3770,8 +3587,7 @@ object DocQueries {
         |SELECT doc_id + 2000000000 AS doc_id, text
         |FROM documents WHERE doc_id % 19 = 0
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val base = c61DriveCache.computeIfAbsent(dir, _ => {
-        val b0 = QDef.tempDir("graft_isolated_gate")
+      val base = Drives.store("graft_isolated_gate", dir) { b0 =>
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
         val snapB = vmSnapB(docs)
         Seq(0L -> vmChangelog(docs.limit(0), docs),
@@ -3784,8 +3600,7 @@ object DocQueries {
           }
         graft.curation.Curation.pruneSnapshotGens(s, s"$b0/store",
           retainManifests = 1)
-        b0
-      })
+      }
       graft.curation.Curation.readSnapshotCommitted(s, s"$base/store")
         .orderBy(col("doc_id"))
     },
@@ -3886,19 +3701,15 @@ object DocQueries {
         |SELECT CAST(bid AS BIGINT) AS batch_id, rule, n_rows, n_violations,
         |  CAST(CASE WHEN n_violations = 0 THEN 1 ELSE 0 END AS BIGINT) AS pass
         |FROM r ORDER BY batch_id, rule""".stripMargin) { (s, dir) =>
-      val base = c47bDriveCache.computeIfAbsent(dir, _ => {
-        val b0 = QDef.tempDir("graft_exp_gate")
+      val base = Drives.store("graft_exp_gate", dir) { b0 =>
         val docs = Tables.documents(s, dir)
         val rules = Seq(
           "lang_western" -> col("lang").isin("en", "es", "de", "fr"),
           "text_max_256" -> (length(col("text")) <= 256))
-        Seq(0L, 1L, 1L /* at-least-once replay */, 2L).foreach { r =>
-          graft.ops.Expectations.validateBatch(
-            docs.filter(pmod(col("doc_id"), lit(3)) === r), r,
-            s"$b0/report", rules)
+        Drives.replayBatches(docs, col("doc_id"), 3).foreach { case (r, b) =>
+          graft.ops.Expectations.validateBatch(b, r, s"$b0/report", rules)
         }
-        b0
-      })
+      }
       s.read.parquet(s"$base/report")
         .select(col("batch_id").cast("long").as("batch_id"), col("rule"),
           col("n_rows"), col("n_violations"), col("pass"))
@@ -4024,8 +3835,7 @@ object DocQueries {
         |SELECT doc_id + 1000000000 AS doc_id, text
         |FROM documents WHERE doc_id % 13 = 0
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val base = c51DriveCache.computeIfAbsent(dir, _ => {
-        val b0 = QDef.tempDir("graft_census_guard")
+      val base = Drives.store("graft_census_guard", dir) { b0 =>
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
         val rules = Seq("doc_id_not_null" -> col("doc_id").isNotNull)
         // deletion cap: at most 20% of the current corpus per refresh
@@ -4046,8 +3856,7 @@ object DocQueries {
         }
         assert(applied == Seq(true, false, true),
           s"census guard verdicts: $applied")
-        b0
-      })
+      }
       graft.curation.Curation.readSnapshot(s, s"$base/snap")
         .orderBy(col("doc_id"))
     },
@@ -4087,8 +3896,7 @@ object DocQueries {
         |UNION ALL SELECT audit, n FROM dup
         |UNION ALL SELECT audit, n FROM viol
         |ORDER BY audit""".stripMargin) { (s, dir) =>
-      val base = c53DriveCache.computeIfAbsent(dir, _ => {
-        val b0 = QDef.tempDir("graft_sig_store")
+      val base = Drives.store("graft_sig_store", dir) { b0 =>
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
         // bootstrap the store to the CURRENT corpus (batch 0 replayed
         // to pin the staged-write idempotence)
@@ -4097,8 +3905,7 @@ object DocQueries {
           nBuckets = 8)
         graft.curation.Curation.sigStoreApplyBatch(boot, s"$b0/sig", 0L,
           nBuckets = 8)
-        b0
-      })
+      }
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       graft.curation.Curation.refreshAuditMaintained(
         graft.curation.Curation.corpusDiffFull(docs, vmSnapB(docs)),
@@ -4145,8 +3952,7 @@ object DocQueries {
         |UNION ALL SELECT audit, n FROM dup
         |UNION ALL SELECT audit, n FROM viol
         |ORDER BY audit""".stripMargin) { (s, dir) =>
-      val base = c68DriveCache.computeIfAbsent(dir, _ => {
-        val b0 = QDef.tempDir("graft_csig_gate")
+      val base = Drives.store("graft_csig_gate", dir) { b0 =>
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
         val boot = graft.curation.Curation.corpusDiffFull(docs.limit(0), docs)
         graft.curation.Curation.sigStoreApplyBatchCommitted(boot,
@@ -4154,8 +3960,7 @@ object DocQueries {
         graft.curation.Curation.sigStoreApplyBatchCommitted(boot,
           s"$b0/sig", 0L, nBuckets = 8) // replay: applied-watermark no-op
         graft.curation.Curation.compactSigStoreCommitted(s, s"$b0/sig")
-        b0
-      })
+      }
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       graft.curation.Curation.refreshAuditMaintainedCommitted(
         graft.curation.Curation.corpusDiffFull(docs, vmSnapB(docs)),
@@ -4178,8 +3983,7 @@ object DocQueries {
         |  CAST(count(*) AS BIGINT) AS cnt
         |FROM b WHERE text IS NOT NULL
         |GROUP BY 1 ORDER BY sig""".stripMargin) { (s, dir) =>
-      val base = c54DriveCache.computeIfAbsent(dir, _ => {
-        val b0 = QDef.tempDir("graft_sig_census")
+      val base = Drives.store("graft_sig_census", dir) { b0 =>
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
         val snapB = vmSnapB(docs)
         graft.curation.Curation.sigStoreApplyBatch(
@@ -4191,8 +3995,7 @@ object DocQueries {
         // squash the per-batch dirs; the read must not change
         graft.curation.Curation.compactCountedStore(s, s"$b0/sig",
           graft.curation.Curation.sigStoreStagedSchema)
-        b0
-      })
+      }
       graft.curation.Curation.readSigStore(s, s"$base/sig")
         .orderBy(col("sig"))
     },
@@ -4436,16 +4239,14 @@ object DocQueries {
         |SELECT doc_id + 2000000000 AS doc_id, text
         |FROM documents WHERE doc_id % 19 = 0
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val base = c52DriveCache.computeIfAbsent(dir, _ => {
-        val b0 = QDef.tempDir("graft_snapshot_catchup")
+      val base = Drives.store("graft_snapshot_catchup", dir) { b0 =>
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
         val snapB = vmSnapB(docs)
         graft.curation.Curation.snapshotCatchUp(
           Seq(vmChangelog(docs.limit(0), docs), vmChangelog(docs, snapB),
             vmChangelog(snapB, vmSnapC(docs, snapB))),
           s"$b0/snap", nBuckets = 8)
-        b0
-      })
+      }
       graft.curation.Curation.readSnapshot(s, s"$base/snap")
         .orderBy(col("doc_id"))
     },
@@ -4794,17 +4595,13 @@ object DocQueries {
     // EARLY docs (span cleanliness is a global property; the store reader
     // re-derives coverage against the current dup set).
     QDef("c19c_span_dedup_inc", c19OracleSql) { (s, dir) =>
-      val base = c19cDriveCache.computeIfAbsent(dir, _ => {
-        val b0 = QDef.tempDir("graft_span_inc_gate")
+      val base = Drives.store("graft_span_inc_gate", dir) { b0 =>
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        val parts = (0 to 2).map(r => docs.filter(pmod(col("doc_id"), lit(3)) === r))
-        (Seq(0L -> parts(0), 1L -> parts(1), 1L -> parts(1) /* replay */,
-          2L -> parts(2))).foreach { case (bid, b) =>
+        Drives.replayBatches(docs, col("doc_id"), 3).foreach { case (bid, b) =>
           graft.curation.Curation.incrementalSpanDedupBatch(b, bid,
             s"$b0/staged", s"$b0/dups", window = C19Window, nBuckets = 8)
         }
-        b0
-      })
+      }
       graft.curation.Curation
         .spanDedupFromStore(s, s"$base/staged", s"$base/dups",
           window = C19Window)

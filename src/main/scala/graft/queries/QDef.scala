@@ -24,23 +24,4 @@ object QDef {
   def apply(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): QDef =
     QDef(name, fn, Some(oracle))
-
-  /** Scratch dir for pipeline gates (staging + materialized output),
-    * recursively deleted at JVM exit — the gate's result frame is read
-    * lazily after the QDef returns, so eager deletion isn't possible, but
-    * nothing may outlive the run (repeated Verify/Bench invocations must
-    * not accumulate temp trees on the driver host).
-    */
-  def tempDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        val fs = f.listFiles()
-        if (fs != null) fs.foreach(rm)
-        f.delete(); ()
-      }
-      rm(p.toFile)
-    }
-    p.toString
-  }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 import graft.dedup.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only plan dump + substage timing for the PPJoin internals
@@ -11,11 +10,7 @@ import org.apache.spark.sql.functions._
 object ExplainPP {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session(32)
     def t[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime()
       val r = f

@@ -1,6 +1,5 @@
 package graft.tools
 import graft.dedup.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch profiling main (not part of the driver contract). Currently:
@@ -17,11 +16,7 @@ import org.apache.spark.sql.functions._
 object Prof {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session(32)
     def t[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime()
       val r = f

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only profiling aid (r20 optimization round): decomposes a named
   * registry query's wall time into (a) DataFrame construction (includes
   * any eager localCheckpoint jobs inside the QDef), (b) analysis +
@@ -14,16 +12,9 @@ object QueryProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROFILE_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session(cpus)
     // warmup: footer/file-status caches
     try {
       Seq("lineitem", "orders", "customer", "part", "supplier", "nation",
@@ -57,8 +48,7 @@ object QueryProfile {
         val (tPlan, _) = t(df.queryExecution.executedPlan)
         val (tExec, _) = t(df.count())
         println(f"[profile] $n rep$i build=$tBuild%.3f plan=$tPlan%.3f exec=$tExec%.3f")
-        try spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        catch { case _: Throwable => }
+        graft.Session.dropBlocks(spark)
       }
     }
     spark.stop()

@@ -3,7 +3,7 @@ package graft.tools
 import graft.Tables
 import graft.dedup.Dedup
 import graft.curation.Curation
-import org.apache.spark.sql.SparkSession
+import graft.queries.Drives
 import org.apache.spark.sql.functions._
 
 /** Scale-sanity probe (not part of the driver contract): run the heavy
@@ -15,11 +15,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session(32)
     // optional 3rd arg: comma-separated label prefixes to run (dev aid —
     // e.g. "c9,c10,d11b" probes just those at a high mult)
     val only = args.lift(2).map(_.split(",").map(_.trim).toSet)
@@ -115,8 +111,7 @@ object ScaleProbe {
       // the staged-maintenance path at scale: 3 ingestion batches (last
       // one smallest — its cost should track ITS buckets' history, not
       // corpus life), then one store read. Prints per-batch times.
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_probe_spanstore").toString
+      val base = Drives.tempDir("graft_probe_spanstore")
       (0 to 2).foreach { r =>
         val b = big.filter(pmod(col("doc_id"), lit(3)) === r)
         val t0 = System.nanoTime()
@@ -128,8 +123,7 @@ object ScaleProbe {
         window = 8).count()
     }
     t(s"d12c incremental lsh store ${mult}x") {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_probe_lshstore").toString
+      val base = Drives.tempDir("graft_probe_lshstore")
       (0 to 2).foreach { r =>
         val b = big.filter(pmod(col("doc_id"), lit(3)) === r)
         val t0 = System.nanoTime()
@@ -157,8 +151,7 @@ object ScaleProbe {
       // quotiented against current labels + versioned snapshot write) is
       // timed alone. The per-batch label cost must track NEW
       // connectivity, not edge history (printed per batch).
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_probe_lblinc").toString
+      val base = Drives.tempDir("graft_probe_lblinc")
       (0 to 2).foreach { r =>
         val b = big.filter(pmod(col("doc_id"), lit(3)) === r)
         Curation.incrementalLshHistogramBatch(b, r.toLong, s"$base/staged",
@@ -209,8 +202,7 @@ object ScaleProbe {
       // post-compaction read must be no slower (fewer dirs listed and
       // opened; row set identical by the CurationSpec equivalence pin)
       import org.apache.spark.sql.types._
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_probe_compact").toString
+      val base = Drives.tempDir("graft_probe_compact")
       (0 to 11).foreach { r =>
         val b = big.filter(pmod(col("doc_id"), lit(12)) === r)
         Curation.incrementalLshHistogramBatch(b, r.toLong, s"$base/staged",
@@ -572,7 +564,7 @@ object ScaleProbe {
           col("embedding"), col("label"))
       }.reduce(_ unionByName _).localCheckpoint(true)
       val cs = graft.sim.Similarity.ivfTrain(emb, nCentroids = 16, iters = 1)
-      val tmp = java.nio.file.Files.createTempDirectory("probe_ivf").toString
+      val tmp = Drives.tempDir("probe_ivf")
       val times = (0 to 2).map { r =>
         val b = bigEmb.filter(pmod(col("vec_id"), lit(3)) === r)
         val t0 = System.nanoTime()
@@ -966,7 +958,7 @@ object ScaleProbe {
       // 3 ingest batches over the replicated frontier (each replica's
       // URLs distinct via the shifted source): per-batch cost must track
       // batch size + touched buckets, not crawl-store life
-      val tmp = java.nio.file.Files.createTempDirectory("probe_crawl").toString
+      val tmp = Drives.tempDir("probe_crawl")
       val frontier = big.select(col("doc_id"),
         concat(lit("http://www."), col("source"), lit(".example.com/p"),
           (col("doc_id") % 97).cast("string")).as("url"))
@@ -983,7 +975,7 @@ object ScaleProbe {
     t(s"t23b tokenize inc ${mult}x") {
       // 3 ingest batches under a small frozen vocab: per-batch cost
       // must track BATCH size (one lookup-join pass), not store life
-      val tmp = java.nio.file.Files.createTempDirectory("probe_tok").toString
+      val tmp = Drives.tempDir("probe_tok")
       val vocab = graft.text.BpeTrain.trainMerges(
         graft.text.BpeTrain.wordFreq(docs, col("text")), k = 8)._2
       val times = (0 to 2).map { r =>
@@ -1105,7 +1097,7 @@ object ScaleProbe {
       // regime the changelog-compaction catch-up path exists for). The
       // printed per-batch times are the evidence: flat across batches,
       // a small fraction of the bootstrap
-      val base = java.nio.file.Files.createTempDirectory("probe_snap").toString
+      val base = Drives.tempDir("probe_snap")
       val t0 = System.nanoTime()
       Curation.snapshotApplyBatch(
         big.select(col("doc_id"), lit("added").as("status"), col("text")),
@@ -1146,8 +1138,7 @@ object ScaleProbe {
       // mult streams through — the streaming family's 100x point.
       import spark.implicits._
       import graft.streaming.Streams
-      val feedDir =
-        java.nio.file.Files.createTempDirectory("probe_ewma_feed").toString
+      val feedDir = Drives.tempDir("probe_ewma_feed")
       (0 until mult).map { r =>
         Tables.events(spark, dir).select(
           (col("user_id") + lit(r * 10000000L)).as("key"),
@@ -1172,7 +1163,6 @@ object ScaleProbe {
       // first — K batches cost K−1 churn-sized joins + ONE rewrite.
       // Printed pair: 3-batch per-batch replay vs the same backlog via
       // snapshotCatchUp (the flat-cost evidence).
-      import graft.curation.Curation
       def churn(r: Int) = big
         .filter(pmod(xxhash64(col("doc_id") + r), lit(97L)) === 0)
         .select(col("doc_id"),
@@ -1181,10 +1171,8 @@ object ScaleProbe {
           concat(col("text"), lit(s" u$r")).as("text"))
       val bootstrap = big.select(col("doc_id"), lit("added").as("status"),
         col("text"))
-      val baseA =
-        java.nio.file.Files.createTempDirectory("probe_catchup_a").toString
-      val baseB =
-        java.nio.file.Files.createTempDirectory("probe_catchup_b").toString
+      val baseA = Drives.tempDir("probe_catchup_a")
+      val baseB = Drives.tempDir("probe_catchup_b")
       Curation.snapshotApplyBatch(bootstrap, s"$baseA/snap", nBuckets = 256)
       Curation.snapshotApplyBatch(bootstrap, s"$baseB/snap", nBuckets = 256)
       val logs = (0 to 2).map(churn)
@@ -1203,9 +1191,7 @@ object ScaleProbe {
       // ONE O(total churn) fold, so the deepest read costs one corpus
       // pass + the churn joins — not a pass per version. Printed pair:
       // as-of latest (pure store read) vs as-of 0 (deepest walk-back).
-      import graft.curation.Curation
-      val base =
-        java.nio.file.Files.createTempDirectory("probe_tt").toString
+      val base = Drives.tempDir("probe_tt")
       Curation.versionedSnapshotApplyBatch(
         big.select(col("doc_id"), lit("added").as("status"),
           lit(null).cast("string").as("old_text"),
@@ -1243,14 +1229,12 @@ object ScaleProbe {
       // audit reads O(refresh + store). The refresh CDC log is
       // checkpointed first — production receives it as input. Printed
       // pair: direct vs maintained on the same refresh.
-      import graft.curation.Curation
       val snapB = big.filter(col("doc_id") % 7 =!= 0)
         .select(col("doc_id"),
           when(col("doc_id") % 11 === 0, concat(col("text"), lit(" v2")))
             .otherwise(col("text")).as("text"))
       val old = big.select(col("doc_id"), col("text"))
-      val sigDir =
-        java.nio.file.Files.createTempDirectory("probe_sig").toString + "/sig"
+      val sigDir = Drives.tempDir("probe_sig") + "/sig"
       Curation.sigStoreApplyBatch(
         Curation.corpusDiffFull(old.limit(0), old), sigDir, 0L,
         nBuckets = 256)
@@ -1272,10 +1256,8 @@ object ScaleProbe {
       // Printed pair: the maintained-census read after all 24 batches —
       // the compacted store's read cost stays flat as batches accrue
       // because its dir/file count does.
-      import graft.curation.Curation
       val old = big.select(col("doc_id"), col("text"))
-      val root = java.nio.file.Files
-        .createTempDirectory("probe_sig_compact").toString
+      val root = Drives.tempDir("probe_sig_compact")
       val dirA = s"$root/uncompacted"; val dirB = s"$root/compacted"
       Seq(dirA, dirB).foreach(d => Curation.sigStoreApplyBatch(
         Curation.corpusDiffFull(old.limit(0), old), d, 0L, nBuckets = 64))
@@ -1319,7 +1301,6 @@ object ScaleProbe {
       // + manifest rename). Printed: the two fold times and the
       // committed read — isolation costs one manifest file per batch,
       // not a different fold shape.
-      import graft.curation.Curation
       val bootstrap = big.select(col("doc_id"), lit("added").as("status"),
         col("text"))
       val churn = big
@@ -1329,10 +1310,8 @@ object ScaleProbe {
             .otherwise(lit("removed")).as("status"),
           concat(col("text"), lit(" u")).as("text"))
         .localCheckpoint(true)
-      val baseA = java.nio.file.Files
-        .createTempDirectory("probe_iso_a").toString
-      val baseB = java.nio.file.Files
-        .createTempDirectory("probe_iso_b").toString
+      val baseA = Drives.tempDir("probe_iso_a")
+      val baseB = Drives.tempDir("probe_iso_b")
       Curation.snapshotApplyBatch(bootstrap, s"$baseA/snap", nBuckets = 256)
       Curation.snapshotApplyBatchIsolated(bootstrap, s"$baseB/store", 0L,
         nBuckets = 256)
@@ -1369,9 +1348,7 @@ object ScaleProbe {
       // separately), then the next churn fold under the migrated count
       // and the committed read. At 100x the migration is the only
       // corpus-scale step; folds stay O(touched buckets).
-      import graft.curation.Curation
-      val base = java.nio.file.Files
-        .createTempDirectory("probe_iso_growth").toString
+      val base = Drives.tempDir("probe_iso_growth")
       val store = s"$base/store"
       def churn(r: Int) = big
         .filter(pmod(xxhash64(col("doc_id")), lit(211L)) === r)
@@ -1408,10 +1385,8 @@ object ScaleProbe {
       // manifest file per commit, not a different fold shape — and the
       // committed read after compact+prune scans the merged segment +
       // the retained tail, the same flat-read argument as c54b.
-      import graft.curation.Curation
       val old = big.select(col("doc_id"), col("text"))
-      val root = java.nio.file.Files
-        .createTempDirectory("probe_csig").toString
+      val root = Drives.tempDir("probe_csig")
       val dirA = s"$root/inplace"; val dirB = s"$root/committed"
       val boot = Curation.corpusDiffFull(old.limit(0), old)
         .localCheckpoint(true)

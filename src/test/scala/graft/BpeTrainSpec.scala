@@ -181,7 +181,7 @@ class BpeTrainSpec extends AnyFunSuite {
   }
 
   test("tokenCountBatch: replay-idempotent store ≡ one-shot tokenCounts") {
-    val dir = java.nio.file.Files.createTempDirectory("bpeinc").toString
+    val dir = graft.queries.Drives.tempDir("bpeinc")
     val vocab = Seq(("low", "low", 7L), ("lower", "low|e|r", 2L),
       ("newest", "n|e|w|est", 6L)).toDF("word", "syms", "cnt")
     val b0 = Seq((1L, "low lower"), (2L, "newest")).toDF("doc_id", "text")
@@ -205,7 +205,7 @@ class BpeTrainSpec extends AnyFunSuite {
   test("tokenizeIngest streams batches through the census store e2e") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("bpeing").toString
+    val dir = graft.queries.Drives.tempDir("bpeing")
     val vocab = Seq(("low", "low", 7L), ("lower", "low|e|r", 2L))
       .toDF("word", "syms", "cnt")
     val in = MemoryStream[(Long, String)]

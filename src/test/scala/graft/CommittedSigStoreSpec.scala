@@ -42,7 +42,7 @@ class CommittedSigStoreSpec extends AnyFunSuite {
     .localCheckpoint(true)
 
   test("committed store census equals the in-place store over a chained history") {
-    val base = graft.queries.QDef.tempDir("graft_csig_equiv")
+    val base = graft.queries.Drives.tempDir("graft_csig_equiv")
     val pIn = s"$base/inplace"; val pC = s"$base/committed"
     Seq(0L -> full(snapA.limit(0), snapA), 1L -> full(snapA, snapB),
       2L -> full(snapB, snapC)).foreach { case (bid, log) =>
@@ -56,7 +56,7 @@ class CommittedSigStoreSpec extends AnyFunSuite {
   }
 
   test("a reader holding the previous manifest survives a fold, a compaction AND a prune") {
-    val base = graft.queries.QDef.tempDir("graft_csig_reader")
+    val base = graft.queries.Drives.tempDir("graft_csig_reader")
     val p = s"$base/sig"
     Curation.sigStoreApplyBatchCommitted(full(snapA.limit(0), snapA), p, 0L,
       nBuckets = 4)
@@ -78,7 +78,7 @@ class CommittedSigStoreSpec extends AnyFunSuite {
   }
 
   test("compaction squashes committed segments without changing the census; the fence holds out uncommitted batches") {
-    val base = graft.queries.QDef.tempDir("graft_csig_compact")
+    val base = graft.queries.Drives.tempDir("graft_csig_compact")
     val p = s"$base/sig"
     Seq(0L -> full(snapA.limit(0), snapA), 1L -> full(snapA, snapB),
       2L -> full(snapB, snapC)).foreach { case (bid, log) =>
@@ -134,7 +134,7 @@ class CommittedSigStoreSpec extends AnyFunSuite {
   }
 
   test("replay no-ops, checkpoint resets and bucket mismatches fail loud, lying logs land nothing") {
-    val base = graft.queries.QDef.tempDir("graft_csig_guards")
+    val base = graft.queries.Drives.tempDir("graft_csig_guards")
     val p = s"$base/sig"
     Curation.sigStoreApplyBatchCommitted(full(snapA.limit(0), snapA), p, 0L,
       nBuckets = 4)
@@ -170,7 +170,7 @@ class CommittedSigStoreSpec extends AnyFunSuite {
   }
 
   test("prune: compact manifests ride along with, not consume, the retention tail") {
-    val base = graft.queries.QDef.tempDir("graft_csig_prune")
+    val base = graft.queries.Drives.tempDir("graft_csig_prune")
     val p = s"$base/sig"
     Curation.sigStoreApplyBatchCommitted(full(snapA.limit(0), snapA), p, 0L,
       nBuckets = 4) // fold manifest 0
@@ -197,7 +197,7 @@ class CommittedSigStoreSpec extends AnyFunSuite {
   }
 
   test("refreshAuditMaintainedCommitted equals the direct audit and the in-place maintained audit") {
-    val base = graft.queries.QDef.tempDir("graft_csig_audit")
+    val base = graft.queries.Drives.tempDir("graft_csig_audit")
     val pIn = s"$base/inplace"; val pC = s"$base/committed"
     val boot = full(snapA.limit(0), snapA).localCheckpoint(true)
     val refresh = full(snapA, snapB).localCheckpoint(true)

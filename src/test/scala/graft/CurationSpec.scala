@@ -498,7 +498,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("snapshotApplyBatch: maintained store ≡ direct snapshot, replay + wipe + re-add") {
-    val base = graft.queries.QDef.tempDir("graft_snap_store")
+    val base = graft.queries.Drives.tempDir("graft_snap_store")
     val path = s"$base/snap"
     val snapA = Seq((1L, Some("one")), (2L, Some("two")), (3L, Some("three")),
       (4L, None: Option[String])).toDF("doc_id", "text")
@@ -539,7 +539,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("snapshot store bucket fence: mismatch raises, rebucket migrates, crash recovers") {
-    val base = graft.queries.QDef.tempDir("graft_snap_fence")
+    val base = graft.queries.Drives.tempDir("graft_snap_fence")
     val path = s"$base/snap"
     val snapA = Seq((1L, Some("one")), (2L, Some("two")), (3L, Some("three")))
       .toDF("doc_id", "text")
@@ -582,7 +582,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("sig store: incremental census tracks the corpus; maintained audit ≡ direct audit") {
-    val base = graft.queries.QDef.tempDir("graft_sig_spec")
+    val base = graft.queries.Drives.tempDir("graft_sig_spec")
     val path = s"$base/sig"
     // shared-sig corpus: 1 and 2 carry the SAME signature (sorted
     // distinct tokens), 4 has NULL text
@@ -628,7 +628,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("time travel: readSnapshotAsOf reconstructs every version; prune moves the floor") {
-    val base = graft.queries.QDef.tempDir("graft_time_travel")
+    val base = graft.queries.Drives.tempDir("graft_time_travel")
     val snapA = Seq((1L, Some("one")), (2L, Some("two")),
       (3L, None: Option[String])).toDF("doc_id", "text")
     val snapB = Seq((1L, Some("one v2")), (3L, Some("three")),
@@ -668,7 +668,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("sigStoreApplyBatch: a lying log raises before any delta lands") {
-    val base = graft.queries.QDef.tempDir("graft_sig_lying")
+    val base = graft.queries.Drives.tempDir("graft_sig_lying")
     val path = s"$base/sig"
     val good = Seq((1L, "added", None: Option[String], Some("a b")))
       .toDF("doc_id", "status", "old_text", "new_text")
@@ -696,7 +696,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("guardUniqueIds: a lying log quarantines cleanly instead of crashing the fold") {
-    val base = graft.queries.QDef.tempDir("graft_uniq_guard")
+    val base = graft.queries.Drives.tempDir("graft_uniq_guard")
     val path = s"$base/snap"; val rep = s"$base/report"
     val rules = Seq("id_not_null" -> col("doc_id").isNotNull)
     val good = Seq((1L, "added", Some("one")), (2L, "added", Some("two")))
@@ -730,7 +730,7 @@ class CurationSpec extends AnyFunSuite {
   test("managedVersionedIngest: streamed history is time-travelable") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = graft.queries.QDef.tempDir("graft_mv_ingest")
+    val base = graft.queries.Drives.tempDir("graft_mv_ingest")
     val in = MemoryStream[(Long, String, String, String)]
     val q = Curation.managedVersionedIngest(
       in.toDF().toDF("doc_id", "status", "old_text", "new_text"),
@@ -752,7 +752,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("managedVersionedApplyBatch: refused versions don't exist, history serves around them") {
-    val base = graft.queries.QDef.tempDir("graft_mv_spec")
+    val base = graft.queries.Drives.tempDir("graft_mv_spec")
     val corpus = s"$base/corpus"
     val snapA = (1L to 10L).map(i => (i, Some(s"doc $i"))).toDF("doc_id", "text")
     val snapB = snapA.filter($"doc_id" =!= 1L)
@@ -789,7 +789,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("census guard: a mass-delete refresh is refused even when every row rule passes") {
-    val base = graft.queries.QDef.tempDir("graft_census_spec")
+    val base = graft.queries.Drives.tempDir("graft_census_spec")
     val path = s"$base/snap"; val rep = s"$base/report"
     val snapA = (1L to 20L).map(i => (i, Some(s"doc $i")))
       .toDF("doc_id", "text")
@@ -840,22 +840,22 @@ class CurationSpec extends AnyFunSuite {
     val logs = Seq(cl(snapA.limit(0), snapA), cl(snapA, snapB),
       cl(snapB, snapC))
     // per-batch replay
-    val p1 = s"${graft.queries.QDef.tempDir("graft_catchup_a")}/snap"
+    val p1 = s"${graft.queries.Drives.tempDir("graft_catchup_a")}/snap"
     logs.foreach(Curation.snapshotApplyBatch(_, p1, nBuckets = 4))
     // catch-up: one compacted fold
-    val p2 = s"${graft.queries.QDef.tempDir("graft_catchup_b")}/snap"
+    val p2 = s"${graft.queries.Drives.tempDir("graft_catchup_b")}/snap"
     Curation.snapshotCatchUp(logs, p2, nBuckets = 4)
     assert(asSet(Curation.readSnapshot(spark, p2)) == asSet(snapC))
     assert(asSet(Curation.readSnapshot(spark, p1))
       == asSet(Curation.readSnapshot(spark, p2)))
     // a single-log backlog degrades to plain apply
-    val p3 = s"${graft.queries.QDef.tempDir("graft_catchup_c")}/snap"
+    val p3 = s"${graft.queries.Drives.tempDir("graft_catchup_c")}/snap"
     Curation.snapshotCatchUp(Seq(cl(snapA.limit(0), snapA)), p3, nBuckets = 4)
     assert(asSet(Curation.readSnapshot(spark, p3)) == asSet(snapA))
   }
 
   test("maybeRebucketSnapshot: growth trigger doubles the bucket count, small store is a no-op") {
-    val base = graft.queries.QDef.tempDir("graft_rebucket_auto")
+    val base = graft.queries.Drives.tempDir("graft_rebucket_auto")
     val path = s"$base/snap"
     val snapA = (1L to 64L).map(i => (i, Some(s"doc $i"))).toDF("doc_id", "text")
     def cl(a: org.apache.spark.sql.DataFrame,
@@ -885,7 +885,7 @@ class CurationSpec extends AnyFunSuite {
   test("snapshot store: a rejected first batch on a virgin store does not pin the bucket count") {
     // a lying log refused on an EMPTY store must leave the store
     // virgin — a later legitimate first ingest may pick any nBuckets
-    val base = graft.queries.QDef.tempDir("graft_snap_virgin")
+    val base = graft.queries.Drives.tempDir("graft_snap_virgin")
     val path = s"$base/snap"
     val lying = Seq((9L, "added", Some("x")), (9L, "changed", Some("y")))
       .toDF("doc_id", "status", "text")
@@ -909,7 +909,7 @@ class CurationSpec extends AnyFunSuite {
   test("guardedSnapshotIngest quarantines a failing batch, applies clean ones") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = graft.queries.QDef.tempDir("graft_guarded_snap")
+    val base = graft.queries.Drives.tempDir("graft_guarded_snap")
     val in = MemoryStream[(Long, String, String)]
     val rules = Seq("text_short" -> (length($"text") <= 10))
     val q = Curation.guardedSnapshotIngest(
@@ -940,7 +940,7 @@ class CurationSpec extends AnyFunSuite {
   test("managedCorpusIngest: dual-fold stream with row + census gates e2e") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = graft.queries.QDef.tempDir("graft_managed_ingest")
+    val base = graft.queries.Drives.tempDir("graft_managed_ingest")
     val in = MemoryStream[(Long, String, String, String)]
     val q = Curation.managedCorpusIngest(
       in.toDF().toDF("doc_id", "status", "old_text", "new_text"),
@@ -983,7 +983,7 @@ class CurationSpec extends AnyFunSuite {
   test("snapshotIngestMaintained: growth rebucket fires mid-stream, folds follow the marker") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = graft.queries.QDef.tempDir("graft_snap_maint")
+    val base = graft.queries.Drives.tempDir("graft_snap_maint")
     val in = MemoryStream[(Long, String, String)]
     // target 4 rows/bucket, check every 2 batches, seed at 2 buckets
     val q = Curation.snapshotIngestMaintained(
@@ -1011,7 +1011,7 @@ class CurationSpec extends AnyFunSuite {
   test("snapshotIngest streams changelog batches into the maintained store e2e") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = graft.queries.QDef.tempDir("graft_snap_ingest")
+    val base = graft.queries.Drives.tempDir("graft_snap_ingest")
     val in = MemoryStream[(Long, String, String)]
     val q = Curation.snapshotIngest(
       in.toDF().toDF("doc_id", "status", "text"), s"$base/snap",
@@ -1176,7 +1176,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("incremental dedup ≡ global keep-one, replay-idempotent, late winner replaces") {
-    val base = graft.queries.QDef.tempDir("graft_cur_inc")
+    val base = graft.queries.Drives.tempDir("graft_cur_inc")
     val b0 = Seq(
       (5L, "alpha beta gamma"),   // sig X — provisional winner of batch 0
       (7L, "one two three")
@@ -1202,7 +1202,7 @@ class CurationSpec extends AnyFunSuite {
   test("dedupIngest streams batches through the incremental dedup e2e") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = graft.queries.QDef.tempDir("graft_ingest")
+    val base = graft.queries.Drives.tempDir("graft_ingest")
     val in = MemoryStream[(Long, String)]
     val q = Curation.dedupIngest(
       in.toDF().toDF("doc_id", "text"), s"$base/staged", s"$base/out",
@@ -1219,7 +1219,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("incremental LSH histogram ≡ one-shot d12b over the union, replay-idempotent") {
-    val base = graft.queries.QDef.tempDir("graft_lsh_inc")
+    val base = graft.queries.Drives.tempDir("graft_lsh_inc")
     // three exact-dup families + singletons, split so family members
     // arrive in DIFFERENT batches (cross-batch edges must form)
     def doc(i: Long, fam: Int) =
@@ -1246,7 +1246,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("incremental LSH histogram: an empty first batch leaves a readable store") {
-    val base = graft.queries.QDef.tempDir("graft_lsh_empty")
+    val base = graft.queries.Drives.tempDir("graft_lsh_empty")
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     Curation.incrementalLshHistogramBatch(empty, 0L, s"$base/staged",
       s"$base/edges", numHashes = 8, bands = 2, nBuckets = 4)
@@ -1264,7 +1264,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("incremental LSH histogram: touched-bucket recompute reads prune partitions") {
-    val base = graft.queries.QDef.tempDir("graft_lsh_prune")
+    val base = graft.queries.Drives.tempDir("graft_lsh_prune")
     val b0 = Seq((1L, "a b c d e f"), (2L, "g h i j k l")).toDF("doc_id", "text")
     Curation.incrementalLshHistogramBatch(b0, 0L, s"$base/staged",
       s"$base/edges", numHashes = 8, bands = 2, nBuckets = 4)
@@ -1282,7 +1282,7 @@ class CurationSpec extends AnyFunSuite {
   test("lshHistogramIngest streams batches through the histogram store e2e") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = graft.queries.QDef.tempDir("graft_lsh_ingest")
+    val base = graft.queries.Drives.tempDir("graft_lsh_ingest")
     val in = MemoryStream[(Long, String)]
     val q = Curation.lshHistogramIngest(
       in.toDF().toDF("doc_id", "text"), s"$base/staged", s"$base/edges",
@@ -1304,7 +1304,7 @@ class CurationSpec extends AnyFunSuite {
   test("lshLabelsIngest streams batches through the label snapshot e2e") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = graft.queries.QDef.tempDir("graft_lsh_lbl_ingest")
+    val base = graft.queries.Drives.tempDir("graft_lsh_lbl_ingest")
     val in = MemoryStream[(Long, String)]
     val q = Curation.lshLabelsIngest(
       in.toDF().toDF("doc_id", "text"), s"$base/staged", s"$base/edges",
@@ -1342,7 +1342,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("label snapshot reader skips uncommitted (crashed) snapshot dirs") {
-    val base = graft.queries.QDef.tempDir("graft_lbl_crash")
+    val base = graft.queries.Drives.tempDir("graft_lbl_crash")
     val b0 = Seq((7L, "a b c d e"), (8L, "a b c d e")).toDF("doc_id", "text")
     Curation.incrementalLshHistogramBatch(b0, 0L, s"$base/staged",
       s"$base/edges", numHashes = 8, bands = 2, nBuckets = 4)
@@ -1412,7 +1412,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("span ingest refuses to write past a crashed compaction's side root") {
-    val base = graft.queries.QDef.tempDir("graft_span_fence")
+    val base = graft.queries.Drives.tempDir("graft_span_fence")
     Curation.incrementalSpanDedupBatch(Seq((1L, "a b c d")).toDF(
       "doc_id", "text"), 0L, s"$base/staged", s"$base/dups",
       window = 3, nBuckets = 4)
@@ -1437,7 +1437,7 @@ class CurationSpec extends AnyFunSuite {
 
   test("compactStagedStore: compact-then-read ≡ read, and ingest continues") {
     import org.apache.spark.sql.types._
-    val base = graft.queries.QDef.tempDir("graft_lsh_compact")
+    val base = graft.queries.Drives.tempDir("graft_lsh_compact")
     val fam = (0 until 12).map(j => s"w$j").mkString(" ")
     val batches = Seq(
       Seq((1L, fam), (9L, "unique one two three four five")),
@@ -1488,7 +1488,7 @@ class CurationSpec extends AnyFunSuite {
 
   test("compactStagedStore: d9 signature staging compacts with keep-one intact") {
     import org.apache.spark.sql.types._
-    val base = graft.queries.QDef.tempDir("graft_sig_compact")
+    val base = graft.queries.Drives.tempDir("graft_sig_compact")
     // keep-first winners span batches: doc 1 (b0) beats doc 11 (b1);
     // doc 2 (b1) beats doc 22 (b2)
     val batches = Seq(
@@ -1520,7 +1520,7 @@ class CurationSpec extends AnyFunSuite {
 
   test("compactCountedStore: stage-and-swap compaction of the span gram store") {
     import org.apache.spark.sql.types._
-    val base = graft.queries.QDef.tempDir("graft_span_compact")
+    val base = graft.queries.Drives.tempDir("graft_span_compact")
     val batches = Seq(
       Seq((1L, "a b c d x y z"), (3L, "m n o")),
       Seq((2L, "p q a b c d")),
@@ -1771,7 +1771,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("incremental span dedup ≡ one-shot over the union, replay-idempotent, late batch retro-flags") {
-    val base = graft.queries.QDef.tempDir("graft_span_inc")
+    val base = graft.queries.Drives.tempDir("graft_span_inc")
     // window=3. Doc 1 (batch 0) shares the run "a b c d" with doc 3,
     // which only arrives in batch 2 — the duplicated grams "a b c"/"b c d"
     // cross batches, so doc 1's positions must be flagged RETROACTIVELY
@@ -1802,7 +1802,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("incremental span dedup: gram staging reads prune bucket partitions") {
-    val base = graft.queries.QDef.tempDir("graft_span_prune")
+    val base = graft.queries.Drives.tempDir("graft_span_prune")
     val b0 = Seq((1L, "a b c d e f"), (2L, "g h i j k l")).toDF("doc_id", "text")
     Curation.incrementalSpanDedupBatch(b0, 0L, s"$base/staged",
       s"$base/dups", window = 3, nBuckets = 4)
@@ -1820,7 +1820,7 @@ class CurationSpec extends AnyFunSuite {
   test("spanDedupIngest streams batches through the span store e2e") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = graft.queries.QDef.tempDir("graft_span_ingest")
+    val base = graft.queries.Drives.tempDir("graft_span_ingest")
     val in = MemoryStream[(Long, String)]
     val q = Curation.spanDedupIngest(
       in.toDF().toDF("doc_id", "text"), s"$base/staged", s"$base/dups",
@@ -1847,7 +1847,7 @@ class CurationSpec extends AnyFunSuite {
   test("lshLabelsIngest maintainEvery: reads identical to unmaintained twin, dirs bounded") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = graft.queries.QDef.tempDir("graft_lsh_maint")
+    val base = graft.queries.Drives.tempDir("graft_lsh_maint")
     def doc(i: Long, fam: Int) =
       (i, (0 until 12).map(j => s"m${fam}_$j").mkString(" "))
     // four batches, dup families spanning batches so compaction must
@@ -1897,7 +1897,7 @@ class CurationSpec extends AnyFunSuite {
   test("spanDedupIngest maintainEvery: reads identical to unmaintained twin, gram dirs compacted") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = graft.queries.QDef.tempDir("graft_span_maint")
+    val base = graft.queries.Drives.tempDir("graft_span_maint")
     val batches = Seq(
       Seq((1L, "a b c d x y z"), (2L, "m n o")),
       Seq((3L, "k k a b c d")),     // duplicates doc 1's run across batches
@@ -1965,7 +1965,7 @@ class CurationSpec extends AnyFunSuite {
   test("spanDedupIngest refuses to auto-recover a FOREIGN compaction fence") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = graft.queries.QDef.tempDir("graft_span_foreign_fence")
+    val base = graft.queries.Drives.tempDir("graft_span_foreign_fence")
     // seed the store so the gram root exists
     Curation.incrementalSpanDedupBatch(
       Seq((1L, "a b c d")).toDF("doc_id", "text"), 0L,
@@ -2013,7 +2013,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("incremental span dedup: an empty first batch leaves a readable store") {
-    val base = graft.queries.QDef.tempDir("graft_span_empty")
+    val base = graft.queries.Drives.tempDir("graft_span_empty")
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     Curation.incrementalSpanDedupBatch(empty, 0L, s"$base/staged",
       s"$base/dups", window = 3, nBuckets = 4)
@@ -2030,7 +2030,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("incremental span dedup: string-id stores round-trip via idType") {
-    val base = graft.queries.QDef.tempDir("graft_span_strid")
+    val base = graft.queries.Drives.tempDir("graft_span_strid")
     val b0 = Seq(("u-b", "a b c d"), ("u-a", "a b c d")).toDF("doc_id", "text")
     Curation.incrementalSpanDedupBatch(b0, 0L, s"$base/staged",
       s"$base/dups", window = 3, nBuckets = 4)
@@ -2044,7 +2044,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("incremental span dedup: a dup-free store still reads every doc intact") {
-    val base = graft.queries.QDef.tempDir("graft_span_nodup")
+    val base = graft.queries.Drives.tempDir("graft_span_nodup")
     val b0 = Seq((1L, "a b c d"), (2L, "e f g h")).toDF("doc_id", "text")
     Curation.incrementalSpanDedupBatch(b0, 0L, s"$base/staged",
       s"$base/dups", window = 3, nBuckets = 4)
@@ -2445,7 +2445,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("incrementalCrawlBatch: batches + replay ≡ one-shot crawlUrlGroups") {
-    val tmp = java.nio.file.Files.createTempDirectory("crawl_inc").toString
+    val tmp = graft.queries.Drives.tempDir("crawl_inc")
     val frontier = Seq(
       (1L, "HTTP://WWW.Example.COM:80/a/?b=2&a=1"),
       (2L, "http://www.example.com/a?a=1&b=2#frag"),    // dup of 1
@@ -2476,7 +2476,7 @@ class CurationSpec extends AnyFunSuite {
   test("crawlIngest maintainEvery: reads identical to unmaintained twin, dirs compacted") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = graft.queries.QDef.tempDir("graft_crawl_maint")
+    val base = graft.queries.Drives.tempDir("graft_crawl_maint")
     val batches = Seq(
       Seq((1L, "HTTP://WWW.Example.COM:80/a/?b=2&a=1"),
         (2L, "http://www.example.com/a?a=1&b=2#f")),

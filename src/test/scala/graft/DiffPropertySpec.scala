@@ -94,7 +94,7 @@ class DiffPropertySpec extends AnyFunSuite {
         .localCheckpoint(true)
       val snapC = snapshot(seed * 104729L + 62L, universe).toDF("doc_id", "text")
         .localCheckpoint(true)
-      val path = s"${graft.queries.QDef.tempDir("graft_snap_prop")}/snap"
+      val path = s"${graft.queries.Drives.tempDir("graft_snap_prop")}/snap"
       // bootstrap + A→B (replayed) + B→C, then the COMPACTED catch-up
       // log re-applied on top (must be a no-op: the store is already at C)
       Seq(cl(snapA.limit(0), snapA), cl(snapA, snapB), cl(snapA, snapB),
@@ -120,13 +120,13 @@ class DiffPropertySpec extends AnyFunSuite {
       // 1. snapshotCatchUp over the whole backlog lands on the LAST
       //    snapshot (N-log compaction fold, not just the 2-log case)
       val logs = chain.sliding(2).map { case Seq(a, b) => cl(a, b) }.toSeq
-      val path = s"${graft.queries.QDef.tempDir("graft_catchup_prop")}/snap"
+      val path = s"${graft.queries.Drives.tempDir("graft_catchup_prop")}/snap"
       Curation.snapshotCatchUp(logs, path, nBuckets = 4)
       assert(asSet(Curation.readSnapshot(spark, path)) == asSet(snaps.last),
         s"seed=$seed catch-up != final snapshot")
       // 2. the sig store folded batch by batch equals an independent
       //    per-sig census of each PREFIX state's final snapshot
-      val sigPath = s"${graft.queries.QDef.tempDir("graft_sig_prop")}/sig"
+      val sigPath = s"${graft.queries.Drives.tempDir("graft_sig_prop")}/sig"
       val fulls = chain.sliding(2).map { case Seq(a, b) =>
         Curation.corpusDiffFull(a, b) }.toSeq
       fulls.take(3).zipWithIndex.foreach { case (l, i) =>
@@ -168,7 +168,7 @@ class DiffPropertySpec extends AnyFunSuite {
       val snaps = (0 to 4).map(k =>
         snapshot(seed * 49979687L + k * 31L, universe).toDF("doc_id", "text")
           .localCheckpoint(true))
-      val base = graft.queries.QDef.tempDir("graft_mv_prop")
+      val base = graft.queries.Drives.tempDir("graft_mv_prop")
       val rules = Seq("id_not_null" -> col("doc_id").isNotNull)
       val census = Seq("removed_max_30pct" ->
         (col("n_removed") * 10 <= col("n_old") * 3))
@@ -218,7 +218,7 @@ class DiffPropertySpec extends AnyFunSuite {
       val snaps = (0 to 3).map(k =>
         snapshot(seed * 27644437L + k * 31L, universe).toDF("doc_id", "text")
           .localCheckpoint(true))
-      val base = graft.queries.QDef.tempDir("graft_iso_prop")
+      val base = graft.queries.Drives.tempDir("graft_iso_prop")
       val pIn = s"$base/snap"; val pIso = s"$base/store"
       (snaps.head.limit(0) +: snaps).sliding(2).zipWithIndex.foreach {
         case (Seq(a, b), v) =>
@@ -249,7 +249,7 @@ class DiffPropertySpec extends AnyFunSuite {
       val snaps = (0 to 4).map(k =>
         snapshot(seed * 15485863L + k * 31L, universe).toDF("doc_id", "text")
           .localCheckpoint(true))
-      val base = graft.queries.QDef.tempDir("graft_mi_prop")
+      val base = graft.queries.Drives.tempDir("graft_mi_prop")
       val rules = Seq("id_not_null" -> col("doc_id").isNotNull)
       val census = Seq("removed_max_30pct" ->
         (col("n_removed") * 10 <= col("n_old") * 3))
@@ -291,7 +291,7 @@ class DiffPropertySpec extends AnyFunSuite {
       val snaps = (0 to 4).map(k =>
         snapshot(seed * 86028121L + k * 31L, universe).toDF("doc_id", "text")
           .localCheckpoint(true))
-      val base = graft.queries.QDef.tempDir("graft_vi_prop")
+      val base = graft.queries.Drives.tempDir("graft_vi_prop")
       val rules = Seq("id_not_null" -> col("doc_id").isNotNull)
       val census = Seq("removed_max_30pct" ->
         (col("n_removed") * 10 <= col("n_old") * 3))
@@ -340,7 +340,7 @@ class DiffPropertySpec extends AnyFunSuite {
       val snaps = (0 to 3).map(k =>
         snapshot(seed * 67867967L + k * 31L, universe).toDF("doc_id", "text")
           .localCheckpoint(true))
-      val base = graft.queries.QDef.tempDir("graft_cbv_prop")
+      val base = graft.queries.Drives.tempDir("graft_cbv_prop")
       (snaps.head.limit(0) +: snaps).sliding(2).zipWithIndex.foreach {
         case (Seq(a, b), v) =>
           Curation.versionedSnapshotApplyBatch(
@@ -369,7 +369,7 @@ class DiffPropertySpec extends AnyFunSuite {
         snapshot(seed * 32452843L + k * 31L, universe).toDF("doc_id", "text")
           .localCheckpoint(true))
       val chain = snaps.head.limit(0) +: snaps
-      val base = graft.queries.QDef.tempDir("graft_tt_prop")
+      val base = graft.queries.Drives.tempDir("graft_tt_prop")
       chain.sliding(2).zipWithIndex.foreach { case (Seq(a, b), v) =>
         Curation.versionedSnapshotApplyBatch(
           Curation.corpusDiffFull(a, b), base, v.toLong, nBuckets = 4)

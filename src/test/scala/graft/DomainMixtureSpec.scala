@@ -115,7 +115,7 @@ class DomainMixtureSpec extends AnyFunSuite {
   }
 
   test("domainStatsBatch/solveFromStore: batch-additive, replay-idempotent, one-shot-identical") {
-    val dir = java.nio.file.Files.createTempDirectory("mixinc").toString
+    val dir = graft.queries.Drives.tempDir("mixinc")
     val all = fixture
     val b0 = all.limit(2)   // deterministic fixture order is fine here:
     val b1 = all.offset(2)  // the SPLIT does not affect additive sums
@@ -130,7 +130,7 @@ class DomainMixtureSpec extends AnyFunSuite {
   }
 
   test("mixtureDriftDecision: stable store holds; moved domain resolves; absent domain holds") {
-    val dir = java.nio.file.Files.createTempDirectory("mixdrift").toString
+    val dir = graft.queries.Drives.tempDir("mixdrift")
     // batch 0: a=2e6, b=1e6, c=4e6; batch 1: a identical (stable),
     // b mean moves +2e6 (beyond band), c absent from the latest batch
     val b0 = Seq(("a", 2000000L), ("a", 2000000L), ("b", 1000000L),
@@ -147,7 +147,7 @@ class DomainMixtureSpec extends AnyFunSuite {
     assert(got == Seq(("a", "hold"), ("b", "resolve"), ("c", "hold")))
     // no drift anywhere -> no action anywhere (replay batch 1 changes
     // nothing; a fully stable two-batch store is all-hold)
-    val dir2 = java.nio.file.Files.createTempDirectory("mixdrift2").toString
+    val dir2 = graft.queries.Drives.tempDir("mixdrift2")
     DomainMixture.domainStatsBatch(b0, 0L, col("d"), col("loss"), dir2)
     DomainMixture.domainStatsBatch(b0, 1L, col("d"), col("loss"), dir2)
     val stable = DomainMixture.mixtureDriftDecision(spark, dir2,

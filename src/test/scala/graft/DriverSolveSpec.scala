@@ -217,6 +217,48 @@ class DriverSolveSpec extends AnyFunSuite {
     }
   }
 
+  test("mixed endpoint types fail at the call, before any Spark job") {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("mixed-endpoints", "mixed endpoint types")
+      val mixed = graphCases.filter(_.kind == "mixed")
+      assert(mixed.nonEmpty)
+      mixed.foreach { g =>
+        val cc = graphFrame(g, "doc_a", "doc_b", "w").select("doc_a", "doc_b")
+        val pr = graphFrame(g, "src", "dst", "w")
+        Seq[(String, () => DataFrame)](
+          "components" -> (() => Dedup.components(cc)),
+          "componentsDistributed" -> (() => Dedup.componentsDistributed(cc)),
+          "ranks" -> (() => PageRank.ranks(pr, 2)),
+          "ranksDistributed" -> (() => PageRank.ranksDistributed(pr, 2))
+        ).foreach { case (what, call) =>
+          val m = intercept[IllegalArgumentException](call()).getMessage
+          assert(m.contains("endpoint types differ"), s"$what: $m")
+        }
+      }
+      // one listener queue delivers in order: once this job is seen, any
+      // job the calls above started has been seen too
+      sc.setJobGroup("mixed-endpoints-flush", "listener flush")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 60000000000L
+      while (!groups.contains("mixed-endpoints-flush") &&
+             System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("mixed-endpoints-flush"))
+      assert(!groups.contains("mixed-endpoints"))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("Triangles.countWithCoefficient ≡ countDistributed on generated graphs") {
     graphCases.foreach { g =>
       val df = graphFrame(g, "a", "b", "w").select("a", "b")

@@ -53,7 +53,7 @@ class ExpectationsSpec extends AnyFunSuite {
   test("expectationsIngest: per-batch quality time series, replay-idempotent") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = graft.queries.QDef.tempDir("graft_exp_ingest")
+    val base = graft.queries.Drives.tempDir("graft_exp_ingest")
     val in = MemoryStream[(Long, String)]
     val q = Expectations.expectationsIngest(
       in.toDF().toDF("doc_id", "text"), s"$base/report",
@@ -132,7 +132,7 @@ class ExpectationsSpec extends AnyFunSuite {
   }
 
   test("validateBatch: returns the batch's own verdict without reading the store") {
-    val base = graft.queries.QDef.tempDir("graft_exp_verdict")
+    val base = graft.queries.Drives.tempDir("graft_exp_verdict")
     val rules = Seq("text_short" -> (length($"text") <= 8))
     assert(Expectations.validateBatch(
       Seq((1L, "ok")).toDF("doc_id", "text"), 0L, s"$base/report", rules))

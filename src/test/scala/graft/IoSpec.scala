@@ -10,7 +10,7 @@ class IoSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    graft.queries.QDef.tempDir("graft_io")
+    graft.queries.Drives.tempDir("graft_io")
 
   test("parquet round-trip incl. append (S1/S5/S6)") {
     val p = tmp() + "/t"

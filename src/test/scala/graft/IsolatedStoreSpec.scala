@@ -29,7 +29,7 @@ class IsolatedStoreSpec extends AnyFunSuite {
       .toDF("doc_id", "text")).localCheckpoint(true)
 
   test("fold + committed read round-trips a three-batch history") {
-    val p = s"${graft.queries.QDef.tempDir("graft_iso_basic")}/store"
+    val p = s"${graft.queries.Drives.tempDir("graft_iso_basic")}/store"
     Curation.snapshotApplyBatchIsolated(cl(snapA.limit(0), snapA), p, 0L,
       nBuckets = 4)
     assert(asSet(Curation.readSnapshotCommitted(spark, p)) == asSet(snapA))
@@ -37,7 +37,7 @@ class IsolatedStoreSpec extends AnyFunSuite {
     Curation.snapshotApplyBatchIsolated(cl(snapB, snapC), p, 2L, nBuckets = 4)
     assert(asSet(Curation.readSnapshotCommitted(spark, p)) == asSet(snapC))
     // matches the in-place store bit for bit
-    val q = s"${graft.queries.QDef.tempDir("graft_iso_vs_inplace")}/snap"
+    val q = s"${graft.queries.Drives.tempDir("graft_iso_vs_inplace")}/snap"
     Seq(cl(snapA.limit(0), snapA), cl(snapA, snapB), cl(snapB, snapC))
       .foreach(Curation.snapshotApplyBatch(_, q, nBuckets = 4))
     assert(asSet(Curation.readSnapshotCommitted(spark, p))
@@ -45,7 +45,7 @@ class IsolatedStoreSpec extends AnyFunSuite {
   }
 
   test("a reader holding the previous manifest is untouched by a concurrent fold") {
-    val p = s"${graft.queries.QDef.tempDir("graft_iso_reader")}/store"
+    val p = s"${graft.queries.Drives.tempDir("graft_iso_reader")}/store"
     Curation.snapshotApplyBatchIsolated(cl(snapA.limit(0), snapA), p, 0L,
       nBuckets = 4)
     // the reader resolves the manifest NOW (plan build time) …
@@ -61,7 +61,7 @@ class IsolatedStoreSpec extends AnyFunSuite {
   }
 
   test("a crashed fold (gen dir written, manifest not committed) is invisible, then heals on replay") {
-    val p = s"${graft.queries.QDef.tempDir("graft_iso_crash")}/store"
+    val p = s"${graft.queries.Drives.tempDir("graft_iso_crash")}/store"
     Curation.snapshotApplyBatchIsolated(cl(snapA.limit(0), snapA), p, 0L,
       nBuckets = 4)
     // simulate the crash window: batch 1's generation lands, no manifest
@@ -78,7 +78,7 @@ class IsolatedStoreSpec extends AnyFunSuite {
   }
 
   test("emptied buckets drop out of the manifest; lying logs raise before anything lands") {
-    val p = s"${graft.queries.QDef.tempDir("graft_iso_empty")}/store"
+    val p = s"${graft.queries.Drives.tempDir("graft_iso_empty")}/store"
     val tiny = Seq((1L, Some("one")), (2L, Some("two"))).toDF("doc_id", "text")
     Curation.snapshotApplyBatchIsolated(cl(tiny.limit(0), tiny), p, 0L,
       nBuckets = 2)
@@ -95,7 +95,7 @@ class IsolatedStoreSpec extends AnyFunSuite {
   }
 
   test("prune keeps the retained manifest tail's generations and nothing older") {
-    val p = s"${graft.queries.QDef.tempDir("graft_iso_prune")}/store"
+    val p = s"${graft.queries.Drives.tempDir("graft_iso_prune")}/store"
     Curation.snapshotApplyBatchIsolated(cl(snapA.limit(0), snapA), p, 0L,
       nBuckets = 4)
     Curation.snapshotApplyBatchIsolated(cl(snapA, snapB), p, 1L, nBuckets = 4)
@@ -115,7 +115,7 @@ class IsolatedStoreSpec extends AnyFunSuite {
   }
 
   test("fail-fast fences: batchId regression and bucket-count mismatch") {
-    val p = s"${graft.queries.QDef.tempDir("graft_iso_fence")}/store"
+    val p = s"${graft.queries.Drives.tempDir("graft_iso_fence")}/store"
     Curation.snapshotApplyBatchIsolated(cl(snapA.limit(0), snapA), p, 5L,
       nBuckets = 4)
     val e1 = intercept[IllegalStateException] {
@@ -131,7 +131,7 @@ class IsolatedStoreSpec extends AnyFunSuite {
   }
 
   test("rebucketSnapshotIsolated: migration is one commit — readers never fenced, folds follow the new count") {
-    val p = s"${graft.queries.QDef.tempDir("graft_iso_rebucket")}/store"
+    val p = s"${graft.queries.Drives.tempDir("graft_iso_rebucket")}/store"
     Curation.snapshotApplyBatchIsolated(cl(snapA.limit(0), snapA), p, 0L,
       nBuckets = 2)
     val reader = Curation.readSnapshotCommitted(spark, p)
@@ -170,7 +170,7 @@ class IsolatedStoreSpec extends AnyFunSuite {
   }
 
   test("maybeRebucketSnapshotIsolated: growth doubles, spent migration slots skip, virgin refuses") {
-    val p = s"${graft.queries.QDef.tempDir("graft_iso_growth")}/store"
+    val p = s"${graft.queries.Drives.tempDir("graft_iso_growth")}/store"
     val e0 = intercept[IllegalStateException] {
       Curation.maybeRebucketSnapshotIsolated(spark, p, 10L, 4L)
     }
@@ -197,7 +197,7 @@ class IsolatedStoreSpec extends AnyFunSuite {
   test("snapshotIngestMaintainedIsolated: bucket count grows mid-stream, reads stay whole") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val p = s"${graft.queries.QDef.tempDir("graft_iso_maintained")}/store"
+    val p = s"${graft.queries.Drives.tempDir("graft_iso_maintained")}/store"
     val in = MemoryStream[(Long, String, String)]
     val q = Curation.snapshotIngestMaintainedIsolated(
       in.toDF().toDF("doc_id", "status", "text"), p,
@@ -224,7 +224,7 @@ class IsolatedStoreSpec extends AnyFunSuite {
   test("snapshotIngestIsolated: streamed folds with the GC cadence built in") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val p = s"${graft.queries.QDef.tempDir("graft_iso_ingest")}/store"
+    val p = s"${graft.queries.Drives.tempDir("graft_iso_ingest")}/store"
     val in = MemoryStream[(Long, String, String)]
     val q = Curation.snapshotIngestIsolated(
       in.toDF().toDF("doc_id", "status", "text"), p, nBuckets = 2,
@@ -242,7 +242,7 @@ class IsolatedStoreSpec extends AnyFunSuite {
   }
 
   test("pruneSnapshotGens: only fold manifests consume the retention tail (dual-id rebucket grace)") {
-    val p = s"${graft.queries.QDef.tempDir("graft_iso_fold_retain")}/store"
+    val p = s"${graft.queries.Drives.tempDir("graft_iso_fold_retain")}/store"
     Curation.snapshotApplyBatchIsolated(cl(snapA.limit(0), snapA), p, 0L,
       nBuckets = 2)
     Curation.snapshotApplyBatchIsolated(cl(snapA, snapB), p, 1L,
@@ -276,7 +276,7 @@ class IsolatedStoreSpec extends AnyFunSuite {
   test("long ingest stream: manifest and generation dir counts stay bounded by the GC cadence") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val p = s"${graft.queries.QDef.tempDir("graft_iso_dir_bound")}/store"
+    val p = s"${graft.queries.Drives.tempDir("graft_iso_dir_bound")}/store"
     val in = MemoryStream[(Long, String, String)]
     val q = Curation.snapshotIngestIsolated(
       in.toDF().toDF("doc_id", "status", "text"), p, nBuckets = 2,

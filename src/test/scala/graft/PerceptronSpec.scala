@@ -103,7 +103,7 @@ class PerceptronSpec extends AnyFunSuite {
   }
 
   test("driftBatch: at-least-once replay leaves the store byte-identical") {
-    val dir = java.nio.file.Files.createTempDirectory("driftb").toString
+    val dir = graft.queries.Drives.tempDir("driftb")
     val label = when(col("lang") === "en", lit(1)).otherwise(lit(-1))
     val w = Map(-1 -> 0L, 0 -> 1L)
     val b0 = Seq((1L, "en", "a b"), (2L, "de", "c")).toDF("doc_id", "lang", "text")
@@ -122,7 +122,7 @@ class PerceptronSpec extends AnyFunSuite {
   }
 
   test("driftBatch: empty micro-batch stages nothing; drift spans real batches") {
-    val dir = java.nio.file.Files.createTempDirectory("driftE").toString
+    val dir = graft.queries.Drives.tempDir("driftE")
     val label = when(col("lang") === "en", lit(1)).otherwise(lit(-1))
     val w = Map(-1 -> 0L, 0 -> 1L)
     val b0 = Seq((1L, "en", "a b"), (2L, "de", "c")).toDF("doc_id", "lang", "text")

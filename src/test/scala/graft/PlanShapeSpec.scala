@@ -504,7 +504,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // store read
     import spark.implicits._
     val sigDir =
-      s"${graft.queries.QDef.tempDir("graft_plan_sig")}/sig"
+      s"${graft.queries.Drives.tempDir("graft_plan_sig")}/sig"
     graft.curation.Curation.sigStoreApplyBatch(
       Seq((1L, "added", None: Option[String], Some("seed text")))
         .toDF("doc_id", "status", "old_text", "new_text"),
@@ -528,7 +528,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // reads a generation's whole dir and row-filters afterwards would
     // re-read buckets newer generations already own
     import graft.curation.Curation
-    val p = s"${graft.queries.QDef.tempDir("graft_plan_iso")}/store"
+    val p = s"${graft.queries.Drives.tempDir("graft_plan_iso")}/store"
     val snapA = (1L to 30L).map(i => (i, Some(s"doc $i"))).toDF("doc_id", "text")
     val snapB = snapA.filter($"doc_id" =!= 1L) // one doc → one touched bucket
     def cl(a: org.apache.spark.sql.DataFrame,

@@ -126,7 +126,7 @@ class RedsetPipelineSpec extends AnyFunSuite {
         raw(91, "2024-03-01 00:00:00", "select", 10, "", "", "5"),
         raw(92, "2024-03-01 01:00:00", "copy", 10, "[]", "", "5"))),
       RedsetSchema.rawSchema)
-    val base = graft.queries.QDef.tempDir("graft_empty_inc")
+    val base = graft.queries.Drives.tempDir("graft_empty_inc")
     RedsetPipeline.incrementalBatch(allDirty, 0L, s"$base/staged",
       s"$base/out", nBuckets = 4)
     RedsetPipeline.incrementalBatch(rawDf, 1L, s"$base/staged",
@@ -148,7 +148,7 @@ class RedsetPipelineSpec extends AnyFunSuite {
         raw(3, "2024-03-02 02:00:00", "insert", 11, "", "90", "2000"),
         raw(4, "2024-03-02 03:00:00", "select", 11, "90", "", "1000"))),
       RedsetSchema.rawSchema)
-    val base = graft.queries.QDef.tempDir("graft_day_prune")
+    val base = graft.queries.Drives.tempDir("graft_day_prune")
     RedsetPipeline.incrementalBatch(twoDays, 0L, s"$base/staged",
       s"$base/out", nBuckets = 4)
     val read = spark.read.parquet(s"$base/out/output_table")

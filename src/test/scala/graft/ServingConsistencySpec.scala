@@ -29,7 +29,7 @@ class ServingConsistencySpec extends AnyFunSuite {
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   test("census verdict is replay-stable: a shipped threshold batch cannot flip to refused on replay") {
-    val base = graft.queries.QDef.tempDir("graft_replay_verdict")
+    val base = graft.queries.Drives.tempDir("graft_replay_verdict")
     val path = s"$base/snap"; val rep = s"$base/report"
     val snapA = (1L to 10L).map(i => (i, Some(s"doc $i"))).toDF("doc_id", "text")
     // removes EXACTLY the 20% cap: passes against n_old = 10, but would
@@ -61,7 +61,7 @@ class ServingConsistencySpec extends AnyFunSuite {
   }
 
   test("readBatchVerdict: absent until the report commits, then the recorded verdict") {
-    val base = graft.queries.QDef.tempDir("graft_verdict_read")
+    val base = graft.queries.Drives.tempDir("graft_verdict_read")
     val rep = s"$base/report"
     assert(Curation.readBatchVerdict(spark, rep, 0L).isEmpty)
     val batch = Seq((1L, Some("one"))).toDF("doc_id", "text")
@@ -76,7 +76,7 @@ class ServingConsistencySpec extends AnyFunSuite {
   }
 
   test("as-of walk-back is capped at the folded-version marker: an archived, not-yet-folded log is invisible") {
-    val base = graft.queries.QDef.tempDir("graft_torn_window")
+    val base = graft.queries.Drives.tempDir("graft_torn_window")
     val snapA = Seq((1L, Some("one")), (2L, Some("two"))).toDF("doc_id", "text")
     val snapB = Seq((1L, Some("one v2")), (3L, Some("three"))).toDF("doc_id", "text")
     val snapC = Seq((3L, Some("three")), (4L, Some("four"))).toDF("doc_id", "text")
@@ -106,7 +106,7 @@ class ServingConsistencySpec extends AnyFunSuite {
   }
 
   test("a duplicate-id log is refused BEFORE the version archive — no phantom history") {
-    val base = graft.queries.QDef.tempDir("graft_no_phantom")
+    val base = graft.queries.Drives.tempDir("graft_no_phantom")
     val snapA = Seq((1L, Some("one")), (2L, Some("two"))).toDF("doc_id", "text")
     Curation.versionedSnapshotApplyBatch(full(snapA.limit(0), snapA),
       base, 0L, nBuckets = 2)
@@ -125,7 +125,7 @@ class ServingConsistencySpec extends AnyFunSuite {
       new org.apache.hadoop.fs.Path(s"$base/log/version=1")))
     assert(asSet(Curation.readSnapshotAsOf(spark, base, 0L)) == asSet(snapA))
     // the managed composite (ungated) refuses pre-archive too
-    val mBase = graft.queries.QDef.tempDir("graft_no_phantom_managed")
+    val mBase = graft.queries.Drives.tempDir("graft_no_phantom_managed")
     assert(Curation.managedVersionedApplyBatch(full(snapA.limit(0), snapA),
       0L, s"$mBase/corpus", s"$mBase/sig", s"$mBase/report",
       Seq("id_not_null" -> col("doc_id").isNotNull), nBuckets = 2))
@@ -144,7 +144,7 @@ class ServingConsistencySpec extends AnyFunSuite {
   test("managedVersionedIngest: guardUniqueIds quarantines a lying batch without killing the stream") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = graft.queries.QDef.tempDir("graft_mv_uniq_ingest")
+    val base = graft.queries.Drives.tempDir("graft_mv_uniq_ingest")
     val in = MemoryStream[(Long, String, String, String)]
     val q = Curation.managedVersionedIngest(
       in.toDF().toDF("doc_id", "status", "old_text", "new_text"),
@@ -179,7 +179,7 @@ class ServingConsistencySpec extends AnyFunSuite {
   test("managedVersionedIngest: retainVersions bounds the archive, floor refuses below, serves at") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = graft.queries.QDef.tempDir("graft_mv_retain")
+    val base = graft.queries.Drives.tempDir("graft_mv_retain")
     val in = MemoryStream[(Long, String, String, String)]
     val q = Curation.managedVersionedIngest(
       in.toDF().toDF("doc_id", "status", "old_text", "new_text"),
@@ -207,7 +207,7 @@ class ServingConsistencySpec extends AnyFunSuite {
   }
 
   test("pruneSnapshotVersions is monotone: a lower floor cannot re-promise pruned history") {
-    val base = graft.queries.QDef.tempDir("graft_prune_monotone")
+    val base = graft.queries.Drives.tempDir("graft_prune_monotone")
     val snapA = Seq((1L, Some("one"))).toDF("doc_id", "text")
     val snapB = Seq((1L, Some("one")), (2L, Some("two"))).toDF("doc_id", "text")
     Curation.versionedSnapshotApplyBatch(full(snapA.limit(0), snapA),
@@ -228,7 +228,7 @@ class ServingConsistencySpec extends AnyFunSuite {
   test("managedCorpusIngest: compactEvery squashes the sig store mid-stream without changing its census") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = graft.queries.QDef.tempDir("graft_mc_compact")
+    val base = graft.queries.Drives.tempDir("graft_mc_compact")
     val in = MemoryStream[(Long, String, String, String)]
     val q = Curation.managedCorpusIngest(
       in.toDF().toDF("doc_id", "status", "old_text", "new_text"),
@@ -260,7 +260,7 @@ class ServingConsistencySpec extends AnyFunSuite {
   }
 
   test("managedCorpusApplyBatchIsolated: quarantine commits nothing, readers race whole batches, replay reuses the verdict") {
-    val base = graft.queries.QDef.tempDir("graft_managed_iso")
+    val base = graft.queries.Drives.tempDir("graft_managed_iso")
     val store = s"$base/store"
     val snapA = (1L to 10L).map(i => (i, Some(s"doc $i"))).toDF("doc_id", "text")
     val snapB = snapA.filter($"doc_id" > 2L) // exactly the 20% census cap
@@ -298,7 +298,7 @@ class ServingConsistencySpec extends AnyFunSuite {
   test("managedCorpusIngestIsolated: streamed gated folds with GC + compaction cadences") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = graft.queries.QDef.tempDir("graft_managed_iso_ingest")
+    val base = graft.queries.Drives.tempDir("graft_managed_iso_ingest")
     val in = MemoryStream[(Long, String, String, String)]
     val q = Curation.managedCorpusIngestIsolated(
       in.toDF().toDF("doc_id", "status", "old_text", "new_text"),
@@ -338,7 +338,7 @@ class ServingConsistencySpec extends AnyFunSuite {
         .map(t => t.split(" ").distinct.sorted.mkString(" "))
         .groupBy(identity).map { case (k, v) => k -> v.size.toLong }
     for (crashAfter <- Seq("report", "archive", "snap", "sig")) {
-      val base = graft.queries.QDef.tempDir(s"graft_crash_$crashAfter")
+      val base = graft.queries.Drives.tempDir(s"graft_crash_$crashAfter")
       val corpus = s"$base/corpus"
       def applyFull(v: Long, log: org.apache.spark.sql.DataFrame) =
         Curation.managedVersionedApplyBatch(log, v, corpus, s"$base/sig",
@@ -394,7 +394,7 @@ class ServingConsistencySpec extends AnyFunSuite {
   }
 
   test("versioned-isolated: a reader holding an old manifest survives a concurrent fold AND a concurrent as-of walk-back stays pinned") {
-    val base = graft.queries.QDef.tempDir("graft_vi_reader")
+    val base = graft.queries.Drives.tempDir("graft_vi_reader")
     val corpus = s"$base/corpus"
     val snapA = (1L to 10L).map(i => (i, Some(s"doc $i"))).toDF("doc_id", "text")
     val snapB = snapA.filter($"doc_id" > 1L)
@@ -445,7 +445,7 @@ class ServingConsistencySpec extends AnyFunSuite {
         .map(t => t.split(" ").distinct.sorted.mkString(" "))
         .groupBy(identity).map { case (k, v) => k -> v.size.toLong }
     for (crashAfter <- Seq("report", "archive", "snap", "sig")) {
-      val base = graft.queries.QDef.tempDir(s"graft_vi_crash_$crashAfter")
+      val base = graft.queries.Drives.tempDir(s"graft_vi_crash_$crashAfter")
       val corpus = s"$base/corpus"
       def applyFull(v: Long, log: org.apache.spark.sql.DataFrame) =
         Curation.managedVersionedApplyBatchIsolated(log, v, corpus,
@@ -501,7 +501,7 @@ class ServingConsistencySpec extends AnyFunSuite {
   test("managedVersionedIngestIsolated: streamed composite with all three retention cadences") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = graft.queries.QDef.tempDir("graft_vi_ingest")
+    val base = graft.queries.Drives.tempDir("graft_vi_ingest")
     val in = MemoryStream[(Long, String, String, String)]
     val q = Curation.managedVersionedIngestIsolated(
       in.toDF().toDF("doc_id", "status", "old_text", "new_text"),
@@ -543,7 +543,7 @@ class ServingConsistencySpec extends AnyFunSuite {
   test("managedVersionedIngestIsolated: guardUniqueIds quarantines a lying batch — no version, no manifest, stream alive") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = graft.queries.QDef.tempDir("graft_vi_uniq_ingest")
+    val base = graft.queries.Drives.tempDir("graft_vi_uniq_ingest")
     val in = MemoryStream[(Long, String, String, String)]
     val q = Curation.managedVersionedIngestIsolated(
       in.toDF().toDF("doc_id", "status", "old_text", "new_text"),
@@ -579,7 +579,7 @@ class ServingConsistencySpec extends AnyFunSuite {
   }
 
   test("changesBetweenVersions: the unfolded archive is invisible, the floor refuses, degenerate reads are empty") {
-    val base = graft.queries.QDef.tempDir("graft_cbv_guards")
+    val base = graft.queries.Drives.tempDir("graft_cbv_guards")
     val snapA = Seq((1L, Some("one")), (2L, Some("two"))).toDF("doc_id", "text")
     val snapB = Seq((1L, Some("one v2")), (3L, Some("three"))).toDF("doc_id", "text")
     val snapC = Seq((3L, Some("three")), (4L, Some("four"))).toDF("doc_id", "text")
@@ -614,7 +614,7 @@ class ServingConsistencySpec extends AnyFunSuite {
     assert(logSet(Curation.changesBetweenVersions(spark, base, 1L, 2L))
       == logSet(full(snapB, snapC).filter(col("status") =!= "unchanged")))
     // the committed variant: a virgin store serves an empty feed
-    val virgin = graft.queries.QDef.tempDir("graft_cbv_virgin")
+    val virgin = graft.queries.Drives.tempDir("graft_cbv_virgin")
     assert(Curation.changesBetweenVersionsCommitted(spark,
       s"$virgin/corpus", 0L, 5L).count() == 0)
   }
@@ -624,7 +624,7 @@ class ServingConsistencySpec extends AnyFunSuite {
     val chain = (0 to 24).map(v => (1L to 6L)
       .map(i => (i, Some(s"doc $i v${v - v % (i.toInt + 1)}")))
       .toDF("doc_id", "text"))
-    val base = graft.queries.QDef.tempDir("graft_ck_release")
+    val base = graft.queries.Drives.tempDir("graft_ck_release")
     (chain.head.limit(0) +: chain).sliding(2).zipWithIndex.foreach {
       case (Seq(a, b), v) =>
         Curation.versionedSnapshotApplyBatch(full(a, b), base, v.toLong,
@@ -642,7 +642,7 @@ class ServingConsistencySpec extends AnyFunSuite {
     val logs = (chain.head.limit(0) +: chain).sliding(2).toSeq.map {
       case Seq(a, b) => thinCl(a, b)
     }
-    val p2 = s"${graft.queries.QDef.tempDir("graft_ck_release_cu")}/snap"
+    val p2 = s"${graft.queries.Drives.tempDir("graft_ck_release_cu")}/snap"
     Curation.snapshotCatchUp(logs, p2, nBuckets = 2)
     assert(asSet(Curation.readSnapshot(spark, p2)) == asSet(chain.last))
     assert(spark.sparkContext.getPersistentRDDs.size <= before + 1,

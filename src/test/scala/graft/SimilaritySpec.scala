@@ -68,7 +68,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("ivfAssignBatch: replay-idempotent store ≡ one-shot frozen-centroid assignment") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfinc").toString
+    val dir = graft.queries.Drives.tempDir("ivfinc")
     val centroids = Similarity.ivfTrain(emb, nCentroids = 3, iters = 1)
     val b0 = emb.filter(col("vec_id") % 2 === 0)
     val b1 = emb.filter(col("vec_id") % 2 === 1)
@@ -87,7 +87,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("ivfDriftDecision: stable shares hold; shifted centroid retrains; absent holds") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("ivfdrift").toString
+    val dir = graft.queries.Drives.tempDir("ivfdrift")
     val schema = StructType(Seq(StructField("vec_id", LongType),
       StructField("cid", IntegerType), StructField("batch_id", LongType)))
     def writeTo(d: String, rows: Seq[(Long, Int)], bid: Long): Unit =
@@ -114,7 +114,7 @@ class SimilaritySpec extends AnyFunSuite {
       (2, 90L, -1L, "hold")))
     // a replayed identical latest batch changes nothing; and when the
     // latest batch distributes exactly like history, everything holds
-    val dir2 = java.nio.file.Files.createTempDirectory("ivfdrift2").toString
+    val dir2 = graft.queries.Drives.tempDir("ivfdrift2")
     writeTo(dir2, (1L to 5L).map((_, 0)) ++ (6L to 10L).map((_, 1)), 0L)
     writeTo(dir2, (11L to 15L).map((_, 0)) ++ (16L to 20L).map((_, 1)), 1L)
     val stable = Similarity.ivfDriftDecision(spark, dir2, bandPermille = 1L)
@@ -132,7 +132,7 @@ class SimilaritySpec extends AnyFunSuite {
   test("ivfIngest streams batches into the assignment store e2e") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("ivfing").toString
+    val dir = graft.queries.Drives.tempDir("ivfing")
     val centroids = Similarity.ivfTrain(emb, nCentroids = 3, iters = 1)
     val rows = emb.as[(Long, Array[Float], Int)].collect()
     val in = MemoryStream[(Long, Array[Float])]

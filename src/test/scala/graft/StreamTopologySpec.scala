@@ -34,7 +34,7 @@ class StreamTopologySpec extends AnyFunSuite {
       "write_table_ids" -> "90", "mbytes_scanned" -> "50.0"))
 
   test("file-source stream: wire JSON -> clean -> event-time window -> sink") {
-    val dir = graft.queries.QDef.tempDir("graft_wire") + "/in"
+    val dir = graft.queries.Drives.tempDir("graft_wire") + "/in"
     // single file: with maxFilesPerTrigger=1, multi-file arrival order is
     // nondeterministic, and a 0s watermark would drop "late" earlier files
     // — exactly the disorder withWatermark exists to absorb (production
@@ -61,7 +61,7 @@ class StreamTopologySpec extends AnyFunSuite {
   }
 
   test("liveRun maintains the live dashboard views per micro-batch (§3.2)") {
-    val dir = graft.queries.QDef.tempDir("graft_live") + "/in"
+    val dir = graft.queries.Drives.tempDir("graft_live") + "/in"
     val rows = wireRows ++ Seq(Map(
       "query_id" -> "4", "user_id" -> "10",
       "arrival_timestamp" -> "2024-03-01 02:00:00", "query_type" -> "SELECT ",
@@ -83,7 +83,7 @@ class StreamTopologySpec extends AnyFunSuite {
   }
 
   test("expertRun recomputes historical views from accumulated state (§3.3)") {
-    val base = graft.queries.QDef.tempDir("graft_expert")
+    val base = graft.queries.Drives.tempDir("graft_expert")
     IO.toJsonRecords(mkRaw(wireRows)).repartition(1).write.text(base + "/in")
     val q = graft.pipeline.RedsetPipeline.expertRun(
       Streams.jsonFileSource(spark, base + "/in"), base + "/staged", "expert_test")
@@ -118,7 +118,7 @@ class StreamTopologySpec extends AnyFunSuite {
         "read_table_ids" -> "90"))
     val batchA = rowsFor(idA, 1)
     val batchB = rowsFor(idB, 3)
-    val base = graft.queries.QDef.tempDir("graft_expert_inc")
+    val base = graft.queries.Drives.tempDir("graft_expert_inc")
     // two files + maxFilesPerTrigger=1 -> two micro-batches
     IO.toJsonRecords(mkRaw(batchA)).repartition(1).write.text(base + "/in")
     IO.toJsonRecords(mkRaw(batchB)).repartition(1).write

@@ -81,7 +81,7 @@ class StreamingSpec extends AnyFunSuite {
     val w = Map(-1 -> 0L, 0 -> 1L, 1 -> 1L, 2 -> -2L, 3 -> 1L,
       4 -> -1L, 5 -> 2L, 6 -> -1L, 7 -> 1L)
     val label = when(col("lang") === "en", lit(1)).otherwise(lit(-1))
-    val dir = java.nio.file.Files.createTempDirectory("drift").toString
+    val dir = graft.queries.Drives.tempDir("drift")
     val in = MemoryStream[(Long, String, String)]
     val q = graft.text.Perceptron.driftIngest(
       in.toDS().toDF("doc_id", "lang", "text"), col("text"), col("doc_id"),
