@@ -41,9 +41,9 @@ object Session {
     s
   }
 
-  /** Unpersist every persistent RDD. localCheckpoint(eager) blocks stay
-    * in the BlockManager until their RDD is GC'd, so hundreds of query
-    * runs pile up dead storage blocks; the memory pressure showed up as
+  /** Unpersist every persistent RDD. A [[Checkpoint]] taken outside every
+    * scope stays in the BlockManager until its RDD is GC'd, so hundreds of
+    * query runs pile up dead storage blocks; the memory pressure showed up as
     * 25× inflation on TRIVIAL projections late in the alphabetical r7
     * bench suite — not plan damage. Call it after each query run (each
     * run rebuilds its own checkpoints). Never throws.

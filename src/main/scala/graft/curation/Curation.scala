@@ -1,5 +1,6 @@
 package graft.curation
 
+import graft.Checkpoint
 import graft.fns.Fns
 import graft.text.TextAnalysis
 import org.apache.spark.sql.{Column, DataFrame}
@@ -332,8 +333,8 @@ object Curation {
       bucket: Column, boundarySplit: Option[Boolean] = None): DataFrame = {
     val base = df.withColumn("__k2", key).withColumn("__sa", sortA)
       .withColumn("__ti", tieId).withColumn("__b", bucket)
-    val hist = base.groupBy(col("__k2"), col("__b"))
-      .agg(count(lit(1)).as("__c")).localCheckpoint(true)
+    val hist = Checkpoint(base.groupBy(col("__k2"), col("__b"))
+      .agg(count(lit(1)).as("__c")))
     val q = quotas(hist.groupBy(col("__k2"))
       .agg(sum(col("__c")).as("__n")).select(col("__k2").as("__k"),
         col("__n")))
@@ -450,13 +451,12 @@ object Curation {
     */
   private def withTieSubBuckets(df: DataFrame): DataFrame = {
     val b2n = 4096.0
-    val stats = df.groupBy(col("__k2"))
+    val stats = Checkpoint(df.groupBy(col("__k2"))
       .agg(min(col("__ti").cast("double")).as("__tmin"),
         max(col("__ti").cast("double")).as("__tmax"))
       .withColumn("__w2",
         greatest((col("__tmax") - col("__tmin") + 1.0) / lit(b2n), lit(1.0)))
-      .select(col("__k2").as("__sk"), col("__tmin"), col("__w2"))
-      .localCheckpoint(true)
+      .select(col("__k2").as("__sk"), col("__tmin"), col("__w2")))
     df.join(broadcast(stats), col("__k2") === col("__sk"))
       .withColumn("__b2", struct(col("__sa").as("sa"),
         floor((col("__ti").cast("double") - col("__tmin")) / col("__w2"))
@@ -465,8 +465,8 @@ object Curation {
 
   private def splitBoundaryRank(slice: DataFrame, th: DataFrame): DataFrame = {
     val s2 = withTieSubBuckets(slice)
-    val hist2 = s2.groupBy(col("__k2"), col("__b2"))
-      .agg(count(lit(1)).as("__c2")).localCheckpoint(true)
+    val hist2 = Checkpoint(s2.groupBy(col("__k2"), col("__b2"))
+      .agg(count(lit(1)).as("__c2")))
     // residual quota per key off the (tiny, per-key) threshold frame —
     // never a second corpus pass
     val resid = th.filter(col("__tb").isNotNull)
@@ -760,19 +760,18 @@ object Curation {
                                    numHashes: Int, bands: Int,
                                    nBuckets: Int = 64,
                                    text: Column = col("text"),
-                                   id: Column = col("doc_id")): Unit = {
+                                   id: Column = col("doc_id")): Unit = Checkpoint.scope {
     val spark = batch.sparkSession
     // Materialized once: the band-row derivation (numHashes md5
     // aggregations over the batch) feeds both the staging write and the
     // touched-bucket probe — uncheckpointed, the probe's collect would
     // re-run the signature pipeline, and "signatures computed once per
     // doc" is this operator's contract
-    val bandRows = graft.dedup.Dedup
+    val bandRows = Checkpoint(graft.dedup.Dedup
       .minHashBandRowsPortable(batch, text, id, numHashes, bands)
       .withColumn("bucket",
         pmod(xxhash64(col("band"), col("band_hash")), lit(nBuckets.toLong))
-          .cast("int"))
-      .localCheckpoint(true)
+          .cast("int")))
     val staged = bandRows.withColumn("batch_id", lit(batchId))
     staged.repartition(col("bucket")).write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -780,7 +779,6 @@ object Curation {
     // bounded collect: ≤ nBuckets values, off the checkpointed block
     val touched = bandRows.select(col("bucket")).distinct()
       .collect().map(_.getInt(0))
-    org.apache.spark.sql.graftbridge.Bridge.release(bandRows)
     if (touched.nonEmpty) {
       // explicit schema: an early batch can stage zero rows for a bucket
       // (footer-less dir) and inference would fail
@@ -1000,12 +998,12 @@ object Curation {
       batch.select(id.as("node")).filter(col("node").isNotNull)
         .join(old.select(col("node")), Seq("node"), "left_anti")
         .select(col("node"), col("node").as("comp")))
-    val updated = graft.dedup.Dedup.componentsIncremental(withNew,
-      spark.read.schema(edgeSchema).parquet(edgesPath)
-        .select(col("doc_a"), col("doc_b")))
-    updated.write.mode("overwrite").parquet(s"$labelsPath/snap=$batchId")
-    org.apache.spark.sql.graftbridge.Bridge.release(updated)
-    ()
+    Checkpoint.scope {
+      graft.dedup.Dedup.componentsIncremental(withNew,
+        spark.read.schema(edgeSchema).parquet(edgesPath)
+          .select(col("doc_a"), col("doc_b")))
+        .write.mode("overwrite").parquet(s"$labelsPath/snap=$batchId")
+    }
   }
 
   /** Compact a duplicate-tolerant `(bucket, batch_id)`-partitioned
@@ -1050,7 +1048,6 @@ object Curation {
                          compactId: Long = -1L): Unit = {
     require(compactId < 0,
       s"compactId must be negative (live batchIds are >= 0), got $compactId")
-    import org.apache.spark.sql.graftbridge.Bridge
     val p = new org.apache.hadoop.fs.Path(stagingPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return
@@ -1061,18 +1058,17 @@ object Curation {
       val batchDirs = fs.listStatus(bdir).toSeq.filter(_.isDirectory)
         .filter(_.getPath.getName.startsWith("batch_id="))
       val stale = batchDirs.filter(_.getPath.getName != s"batch_id=$compactId")
-      if (stale.nonEmpty) {
+      if (stale.nonEmpty) Checkpoint.scope {
         // basePath keeps bucket/batch_id as partition columns while the
         // read lists ONLY this bucket's dirs — a parent read per bucket
         // would re-walk all nBuckets × batches dirs every iteration
-        val slice = spark.read.option("basePath", stagingPath)
+        // break file lineage before the rewrite
+        val slice = Checkpoint(spark.read.option("basePath", stagingPath)
           .schema(stagedSchema).parquet(bdir.toString)
-          .withColumn("batch_id", lit(compactId))
-          .localCheckpoint(true) // break file lineage before the rewrite
+          .withColumn("batch_id", lit(compactId)))
         slice.repartition(col("bucket")).write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("bucket", "batch_id").parquet(stagingPath)
-        Bridge.release(slice)
         stale.foreach(st => fs.delete(st.getPath, true))
       }
     }
@@ -1968,24 +1964,23 @@ object Curation {
     * Returns `(doc_id, clean_text, n_tokens, n_tokens_removed)`.
     */
   def dedupSpansAcrossDocs(df: DataFrame, text: Column, id: Column,
-                           window: Int, hashKeys: Boolean = false): DataFrame = {
-    val (base, winStream) = spanWindowStream(df, text, id, window, hashKeys)
-    // the window stream feeds BOTH the gram count and the flagged-starts
-    // join-back — materialize it once (house idiom; uncheckpointed, the
-    // tokenize+explode pipeline would run twice). `flagged` (doc-count
-    // sized) is materialized in turn so the window stream's block can be
-    // released before the lazy result frame is handed back — the caller
-    // retains only the small flagged block plus the cheap base recompute.
-    val wins = winStream.localCheckpoint(true)
-    val dup = wins.groupBy(col("gram")).agg(count(lit(1)).as("__c"))
-      .filter(col("__c") > 1).select(col("gram"))
-    val flagged = wins.join(dup, Seq("gram"))
-      .groupBy(col("doc_id"))
-      .agg(array_sort(collect_list(col("s"))).as("__fs"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graftbridge.Bridge.release(wins)
-    assembleSpanCleaned(base, flagged, window)
-  }
+                           window: Int, hashKeys: Boolean = false): DataFrame =
+    Checkpoint.scope {
+      val (base, winStream) = spanWindowStream(df, text, id, window, hashKeys)
+      // the window stream feeds BOTH the gram count and the flagged-starts
+      // join-back — materialize it once (house idiom; uncheckpointed, the
+      // tokenize+explode pipeline would run twice). `flagged` (doc-count
+      // sized) is materialized in turn so the window stream's block is
+      // freed when the lazy result frame is handed back — the caller
+      // retains only the small flagged block plus the cheap base recompute.
+      val wins = Checkpoint(winStream)
+      val dup = wins.groupBy(col("gram")).agg(count(lit(1)).as("__c"))
+        .filter(col("__c") > 1).select(col("gram"))
+      val flagged = Checkpoint(wins.join(dup, Seq("gram"))
+        .groupBy(col("doc_id"))
+        .agg(array_sort(collect_list(col("s"))).as("__fs")))
+      assembleSpanCleaned(base, flagged, window)
+    }
 
   /** THE one sliding-window gram derivation, shared by the one-shot
     * [[dedupSpansAcrossDocs]] and the incremental
@@ -2075,7 +2070,7 @@ object Curation {
                                 stagingPath: String, dupsPath: String,
                                 window: Int, nBuckets: Int = 64,
                                 text: Column = col("text"),
-                                id: Column = col("doc_id")): Unit = {
+                                id: Column = col("doc_id")): Unit = Checkpoint.scope {
     val spark = batch.sparkSession
     // Compaction fence: [[compactCountedStore]]'s side root exists only
     // while a compaction is in flight OR crashed mid-run. Ingesting past
@@ -2096,12 +2091,11 @@ object Curation {
     // convention: 8-byte staging rows). Materialized once: feeds the
     // staging write AND the touched-bucket probe ("window stream derived
     // once per doc ever" is the contract).
-    val winRows = spanWindowStream(batch, text, id, window, hashKeys = true)
+    val winRows = Checkpoint(spanWindowStream(batch, text, id, window, hashKeys = true)
       ._2
       .withColumnRenamed("gram", "gram_h")
       .withColumn("bucket",
-        pmod(col("gram_h"), lit(nBuckets.toLong)).cast("int"))
-      .localCheckpoint(true)
+        pmod(col("gram_h"), lit(nBuckets.toLong)).cast("int")))
     val staged = winRows.withColumn("batch_id", lit(batchId))
     staged.repartition(col("bucket")).write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -2117,7 +2111,6 @@ object Curation {
     // bounded collect: ≤ nBuckets values, off the checkpointed block
     val touched = winRows.select(col("bucket")).distinct()
       .collect().map(_.getInt(0))
-    org.apache.spark.sql.graftbridge.Bridge.release(winRows)
     if (touched.nonEmpty) {
       // explicit schema: an early batch can stage zero rows for a bucket
       // (footer-less dir) and inference would fail
@@ -2318,9 +2311,8 @@ object Curation {
       .withColumn("__ti", tieId).withColumn("__tok", valueCol)
       .withColumn("__b", coalesce(expr(s"__sa div $bucketWidth"),
         lit(Long.MinValue)))
-    val hist = base.groupBy(col("__k2"), col("__b"))
-      .agg(sum(col("__tok")).as("__tc"), count(lit(1)).as("__rc"))
-      .localCheckpoint(true)
+    val hist = Checkpoint(base.groupBy(col("__k2"), col("__b"))
+      .agg(sum(col("__tok")).as("__tc"), count(lit(1)).as("__rc")))
     val offs0 = hist
       .withColumn("__cum", sum(col("__tc")).over(
         Window.partitionBy(col("__k2")).orderBy(col("__b"))))
@@ -2395,9 +2387,9 @@ object Curation {
     // __base is constant per (key, bucket), so carrying it in the group
     // keys leaves the histogram's grain unchanged — it's there so the
     // combined-base prune drops whole sub-buckets BEFORE the corpus join
-    val hist2 = s2.groupBy(col("__k2"), col("__b"),
+    val hist2 = Checkpoint(s2.groupBy(col("__k2"), col("__b"),
         col("__base").as("__bse"), col("__b2"))
-      .agg(sum(col("__tok")).as("__tc2")).localCheckpoint(true)
+      .agg(sum(col("__tok")).as("__tc2")))
     val offs2a = hist2
       .withColumn("__cum2", sum(col("__tc2")).over(
         Window.partitionBy(col("__k2"), col("__b")).orderBy(col("__b2"))))
@@ -2438,9 +2430,8 @@ object Curation {
     // consumes it in BOTH prefix-sum passes. At 100 TB the t20 artifact
     // is computed once per snapshot anyway; this is that contract in
     // plan form (measured 3.3 s → 1.6 s on c11d at sf0.1).
-    val cal = calibration.select(col("lang").as("__clang"),
-        round(col("bpe_per_ws") * 1000000.0, 0).cast("long").as("__ratio"))
-      .localCheckpoint(true)
+    val cal = Checkpoint(calibration.select(col("lang").as("__clang"),
+        round(col("bpe_per_ws") * 1000000.0, 0).cast("long").as("__ratio")))
     val est = df.join(broadcast(cal), lang <=> col("__clang"), "left")
       .withColumn("est_bpe_micro",
         nTokens * coalesce(col("__ratio"), lit(1000000L)))
@@ -2483,9 +2474,8 @@ object Curation {
       // broadcast exchange re-executes per consumer; the #langs-row
       // artifact is computed once and shipped (measured 1.7 s → 0.7 s
       // on c11b at sf0.1).
-      val cal = calibration.select(col("lang").as("__clang"),
-          round(col("bpe_per_ws") * 1000000.0, 0).cast("long").as("__ratio"))
-        .localCheckpoint(true)
+      val cal = Checkpoint(calibration.select(col("lang").as("__clang"),
+          round(col("bpe_per_ws") * 1000000.0, 0).cast("long").as("__ratio")))
       val w = Window.partitionBy(key).orderBy(order: _*)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       df.join(broadcast(cal), lang <=> col("__clang"), "left")
@@ -2592,15 +2582,14 @@ object Curation {
                      maxStopwordRatio: Double = 0.1,
                      maxDupTokenRatio: Double = 0.6,
                      maxTopBigramFrac: Double = 0.06,
-                     hashSig: Option[Boolean] = None): DataFrame = {
+                     hashSig: Option[Boolean] = None): DataFrame = Checkpoint.scope {
     val hs = resolveHashSig(docs, hashSig)
-    val qKeep = qualityFilter(docs, col("text"), col("doc_id"),
+    val qKeep = Checkpoint(qualityFilter(docs, col("text"), col("doc_id"),
         minTokens, maxTokens, maxStopwordRatio, maxDupTokenRatio,
         maxTopBigramFrac)
-      .filter(col("keep") === 1).select(col("doc_id"))
-      .localCheckpoint(true)
+      .filter(col("keep") === 1).select(col("doc_id")))
     val q = docs.join(qKeep, Seq("doc_id"))
-    val contaminated = decontaminate(q, evalDocs).localCheckpoint(true)
+    val contaminated = Checkpoint(decontaminate(q, evalDocs))
     val clean = q.join(contaminated, Seq("doc_id"), "left_anti")
     // r20: ids-only keep-one — the min aggregate is the survivor set,
     // no probe-side re-eval/semi-join (keepOneExactIds)
@@ -2613,25 +2602,20 @@ object Curation {
         .when(col("__c").isNotNull, lit("2_contaminated"))
         .when(col("__s").isNull, lit("3_duplicate"))
         .otherwise(lit("4_kept")).as("stage"))
-    // Force the ≤4-row census NOW, then release the internal marker
-    // frames — callers can't reference qKeep / contaminated, so leaving
-    // them pinned until a harness-wide unpersist sweep accumulates dead
-    // blocks under repeated library use. The rows come back as a
-    // LocalRelation (cheaper than checkpointing: no BlockManager
-    // round-trip for a ≤4-row result), so the returned frame is
-    // self-contained.
-    localizeReport(funnelReport(stage), Seq(qKeep, contaminated))
+    // Force the ≤4-row census NOW: the rows come back as a LocalRelation
+    // (cheaper than checkpointing: no BlockManager round-trip for a
+    // ≤4-row result), so the returned frame is self-contained and the
+    // scope frees the internal marker frames — callers can't reference
+    // qKeep / contaminated.
+    localizeReport(funnelReport(stage))
   }
 
-  /** Force a ≤handful-row report, release the listed internal
-    * checkpoints, and return the rows as a LocalRelation-backed frame —
-    * the shared census tail of both funnels (leak-free without paying a
-    * BlockManager checkpoint for a few rows).
+  /** Force a ≤handful-row report and return the rows as a
+    * LocalRelation-backed frame — the shared census tail of both funnels
+    * (reads no checkpoint, without paying one for a few rows).
     */
-  private def localizeReport(report: DataFrame,
-                             releases: Seq[DataFrame]): DataFrame = {
+  private def localizeReport(report: DataFrame): DataFrame = {
     val rows = report.collect()
-    releases.foreach(org.apache.spark.sql.graftbridge.Bridge.release)
     report.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), report.schema)
   }
@@ -2693,7 +2677,7 @@ object Curation {
   def publishedFunnel(docs: DataFrame, minWords: Long = 20L,
                       maxWords: Long = 100000L,
                       hashSig: Option[Boolean] = None,
-                      scalable: Option[Boolean] = None): DataFrame = {
+                      scalable: Option[Boolean] = None): DataFrame = Checkpoint.scope {
     val hs = resolveHashSig(docs, hashSig)
     val sw = resolveScalable(docs, scalable)
     import graft.text.TextAnalysis
@@ -2701,21 +2685,19 @@ object Curation {
     // come from ONE fused scan pass (sequential attribution is just
     // flag precedence); the checkpoint is O(ids): id, two booleans,
     // and the whitespace token count the census tail sums.
-    val flags = docs.select(col("doc_id"),
+    val flags = Checkpoint(docs.select(col("doc_id"),
         TextAnalysis.gopherAllRulesCol(col("text"), minWords, maxWords)
           .as("__gk"),
         TextAnalysis.gopherRepKeepCol(col("text")).as("__rk"),
-        TextAnalysis.nTokensCol(col("text")).as("__nt"))
-      .localCheckpoint(true)
+        TextAnalysis.nTokensCol(col("text")).as("__nt")))
     val s2 = flags.filter(col("__gk") && col("__rk")).select(col("doc_id"))
     // scalableWindows swaps the tail cut to the quota reformulation —
     // the per-lang ntile is the funnel stage at a mega language
-    val cKeep = (if (sw)
+    val cKeep = Checkpoint((if (sw)
         TextAnalysis.ccnetKeepIdsScalable(docs.join(s2, Seq("doc_id")),
           col("text"), col("doc_id"), col("lang"))
       else TextAnalysis.ccnetKeepIds(docs.join(s2, Seq("doc_id")),
-        col("text"), col("doc_id"), col("lang")))
-      .localCheckpoint(true)
+        col("text"), col("doc_id"), col("lang"))))
     val survivors = keepOneExactIds(docs.join(cKeep, Seq("doc_id")),
       col("text"), col("doc_id"), hs)
     // flags already has exactly one row per doc, so the label chain
@@ -2729,11 +2711,10 @@ object Curation {
         .when(col("__c").isNull, lit("3_ccnet_tail"))
         .when(col("__s").isNull, lit("4_duplicate"))
         .otherwise(lit("5_kept")).as("stage"), col("__nt"))
-    // Materialize the ≤5-row census, then release the internal
-    // checkpoints (the curationFunnel rule): the returned frame is a
-    // self-contained LocalRelation, nothing stays pinned past this call.
-    localizeReport(funnelReport(stage, tokens = Some(col("__nt"))),
-      Seq(flags, cKeep))
+    // Materialize the ≤5-row census (the curationFunnel rule): the
+    // returned frame is a self-contained LocalRelation, nothing stays
+    // pinned past this call.
+    localizeReport(funnelReport(stage, tokens = Some(col("__nt"))))
   }
 
   /** The END-TO-END training-data manifest — the full modern pipeline
@@ -2775,24 +2756,21 @@ object Curation {
                        maxDupTokenRatio: Double = 0.6,
                        maxTopBigramFrac: Double = 0.06,
                        hashSig: Option[Boolean] = None,
-                       scalable: Option[Boolean] = None): DataFrame = {
+                       scalable: Option[Boolean] = None): DataFrame = Checkpoint.scope {
     val hs = resolveHashSig(docs, hashSig)
     val sw = resolveScalable(docs, scalable)
-    import org.apache.spark.sql.graftbridge.Bridge
     // O(ids): one long column, safe to pin in executor memory.
-    val keepIds = qualityFilter(docs, col("text"), col("doc_id"),
+    val keepIds = Checkpoint(qualityFilter(docs, col("text"), col("doc_id"),
         minTokens, maxTokens, maxStopwordRatio, maxDupTokenRatio,
         maxTopBigramFrac)
-      .filter(col("keep") === 1).select(col("doc_id"))
-      .localCheckpoint(true)
+      .filter(col("keep") === 1).select(col("doc_id")))
     val q = docs.join(keepIds, Seq("doc_id"))
     val contaminated = decontaminate(q, evalDocs)
     val clean = q.join(contaminated, Seq("doc_id"), "left_anti")
     // O(ids) again: survivors of the signature window, plus their split.
-    val dedupedIds = keepOneExactIds(clean, col("text"), col("doc_id"), hs,
-        carry = Seq("split" -> splitColumn(col("text"))))
-      .localCheckpoint(true)
-    Bridge.release(keepIds) // dedupedIds subsumes it
+    // dedupedIds subsumes keepIds, which the scope frees
+    val dedupedIds = Checkpoint(keepOneExactIds(clean, col("text"),
+      col("doc_id"), hs, carry = Seq("split" -> splitColumn(col("text")))))
     // Rehydrate text/source for packing with one more scan of `docs`
     // (cheap columnar read) instead of re-running the dedup window.
     val deduped = docs.join(dedupedIds, Seq("doc_id"))
@@ -2838,41 +2816,36 @@ object Curation {
                          maxDupTokenRatio: Double = 0.6,
                          maxTopBigramFrac: Double = 0.06,
                          hashSig: Option[Boolean] = None,
-                       scalable: Option[Boolean] = None): DataFrame = {
+                       scalable: Option[Boolean] = None): DataFrame = Checkpoint.scope {
     val hs = resolveHashSig(docs, hashSig)
     val sw = resolveScalable(docs, scalable)
-    import org.apache.spark.sql.graftbridge.Bridge
     // Rules AND classifier logit from ONE fused scan (r20 optimization):
     // the former keepRules ⋈ scored join was two corpus scans plus a
     // corpus-keyed shuffle to AND two per-doc predicates the scan can
     // evaluate side by side (doc_id.isNotNull preserved from the old
     // inner join's null-key drop).
     // O(ids + one long): the rule- and model-kept set with its quality
-    val keep2 = qualityFilter(docs.filter(col("doc_id").isNotNull),
+    val keep2 = Checkpoint(qualityFilter(docs.filter(col("doc_id").isNotNull),
         col("text"), col("doc_id"),
         minTokens, maxTokens, maxStopwordRatio, maxDupTokenRatio,
         maxTopBigramFrac,
         carry = Seq("quality" -> graft.text.TextAnalysis.logitMicroCol(
           col("text"), classifierWeights, classifierBias)))
       .filter(col("keep") === 1 && col("quality") >= minLogitMicro)
-      .select(col("doc_id"), col("quality")).localCheckpoint(true)
+      .select(col("doc_id"), col("quality")))
     val q = docs.join(keep2.select(col("doc_id")), Seq("doc_id"))
     val contaminated = decontaminate(q, evalDocs)
     val clean = q.join(contaminated, Seq("doc_id"), "left_anti")
-    val dedupedIds = keepOneExactIds(clean, col("text"), col("doc_id"), hs,
-        carry = Seq("split" -> splitColumn(col("text"))))
-      .localCheckpoint(true)
+    val dedupedIds = Checkpoint(keepOneExactIds(clean, col("text"),
+      col("doc_id"), hs, carry = Seq("split" -> splitColumn(col("text")))))
     val hydrated = docs.join(dedupedIds, Seq("doc_id"))
       .join(keep2, Seq("doc_id"))
       .withColumn("n_tokens", TextAnalysis.nTokensCol(col("text")))
     // O(ids + 4 small cols): the budget-mixed survivors
-    val mixedIds = tokenBudgetMix(hydrated, col("n_tokens"), col("source"),
-        Seq(col("quality").desc, col("doc_id")), tokensPerSource,
-        scalable = Some(sw))
-      .select(col("doc_id"), col("split"), col("quality"), col("cum_tokens"))
-      .localCheckpoint(true)
-    Bridge.release(keep2)
-    Bridge.release(dedupedIds)
+    val mixedIds = Checkpoint(tokenBudgetMix(hydrated, col("n_tokens"),
+        col("source"), Seq(col("quality").desc, col("doc_id")),
+        tokensPerSource, scalable = Some(sw))
+      .select(col("doc_id"), col("split"), col("quality"), col("cum_tokens")))
     val packed = packSequences(
       docs.join(mixedIds, Seq("doc_id")), col("text"), col("doc_id"),
       concat(col("source"), lit("|"), col("split")), budget,
@@ -2932,7 +2905,7 @@ object Curation {
     // narrow output columns as an O(ids) checkpoint (the
     // curationFunnel/ccnetKeepIdsScalable precedent — scoring
     // dominates this pipeline's cost, the fill itself is scan-shaped)
-    val qin = if (sq) deduped.localCheckpoint(true) else deduped
+    val qin = if (sq) Checkpoint(deduped) else deduped
     val quotad = quotaPerKey(qin, col("source"), quotaPerSource,
       Seq(col("n_tokens").desc, col("doc_id")), scalable = Some(sq))
     quotad.select(col("doc_id"), col("source"), col("lang_pred"),
@@ -3922,22 +3895,18 @@ object Curation {
     * [[compactCountedStore]].
     */
   def rebucketSnapshot(spark: org.apache.spark.sql.SparkSession,
-                       snapshotPath: String, newNBuckets: Int): Unit = {
-    import org.apache.spark.sql.graftbridge.Bridge
+                       snapshotPath: String, newNBuckets: Int): Unit = Checkpoint.scope {
     val root = new org.apache.hadoop.fs.Path(snapshotPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = readSnapshot(spark, snapshotPath)
-      .localCheckpoint(true) // the rewrite replaces its own source dir
-    try {
-      fs.delete(bucketMarkerPath(root), false)
-      cur.withColumn("bucket",
-          pmod(xxhash64(col("doc_id")), lit(newNBuckets.toLong)).cast("int"))
-        .repartition(col("bucket")).write.mode("overwrite")
-        .option("partitionOverwriteMode", "static") // FULL dir replace
-        .partitionBy("bucket").parquet(snapshotPath)
-      writeBucketMarker(fs, root, newNBuckets)
-    } finally Bridge.release(cur)
-    ()
+    // the rewrite replaces its own source dir
+    val cur = Checkpoint(readSnapshot(spark, snapshotPath))
+    fs.delete(bucketMarkerPath(root), false)
+    cur.withColumn("bucket",
+        pmod(xxhash64(col("doc_id")), lit(newNBuckets.toLong)).cast("int"))
+      .repartition(col("bucket")).write.mode("overwrite")
+      .option("partitionOverwriteMode", "static") // FULL dir replace
+      .partitionBy("bucket").parquet(snapshotPath)
+    writeBucketMarker(fs, root, newNBuckets)
   }
 
   /** CATCH-UP fold for the snapshot store's HIGH-CHURN regime (the
@@ -3953,25 +3922,19 @@ object Curation {
     * apply-equivalence (spec-pinned, closed under composition).
     */
   def snapshotCatchUp(changelogs: Seq[DataFrame], snapshotPath: String,
-                      nBuckets: Int = 64): Unit = {
+                      nBuckets: Int = 64): Unit = Checkpoint.scope {
     require(changelogs.nonEmpty, "snapshotCatchUp needs >= 1 changelog")
-    import org.apache.spark.sql.graftbridge.Bridge
     // each lineage checkpoint feeds only the folds up to the next one —
-    // chain-release keeps at most ONE alive, and the survivor is
-    // released once the apply below has materialized past it (the §6.1
+    // Checkpoint.next keeps at most ONE alive, and the scope frees the
+    // survivor once the apply below has materialized past it (the §6.1
     // storage-litter lesson: persistent blocks must not outlive the op)
-    var lastCk: Option[DataFrame] = None
+    var last = changelogs.head
     val compacted = changelogs.zipWithIndex.tail
       .foldLeft(changelogs.head) { case (acc, (l, i)) =>
         val c = compactChangelog(acc, l)
-        if (i % 8 == 0) {
-          val ck = c.localCheckpoint(true)
-          lastCk.foreach(Bridge.release(_)); lastCk = Some(ck)
-          ck
-        } else c
+        if (i % 8 == 0) { last = Checkpoint.next(last, c); last } else c
       }
-    try snapshotApplyBatch(compacted, snapshotPath, nBuckets)
-    finally lastCk.foreach(Bridge.release(_))
+    snapshotApplyBatch(compacted, snapshotPath, nBuckets)
   }
 
   /** GROWTH trigger for the maintained store's bucket count: the store
@@ -4012,11 +3975,11 @@ object Curation {
                          nBuckets: Int = 64,
                          id: Column = col("doc_id"),
                          text: Column = col("text"),
-                         status: Column = col("status")): Unit = {
-    import org.apache.spark.sql.graftbridge.Bridge
+                         status: Column = col("status")): Unit = Checkpoint.scope {
     val spark = changelog.sparkSession
     ensureDir(spark, snapshotPath)
-    val cl = changelog
+    // duplicate-id raise fires HERE, before the fence
+    val cl = Checkpoint(changelog
       .select(id.as("doc_id"), status.as("__st"), text.as("text"))
       .filter(col("__st").isin("added", "removed", "changed"))
       // fail-fast on a lying log: a duplicated changelog id would fan
@@ -4034,44 +3997,37 @@ object Curation {
         .otherwise(col("doc_id")))
       .drop("__n")
       .withColumn("bucket",
-        pmod(xxhash64(col("doc_id")), lit(nBuckets.toLong)).cast("int"))
-      .localCheckpoint(true) // duplicate-id raise fires HERE, before the fence
-    try {
-      // Fence AFTER the changelog materializes cleanly: a rejected first
-      // batch (lying log) on a virgin store must not pin the store's
-      // bucket count — a later legitimate first ingest with a different
-      // nBuckets would otherwise be refused on an empty store.
-      val fenceRoot = new org.apache.hadoop.fs.Path(snapshotPath)
-      fenceBucketCount(
-        fenceRoot.getFileSystem(spark.sparkContext.hadoopConfiguration),
-        fenceRoot, nBuckets)
-      val touched = cl.select("bucket").distinct().collect().map(_.getInt(0))
-      if (touched.nonEmpty) {
-        val slice = spark.read.schema(snapshotSchema).parquet(snapshotPath)
-          .filter(col("bucket")
-            .isin(touched.toIndexedSeq.map(Integer.valueOf): _*))
-          .localCheckpoint(true) // break lineage: the rewrite overwrites its own source
-        try {
-          val next = applyCorpusDiff(slice, cl, status = col("__st"))
-            .withColumn("bucket",
-              pmod(xxhash64(col("doc_id")), lit(nBuckets.toLong)).cast("int"))
-            .localCheckpoint(true) // ONE eval feeds the emptied-set probe and the write
-          try {
-            val keptBuckets = next.select("bucket").distinct()
-              .collect().map(_.getInt(0)).toSet
-            val root = new org.apache.hadoop.fs.Path(snapshotPath)
-            val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            touched.filterNot(keptBuckets).foreach { b =>
-              fs.delete(new org.apache.hadoop.fs.Path(root, s"bucket=$b"), true)
-            }
-            next.repartition(col("bucket")).write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("bucket").parquet(snapshotPath)
-          } finally Bridge.release(next)
-        } finally Bridge.release(slice)
+        pmod(xxhash64(col("doc_id")), lit(nBuckets.toLong)).cast("int")))
+    // Fence AFTER the changelog materializes cleanly: a rejected first
+    // batch (lying log) on a virgin store must not pin the store's
+    // bucket count — a later legitimate first ingest with a different
+    // nBuckets would otherwise be refused on an empty store.
+    val fenceRoot = new org.apache.hadoop.fs.Path(snapshotPath)
+    fenceBucketCount(
+      fenceRoot.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      fenceRoot, nBuckets)
+    val touched = cl.select("bucket").distinct().collect().map(_.getInt(0))
+    if (touched.nonEmpty) {
+      // break lineage: the rewrite overwrites its own source
+      val slice = Checkpoint(spark.read.schema(snapshotSchema)
+        .parquet(snapshotPath)
+        .filter(col("bucket")
+          .isin(touched.toIndexedSeq.map(Integer.valueOf): _*)))
+      // ONE eval feeds the emptied-set probe and the write
+      val next = Checkpoint(applyCorpusDiff(slice, cl, status = col("__st"))
+        .withColumn("bucket",
+          pmod(xxhash64(col("doc_id")), lit(nBuckets.toLong)).cast("int")))
+      val keptBuckets = next.select("bucket").distinct()
+        .collect().map(_.getInt(0)).toSet
+      val root = new org.apache.hadoop.fs.Path(snapshotPath)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      touched.filterNot(keptBuckets).foreach { b =>
+        fs.delete(new org.apache.hadoop.fs.Path(root, s"bucket=$b"), true)
       }
-    } finally Bridge.release(cl)
-    ()
+      next.repartition(col("bucket")).write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket").parquet(snapshotPath)
+    }
   }
 
   /** Read the maintained snapshot store as a `(doc_id, text)` frame
@@ -4435,28 +4391,25 @@ object Curation {
     */
   def versionedSnapshotApplyBatch(fullChangelog: DataFrame,
                                   basePath: String, version: Long,
-                                  nBuckets: Int = 64): Unit = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val f = fullChangelog
+                                  nBuckets: Int = 64): Unit = Checkpoint.scope {
+    // feeds the archive AND the fold
+    val f = Checkpoint(fullChangelog
       .select(col("doc_id"), col("status"), col("old_text"),
-        col("new_text"))
-      .localCheckpoint(true) // feeds the archive AND the fold
-    try {
-      requireUniqueLogIds(f, "versionedSnapshotApplyBatch")
-      // no coalesce: a 100 TB refresh's churn log is itself large — the
-      // archive keeps the frame's parallelism (tiny logs cost a few
-      // small files per version; compaction is pruneSnapshotVersions'
-      // floor, not a file merge)
-      f.withColumn("version", lit(version))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("version").parquet(s"$basePath/log")
-      snapshotApplyBatch(
-        f.select(col("doc_id"), col("status"),
-          col("new_text").as("text")),
-        s"$basePath/snap", nBuckets)
-      commitSnapVersion(f.sparkSession, basePath, version)
-    } finally Bridge.release(f)
+        col("new_text")))
+    requireUniqueLogIds(f, "versionedSnapshotApplyBatch")
+    // no coalesce: a 100 TB refresh's churn log is itself large — the
+    // archive keeps the frame's parallelism (tiny logs cost a few
+    // small files per version; compaction is pruneSnapshotVersions'
+    // floor, not a file merge)
+    f.withColumn("version", lit(version))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("version").parquet(s"$basePath/log")
+    snapshotApplyBatch(
+      f.select(col("doc_id"), col("status"),
+        col("new_text").as("text")),
+      s"$basePath/snap", nBuckets)
+    commitSnapVersion(f.sparkSession, basePath, version)
   }
 
   /** Fail-fast validation of a CDC log BEFORE it is archived: a
@@ -4513,9 +4466,9 @@ object Curation {
     * Stores written before the marker existed fall back to inverting
     * every archived log (the pre-marker semantics).
     *
-    * Storage hygiene: the every-8th-fold lineage checkpoints are
-    * CHAIN-RELEASED (each new checkpoint releases the previous one — a
-    * checkpoint only feeds the folds up to the next), so a deep
+    * Storage hygiene: each every-8th-fold lineage checkpoint frees the
+    * previous one ([[Checkpoint.next]] — a checkpoint only feeds the
+    * folds up to the next), so a deep
     * walk-back leaves at most ONE persistent RDD behind: the final
     * accumulator the returned lazy plan still reads.
     */
@@ -4561,37 +4514,30 @@ object Curation {
     * `versionsAbove` (newest first — consecutive, so the compaction
     * squashes them into ONE O(churn-above-version) log) and apply it to
     * `current` in one corpus pass. Lineage checkpoints on deep
-    * walk-backs are CHAIN-RELEASED (each new checkpoint releases the
-    * previous — at most one persistent RDD outlives the call: the final
-    * accumulator the returned lazy plan still reads).
+    * walk-backs replace each other ([[Checkpoint.next]]) — at most one
+    * persistent RDD outlives the call: the final accumulator the
+    * returned lazy plan still reads.
     */
   private def walkBackAsOf(spark: org.apache.spark.sql.SparkSession,
                            basePath: String, current: DataFrame,
-                           versionsAbove: Seq[Long]): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
+                           versionsAbove: Seq[Long]): DataFrame =
     if (versionsAbove.isEmpty) current
-    else {
+    else Checkpoint.scope {
       def invertedLog(v: Long) = invertChangelog(
         spark.read.option("basePath", s"$basePath/log")
           .schema(versionedLogSchema)
           .parquet(s"$basePath/log/version=$v"))
       val inverted = versionsAbove.map(invertedLog)
-      var prevCk: Option[DataFrame] = None
+      var last = inverted.head
       val walkBack = inverted.tail.zipWithIndex
         .foldLeft(inverted.head) { case (acc, (l, i)) =>
           val c = compactChangelog(acc, l)
           // bound plan depth on deep walk-backs (the catch-up idiom);
           // the PREVIOUS checkpoint fed only the folds between the two
-          // — release its blocks as soon as the new one materializes
-          if (i % 8 == 7) {
-            val ck = c.localCheckpoint(true)
-            prevCk.foreach(Bridge.release(_)); prevCk = Some(ck)
-            ck
-          } else c
+          if (i % 8 == 7) { last = Checkpoint.next(last, c); last } else c
         }
       applyCorpusDiff(current, walkBack)
     }
-  }
 
   /** Move the time-travel floor up: drop archived logs at or below
     * `floor` (their history is no longer reachable) and persist the
@@ -4650,21 +4596,18 @@ object Curation {
                               rules: Seq[(String, Column)],
                               censusRules: Seq[(String, Column)] = Nil,
                               nBuckets: Int = 64,
-                              guardUniqueIds: Boolean = false): Boolean = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val f = fullChangelog
+                              guardUniqueIds: Boolean = false)
+      : Boolean = Checkpoint.scope {
+    val f = Checkpoint(fullChangelog
       .select(col("doc_id"), col("status"), col("old_text"),
-        col("new_text"))
-      .localCheckpoint(true)
-    try {
-      val thin = f.select(col("doc_id"), col("status"),
-        col("new_text").as("text"))
-      val ok = guardedSnapshotApplyBatch(thin, batchId, snapshotPath,
-        reportPath, rules, nBuckets, censusRules = censusRules,
-        guardUniqueIds = guardUniqueIds)
-      if (ok) sigStoreApplyBatch(f, sigStorePath, batchId, nBuckets)
-      ok
-    } finally Bridge.release(f)
+        col("new_text")))
+    val thin = f.select(col("doc_id"), col("status"),
+      col("new_text").as("text"))
+    val ok = guardedSnapshotApplyBatch(thin, batchId, snapshotPath,
+      reportPath, rules, nBuckets, censusRules = censusRules,
+      guardUniqueIds = guardUniqueIds)
+    if (ok) sigStoreApplyBatch(f, sigStorePath, batchId, nBuckets)
+    ok
   }
 
   /** [[managedCorpusApplyBatch]] with TIME TRAVEL: a passing batch
@@ -4692,34 +4635,31 @@ object Curation {
                                  rules: Seq[(String, Column)],
                                  censusRules: Seq[(String, Column)] = Nil,
                                  nBuckets: Int = 64,
-                                 guardUniqueIds: Boolean = false): Boolean = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val f = fullChangelog
+                                 guardUniqueIds: Boolean = false)
+      : Boolean = Checkpoint.scope {
+    val f = Checkpoint(fullChangelog
       .select(col("doc_id"), col("status"), col("old_text"),
-        col("new_text"))
-      .localCheckpoint(true)
-    try {
-      val thin = f.select(col("doc_id"), col("status"),
-        col("new_text").as("text"))
-      val ok = validateSnapshotBatch(thin, batchId, s"$basePath/snap",
-        reportPath, rules, censusRules = censusRules,
-        guardUniqueIds = guardUniqueIds)
-      if (ok) {
-        // ungated lying logs (guardUniqueIds = false) must still fail
-        // BEFORE the archive — never durably archive a log the fold
-        // will refuse on every replay
-        if (!guardUniqueIds)
-          requireUniqueLogIds(f, "managedVersionedApplyBatch")
-        f.withColumn("version", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("version").parquet(s"$basePath/log")
-        snapshotApplyBatch(thin, s"$basePath/snap", nBuckets)
-        sigStoreApplyBatch(f, sigStorePath, batchId, nBuckets)
-        commitSnapVersion(f.sparkSession, basePath, batchId)
-      }
-      ok
-    } finally Bridge.release(f)
+        col("new_text")))
+    val thin = f.select(col("doc_id"), col("status"),
+      col("new_text").as("text"))
+    val ok = validateSnapshotBatch(thin, batchId, s"$basePath/snap",
+      reportPath, rules, censusRules = censusRules,
+      guardUniqueIds = guardUniqueIds)
+    if (ok) {
+      // ungated lying logs (guardUniqueIds = false) must still fail
+      // BEFORE the archive — never durably archive a log the fold
+      // will refuse on every replay
+      if (!guardUniqueIds)
+        requireUniqueLogIds(f, "managedVersionedApplyBatch")
+      f.withColumn("version", lit(batchId))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("version").parquet(s"$basePath/log")
+      snapshotApplyBatch(thin, s"$basePath/snap", nBuckets)
+      sigStoreApplyBatch(f, sigStorePath, batchId, nBuckets)
+      commitSnapVersion(f.sparkSession, basePath, batchId)
+    }
+    ok
   }
 
   /** Streaming managed-VERSIONED maintenance: every micro-batch of CDC
@@ -4932,7 +4872,6 @@ object Curation {
                                  id: Column = col("doc_id"),
                                  text: Column = col("text"),
                                  status: Column = col("status")): Unit = {
-    import org.apache.spark.sql.graftbridge.Bridge
     val spark = changelog.sparkSession
     ensureDir(spark, storePath)
     val root = new org.apache.hadoop.fs.Path(storePath)
@@ -4962,45 +4901,41 @@ object Curation {
           s"nBuckets=$storeN but this call uses nBuckets=$nBuckets — " +
           "pass the store's bucket count")
     }
-    val cl = changelog
-      .select(id.as("doc_id"), status.as("__st"), text.as("text"))
-      .filter(col("__st").isin("added", "removed", "changed"))
-      // same lying-log fence as the in-place store: a duplicated id
-      // would fan the apply join out into duplicate snapshot rows
-      .withColumn("__n", count(lit(1)).over(
-        Window.partitionBy(col("doc_id"))))
-      .withColumn("doc_id", when(col("__n") > 1, raise_error(concat(
-          lit("snapshotApplyBatchIsolated: changelog carries duplicate " +
-            "rows for doc_id "), col("doc_id").cast("string"),
-          lit(" — one row per id is the applyCorpusDiff contract; " +
-            "compact the log (compactChangelog) or dedup upstream"))))
-        .otherwise(col("doc_id")))
-      .drop("__n")
-      .withColumn("bucket",
-        pmod(xxhash64(col("doc_id")), lit(nBuckets.toLong)).cast("int"))
-      .localCheckpoint(true)
-    try {
+    Checkpoint.scope {
+      val cl = Checkpoint(changelog
+        .select(id.as("doc_id"), status.as("__st"), text.as("text"))
+        .filter(col("__st").isin("added", "removed", "changed"))
+        // same lying-log fence as the in-place store: a duplicated id
+        // would fan the apply join out into duplicate snapshot rows
+        .withColumn("__n", count(lit(1)).over(
+          Window.partitionBy(col("doc_id"))))
+        .withColumn("doc_id", when(col("__n") > 1, raise_error(concat(
+            lit("snapshotApplyBatchIsolated: changelog carries duplicate " +
+              "rows for doc_id "), col("doc_id").cast("string"),
+            lit(" — one row per id is the applyCorpusDiff contract; " +
+              "compact the log (compactChangelog) or dedup upstream"))))
+          .otherwise(col("doc_id")))
+        .drop("__n")
+        .withColumn("bucket",
+          pmod(xxhash64(col("doc_id")), lit(nBuckets.toLong)).cast("int")))
       val touched = cl.select("bucket").distinct().collect()
         .map(_.getInt(0)).toSet
       val entries = manifest.fold(Map.empty[Int, Long])(_._3)
       val slice = readCommittedBuckets(spark, storePath,
         entries.filter { case (b, _) => touched(b) })
-      val next = applyCorpusDiff(slice, cl, status = col("__st"))
+      // ONE eval feeds the kept-set probe and the write
+      val next = Checkpoint(applyCorpusDiff(slice, cl, status = col("__st"))
         .withColumn("bucket",
-          pmod(xxhash64(col("doc_id")), lit(nBuckets.toLong)).cast("int"))
-        .localCheckpoint(true) // ONE eval feeds the kept-set probe and the write
-      try {
-        val kept = next.select("bucket").distinct().collect()
-          .map(_.getInt(0)).toSet
-        if (kept.nonEmpty)
-          next.repartition(col("bucket")).write.mode("overwrite")
-            .partitionBy("bucket").parquet(s"$storePath/gen=$batchId")
-        val updated = (entries -- touched) ++
-          kept.map(b => b -> batchId).toMap
-        writeManifest(fs, root, batchId, nBuckets, updated)
-      } finally Bridge.release(next)
-    } finally Bridge.release(cl)
-    ()
+          pmod(xxhash64(col("doc_id")), lit(nBuckets.toLong)).cast("int")))
+      val kept = next.select("bucket").distinct().collect()
+        .map(_.getInt(0)).toSet
+      if (kept.nonEmpty)
+        next.repartition(col("bucket")).write.mode("overwrite")
+          .partitionBy("bucket").parquet(s"$storePath/gen=$batchId")
+      val updated = (entries -- touched) ++
+        kept.map(b => b -> batchId).toMap
+      writeManifest(fs, root, batchId, nBuckets, updated)
+    }
   }
 
   /** The union read behind a manifest: group the wanted buckets by the
@@ -5114,8 +5049,7 @@ object Curation {
     */
   def rebucketSnapshotIsolated(spark: org.apache.spark.sql.SparkSession,
                                storePath: String, batchId: Long,
-                               newNBuckets: Int): Unit = {
-    import org.apache.spark.sql.graftbridge.Bridge
+                               newNBuckets: Int): Unit = Checkpoint.scope {
     val root = new org.apache.hadoop.fs.Path(storePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val manifest = readManifest(fs, root).getOrElse(throw
@@ -5127,20 +5061,18 @@ object Curation {
       s"isolated snapshot store $storePath newest manifest is " +
         s"${manifest._1} but this rebucket carries batchId=$batchId — " +
         "batchIds must be increasing")
-    val cur = readCommittedBuckets(spark, storePath, manifest._3)
+    // ONE eval feeds the kept-set probe and the write
+    val cur = Checkpoint(readCommittedBuckets(spark, storePath, manifest._3)
       .select(col("doc_id"), col("text"))
       .withColumn("bucket",
-        pmod(xxhash64(col("doc_id")), lit(newNBuckets.toLong)).cast("int"))
-      .localCheckpoint(true) // ONE eval feeds the kept-set probe and the write
-    try {
-      val kept = cur.select("bucket").distinct().collect()
-        .map(_.getInt(0)).toSet
-      if (kept.nonEmpty)
-        cur.repartition(col("bucket")).write.mode("overwrite")
-          .partitionBy("bucket").parquet(s"$storePath/gen=$batchId")
-      writeManifest(fs, root, batchId, newNBuckets,
-        kept.map(b => b -> batchId).toMap, kind = "rebucket")
-    } finally Bridge.release(cur)
+        pmod(xxhash64(col("doc_id")), lit(newNBuckets.toLong)).cast("int")))
+    val kept = cur.select("bucket").distinct().collect()
+      .map(_.getInt(0)).toSet
+    if (kept.nonEmpty)
+      cur.repartition(col("bucket")).write.mode("overwrite")
+        .partitionBy("bucket").parquet(s"$storePath/gen=$batchId")
+    writeManifest(fs, root, batchId, newNBuckets,
+      kept.map(b => b -> batchId).toMap, kind = "rebucket")
   }
 
   /** Streaming isolated-snapshot maintenance: [[snapshotIngest]]'s
@@ -5269,26 +5201,23 @@ object Curation {
                                       rules: Seq[(String, Column)],
                                       censusRules: Seq[(String, Column)] = Nil,
                                       nBuckets: Int = 64,
-                                      guardUniqueIds: Boolean = false): Boolean = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val f = fullChangelog
+                                      guardUniqueIds: Boolean = false)
+      : Boolean = Checkpoint.scope {
+    val f = Checkpoint(fullChangelog
       .select(col("doc_id"), col("status"), col("old_text"),
-        col("new_text"))
-      .localCheckpoint(true)
-    try {
-      val thin = f.select(col("doc_id"), col("status"),
-        col("new_text").as("text"))
-      val ok = validateBatchImpl(thin, batchId, reportPath, rules,
-        col("doc_id"), col("text"), col("status"), censusRules,
-        guardUniqueIds,
-        nOldReader = () =>
-          readSnapshotCommitted(f.sparkSession, storePath).count())
-      if (ok) {
-        snapshotApplyBatchIsolated(thin, storePath, batchId, nBuckets)
-        sigStoreApplyBatchCommitted(f, sigStorePath, batchId, nBuckets)
-      }
-      ok
-    } finally Bridge.release(f)
+        col("new_text")))
+    val thin = f.select(col("doc_id"), col("status"),
+      col("new_text").as("text"))
+    val ok = validateBatchImpl(thin, batchId, reportPath, rules,
+      col("doc_id"), col("text"), col("status"), censusRules,
+      guardUniqueIds,
+      nOldReader = () =>
+        readSnapshotCommitted(f.sparkSession, storePath).count())
+    if (ok) {
+      snapshotApplyBatchIsolated(thin, storePath, batchId, nBuckets)
+      sigStoreApplyBatchCommitted(f, sigStorePath, batchId, nBuckets)
+    }
+    ok
   }
 
   /** Streaming managed-ISOLATED maintenance: every micro-batch of CDC
@@ -5425,7 +5354,7 @@ object Curation {
     * [[readSnapshotAsOf]] convention: the log describes
     * `fromVersion → min(toVersion, foldedThrough)`. `fromVersion`
     * below the prune floor is refused — the logs that reach it are
-    * gone. Lineage checkpoints chain-release on deep folds.
+    * gone. Lineage checkpoints replace each other on deep folds.
     */
   def changesBetweenVersions(spark: org.apache.spark.sql.SparkSession,
                              basePath: String, fromVersion: Long,
@@ -5468,7 +5397,6 @@ object Curation {
                                  basePath: String, fromVersion: Long,
                                  toVersion: Long,
                                  capped: Long => Boolean): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
     require(fromVersion <= toVersion,
       s"changesBetweenVersions: fromVersion=$fromVersion must be <= " +
         s"toVersion=$toVersion (invert the endpoints, then " +
@@ -5488,19 +5416,17 @@ object Curation {
       .parquet(s"$basePath/log/version=$v")
       .select(col("doc_id"), col("status"), col("old_text"),
         col("new_text"))
-    var prevCk: Option[DataFrame] = None
-    val folded = versions.tail.map(logAt).zipWithIndex
-      .foldLeft(logAt(versions.head)) { case (acc, (l, i)) =>
-        val c = compactFullChangelog(acc, l)
-        if (i % 8 == 7) {
-          val ck = c.localCheckpoint(true)
-          prevCk.foreach(Bridge.release(_)); prevCk = Some(ck)
-          ck
-        } else c
-      }
-    // single-log reads still drop the archived log's unchanged rows —
-    // the net feed carries churn only, whatever the depth
-    folded.filter(col("status") =!= "unchanged")
+    Checkpoint.scope {
+      var last = logAt(versions.head)
+      val folded = versions.tail.map(logAt).zipWithIndex
+        .foldLeft(last) { case (acc, (l, i)) =>
+          val c = compactFullChangelog(acc, l)
+          if (i % 8 == 7) { last = Checkpoint.next(last, c); last } else c
+        }
+      // single-log reads still drop the archived log's unchanged rows —
+      // the net feed carries churn only, whatever the depth
+      folded.filter(col("status") =!= "unchanged")
+    }
   }
 
   /** [[managedVersionedApplyBatch]] over the reader-ISOLATED store —
@@ -5539,36 +5465,33 @@ object Curation {
                                          rules: Seq[(String, Column)],
                                          censusRules: Seq[(String, Column)] = Nil,
                                          nBuckets: Int = 64,
-                                         guardUniqueIds: Boolean = false): Boolean = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val f = fullChangelog
+                                         guardUniqueIds: Boolean = false)
+      : Boolean = Checkpoint.scope {
+    val f = Checkpoint(fullChangelog
       .select(col("doc_id"), col("status"), col("old_text"),
-        col("new_text"))
-      .localCheckpoint(true)
-    try {
-      val thin = f.select(col("doc_id"), col("status"),
-        col("new_text").as("text"))
-      val ok = validateBatchImpl(thin, batchId, reportPath, rules,
-        col("doc_id"), col("text"), col("status"), censusRules,
-        guardUniqueIds,
-        nOldReader = () =>
-          readSnapshotCommitted(f.sparkSession, s"$basePath/snap").count())
-      if (ok) {
-        // ungated lying logs must still fail BEFORE the archive — never
-        // durably archive a log the fold will refuse on every replay
-        if (!guardUniqueIds)
-          requireUniqueLogIds(f, "managedVersionedApplyBatchIsolated")
-        f.withColumn("version", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("version").parquet(s"$basePath/log")
-        val cur = committedManifestInfo(f.sparkSession, s"$basePath/snap")
-          .map(_._2).getOrElse(nBuckets)
-        snapshotApplyBatchIsolated(thin, s"$basePath/snap", batchId, cur)
-        sigStoreApplyBatchCommitted(f, sigStorePath, batchId, nBuckets)
-      }
-      ok
-    } finally Bridge.release(f)
+        col("new_text")))
+    val thin = f.select(col("doc_id"), col("status"),
+      col("new_text").as("text"))
+    val ok = validateBatchImpl(thin, batchId, reportPath, rules,
+      col("doc_id"), col("text"), col("status"), censusRules,
+      guardUniqueIds,
+      nOldReader = () =>
+        readSnapshotCommitted(f.sparkSession, s"$basePath/snap").count())
+    if (ok) {
+      // ungated lying logs must still fail BEFORE the archive — never
+      // durably archive a log the fold will refuse on every replay
+      if (!guardUniqueIds)
+        requireUniqueLogIds(f, "managedVersionedApplyBatchIsolated")
+      f.withColumn("version", lit(batchId))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("version").parquet(s"$basePath/log")
+      val cur = committedManifestInfo(f.sparkSession, s"$basePath/snap")
+        .map(_._2).getOrElse(nBuckets)
+      snapshotApplyBatchIsolated(thin, s"$basePath/snap", batchId, cur)
+      sigStoreApplyBatchCommitted(f, sigStorePath, batchId, nBuckets)
+    }
+    ok
   }
 
   /** Streaming managed-VERSIONED-ISOLATED maintenance: every

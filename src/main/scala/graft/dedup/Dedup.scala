@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.Checkpoint
 import graft.fns.Fns
 import graft.ops.DriverSolve
 import org.apache.spark.sql.{Column, DataFrame, Row}
@@ -50,17 +51,15 @@ object Dedup {
     * row per (map partition, signature) instead of every corpus row — on
     * a dup-heavy 100 TB crawl that is the difference between shuffling
     * the corpus and shuffling its distinct-signature skeleton. Returned
-    * frame is a bare checkpoint (it is always multi-consumer); release
-    * with `Bridge.release` when done.
+    * frame is a checkpoint (it is always multi-consumer).
     */
   private[graft] def repCollapse(df: DataFrame, text: Column, id: Column,
                                  ngram: Int): DataFrame =
-    df.groupBy(exactSignature(text, ngram).as("__sig"))
+    Checkpoint(df.groupBy(exactSignature(text, ngram).as("__sig"))
       .agg(min_by(struct(df.columns.toIndexedSeq.map(col): _*), id).as("__rep"),
         count(lit(1)).as("__dups"))
       .select(col("__rep.*"), col("__dups"))
-      .withColumn("__all", lit(0))
-      .localCheckpoint(true)
+      .withColumn("__all", lit(0)))
 
   /** Exact dedup on a canonicalized signature: the sorted distinct token
     * set. One hash-shuffle on the signature; emits one row per duplicate
@@ -121,23 +120,20 @@ object Dedup {
     * components via the left-join coalesce.
     */
   def nearDupClusterHistogram(df: DataFrame, text: Column, id: Column,
-                              threshold: Double, ngram: Int = 1): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    // Shared [[repCollapse]]: the exact-dup multiplicity rides the SAME
-    // shuffle; reps feeds edge generation AND the histogram join.
-    val reps = repCollapse(df, text, id, ngram)
-    val edges = jaccardPairsPrefix(reps, text, id, "__all", threshold, ngram)
-    val labels = components(edges)
-    val hist = reps
-      .join(labels, id === labels("node"), "left")
-      .select(coalesce(col("comp"), id).as("__comp"), col("__dups"))
-      .groupBy(col("__comp")).agg(sum(col("__dups")).as("cluster_size"))
-      .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
-      .localCheckpoint(true) // histogram-sized; lets the larger blocks go
-    Bridge.release(labels)
-    Bridge.release(reps)
-    hist
-  }
+                              threshold: Double, ngram: Int = 1): DataFrame =
+    Checkpoint.scope {
+      // Shared [[repCollapse]]: the exact-dup multiplicity rides the SAME
+      // shuffle; reps feeds edge generation AND the histogram join.
+      val reps = repCollapse(df, text, id, ngram)
+      val edges = jaccardPairsPrefix(reps, text, id, "__all", threshold, ngram)
+      val labels = components(edges)
+      // histogram-sized; lets the larger blocks go
+      Checkpoint(reps
+        .join(labels, id === labels("node"), "left")
+        .select(coalesce(col("comp"), id).as("__comp"), col("__dups"))
+        .groupBy(col("__comp")).agg(sum(col("__dups")).as("cluster_size"))
+        .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters")))
+    }
 
   /** The SCALE-PATH dedup audit report: cluster-size histogram over the
     * MinHash-LSH candidate graph instead of the exact Jaccard graph —
@@ -168,23 +164,19 @@ object Dedup {
     * and the incremental store reader
     * ([[graft.curation.Curation.lshHistogramFromStore]]).
     */
-  def clusterHistogramFromEdges(docIds: DataFrame, edges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    // materialize the edge set once: components() consumes it on both
-    // sides of its symmetrizing union, and an unmaterialized plan would
-    // re-run the edge derivation per branch
-    val e = edges.localCheckpoint(true)
-    val labels = components(e)
-    Bridge.release(e)
-    val hist = docIds
-      .join(labels, col("doc_id") === labels("node"), "left")
-      .select(coalesce(col("comp"), col("doc_id")).as("__comp"))
-      .groupBy(col("__comp")).agg(count(lit(1)).as("cluster_size"))
-      .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
-      .localCheckpoint(true) // histogram-sized; lets the label block go
-    Bridge.release(labels)
-    hist
-  }
+  def clusterHistogramFromEdges(docIds: DataFrame, edges: DataFrame): DataFrame =
+    Checkpoint.scope {
+      // materialize the edge set once: components() consumes it on both
+      // sides of its symmetrizing union, and an unmaterialized plan would
+      // re-run the edge derivation per branch
+      val labels = components(Checkpoint(edges))
+      // histogram-sized; lets the label block go
+      Checkpoint(docIds
+        .join(labels, col("doc_id") === labels("node"), "left")
+        .select(coalesce(col("comp"), col("doc_id")).as("__comp"))
+        .groupBy(col("__comp")).agg(count(lit(1)).as("cluster_size"))
+        .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters")))
+    }
 
   /** The dedup-audit AGREEMENT report: how faithfully would the LSH
     * spanning-edge clustering ([[lshClusterHistogram]]'s structure)
@@ -210,14 +202,11 @@ object Dedup {
     */
   def lshDedupAgreement(df: DataFrame, text: Column, id: Column,
                         threshold: Double, numHashes: Int, bands: Int,
-                        ngram: Int = 1): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val labeled = dualClusterLabels(df, text, id, threshold, numHashes, bands,
-      ngram)
-    val rep = agreementFromLabels(labeled)
-    Bridge.release(labeled)
-    rep
-  }
+                        ngram: Int = 1): DataFrame =
+    Checkpoint.scope {
+      agreementFromLabels(dualClusterLabels(df, text, id, threshold, numHashes,
+        bands, ngram))
+    }
 
   /** BOTH clusterings as one per-doc label frame `(doc_id, ec, lc)` —
     * `ec` = the doc's exact ≥-threshold Jaccard component (via its
@@ -230,9 +219,8 @@ object Dedup {
     * aggregations over this frame — at 100 TB you persist it once per
     * corpus snapshot and every audit panel reads it, instead of
     * re-running two clusterings per report (the d7/d12/d12b/d14 gates
-    * share one persisted store this way). Returned frame is a bare
-    * checkpoint (corpus-row sized, 3 longs wide); release with
-    * `Bridge.release` once persisted.
+    * share one persisted store this way). Returned frame is a checkpoint
+    * (corpus-row sized, 3 longs wide).
     *
     * Input contract: `id` unique per row (every dedup op here assumes
     * it) — a duplicated id would multiply through the ec ⋈ lc join and
@@ -240,16 +228,13 @@ object Dedup {
     */
   def dualClusterLabels(df: DataFrame, text: Column, id: Column,
                         threshold: Double, numHashes: Int, bands: Int,
-                        ngram: Int = 1): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val ec = exactDocLabels(df, text, id, threshold, ngram)
-    val lc = docLabelsFromEdges(df.select(id.as("doc_id")),
-      minHashLshEdgesPortable(df, text, id, numHashes, bands, ngram), "lc")
-    val labeled = ec.join(lc, Seq("doc_id")).localCheckpoint(true)
-    Bridge.release(ec)
-    Bridge.release(lc)
-    labeled
-  }
+                        ngram: Int = 1): DataFrame =
+    Checkpoint.scope {
+      val ec = exactDocLabels(df, text, id, threshold, ngram)
+      val lc = docLabelsFromEdges(df.select(id.as("doc_id")),
+        minHashLshEdgesPortable(df, text, id, numHashes, bands, ngram), "lc")
+      Checkpoint(ec.join(lc, Seq("doc_id")))
+    }
 
   /** ALL THREE clusterings as one per-doc label frame
     * `(doc_id, ec, lc, sc)` — [[dualClusterLabels]] plus the
@@ -258,26 +243,20 @@ object Dedup {
     * corpus snapshot; keep-one, all three cluster-size histograms and
     * both agreement reports are then single aggregations over it (the
     * d7/d12/d12b/d14/d15/d16 gates share one persisted store this way).
-    * Returned frame is a bare checkpoint (corpus-row sized, 4 longs
-    * wide); release with `Bridge.release` once persisted. Same
-    * unique-`id` input contract as [[dualClusterLabels]].
+    * Returned frame is a checkpoint (corpus-row sized, 4 longs wide).
+    * Same unique-`id` input contract as [[dualClusterLabels]].
     */
   def tripleClusterLabels(df: DataFrame, text: Column, id: Column,
                           threshold: Double, numHashes: Int, bands: Int,
                           nBits: Int, maxDist: Int,
-                          ngram: Int = 1): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val ec = exactDocLabels(df, text, id, threshold, ngram)
-    val lc = docLabelsFromEdges(df.select(id.as("doc_id")),
-      minHashLshEdgesPortable(df, text, id, numHashes, bands, ngram), "lc")
-    val sc = simHashDocLabels(df, text, id, nBits, maxDist, "sc")
-    val labeled = ec.join(lc, Seq("doc_id")).join(sc, Seq("doc_id"))
-      .localCheckpoint(true)
-    Bridge.release(ec)
-    Bridge.release(lc)
-    Bridge.release(sc)
-    labeled
-  }
+                          ngram: Int = 1): DataFrame =
+    Checkpoint.scope {
+      val ec = exactDocLabels(df, text, id, threshold, ngram)
+      val lc = docLabelsFromEdges(df.select(id.as("doc_id")),
+        minHashLshEdgesPortable(df, text, id, numHashes, bands, ngram), "lc")
+      val sc = simHashDocLabels(df, text, id, nBits, maxDist, "sc")
+      Checkpoint(ec.join(lc, Seq("doc_id")).join(sc, Seq("doc_id")))
+    }
 
   /** Per-doc EXACT ≥-threshold Jaccard component labels `(doc_id, ec)`:
     * rep collapse (the doc→rep MAP this time, not just reps — hence a
@@ -285,12 +264,11 @@ object Dedup {
     * global PPJoin over reps, components, every doc inheriting its rep's
     * component (singleton reps label themselves). The exact side of every
     * agreement audit ([[dualClusterLabels]], [[simHashDedupAgreement]]).
-    * Returned frame is a bare checkpoint; release when consumed.
+    * Returned frame is a checkpoint.
     */
   private[graft] def exactDocLabels(df: DataFrame, text: Column, id: Column,
                                     threshold: Double,
-                                    ngram: Int): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
+                                    ngram: Int): DataFrame = Checkpoint.scope {
     // the doc→rep map via the argmin AGGREGATE + signature join (the
     // keepOneExact skew discipline, round 15): the min is absorbed
     // map-side and the join back gets AQE skew splitting — the window
@@ -301,25 +279,16 @@ object Dedup {
       exactSignature(text, ngram).as("__sig"))
     val winners = base.groupBy(col("__sig"))
       .agg(min(col("doc_id")).as("__rep"))
-    val withRep = base.join(winners, Seq("__sig"))
-      .select(col("doc_id"), col("__text"), col("__sig"), col("__rep"))
-      .localCheckpoint(true)
+    val withRep = Checkpoint(base.join(winners, Seq("__sig"))
+      .select(col("doc_id"), col("__text"), col("__sig"), col("__rep")))
     val reps = withRep.filter(col("doc_id") === col("__rep"))
       .select(col("doc_id"), col("__text").as("text"))
       .withColumn("__all", lit(0))
-    val exactEdges = jaccardPairsPrefix(reps, col("text"), col("doc_id"),
-      "__all", threshold, ngram)
-    val exactLabels = components(exactEdges)
-    // jaccardPairsPrefix RETURNS a checkpointed frame — release it once
-    // components has consumed it
-    Bridge.release(exactEdges)
-    val labeled = withRep
+    val exactLabels = components(jaccardPairsPrefix(reps, col("text"),
+      col("doc_id"), "__all", threshold, ngram))
+    Checkpoint(withRep
       .join(exactLabels, col("__rep") === exactLabels("node"), "left")
-      .select(col("doc_id"), coalesce(col("comp"), col("__rep")).as("ec"))
-      .localCheckpoint(true)
-    Bridge.release(withRep)
-    Bridge.release(exactLabels)
-    labeled
+      .select(col("doc_id"), coalesce(col("comp"), col("__rep")).as("ec")))
   }
 
   /** Per-doc component labels over an ARBITRARY near-dup edge frame
@@ -330,19 +299,14 @@ object Dedup {
     * `(doc_id, <outCol>)`, checkpointed.
     */
   private[graft] def docLabelsFromEdges(docIds: DataFrame, edges: DataFrame,
-                                        outCol: String): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val e = edges.localCheckpoint(true)
-    val labels = components(e)
-    Bridge.release(e)
-    val out = docIds
-      .join(labels, col("doc_id") === labels("node"), "left")
-      .select(col("doc_id"),
-        coalesce(col("comp"), col("doc_id")).as(outCol))
-      .localCheckpoint(true)
-    Bridge.release(labels)
-    out
-  }
+                                        outCol: String): DataFrame =
+    Checkpoint.scope {
+      val labels = components(Checkpoint(edges))
+      Checkpoint(docIds
+        .join(labels, col("doc_id") === labels("node"), "left")
+        .select(col("doc_id"),
+          coalesce(col("comp"), col("doc_id")).as(outCol)))
+    }
 
   /** SimHash-vs-exact agreement audit — [[lshDedupAgreement]]'s report
     * with the PORTABLE SimHash banded Hamming graph as the approximate
@@ -357,17 +321,12 @@ object Dedup {
     */
   def simHashDedupAgreement(df: DataFrame, text: Column, id: Column,
                             threshold: Double, nBits: Int,
-                            maxDist: Int, ngram: Int = 1): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val ec = exactDocLabels(df, text, id, threshold, ngram)
-    val sc = simHashDocLabels(df, text, id, nBits, maxDist, "lc")
-    val labeled = ec.join(sc, Seq("doc_id")).localCheckpoint(true)
-    Bridge.release(ec)
-    Bridge.release(sc)
-    val rep = agreementFromLabels(labeled)
-    Bridge.release(labeled)
-    rep
-  }
+                            maxDist: Int, ngram: Int = 1): DataFrame =
+    Checkpoint.scope {
+      val ec = exactDocLabels(df, text, id, threshold, ngram)
+      val sc = simHashDocLabels(df, text, id, nBits, maxDist, "lc")
+      agreementFromLabels(Checkpoint(ec.join(sc, Seq("doc_id"))))
+    }
 
   /** Per-doc SimHash single-linkage component labels `(doc_id, <outCol>)`
     * — clusters of the verified Hamming ≤ `maxDist` graph over the
@@ -385,25 +344,21 @@ object Dedup {
     */
   private[graft] def simHashDocLabels(df: DataFrame, text: Column,
                                       id: Column, nBits: Int, maxDist: Int,
-                                      outCol: String): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val fp = simHashPortable(df, text, id, nBits).localCheckpoint(true)
-    val frep = fp.groupBy(col("simhash")).agg(min(col("doc_id")).as("doc_id"))
-      .localCheckpoint(true) // feeds the pair join AND the label expansion
-    val pairs = hammingNearPairs(frep, nBits, maxDist)
-      .select(col("doc_a"), col("doc_b"))
-    val repLabels = docLabelsFromEdges(frep.select(col("doc_id")), pairs,
-      outCol)
-    val out = fp
-      .join(frep.withColumnRenamed("doc_id", "__rep"), Seq("simhash"))
-      .join(repLabels.withColumnRenamed("doc_id", "__rep"), Seq("__rep"))
-      .select(col("doc_id"), col(outCol))
-      .localCheckpoint(true)
-    Bridge.release(fp)
-    Bridge.release(frep)
-    Bridge.release(repLabels)
-    out
-  }
+                                      outCol: String): DataFrame =
+    Checkpoint.scope {
+      val fp = Checkpoint(simHashPortable(df, text, id, nBits))
+      // feeds the pair join AND the label expansion
+      val frep = Checkpoint(
+        fp.groupBy(col("simhash")).agg(min(col("doc_id")).as("doc_id")))
+      val pairs = hammingNearPairs(frep, nBits, maxDist)
+        .select(col("doc_a"), col("doc_b"))
+      val repLabels = docLabelsFromEdges(frep.select(col("doc_id")), pairs,
+        outCol)
+      Checkpoint(fp
+        .join(frep.withColumnRenamed("doc_id", "__rep"), Seq("simhash"))
+        .join(repLabels.withColumnRenamed("doc_id", "__rep"), Seq("__rep"))
+        .select(col("doc_id"), col(outCol)))
+    }
 
   /** Keep-one off a persisted per-doc label frame: the kept documents
     * are exactly those labeled with their own id (component labels are
@@ -456,10 +411,8 @@ object Dedup {
     * would under-count pairs_both). Shared by [[agreementFromLabels]]
     * and the [[DedupAuditReport]] margins.
     */
-  private[graft] def agreementFromCt(ctIn: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val ct = ctIn
-      .localCheckpoint(true) // contingency table: consumed by 3 aggregates
+  private[graft] def agreementFromCt(ctIn: DataFrame): DataFrame = Checkpoint.scope {
+    val ct = Checkpoint(ctIn) // contingency table: consumed by 3 aggregates
     def c2(c: Column): Column = (c * (c - 1)) / 2
     val both = ct.agg(sum(c2(col("n"))).as("pairs_both"),
       sum(col("n")).as("n_docs"),
@@ -469,7 +422,8 @@ object Dedup {
       .agg(sum(c2(col("m"))).as("pairs_exact"))
     val ls = ct.groupBy(col("lc")).agg(sum(col("n")).as("m"))
       .agg(sum(c2(col("m"))).as("pairs_lsh"))
-    val rep = both.crossJoin(broadcast(ex)).crossJoin(broadcast(ls))
+    // one row; frees the contingency block
+    Checkpoint(both.crossJoin(broadcast(ex)).crossJoin(broadcast(ls))
       .select(col("n_docs").cast("long").as("n_docs"),
         col("n_exact_clusters").cast("long").as("n_exact_clusters"),
         col("n_lsh_clusters").cast("long").as("n_lsh_clusters"),
@@ -481,10 +435,7 @@ object Dedup {
           .otherwise(lit(0.0)), 6).as("pair_precision"),
         round(when(col("pairs_exact") > 0,
             col("pairs_both").cast("double") / col("pairs_exact"))
-          .otherwise(lit(0.0)), 6).as("pair_recall"))
-      .localCheckpoint(true) // one row; frees the contingency block
-    Bridge.release(ct)
-    rep
+          .otherwise(lit(0.0)), 6).as("pair_recall")))
   }
 
   /** The WHOLE dedup-audit panel off one persisted `(doc_id, ec, lc, sc)`
@@ -493,22 +444,21 @@ object Dedup {
     * sized — feeds all five reports. Fields are lazy: each panel pays
     * one CUBE-sized aggregation, the corpus is scanned exactly once at
     * construction. This is the call a pipeline owner makes per corpus
-    * snapshot (the d12/d12b/d14/d15/d16 gates each read one field);
-    * accessed fields are self-contained checkpoints, so `release()` is
-    * safe once every field the caller will ever read has been ACCESSED
-    * (no need to have collected them first).
+    * snapshot (the d12/d12b/d14/d15/d16 gates each read one field).
+    * The cube's checkpoint belongs to the [[Checkpoint.scope]] the report
+    * was made in, and a report is not a frame its scope can see: use it
+    * inside that scope. Accessed fields are self-contained checkpoints
+    * owned by the scope open at first access.
     */
   final class DedupAuditReport private[dedup] (cube: DataFrame) {
     // Histogram fields are checkpointed at first access (they are
     // cluster-size histograms — a handful of rows), so like the
-    // agreement fields they are SELF-CONTAINED: a caller that touches a
-    // field and then release()s the cube holds a valid frame, never a
-    // lazy view over a freed checkpoint (ADVICE r12 — the old contract
-    // put that hazard in a scaladoc note and trusted callers to force).
+    // agreement fields they are SELF-CONTAINED: a field touched before
+    // the cube is freed stays a valid frame, never a lazy view over a
+    // freed checkpoint (ADVICE r12).
     private def hist(label: String): DataFrame =
-      cube.groupBy(col(label)).agg(sum(col("n")).as("cluster_size"))
-        .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
-        .localCheckpoint(true)
+      Checkpoint(cube.groupBy(col(label)).agg(sum(col("n")).as("cluster_size"))
+        .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters")))
     /** d12: exact ≥-threshold Jaccard cluster-size histogram. */
     lazy val histExact: DataFrame = hist("ec")
     /** d12b: MinHash-LSH cluster-size histogram. */
@@ -523,24 +473,17 @@ object Dedup {
       * [[simHashDedupAgreement]]). */
     lazy val agreementSimHash: DataFrame = agreementFromCt(
       cube.groupBy(col("ec"), col("sc").as("lc")).agg(sum(col("n")).as("n")))
-    /** Release the cube's checkpoint block. Every accessed field
-      * (agreement AND histogram) is an eager checkpoint of its own tiny
-      * result, so all remain valid after release; only an UNTOUCHED
-      * lazy field becomes unreachable — by then there is nothing to
-      * compute it for. */
-    def release(): Unit =
-      org.apache.spark.sql.graftbridge.Bridge.release(cube)
   }
 
   def dedupAuditReport(labels: DataFrame): DedupAuditReport =
-    new DedupAuditReport(labels.groupBy(col("ec"), col("lc"), col("sc"))
-      .agg(count(lit(1)).as("n")).localCheckpoint(true))
+    new DedupAuditReport(Checkpoint(labels.groupBy(col("ec"), col("lc"),
+      col("sc")).agg(count(lit(1)).as("n"))))
 
   /** The report over an ALREADY-materialized `(ec, lc, sc, n)` cube —
     * the serving shape: persist the cube (cluster-combination sized,
     * trivially small next to the labels) alongside the label store, and
     * every audit panel on every dashboard refresh is a cube-sized
-    * aggregation with NO corpus scan and no checkpoint to release (the
+    * aggregation with NO corpus scan and no cube checkpoint (the
     * d12/d12b/d14/d15/d16 gates read one memoized cube this way).
     */
   def dedupAuditReportFromCube(cube: DataFrame): DedupAuditReport =
@@ -643,15 +586,13 @@ object Dedup {
 
   private[graft] def prefixCandidateInstances(d: DataFrame,
                                               threshold: Double): DataFrame =
-    prefixCandidateInstancesBuild(d, threshold, materialize = false)._1
+    prefixCandidateInstancesBuild(d, threshold, materialize = false)
 
-  /** [[prefixCandidateInstances]] plus the handle of the prefix-stream
-    * checkpoint it rides on, so the production caller
-    * ([[jaccardPairsPrefix]]) can release it once the pair set is
-    * materialized. The lazy wrapper above keeps the dev/test surface
-    * (Prof, SkewSpec, PlanShapeSpec, ExplainPP) side-effect-free: an
-    * eager checkpoint there would run a full shuffle job during plan
-    * inspection and leak an unreleasable block per call.
+  /** [[prefixCandidateInstances]] over a checkpointed prefix stream, owned
+    * by the caller's scope ([[jaccardPairsPrefix]] frees it once the pair
+    * set is materialized). The lazy wrapper above keeps the dev/test
+    * surface (Prof, SkewSpec, PlanShapeSpec) side-effect-free: an eager
+    * checkpoint there would run a full shuffle job during plan inspection.
     *
     * Why a checkpoint (r21): the candidate stage is a SELF-join of the
     * prefix stream, and Spark executes a twice-referenced subtree twice —
@@ -670,12 +611,12 @@ object Dedup {
     * recomputing the corpus-wide window twice is strictly worse.
     */
   private[graft] def prefixCandidateInstancesCk(
-      d: DataFrame, threshold: Double): (DataFrame, DataFrame) =
+      d: DataFrame, threshold: Double): DataFrame =
     prefixCandidateInstancesBuild(d, threshold, materialize = true)
 
   private def prefixCandidateInstancesBuild(
       d: DataFrame, threshold: Double,
-      materialize: Boolean): (DataFrame, DataFrame) = {
+      materialize: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val prefixLen = (col("n") - ceil(col("n") * threshold) + 1).cast("int")
     val tok = explodedShingles(d)
@@ -686,7 +627,7 @@ object Dedup {
           .orderBy(col("__df"), col("p"))))
       .filter(col("i") <= prefixLen)
       .select(col("blk"), col("p"), col("doc_id"), col("i"), col("n"))
-    val pre = if (materialize) pre0.localCheckpoint(true) else pre0
+    val pre = if (materialize) Checkpoint(pre0) else pre0
     val a = pre.select(col("blk"), col("p"), col("doc_id").as("doc_a"),
       col("i").as("i_a"), col("n").as("pn_a"))
     val b = pre.select(col("blk"), col("p"), col("doc_id").as("doc_b"),
@@ -694,11 +635,10 @@ object Dedup {
     val alpha = ceil(lit(threshold / (1 + threshold)) * (col("pn_a") + col("pn_b")))
     val sizeOk = least(col("pn_a"), col("pn_b")).cast("double") >=
       greatest(col("pn_a"), col("pn_b")) * threshold
-    val inst = a.join(b, Seq("blk", "p"))
+    a.join(b, Seq("blk", "p"))
       .where(col("doc_a") < col("doc_b") && sizeOk &&
         (lit(1) + least(col("pn_a") - col("i_a"), col("pn_b") - col("i_b"))) >= alpha)
       .select(col("doc_a"), col("doc_b"))
-    (inst, pre)
   }
 
   /** PPJoin-style prefix-filtered exact Jaccard (same results as
@@ -712,13 +652,13 @@ object Dedup {
     * Checkpoint lifecycle: the shingled corpus is materialized (it feeds
     * candidate generation AND both verify sides), the final pair set is
     * materialized too (it is tiny relative to the corpus at any sane
-    * threshold), then the corpus-sized intermediate is RELEASED — the
-    * returned frame holds exactly one small storage block, freeable with
-    * `Bridge.release` once consumed (asserted in DedupSpec).
+    * threshold), then the corpus-sized intermediates are freed — the
+    * returned frame holds exactly one small storage block (asserted in
+    * DedupSpec).
     */
   def jaccardPairsPrefix(df: DataFrame, text: Column, id: Column,
                          blockCol: String, threshold: Double,
-                         ngram: Int = 1): DataFrame = {
+                         ngram: Int = 1): DataFrame = Checkpoint.scope {
     // Shingles are fingerprinted to xxhash64 longs at the scan: every
     // downstream stage (prefix explode, df aggregation, candidate join
     // keys, verify-side array_intersect) then moves and compares 8-byte
@@ -729,8 +669,8 @@ object Dedup {
     // collisions (~|pair union|²·2⁻⁶⁴ per verified pair — negligible at
     // any realistic corpus scale, and a collision only perturbs one
     // pair's intersection count by 1).
-    val d = hashedShingleFrame(df, text, id, blockCol, ngram)
-      .localCheckpoint(true) // reused by candidates and both verify sides
+    // reused by candidates and both verify sides
+    val d = Checkpoint(hashedShingleFrame(df, text, id, blockCol, ngram))
     // Verify per candidate INSTANCE, distinct only the final edge set.
     // History: round 7 measured the instance-stream shape 4x WORSE and put
     // the distinct BEFORE verify — but that was with per-row hash-set
@@ -743,7 +683,7 @@ object Dedup {
     // corpus side under the verify joins is the checkpointed `d` (exact
     // stats), so AQE still picks the broadcast side correctly; duplicate
     // instances only re-run a merge walk each, never re-shuffle the corpus.
-    val (cand, pre) = prefixCandidateInstancesCk(d, threshold)
+    val cand = prefixCandidateInstancesCk(d, threshold)
     val a = d.select(col("doc_id").as("doc_a"), col("toks").as("toks_a"),
       col("n").as("n_a"))
     val b = d.select(col("doc_id").as("doc_b"), col("toks").as("toks_b"),
@@ -754,15 +694,11 @@ object Dedup {
     val inter = graft.expr.SetExpressions
       .sortedIntersectCount(col("toks_a"), col("toks_b")).cast("double")
     val jac = inter / (col("n_a") + col("n_b") - inter)
-    val pairs = cand.join(a, Seq("doc_a")).join(b, Seq("doc_b"))
+    Checkpoint(cand.join(a, Seq("doc_a")).join(b, Seq("doc_b"))
       .withColumn("jac", jac)
       .where(col("jac") >= threshold)
       .select(col("doc_a"), col("doc_b"), round(col("jac"), 6).as("jaccard"))
-      .distinct()
-      .localCheckpoint(true)
-    org.apache.spark.sql.graftbridge.Bridge.release(pre)
-    org.apache.spark.sql.graftbridge.Bridge.release(d)
-    pairs
+      .distinct())
   }
 
   /** Embedding-cosine near-dup pairs within a blocking key. Double-precision
@@ -1010,11 +946,11 @@ object Dedup {
     * Throws if maxIter rounds don't reach the fixpoint — a silently
     * unconverged result would hand duplicates to keep-one downstream.
     *
-    * Checkpoint lifecycle: each round's labels are released as soon as the
-    * next round is materialized, and the symmetrized edge set is released on
-    * exit — blocks in flight stay O(1), not O(rounds). The RETURNED frame is
-    * the final materialized label set (one block); free it with
-    * `Bridge.release` when done (keepOnePerComponent does).
+    * Checkpoint lifecycle: each round's labels are freed as soon as the
+    * next round is materialized ([[Checkpoint.next]]), and the symmetrized
+    * edge set on exit — blocks in flight stay O(1), not O(rounds). The
+    * RETURNED frame is a projection of the last round's block, which the
+    * caller's scope owns.
     *
     * Rejected alternative (round 10): min-neighbor CONTRACTION (merge each
     * node into min(self, neighbors), rewrite edges, compose mappings). It
@@ -1040,7 +976,7 @@ object Dedup {
     * exchange and the round's remaining exchanges are tiny-data
     * scheduling cost either way.
     */
-  def components(edges: DataFrame, maxIter: Int = 20): DataFrame = {
+  def components(edges: DataFrame, maxIter: Int = 20): DataFrame = Checkpoint.scope {
     val sym = symmetrized(edges)
     // a small edge list is solved on the driver with union-find instead
     // of paying the loop's fixed costs — every propagation round is 2 jobs
@@ -1067,7 +1003,7 @@ object Dedup {
     */
   private[graft] def componentsDistributed(edges: DataFrame, maxIter: Int = 20,
       onRound: (Int, Double, Boolean) => Unit = null): DataFrame =
-    componentsLoop(symmetrized(edges), maxIter, onRound)
+    Checkpoint.scope(componentsLoop(symmetrized(edges), maxIter, onRound))
 
   // eager localCheckpoint (not persist) each round: iterative plans grow
   // linearly in lineage, so analysis cost goes quadratic and any cache
@@ -1079,9 +1015,8 @@ object Dedup {
     require(edges.schema("doc_a").dataType == edges.schema("doc_b").dataType,
       s"edge endpoint types differ: ${edges.schema("doc_a").dataType} vs " +
         s"${edges.schema("doc_b").dataType}")
-    edges.select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .unionByName(edges.select(col("doc_b").as("u"), col("doc_a").as("v")))
-      .localCheckpoint(true)
+    Checkpoint(edges.select(col("doc_a").as("u"), col("doc_b").as("v"))
+      .unionByName(edges.select(col("doc_b").as("u"), col("doc_a").as("v"))))
   }
 
   /** Union-find over (u, v) rows: (node, min node id of its component),
@@ -1114,15 +1049,13 @@ object Dedup {
 
   private def componentsLoop(sym: DataFrame, maxIter: Int,
                              onRound: (Int, Double, Boolean) => Unit): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
     // Fused init: with identity labels, round 1's propagate ⋈ groupBy(min)
     // reduces to min(self, min-neighbor) straight off the edge list — one
     // aggregation replaces the distinct + identity init + first join round
     // (every node appears as `v` in the symmetrized frame, so coverage is
     // identical to the old distinct).
-    var labels = sym.groupBy(col("v")).agg(min(col("u")).as("__mn"))
-      .select(col("v").as("node"), least(col("v"), col("__mn")).as("comp"))
-      .localCheckpoint(true)
+    var labels = Checkpoint(sym.groupBy(col("v")).agg(min(col("u")).as("__mn"))
+      .select(col("v").as("node"), least(col("v"), col("__mn")).as("comp")))
     var i = 0
     var done = false
     while (!done && i < maxIter) {
@@ -1143,31 +1076,19 @@ object Dedup {
       // the sf0.1 near-dup graphs stayed 5, because the binding constraint
       // is min-label DISTANCE through the graph, which only the prop step
       // advances; deeper jumps just paid one more join per round.)
-      val nextFull = stepped.join(lut, stepped("comp") === lut("c_node"), "left")
-        .select(col("node"), col("prev"),
-          least(col("comp"), coalesce(col("c_comp"), col("comp"))).as("comp"))
-        .localCheckpoint(true)
-      val changed = nextFull.filter(col("comp") =!= col("prev")).limit(1).count()
-      // dev aid: GRAFT_CC_DEBUG=1 prints per-round convergence progress
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[components] round $i changed=${changed > 0}")
-      Bridge.release(labels) // previous round's block is dead now
-      labels = nextFull // full frame: release() needs the bare checkpoint
-      done = changed == 0
+      labels = Checkpoint.next(labels,
+        stepped.join(lut, stepped("comp") === lut("c_node"), "left")
+          .select(col("node"), col("prev"),
+            least(col("comp"), coalesce(col("c_comp"), col("comp"))).as("comp")))
+      done = labels.filter(col("comp") =!= col("prev")).limit(1).count() == 0
       if (onRound != null)
         onRound(i, (System.nanoTime() - roundT0) / 1e9, done)
       i += 1
     }
-    Bridge.release(sym)
     if (!done)
       throw new IllegalStateException(
         s"components() did not converge in $maxIter rounds — raise maxIter")
-    // strip the probe column behind one last (label-sized) materialization
-    // so the returned frame keeps the (node, comp) contract AND stays a
-    // bare checkpoint the caller can release
-    val result = labels.select(col("node"), col("comp")).localCheckpoint(true)
-    Bridge.release(labels)
-    result
+    labels.select(col("node"), col("comp"))
   }
 
   /** INCREMENTALLY extend a component labeling with NEW edges, without
@@ -1192,40 +1113,33 @@ object Dedup {
     * Returns the full updated `(node, comp)` labeling, checkpointed.
     */
   def componentsIncremental(oldLabels: DataFrame,
-                            newEdges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
+                            newEdges: DataFrame): DataFrame = Checkpoint.scope {
     // newEdges is scanned three times below (ends + both quotient-map
     // joins) and in the batch path it is the FULL parquet edge store —
     // materialize the 2-long projection once so per-batch cost doesn't
     // re-pay three complete store scans as the store grows
-    val ne = newEdges.select(col("doc_a"), col("doc_b")).localCheckpoint(true)
+    val ne = Checkpoint(newEdges.select(col("doc_a"), col("doc_b")))
     val ends = ne.select(col("doc_a").as("node"))
       .unionByName(ne.select(col("doc_b").as("node"))).distinct()
-    val base = oldLabels.select(col("node"), col("comp"))
+    // feeds the quotient map AND the composition
+    val base = Checkpoint(oldLabels.select(col("node"), col("comp"))
       .unionByName(ends.join(oldLabels.select(col("node")), Seq("node"),
           "left_anti")
-        .select(col("node"), col("node").as("comp")))
-      .localCheckpoint(true) // feeds the quotient map AND the composition
-    val qEdges = ne
+        .select(col("node"), col("node").as("comp"))))
+    // components scans its edges twice (sym union)
+    val qEdges = Checkpoint(ne
       .join(base.select(col("node").as("doc_a"), col("comp").as("__ca")),
         Seq("doc_a"))
       .join(base.select(col("node").as("doc_b"), col("comp").as("__cb")),
         Seq("doc_b"))
       .select(col("__ca").as("doc_a"), col("__cb").as("doc_b"))
       .filter(col("doc_a") =!= col("doc_b"))
-      .distinct()
-      .localCheckpoint(true) // components scans its edges twice (sym union)
-    Bridge.release(ne)
+      .distinct())
     val merged = components(qEdges) // label-graph: bounded by |newEdges|
-    Bridge.release(qEdges)
-    val out = base
+    Checkpoint(base
       .join(merged.select(col("node").as("__mn"), col("comp").as("__mc")),
         base("comp") === col("__mn"), "left")
-      .select(col("node"), coalesce(col("__mc"), col("comp")).as("comp"))
-      .localCheckpoint(true)
-    Bridge.release(base)
-    Bridge.release(merged)
-    out
+      .select(col("node"), coalesce(col("__mc"), col("comp")).as("comp")))
   }
 
   /** The keep-one-per-component dedup action: drops every doc whose
@@ -1233,19 +1147,17 @@ object Dedup {
     * candidate edges survive untouched (left anti join on the non-rep set).
     *
     * Checkpoint lifecycle: the loser-id set (small: one id per dropped doc)
-    * is materialized so the full component label set can be released; the
+    * is materialized so the scope frees the full component label set; the
     * returned frame stays LAZY over the corpus (its output is corpus-sized —
     * never force that here) and retains only that one small block.
     */
-  def keepOnePerComponent(df: DataFrame, id: Column, edges: DataFrame): DataFrame = {
-    val labels = components(edges)
-    val losers = labels
-      .filter(col("node") =!= col("comp"))
-      .select(col("node"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graftbridge.Bridge.release(labels)
-    df.join(losers, id === losers("node"), "left_anti")
-  }
+  def keepOnePerComponent(df: DataFrame, id: Column, edges: DataFrame): DataFrame =
+    Checkpoint.scope {
+      val losers = Checkpoint(components(edges)
+        .filter(col("node") =!= col("comp"))
+        .select(col("node")))
+      df.join(losers, id === losers("node"), "left_anti")
+    }
 
   /** 32-bit SimHash fingerprint per document: for each bit position, sum
     * +1/-1 token votes (by that bit of the token's murmur hash); the
@@ -1475,27 +1387,24 @@ object Dedup {
     */
   def editDistancePairs(df: DataFrame, text: Column, id: Column,
                         lang: Column, prefixLen: Int = 32,
-                        maxDist: Int = 5): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val p = df.filter(text.isNotNull)
+                        maxDist: Int = 5): DataFrame = Checkpoint.scope {
+    // feeds segment keys, probes, and both verify sides
+    val p = Checkpoint(df.filter(text.isNotNull)
       .select(id.as("doc_id"), lang.as("lang"),
         substring(lower(trim(text)), 1, prefixLen).as("pre"))
-      .withColumn("len", length(col("pre")))
-      .localCheckpoint(true) // feeds segment keys, probes, and both verify sides
+      .withColumn("len", length(col("pre"))))
     val cand = passJoinCandidates(p, maxDist)
     val a = p.select(col("doc_id").as("id_a"), col("pre").as("pre_a"),
       expr("len DIV 8").as("lb_a"))
     val b = p.select(col("doc_id").as("id_b"), col("pre").as("pre_b"),
       expr("len DIV 8").as("lb_b"))
-    val pairs = cand.join(a, Seq("id_a")).join(b, Seq("id_b"))
+    // result is pair-sized; lets the corpus block go
+    Checkpoint(cand.join(a, Seq("id_a")).join(b, Seq("id_b"))
       .where(col("lb_a") === col("lb_b")) // the length-bucket block semantic
       .withColumn("dist",
         levenshtein(col("pre_a"), col("pre_b"), maxDist).cast("long"))
       .where(col("dist") >= 0) // thresholded form returns -1 above maxDist
-      .select(col("id_a"), col("id_b"), col("dist"))
-      .localCheckpoint(true) // result is pair-sized; lets the corpus block go
-    Bridge.release(p)
-    pairs
+      .select(col("id_a"), col("id_b"), col("dist")))
   }
 
   /** (start, length) of 1-based segment `i` of a length-`L` string split

@@ -23,7 +23,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * at 100 TB the verify stage is candidate-count × set-width work, so the
   * constant matters more, not less.
   *
-  * PRECONDITIONS (callers own them; violated ⇒ undercount, never a crash):
+  * PRECONDITIONS (callers own them; violated ⇒ undercount in codegen, an
+  * `IllegalArgumentException` on the interpreted path):
   *  - both arrays sorted ascending;
   *  - elements distinct within each array (set semantics — guaranteed by
   *    the distinct-shingle construction upstream).
@@ -50,10 +51,8 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    if (SortedIntersectCount.DebugChecks) {
-      SortedIntersectCount.assertSortedDistinct(x, "left")
-      SortedIntersectCount.assertSortedDistinct(y, "right")
-    }
+    SortedIntersectCount.assertSortedDistinct(x, "left")
+    SortedIntersectCount.assertSortedDistinct(y, "right")
     val nx = x.numElements()
     val ny = y.numElements()
     var i = 0
@@ -98,17 +97,13 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 }
 
 object SortedIntersectCount {
-  /** Precondition violations UNDERCOUNT silently (never crash), so misuse
-    * by a future call site would produce wrong Jaccard values with no
-    * failure signal. Set `-Dgraft.debug.sortedCheck=true` (tests, dev
-    * runs) to verify sorted-ascending/distinct inputs on the INTERPRETED
-    * path — the codegen'd hot path stays check-free. The flag is read
-    * once per JVM and also guards [[CoverageKeptIndices]]'s sorted-starts
-    * precondition.
+  /** Precondition violations UNDERCOUNT silently in the codegen'd hot
+    * path (never crash), so misuse by a future call site would produce
+    * wrong Jaccard values with no failure signal there. The INTERPRETED
+    * path verifies sorted-ascending/distinct inputs and throws instead;
+    * [[CoverageKeptIndices]] checks its sorted-starts precondition the
+    * same way.
     */
-  private[expr] val DebugChecks: Boolean =
-    sys.props.get("graft.debug.sortedCheck").contains("true")
-
   private[expr] def assertSortedDistinct(a: ArrayData, side: String): Unit = {
     var i = 1
     while (i < a.numElements()) {
@@ -168,15 +163,13 @@ case class CoverageKeptIndices(left: Expression, right: Expression,
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val starts = a.asInstanceOf[ArrayData]
     val n = b.asInstanceOf[Int]
-    if (SortedIntersectCount.DebugChecks) {
-      var i = 1
-      while (i < starts.numElements()) {
-        if (starts.getInt(i - 1) > starts.getInt(i))
-          throw new IllegalArgumentException(
-            s"$prettyName: starts array not sorted ascending at index $i " +
-              s"(${starts.getInt(i - 1)} > ${starts.getInt(i)})")
-        i += 1
-      }
+    var i = 1
+    while (i < starts.numElements()) {
+      if (starts.getInt(i - 1) > starts.getInt(i))
+        throw new IllegalArgumentException(
+          s"$prettyName: starts array not sorted ascending at index $i " +
+            s"(${starts.getInt(i - 1)} > ${starts.getInt(i)})")
+      i += 1
     }
     val f = starts.numElements()
     val tmp = new Array[Int](math.max(n, 0))

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** The one way an operator solves on the driver.
@@ -19,8 +18,8 @@ import org.apache.spark.sql.types._
   *    and NaN/±Inf in float/double values and array elements.
   *  - The driver path runs only on a non-empty input with no bad value
   *    whose bytes fit under [[MaxBytes]]. It collects `reads` alone (in
-  *    that column order), runs `solve`, and releases `frame` on every
-  *    exit (a no-op unless `frame` is a bare checkpoint).
+  *    that column order) and runs `solve`. `frame` stays the caller's:
+  *    a checkpoint behind it is freed by the caller's scope.
   *  - Otherwise the result is None and the caller runs its distributed
   *    loop unchanged. That loop is THE path at scale; degenerate input
   *    (NULLs, non-finite floats, empty frames) always takes it, so the
@@ -46,9 +45,7 @@ object DriverSolve {
         lit(1)))).head()
     if (probe.getLong(0) == 0L || probe.getLong(2) > 0L ||
         probe.getLong(1) > MaxBytes) None
-    else
-      try Some(solve(frame.select(reads.map(frame(_)): _*).collect()))
-      finally Bridge.release(frame)
+    else Some(solve(frame.select(reads.map(frame(_)): _*).collect()))
   }
 
   private def bytes(c: Column, t: DataType): Column = t match {

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Checkpoint
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -36,7 +37,7 @@ object PageRank {
     * @param scale rank unit denominator; ranks sum to ~scale.
     */
   def ranks(edges: DataFrame, iters: Int,
-            scale: Long = 1000000000000L): DataFrame = {
+            scale: Long = 1000000000000L): DataFrame = Checkpoint.scope {
     val ed = withOutWeights(edges, iters)
     // a label/category graph is a handful of nodes, yet each iteration
     // pays a checkpointed join + aggregate: run the IDENTICAL integer
@@ -54,7 +55,7 @@ object PageRank {
   /** [[ranks]]' distributed loop alone, never the driver path. */
   private[graft] def ranksDistributed(edges: DataFrame, iters: Int,
                                       scale: Long = 1000000000000L): DataFrame =
-    loop(withOutWeights(edges, iters), iters, scale)
+    Checkpoint.scope(loop(withOutWeights(edges, iters), iters, scale))
 
   /** (src, dst, w, outw), checkpointed: reused every iteration. */
   private def withOutWeights(edges: DataFrame, iters: Int): DataFrame = {
@@ -71,10 +72,9 @@ object PageRank {
     // solve's guard could see them. The loop is unchanged by it (the
     // contrib join on `src` is null-unsafe either way, and a NULL outw
     // NULL-propagates the contribution exactly as absence did).
-    ed0.join(ow, Seq("src"), "left")
+    Checkpoint(ed0.join(ow, Seq("src"), "left")
       .select(col("src"), col("dst"), col("w").cast("long").as("w"),
-        col("outw"))
-      .localCheckpoint(true)
+        col("outw")))
   }
 
   private def localRanks(rows: Array[Row], iters: Int,
@@ -109,7 +109,7 @@ object PageRank {
     val nodes = ed.select(col("src").as("node"))
       .union(ed.select(col("dst").as("node"))).distinct()
     val nn = nodes.agg(count(lit(1)).cast("long").as("nn"))
-    val nd = nodes.crossJoin(broadcast(nn)).localCheckpoint(true)
+    val nd = Checkpoint(nodes.crossJoin(broadcast(nn)))
     var r = nd.select(col("node"), col("nn"),
       expr(s"$scale DIV nn").as("r"))
     for (_ <- 1 to iters) {
@@ -118,11 +118,11 @@ object PageRank {
         .select(col("dst"),
           expr("(((17 * r) DIV 20) * w) DIV outw").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("insum"))
-      r = nd.join(contrib, col("node") === col("dst"), "left")
+      // truncate the iterative lineage
+      r = Checkpoint.next(r, nd.join(contrib, col("node") === col("dst"), "left")
         .select(col("node"), col("nn"),
           (expr(s"(3 * $scale) DIV (20 * nn)") +
-            coalesce(col("insum"), lit(0L))).as("r"))
-        .localCheckpoint(true) // truncate the iterative lineage
+            coalesce(col("insum"), lit(0L))).as("r")))
     }
     r.select(col("node"), col("r").cast("long").as("rank_scaled"))
   }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Checkpoint
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -24,14 +25,12 @@ object ShortestPath {
     * @param source the source node value.
     * @param iters  relaxation rounds (path-length bound).
     */
-  def sssp(edges: DataFrame, source: Column, iters: Int): DataFrame = {
+  def sssp(edges: DataFrame, source: Column, iters: Int): DataFrame = Checkpoint.scope {
     require(iters >= 0, "iters must be non-negative")
-    val ed = edges.toDF("src", "dst", "cost")
-      .select(col("src"), col("dst"), col("cost").cast("long").as("cost"))
-      .localCheckpoint(true) // reused every round
-    val nd = ed.select(col("src").as("node"))
-      .union(ed.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
+    val ed = Checkpoint(edges.toDF("src", "dst", "cost") // reused every round
+      .select(col("src"), col("dst"), col("cost").cast("long").as("cost")))
+    val nd = Checkpoint(ed.select(col("src").as("node"))
+      .union(ed.select(col("dst").as("node"))).distinct())
     var r = nd.select(col("node"),
       when(col("node") === source, 0L).otherwise(lit(null).cast("long"))
         .as("d"))
@@ -41,9 +40,10 @@ object ShortestPath {
         .filter(col("d").isNotNull)
         .groupBy(col("dst"))
         .agg(min(col("d") + col("cost")).as("md"))
-      r = r.join(m.select(col("dst").as("node"), col("md")), Seq("node"), "left")
-        .select(col("node"), least(col("d"), col("md")).as("d"))
-        .localCheckpoint(true) // truncate the iterative lineage
+      // truncate the iterative lineage
+      r = Checkpoint.next(r,
+        r.join(m.select(col("dst").as("node"), col("md")), Seq("node"), "left")
+          .select(col("node"), least(col("d"), col("md")).as("d")))
     }
     r.select(col("node"), col("d").cast("long").as("min_cost"))
   }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Checkpoint
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
@@ -31,8 +32,8 @@ object Triangles {
     *         clustering_coeff = round(3·triangles / wedges, 6) (0.0 for
     *         a wedge-free graph).
     */
-  def countWithCoefficient(pairs: DataFrame): DataFrame = {
-    val p = pairs.toDF("a", "b").localCheckpoint(true)
+  def countWithCoefficient(pairs: DataFrame): DataFrame = Checkpoint.scope {
+    val p = Checkpoint(pairs.toDF("a", "b"))
     // three equi-joins + two checkpoints over a pair set the dedup graphs
     // keep in the low thousands is fixed cost: run the IDENTICAL
     // degree-oriented enumeration on the driver (Long ids for the LongMaps)
@@ -50,7 +51,7 @@ object Triangles {
   /** [[countWithCoefficient]]'s distributed joins alone, never the driver
     * path. */
   private[graft] def countDistributed(pairs: DataFrame): DataFrame =
-    loop(pairs.toDF("a", "b").localCheckpoint(true))
+    Checkpoint.scope(loop(Checkpoint(pairs.toDF("a", "b"))))
 
   /** Same (degree, id) orientation, same (dv,v)<(dw,w) wedge order, same
     * oriented-edge closing test, same Σ d(d−1)/2 wedge total, and the
@@ -111,20 +112,20 @@ object Triangles {
   }
 
   private def loop(p: DataFrame): DataFrame = {
-    val deg = p.select(col("a").as("v"))
+    // consumed by orientation (×2) + wedge total
+    val deg = Checkpoint(p.select(col("a").as("v"))
       .unionAll(p.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).cast("long").as("dg"))
-      .localCheckpoint(true) // consumed by orientation (×2) + wedge total
+      .groupBy(col("v")).agg(count(lit(1)).cast("long").as("dg")))
     val withDeg = p
       .join(deg.select(col("v").as("a"), col("dg").as("da")), Seq("a"))
       .join(deg.select(col("v").as("b"), col("dg").as("db")), Seq("b"))
     val aFirst = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
-    val o = withDeg.select(
+    // consumed by both wedge sides + closing join
+    val o = Checkpoint(withDeg.select(
         when(aFirst, col("a")).otherwise(col("b")).as("src"),
         when(aFirst, col("b")).otherwise(col("a")).as("dst"),
-        when(aFirst, col("db")).otherwise(col("da")).as("dd"))
-      .localCheckpoint(true) // consumed by both wedge sides + closing join
+        when(aFirst, col("db")).otherwise(col("da")).as("dd")))
     val x = o.select(col("src"), col("dst").as("v"), col("dd").as("dv"))
     val y = o.select(col("src"), col("dst").as("w"), col("dd").as("dw"))
     val wedges = x.join(y, Seq("src"))

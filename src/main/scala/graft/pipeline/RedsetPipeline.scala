@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.Checkpoint
 import graft.etl.{Clean, RedsetSchema}
 import graft.fns.Fns
 import graft.ops.Intervals
@@ -125,13 +126,13 @@ object RedsetPipeline {
         try {
           // localCheckpoint materializes each aggregate while the batch is
           // cached, so the temp views stay valid after the batch is gone
-          compileLeaderboard(cleaned).localCheckpoint(true)
+          Checkpoint(compileLeaderboard(cleaned))
             .createOrReplaceGlobalTempView("live_leaderboard")
-          topUsers(cleaned).localCheckpoint(true)
+          Checkpoint(topUsers(cleaned))
             .createOrReplaceGlobalTempView("live_top_users")
-          queryTypeDistribution(cleaned).localCheckpoint(true)
+          Checkpoint(queryTypeDistribution(cleaned))
             .createOrReplaceGlobalTempView("live_type_dist")
-          scalarPanel(cleaned).localCheckpoint(true)
+          Checkpoint(scalarPanel(cleaned))
             .createOrReplaceGlobalTempView("live_panel")
           ()
         } finally { cleaned.unpersist(); () }
@@ -163,11 +164,11 @@ object RedsetPipeline {
         // would kill the stream
         val all = batch.sparkSession.read.schema(flat.schema)
           .parquet(stagingPath).drop("batch_id")
-        outputTable(all).localCheckpoint(true)
+        Checkpoint(outputTable(all))
           .createOrReplaceGlobalTempView("expert_output_table")
-        tablesWorkloadCount(all).localCheckpoint(true)
+        Checkpoint(tablesWorkloadCount(all))
           .createOrReplaceGlobalTempView("expert_workload")
-        ingestDecileHistogram(all).localCheckpoint(true)
+        Checkpoint(ingestDecileHistogram(all))
           .createOrReplaceGlobalTempView("expert_decile_hist")
         ()
       }.start()
@@ -227,8 +228,7 @@ object RedsetPipeline {
       stagingPath: String,
       outputPath: String,
       nBuckets: Int = 64,
-      onBatch: Option[(Long, Long) => Unit] = None): Unit = {
-    import org.apache.spark.sql.graftbridge.Bridge
+      onBatch: Option[(Long, Long) => Unit] = None): Unit = Checkpoint.scope {
     val spark = batch.sparkSession
     def withBucket(df: DataFrame): DataFrame =
       df.withColumn("bucket", pmod(hash(col("instance_id")), lit(nBuckets)))
@@ -257,10 +257,9 @@ object RedsetPipeline {
       // Explicit schema: `touched` comes from the RAW batch, so a batch
       // whose rows all die in cleaning can reach here with a footer-less
       // staging dir that schema inference would choke on.
-      val slice = spark.read.schema(flat.schema).parquet(stagingPath)
+      val slice = Checkpoint(spark.read.schema(flat.schema).parquet(stagingPath)
         .filter(col("bucket").isin(touched.toIndexedSeq.map(Integer.valueOf): _*))
-        .drop("bucket", "batch_id")
-        .localCheckpoint(true)
+        .drop("bucket", "batch_id"))
       onBatch.foreach(f => f(batchId, slice.count()))
       def overwriteTouched(df: DataFrame, path: String): Unit =
         withBucket(df).repartition(col("bucket")).write.mode("overwrite")
@@ -307,8 +306,8 @@ object RedsetPipeline {
         }
       }
       // the output table feeds its own write AND the freshness dashboard —
-      // materialize once, derive both, release.
-      val out = outputTable(slice).localCheckpoint(true)
+      // materialize once, derive both; the scope frees it and the slice.
+      val out = Checkpoint(outputTable(slice))
       // Layout: (bucket, day). Bucket drives the incremental recompute
       // (touched-bucket pruning on maintenance); day = the row's event
       // date serves the F3 read path — the reference's BETWEEN windows
@@ -323,7 +322,6 @@ object RedsetPipeline {
         s"$outputPath/freshness")
       val workload = withBucket(tablesWorkloadCount(slice))
       overwriteTouched(tablesWorkloadCount(slice), s"$outputPath/workload")
-      Bridge.release(slice)
       // explicit schemas: an early micro-batch can legitimately write ZERO
       // rows for a derived view (no freshness problems yet) — the dir then
       // has no parquet footer and schema inference would fail the stream
@@ -334,7 +332,6 @@ object RedsetPipeline {
       view(s"$outputPath/output_table", outDay.schema, "expert_output_table")
       view(s"$outputPath/workload", workload.schema, "expert_workload")
       view(s"$outputPath/freshness", fresh.schema, "expert_freshness")
-      Bridge.release(out)
     }
     ()
   }
@@ -371,9 +368,7 @@ object RedsetPipeline {
     * storage once — which `expertRun`/`expertRunIncremental` do anyway.
     */
   def outputTable(flat: DataFrame): DataFrame = {
-    val f =
-      if (org.apache.spark.sql.graftbridge.Bridge.isMaterialized(flat)) flat
-      else flat.localCheckpoint(true)
+    val f = Checkpoint(flat)
     val iv = ingestionIntervals(f)
       .withColumnRenamed("write_table_id", "table_id").drop("query_id")
     val probes = f

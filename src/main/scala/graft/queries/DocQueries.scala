@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Checkpoint, Tables}
 import graft.fns.Fns
 import graft.text.TextAnalysis
 import graft.dedup.Dedup
@@ -213,11 +213,10 @@ object DocQueries {
   private def dedupLabelStore(s: org.apache.spark.sql.SparkSession,
                               dir: String): org.apache.spark.sql.DataFrame =
     s.read.parquet(Drives.store("graft_dedup_labels", dir) { p =>
-      val labels = Dedup.tripleClusterLabels(Tables.documents(s, dir),
+      Dedup.tripleClusterLabels(Tables.documents(s, dir),
         col("text"), col("doc_id"), threshold = 0.9,
         numHashes = 16, bands = 2, nBits = 24, maxDist = 2)
-      labels.write.mode("overwrite").parquet(p)
-      org.apache.spark.sql.graftbridge.Bridge.release(labels)
+        .write.mode("overwrite").parquet(p)
     })
 
   /** Memoized (ec, lc, sc, n) contingency cube per fixture — the
@@ -461,7 +460,6 @@ object DocQueries {
         s"BPE training ran dry: $nMerges/$BpeTrainK merges on $dir")
       mergeDf.write.mode("overwrite").parquet(s"$p/merges")
       vocab.write.mode("overwrite").parquet(s"$p/vocab")
-      org.apache.spark.sql.graftbridge.Bridge.release(vocab)
     }
     (s.read.parquet(s"$base/merges"), s.read.parquet(s"$base/vocab"))
   }
@@ -539,11 +537,8 @@ object DocQueries {
   private def perceptronWeights(s: org.apache.spark.sql.SparkSession,
                                 dir: String): Map[Int, Long] =
     Drives.memo("perceptron_weights", dir) {
-      val feats = perceptronFeatures(s, dir)
-      val (w, _) = graft.text.Perceptron.train(feats, PerceptronK,
-        PerceptronDims)
-      org.apache.spark.sql.graftbridge.Bridge.release(feats)
-      w
+      Checkpoint.scope(graft.text.Perceptron.train(perceptronFeatures(s, dir),
+        PerceptronK, PerceptronDims)._1)
     }
 
   /** The c9/c23 shared oracle chain — quality filter over the %47
@@ -2871,7 +2866,7 @@ object DocQueries {
       // classifier scoring join twice — pin the 5-narrow-column scored
       // frame once (O(ids) checkpoint, the curate/c34b precedent)
       val (withKey0, cal) = c11bInputs(s, dir)
-      val withKey = withKey0.localCheckpoint(true)
+      val withKey = Checkpoint(withKey0)
       graft.curation.Curation.tokenBudgetMixCalibratedScalable(withKey,
           col("n_tokens"), col("lang"), col("source"), -col("quality"),
           col("doc_id"), budget = 3000L, calibration = cal,

@@ -42,9 +42,11 @@ object Drives {
       .get(() => build).asInstanceOf[A]
 
   /** A store dir filled once per `(name, dir)`: a fresh [[tempDir]]
-    * prefixed `name`, handed to `fill`; returns its path. */
+    * prefixed `name`, handed to `fill`; returns its path. `fill` runs in
+    * a [[graft.Checkpoint.scope]], so every checkpoint it takes is freed
+    * when it returns or throws. */
   def store(name: String, dir: String)(fill: String => Unit): String =
-    memo(name, dir) { val p = tempDir(name); fill(p); p }
+    memo(name, dir) { val p = tempDir(name); graft.Checkpoint.scope(fill(p)); p }
 
   /** The replay schedule: `df` split into `n` slices by `pmod(key, n)`,
     * applied as batches `0 … n-1` with batch 1 applied twice in a row —

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Checkpoint, Tables}
 import graft.fns.Fns
 import graft.ops.Intervals
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1770,11 +1770,11 @@ object EventQueries {
          |  CAST(CAST(o*n - rt*ct AS HUGEINT) * (o*n - rt*ct) * 1000000
          |    // (CAST(rt AS HUGEINT) * ct * n) AS BIGINT) AS chi2_micro
          |FROM f ORDER BY event_type, dow""".stripMargin) { (s, dir) =>
-      val c = ev(s, dir)
+      // cell-sized; feeds margins, total, join
+      val c = Checkpoint(ev(s, dir)
         .groupBy(col("event_type"),
           (expr("weekday(ts)") + 1).cast("long").as("dow"))
-        .agg(count(lit(1)).cast("long").as("o"))
-        .localCheckpoint(true) // cell-sized; feeds margins, total, join
+        .agg(count(lit(1)).cast("long").as("o")))
       val rt = c.groupBy(col("event_type")).agg(sum(col("o")).cast("long").as("rt"))
       val ct = c.groupBy(col("dow")).agg(sum(col("o")).cast("long").as("ct"))
       val n = c.agg(sum(col("o")).cast("long").as("n"))
@@ -1824,9 +1824,9 @@ object EventQueries {
          |      AS HUGEINT) // CAST(ex.f2 AS HUGEINT)
          |    AS BIGINT) AS err_permille
          |FROM ex, est""".stripMargin) { (s, dir) =>
-      val u = ev(s, dir).groupBy(col("user_id"))
-        .agg(count(lit(1)).cast("long").as("cnt"))
-        .localCheckpoint(true) // |users| rows; exact moment + explode
+      // |users| rows; exact moment + explode
+      val u = Checkpoint(ev(s, dir).groupBy(col("user_id"))
+        .agg(count(lit(1)).cast("long").as("cnt")))
       val ex = u.agg(
         sum(col("cnt").cast("decimal(38,0)") * col("cnt"))
           .cast("decimal(38,0)").as("f2"))
@@ -2342,15 +2342,15 @@ object EventQueries {
         .select(col("k")).distinct()
       val b = keyed.filter(col("event_type") === "error")
         .select(col("k")).distinct()
-      val h = a.select(col("k"), lit("a").as("src"))
+      // feeds the exact aggregate AND the sketch
+      val h = Checkpoint(a.select(col("k"), lit("a").as("src"))
         .unionAll(b.select(col("k"), lit("b").as("src")))
         .groupBy(col("k"))
         .agg(max(when(col("src") === "a", 1).otherwise(0)).as("in_a"),
           max(when(col("src") === "b", 1).otherwise(0)).as("in_b"))
         .withColumn("hv",
           (col("k") * lit(2654435761L) + lit(987654321L)) %
-            lit(graft.ops.Kmv.M))
-        .localCheckpoint(true) // feeds the exact aggregate AND the sketch
+            lit(graft.ops.Kmv.M)))
       val ex = h.agg(count(lit(1)).cast("long").as("exact_union"),
         sum(col("in_a") * col("in_b")).cast("long").as("exact_inter"))
       val r = h.select(col("hv"), col("in_a"), col("in_b"),
@@ -2586,11 +2586,11 @@ object EventQueries {
          |         AS BIGINT) END AS n_churn_out
          |FROM j, mx GROUP BY j.wk, mx.max_wk ORDER BY j.wk""".stripMargin) {
       (s, dir) =>
-      val wa = ev(s, dir)
+      // consumed by firsts, prev, next, max
+      val wa = Checkpoint(ev(s, dir)
         .select(col("user_id"),
           date_trunc("week", col("ts")).cast("date").as("wk"))
-        .distinct()
-        .localCheckpoint(true) // consumed by firsts, prev, next, max
+        .distinct())
       val f = wa.groupBy(col("user_id")).agg(min(col("wk")).as("first_wk"))
       val mx = wa.agg(max(col("wk")).as("max_wk"))
       val prev = wa.select(col("user_id").as("p_uid"), col("wk").as("p_wk"))

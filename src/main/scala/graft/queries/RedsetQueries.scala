@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Checkpoint, Tables}
 import graft.etl.Clean
 import graft.pipeline.RedsetPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -467,10 +467,9 @@ object RedsetQueries {
     */
   private def cleanStore(s: SparkSession, dir: String): String =
     Drives.store("graft_redset_clean", dir) { p =>
-      val cleaned = Clean(raw(s, dir)).localCheckpoint(true)
+      val cleaned = Checkpoint(Clean(raw(s, dir)))
       cleaned.write.mode("overwrite").parquet(s"$p/clean")
       Clean.flatten(cleaned).write.mode("overwrite").parquet(s"$p/flat")
-      org.apache.spark.sql.graftbridge.Bridge.release(cleaned)
     }
   private def storedClean(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"${cleanStore(s, dir)}/clean")

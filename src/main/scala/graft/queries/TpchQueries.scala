@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Checkpoint, Tables}
 import graft.fns.Fns
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -502,12 +502,12 @@ object TpchQueries {
         .join(broadcast(Tables.nation(s, dir).filter(col("n_name") === "NATION_7")),
           col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"))
-      val perPart = Tables.lineitem(s, dir)
+      // one fact scan: reused by total and HAVING
+      val perPart = Checkpoint(Tables.lineitem(s, dir)
         .join(broadcast(supp7), col("l_suppkey") === col("s_suppkey"), "left_semi")
         .groupBy(col("l_partkey").as("p_partkey"))
         .agg(sum(col("l_extendedprice").cast(d2) * col("l_quantity").cast(d2))
-          .as("val_sum"))
-        .localCheckpoint(true) // one fact scan: reused by total and HAVING
+          .as("val_sum")))
       val total = perPart.agg(sum(col("val_sum")).as("total"))
       perPart.crossJoin(broadcast(total))
         .filter(col("val_sum") * 1000 > col("total"))
@@ -558,13 +558,13 @@ object TpchQueries {
         |SELECT s.s_suppkey AS s_suppkey, s.s_name AS s_name, CAST(r.total_rev AS DOUBLE) AS total_rev
         |FROM supplier s JOIN r ON s.s_suppkey = r.suppkey JOIN m ON r.total_rev = m.mx
         |ORDER BY s_suppkey""".stripMargin) { (s, dir) =>
-      val r = Tables.lineitem(s, dir)
+      // one fact scan: reused by MAX and join-back
+      val r = Checkpoint(Tables.lineitem(s, dir)
         .filter(col("l_shipdate") >= lit("1996-01-01 00:00:00").cast("timestamp") &&
           col("l_shipdate") < lit("1996-04-01 00:00:00").cast("timestamp"))
         .groupBy(col("l_suppkey").as("suppkey"))
         .agg(sum(col("l_extendedprice").cast(d2) *
-          (lit(1) - col("l_discount").cast(d2))).as("total_rev"))
-        .localCheckpoint(true) // one fact scan: reused by MAX and join-back
+          (lit(1) - col("l_discount").cast(d2))).as("total_rev")))
       val m = r.agg(max(col("total_rev")).as("mx"))
       r.join(broadcast(m), col("total_rev") === col("mx"))
         .join(broadcast(Tables.supplier(s, dir)), col("suppkey") === col("s_suppkey"))

@@ -1,5 +1,6 @@
 package graft.sim
 
+import graft.Checkpoint
 import graft.fns.Fns
 import graft.ops.DriverSolve
 import org.apache.spark.sql.{Column, DataFrame}
@@ -253,11 +254,8 @@ object Similarity {
       : Option[Array[(Long, Array[Float])]] = {
     val types = emb.schema.fields.map(f => f.name -> f.dataType).toMap
     (types.get("vec_id"), types.get("embedding")) match {
-      // a projection, never `emb` itself: the caller still scans `emb`,
-      // so a checkpointed corpus must not be released here
       case (Some(LongType), Some(ArrayType(FloatType, _))) =>
-        DriverSolve(emb.select(col("vec_id"), col("embedding")),
-            Seq("vec_id", "embedding"))(
+        DriverSolve(emb, Seq("vec_id", "embedding"))(
           _.map(r => (r.getLong(0), r.getSeq[Float](1).toArray)))
       case _ => None
     }
@@ -1061,41 +1059,41 @@ object Similarity {
     * serving scale); the greedy loop then runs k bounded rounds on the
     * checkpointed pool (≤ poolK rows), each one broadcast-join +
     * filter — never a corpus-sized operation. Rerank pools are bounded
-    * by construction, so this shape IS the 100 TB shape.
+    * by construction, so this shape IS the 100 TB shape. Each round's
+    * remaining pool replaces the last ([[Checkpoint.next]]).
     */
   def mmrRerank(emb: DataFrame, queryVecId: Long, poolK: Int = 20,
-                k: Int = 5): DataFrame = {
+                k: Int = 5): DataFrame = Checkpoint.scope {
     require(k >= 1 && poolK >= k, "need poolK >= k >= 1")
     val q = emb.where(col("vec_id") === queryVecId)
       .select(col("embedding").as("qv"),
         sqrt(Fns.dot(col("embedding"), col("embedding"))).as("qn"))
-    val cand = emb.where(col("vec_id") =!= queryVecId)
+    // bounded pool; the greedy runs only on this
+    val cand = Checkpoint(emb.where(col("vec_id") =!= queryVecId)
       .crossJoin(broadcast(q))
       .select(col("vec_id"), col("label"), col("embedding"),
         sqrt(Fns.dot(col("embedding"), col("embedding"))).as("nrm"),
         floor(Fns.dot(col("embedding"), col("qv")) /
             (sqrt(Fns.dot(col("embedding"), col("embedding"))) * col("qn")) *
             lit(1000000)).cast("long").as("rel_u"))
-      .orderBy(col("rel_u").desc, col("vec_id")).limit(poolK)
-      .localCheckpoint(true) // bounded pool; the greedy runs only on this
+      .orderBy(col("rel_u").desc, col("vec_id")).limit(poolK))
     var rem = cand.withColumn("pen_u", lit(0L))
     var picks = List.empty[DataFrame]
     for (r <- 1 to k) {
-      val pick = rem
-        .orderBy((col("rel_u") - col("pen_u")).desc, col("vec_id"))
-        .limit(1).localCheckpoint(true)
+      val pick = Checkpoint(rem
+        .orderBy((col("rel_u") - col("pen_u")).desc, col("vec_id")).limit(1))
       picks = picks :+ pick.withColumn("rank", lit(r.toLong))
       if (r < k) {
         val pv = pick.select(col("vec_id").as("p_vid"),
           col("embedding").as("pv"), col("nrm").as("pnrm"))
         val sim = floor(Fns.dot(col("embedding"), col("pv")) /
           (col("nrm") * col("pnrm")) * lit(1000000)).cast("long")
-        rem = rem.crossJoin(broadcast(pv))
+        // ≤ poolK rows per round
+        rem = Checkpoint.next(rem, rem.crossJoin(broadcast(pv))
           .filter(col("vec_id") =!= col("p_vid"))
           .withColumn("pen_u",
             if (r == 1) sim else greatest(col("pen_u"), sim))
-          .drop("p_vid", "pv", "pnrm")
-          .localCheckpoint(true) // ≤ poolK rows per round
+          .drop("p_vid", "pv", "pnrm"))
       }
     }
     picks.map(_.select(col("rank"), col("vec_id"), col("label"),

@@ -1,9 +1,9 @@
 package graft.text
 
+import graft.Checkpoint
 import graft.ops.DriverSolve
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import scala.collection.mutable
@@ -27,9 +27,9 @@ import scala.collection.mutable
   *     count, partial-aggregated map-side), a 1-row argmax collect
   *     (count DESC, pair ASC — the deterministic tie-break both engines
   *     share), and a map-only fold that applies the merge
-  *     ([[applyMergeCol]] — no shuffle). `localCheckpoint` per iteration
-  *     keeps the lineage flat (the d9/pagerank discipline) and the dead
-  *     predecessor's blocks are released.
+  *     ([[applyMergeCol]] — no shuffle). A checkpoint per iteration
+  *     keeps the lineage flat (the d9/pagerank discipline) and frees the
+  *     dead predecessor's blocks ([[graft.Checkpoint.next]]).
   *
   * The naive alternative — re-scanning the corpus per merge — is k
   * corpus passes; this is 1 + k vocab-frame passes. That asymmetry IS
@@ -138,14 +138,15 @@ object BpeTrain {
 
   /** Train `k` merges over a (syms, cnt) vocab frame. Returns the merge
     * list (<= k if the corpus runs dry — fewer than k distinct adjacent
-    * pairs) and the final vocab frame (localCheckpoint-materialized; the
-    * caller owns its release). Per iteration: one pair-count shuffle, one
+    * pairs) and the final vocab frame (a checkpoint the caller's scope
+    * owns). Per iteration: one pair-count shuffle, one
     * 1-row argmax collect (bounded — the iteration must sequence on the
     * chosen pair), one map-only fold.
     */
-  def trainMerges(words0: DataFrame, k: Int): (Seq[Merge], DataFrame) = {
+  def trainMerges(words0: DataFrame,
+                  k: Int): (Seq[Merge], DataFrame) = Checkpoint.scope {
     require(k >= 1, s"k must be >= 1, got $k")
-    val words = words0.localCheckpoint(true)
+    val words = Checkpoint(words0)
     // k rounds of (pair-count shuffle + 1-row argmax collect +
     // checkpointed map fold) over a vocab that fits the driver is k × ~3
     // jobs of fixed cost: run classic word-freq BPE locally — the same
@@ -164,7 +165,7 @@ object BpeTrain {
   private[graft] def trainMergesDistributed(words0: DataFrame,
                                             k: Int): (Seq[Merge], DataFrame) = {
     require(k >= 1, s"k must be >= 1, got $k")
-    mergeLoop(words0.localCheckpoint(true), k)
+    Checkpoint.scope(mergeLoop(Checkpoint(words0), k))
   }
 
   private def localMerges(rows: Array[Row],
@@ -213,12 +214,9 @@ object BpeTrain {
         val r = top(0)
         val (lft, rgt, c) = (r.getString(0), r.getString(1), r.getLong(2))
         merges += Merge(step, lft, rgt, c)
-        val prev = words
-        words = words
+        words = Checkpoint.next(words, words
           .select(col("word"), applyMergeCol(col("syms"), lft, rgt).as("syms"),
-            col("cnt"))
-          .localCheckpoint(true)
-        Bridge.release(prev)
+            col("cnt")))
         step += 1
       }
     }
@@ -490,8 +488,8 @@ object BpeTrain {
     * driver-side (bounded — it IS the model).
     */
   def compressionCurve(words0: DataFrame, merges: Seq[(Int, String, String)])
-      : DataFrame = {
-    val words = words0.localCheckpoint(true)
+      : DataFrame = Checkpoint.scope {
+    val words = Checkpoint(words0)
     // k checkpointed merge applications + k census collects over a vocab
     // that fits the driver are pure fixed cost: apply the merges with
     // applyMergeLocal and census locally (long sums, order-independent)
@@ -517,8 +515,8 @@ object BpeTrain {
   /** [[compressionCurve]]'s distributed loop alone, never the driver path. */
   private[graft] def compressionCurveDistributed(words0: DataFrame,
       merges: Seq[(Int, String, String)]): DataFrame =
-    curveFrame(words0.sparkSession,
-      curveLoop(words0.localCheckpoint(true), merges))
+    Checkpoint.scope(curveFrame(words0.sparkSession,
+      curveLoop(Checkpoint(words0), merges)))
 
   private def curveFrame(spark: SparkSession,
                          curve: Seq[(Int, Long, Long)]): DataFrame = {
@@ -530,7 +528,7 @@ object BpeTrain {
   }
 
   /** Per-prefix (step, Σ cnt, Σ cnt·|syms|) over the checkpointed merge
-    * applications; releases `words0`. */
+    * applications. */
   private def curveLoop(words0: DataFrame, merges: Seq[(Int, String, String)])
       : Seq[(Int, Long, Long)] = {
     var words = words0
@@ -548,15 +546,11 @@ object BpeTrain {
     val curve = Seq.newBuilder[(Int, Long, Long)]
     curve += census(0)
     merges.sortBy(_._1).foreach { case (step, lft, rgt) =>
-      val prev = words
-      words = words
+      words = Checkpoint.next(words, words
         .select(col("word"), applyMergeCol(col("syms"), lft, rgt).as("syms"),
-          col("cnt"))
-        .localCheckpoint(true)
-      Bridge.release(prev)
+          col("cnt")))
       curve += census(step)
     }
-    Bridge.release(words)
     curve.result()
   }
 

@@ -1,9 +1,9 @@
 package graft.text
 
+import graft.Checkpoint
 import graft.ops.DriverSolve
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Domain-mixture weight OPTIMIZATION (DoReMi-lite, after Xie et al.
@@ -52,7 +52,7 @@ object DomainMixture {
     * enter as 1-row BROADCAST cross joins; the k-step loop rides a
     * localCheckpoint-materialized |D|-row frame with per-step lineage
     * truncation (the BpeTrain discipline) and the dead step's blocks
-    * released.
+    * freed.
     */
   def solve(docs: DataFrame, domain: Column, lossMicro: Column, k: Int,
             etaPermille: Long = 100L,
@@ -74,7 +74,7 @@ object DomainMixture {
     */
   private def solveFromStats(perDomain0: DataFrame, k: Int,
                              etaPermille: Long,
-                             smoothPermille: Long): DataFrame = {
+                             smoothPermille: Long): DataFrame = Checkpoint.scope {
     val perDomain = checkpointed(perDomain0, k, etaPermille, smoothPermille)
     // the k-step loop runs over tens of domains yet pays a checkpoint +
     // 1-row aggregate + broadcast cross join PER STEP: run the identical
@@ -97,15 +97,15 @@ object DomainMixture {
                                       lossMicro: Column, k: Int,
                                       etaPermille: Long = 100L,
                                       smoothPermille: Long = 200L): DataFrame =
-    loop(checkpointed(perDomainStats(docs, domain, lossMicro), k, etaPermille,
-      smoothPermille), k, etaPermille, smoothPermille)
+    Checkpoint.scope(loop(checkpointed(perDomainStats(docs, domain, lossMicro),
+      k, etaPermille, smoothPermille), k, etaPermille, smoothPermille))
 
   private def checkpointed(perDomain0: DataFrame, k: Int, etaPermille: Long,
                            smoothPermille: Long): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(etaPermille >= 0 && smoothPermille >= 0 &&
       smoothPermille <= 1000, "eta >= 0, 0 <= smooth <= 1000")
-    perDomain0.localCheckpoint(true)
+    Checkpoint(perDomain0)
   }
 
   private def localWeights(rows: Array[Row], k: Int, etaPermille: Long,
@@ -146,29 +146,22 @@ object DomainMixture {
           .as("excess_micro"),
         expr("1000000 div __nd").as("__w"),
         expr("1000000 div __nd").as("__uniform"))
-    var cur = base.localCheckpoint(true)
-    Bridge.release(perDomain)
+    var cur = Checkpoint(base)
     for (_ <- 1 to k) {
       val stepped = cur.withColumn("__u",
         expr(s"(__w * (1000000 + ($etaPermille * excess_micro) div 1000)) " +
           "div 1000000"))
       val norm = stepped.agg(sum(col("__u")).as("__su"))
-      val next = stepped
+      cur = Checkpoint.next(cur, stepped
         .crossJoin(broadcast(norm))
         .select(col("domain"), col("n_docs"), col("mean_loss_micro"),
           col("excess_micro"), expr("(__u * 1000000) div __su").as("__w"),
-          col("__uniform"))
-        .localCheckpoint(true)
-      Bridge.release(cur)
-      cur = next
+          col("__uniform")))
     }
-    val out = cur.select(col("domain"), col("n_docs"),
+    Checkpoint(cur.select(col("domain"), col("n_docs"),
       col("mean_loss_micro"), col("excess_micro"),
       (expr(s"((1000 - $smoothPermille) * __w) div 1000") +
-        expr(s"($smoothPermille * __uniform) div 1000")).as("weight_micro"))
-      .localCheckpoint(true)
-    Bridge.release(cur)
-    out
+        expr(s"($smoothPermille * __uniform) div 1000")).as("weight_micro")))
   }
 
   /** Staged per-batch domain-stats row schema (explicit: a footer-less

@@ -1,8 +1,8 @@
 package graft.text
 
+import graft.Checkpoint
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 
 /** POCKET-perceptron TRAINING over hashed bag-of-words features — the
   * learn-the-model step upstream of the fixed-weight classifier scorer
@@ -59,7 +59,7 @@ object Perceptron {
       .agg(count(lit(1)).as("cnt"))
     val bias = docs.select(id.as("doc_id"), label.as("y"),
       lit(-1).as("dim"), lit(1L).as("cnt"))
-    feat.unionByName(bias).repartition(col("doc_id")).localCheckpoint(true)
+    Checkpoint(feat.unionByName(bias).repartition(col("doc_id")))
   }
 
   /** Run `k` POCKET-perceptron iterations over a [[features]] frame:
@@ -72,7 +72,8 @@ object Perceptron {
     * iterations can only match or improve the returned model) — Gallant's
     * pocket algorithm, the standard fix, and still all-integer.
     * Returns the pocket weights (dim → weight, `-1` = bias) and the
-    * per-iteration mistake counts. The caller owns the frame's release.
+    * per-iteration mistake counts. Each iteration's misclassified set
+    * is freed at the iteration's end.
     */
   def train(feats: DataFrame, k: Int, dims: Int)
       : (Map[Int, Long], Seq[(Int, Long)]) = {
@@ -81,14 +82,14 @@ object Perceptron {
     var pocket = w
     var pocketNm = Long.MaxValue
     val trace = Seq.newBuilder[(Int, Long)]
-    for (it <- 1 to k) {
+    for (it <- 1 to k) Checkpoint.scope {
       val scores = feats
         .withColumn("contrib",
           col("cnt") * coalesce(element_at(typedlit(w), col("dim")), lit(0L)))
         .groupBy(col("doc_id"), col("y"))
         .agg(sum(col("contrib")).as("s"))
-      val miscl = scores.filter(col("y") * col("s") <= 0)
-        .select(col("doc_id")).localCheckpoint(true)
+      val miscl = Checkpoint(scores.filter(col("y") * col("s") <= 0)
+        .select(col("doc_id")))
       val nm = miscl.count()
       trace += ((it, nm))
       if (nm < pocketNm) { pocket = w; pocketNm = nm }
@@ -107,7 +108,6 @@ object Perceptron {
           w = w.updated(d, w.getOrElse(d, 0L) + r.getLong(1))
         }
       }
-      Bridge.release(miscl)
     }
     (pocket, trace.result())
   }
@@ -477,9 +477,8 @@ object Perceptron {
     */
   def driftBatch(batch: DataFrame, batchId: Long, text: Column, id: Column,
                  label: Column, dims: Int, w: Map[Int, Long],
-                 storePath: String): Unit = {
-    val feats = features(batch, text, id, label, dims)
-    scoredDocs(feats, w)
+                 storePath: String): Unit = Checkpoint.scope {
+    scoredDocs(features(batch, text, id, label, dims), w)
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("y") * col("s") > 0, 1L).otherwise(0L))
           .as("n_correct"))
@@ -493,7 +492,6 @@ object Perceptron {
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id").parquet(storePath)
-    Bridge.release(feats)
   }
 
   /** The drift panel over an ingested store — [[driftIngest]]'s read. */

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.Checkpoint
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -252,7 +253,7 @@ object TextAnalysis {
         // ReuseExchange cannot collapse them. Explicit materialization is
         // this engine's idiom for multi-consumer subtrees (outputTable,
         // component loops); O(vocab) storage, one corpus scan.
-        val m = freq.localCheckpoint(true)
+        val m = Checkpoint(freq)
         val n = m.filter(col("token").isNull)
           .select(col("doc_freq").as("__n_docs"))
         ranked(m.filter(col("token").isNotNull)
@@ -309,9 +310,9 @@ object TextAnalysis {
     * persist it once per corpus build and reuse across scoring runs.
     */
   def unigramModel(df: DataFrame, text: Column): DataFrame = {
-    val cnt = df.select(explode(toks(text)).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // vocab-sized; feeds the total AND the probs
+    // vocab-sized; feeds the total AND the probs
+    val cnt = Checkpoint(df.select(explode(toks(text)).as("tok"))
+      .groupBy(col("tok")).agg(count(lit(1)).as("c")))
     val total = cnt.agg(sum(col("c")).cast("double").as("__nt"))
     cnt.crossJoin(broadcast(total))
       .select(col("tok"),
@@ -371,9 +372,9 @@ object TextAnalysis {
   def bigramLogProb(df: DataFrame, text: Column, id: Column,
                     scored: Option[DataFrame] = None): DataFrame = {
     val pairs = bigramPairs(df, text, id)
-    val c2 = pairs.groupBy(col("prev"), col("tok"))
-      .agg(count(lit(1)).as("c2"))
-      .localCheckpoint(true) // model-sized; feeds the denom AND the probs
+    // model-sized; feeds the denom AND the probs
+    val c2 = Checkpoint(pairs.groupBy(col("prev"), col("tok"))
+      .agg(count(lit(1)).as("c2")))
     val cPrev = c2.groupBy(col("prev")).agg(sum(col("c2")).as("cp"))
     val lp2 = c2.join(cPrev, Seq("prev"))
       .select(col("prev"), col("tok"),
@@ -414,10 +415,11 @@ object TextAnalysis {
     def counts(df: DataFrame, as: String) =
       df.select(explode(toks(text)).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as(as))
-    val j = counts(dfA, "ca").join(counts(dfB, "cb"), Seq("tok"), "full_outer")
+    // vocab-sized; feeds the totals AND the sum
+    val j = Checkpoint(counts(dfA, "ca")
+      .join(counts(dfB, "cb"), Seq("tok"), "full_outer")
       .select(coalesce(col("ca"), lit(0L)).as("ca"),
-        coalesce(col("cb"), lit(0L)).as("cb"))
-      .localCheckpoint(true) // vocab-sized; feeds the totals AND the sum
+        coalesce(col("cb"), lit(0L)).as("cb")))
     val tot = j.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"),
       count(lit(1)).as("vocab_union"))
     j.crossJoin(broadcast(tot))
@@ -449,13 +451,13 @@ object TextAnalysis {
     */
   def pmiCollocations(df: DataFrame, text: Column, id: Column,
                       minCount: Long = 5, k: Int = 20): DataFrame = {
-    val c1 = df.select(explode(toks(text)).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).cast("long").as("c"))
-      .localCheckpoint(true) // vocab-sized; feeds both sides + the total
+    // vocab-sized; feeds both sides + the total
+    val c1 = Checkpoint(df.select(explode(toks(text)).as("tok"))
+      .groupBy(col("tok")).agg(count(lit(1)).cast("long").as("c")))
     val n1 = c1.agg(sum(col("c")).cast("long").as("n1"))
-    val c2 = bigramPairs(df, text, id)
-      .groupBy(col("prev"), col("tok")).agg(count(lit(1)).cast("long").as("cxy"))
-      .localCheckpoint(true) // model-sized; feeds the total AND the scores
+    // model-sized; feeds the total AND the scores
+    val c2 = Checkpoint(bigramPairs(df, text, id)
+      .groupBy(col("prev"), col("tok")).agg(count(lit(1)).cast("long").as("cxy")))
     val n2 = c2.agg(sum(col("cxy")).cast("long").as("n2"))
     val sc = c2.filter(col("cxy") >= minCount)
       .join(c1.select(col("tok").as("prev"), col("c").as("ca")), Seq("prev"))
@@ -1021,14 +1023,14 @@ object TextAnalysis {
   def dsirModel(df: DataFrame, text: Column, isTarget: Column,
                 buckets: Int = 256): DataFrame = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val c = df.select(isTarget.as("__t"), explode(toks(text)).as("tok"))
+    // ≤ buckets rows; feeds totals AND ratios
+    val c = Checkpoint(df.select(isTarget.as("__t"), explode(toks(text)).as("tok"))
       .select(col("__t"),
         pmod(graft.fns.Fns.rollingHash(col("tok")), lit(buckets.toLong))
           .cast("int").as("b"))
       .groupBy(col("b"))
       .agg(count(lit(1)).as("cr"),
-        sum(when(col("__t"), 1L).otherwise(0L)).as("ct"))
-      .localCheckpoint(true) // ≤ buckets rows; feeds totals AND ratios
+        sum(when(col("__t"), 1L).otherwise(0L)).as("ct")))
     val totals = c.agg(sum(col("cr")).as("__nr"), sum(col("ct")).as("__nt"))
     c.crossJoin(broadcast(totals))
       .select(col("b"),
@@ -1132,11 +1134,10 @@ object TextAnalysis {
     // histogram + fill passes don't re-run the LM scoring join twice
     // (the curationFunnel qKeep/cKeep precedent — scoring dominates
     // this operator's cost, the fill itself is scan-shaped)
-    val base = df.select(id.as("doc_id"), lang.as("lang"))
+    val base = Checkpoint(df.select(id.as("doc_id"), lang.as("lang"))
       .join(scored, Seq("doc_id"))
       .select(col("doc_id"), col("lang"),
-        round(col("avg_logprob") * 1000000.0, 0).cast("long").as("__lpm"))
-      .localCheckpoint(true)
+        round(col("avg_logprob") * 1000000.0, 0).cast("long").as("__lpm")))
     graft.curation.Curation.twoPhaseQuotaFill(base, col("lang"),
         counts => counts.withColumn("__quota",
           col("__n") - expr("__n div 3")),

@@ -1,4 +1,5 @@
 package graft.tools
+import graft.Checkpoint
 import graft.dedup.Dedup
 import org.apache.spark.sql.functions._
 
@@ -20,36 +21,30 @@ object ExplainPP {
     val docs = graft.Tables.documents(spark, dir)
     docs.count()
     if (args.contains("--plan")) {
-      val d = Dedup.hashedShingleFrame(docs, col("text"), col("doc_id"),
-        "source", 1).localCheckpoint(true)
+      val d = Checkpoint(Dedup.hashedShingleFrame(docs, col("text"),
+        col("doc_id"), "source", 1))
       println("========== prefixCandidateInstances (production ckpt form) ==========")
-      val (inst, pre) = Dedup.prefixCandidateInstancesCk(d, 0.9)
-      inst.explain("formatted")
-      org.apache.spark.sql.graftbridge.Bridge.release(pre)
+      Dedup.prefixCandidateInstancesCk(d, 0.9).explain("formatted")
       spark.stop()
       return
     }
     for ((label, thr, ng) <- Seq(("d4 t=0.9 ng=1", 0.9, 1),
         ("d6 t=0.5 ng=3", 0.5, 3))) {
       println(s"===== $label =====")
-      for (rep <- 1 to 3) {
+      for (rep <- 1 to 3) Checkpoint.scope {
         val d = t(s"$label shingle ckpt") {
-          Dedup.hashedShingleFrame(docs, col("text"), col("doc_id"),
-            "source", ng).localCheckpoint(true)
+          Checkpoint(Dedup.hashedShingleFrame(docs, col("text"),
+            col("doc_id"), "source", ng))
         }
-        val (inst, pre) = t(s"$label cand build(ckpt pre)") {
+        val inst = t(s"$label cand build(ckpt pre)") {
           Dedup.prefixCandidateInstancesCk(d, thr)
         }
-        println(s"  pre rows: ${pre.count()}")
         t(s"$label instance count")(println(s"  instances: ${inst.count()}"))
         val pairs = t(s"$label full ppjoin") {
           Dedup.jaccardPairsPrefix(docs, col("text"), col("doc_id"),
             "source", thr, ng)
         }
         println(s"  edges: ${pairs.count()}")
-        org.apache.spark.sql.graftbridge.Bridge.release(pre)
-        org.apache.spark.sql.graftbridge.Bridge.release(d)
-        org.apache.spark.sql.graftbridge.Bridge.release(pairs)
       }
     }
     spark.stop()

@@ -1,4 +1,5 @@
 package graft.tools
+import graft.Checkpoint
 import graft.dedup.Dedup
 import org.apache.spark.sql.functions._
 
@@ -33,8 +34,7 @@ object Prof {
     println(s"  reps: ${reps.count()}")
     // substage attribution of jaccardPairsPrefix over the production frames
     val d = t("shingle-hash ckpt") {
-      Dedup.hashedShingleFrame(reps, col("text"), col("doc_id"), "__all", 1)
-        .localCheckpoint(true)
+      Checkpoint(Dedup.hashedShingleFrame(reps, col("text"), col("doc_id"), "__all", 1))
     }
     val tok = Dedup.explodedShingles(d)
     t("tok explode count")(println(s"  tok rows: ${tok.count()}"))
@@ -65,8 +65,7 @@ object Prof {
     // WARM per-stage attribution of the exact d12 path (3 reps, min): the
     // bench is min-of-3 warm, so cold single-shot numbers above mislead.
     // Stages are the production calls nearDupClusterHistogram composes.
-    for (rep <- 0 until 3) {
-      import org.apache.spark.sql.graftbridge.Bridge
+    for (rep <- 0 until 3) Checkpoint.scope {
       def tw[A](name: String)(f: => A): A = {
         val t0 = System.nanoTime()
         val r = f
@@ -89,7 +88,6 @@ object Prof {
           .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
           .count()
       }
-      Bridge.release(l12); Bridge.release(reps12); Bridge.release(e12)
     }
     spark.stop()
   }

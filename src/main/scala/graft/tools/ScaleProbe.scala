@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Checkpoint, Tables}
 import graft.dedup.Dedup
 import graft.curation.Curation
 import graft.queries.Drives
@@ -25,6 +25,8 @@ object ScaleProbe {
         val n = f
         println(f"SCALE $name%-28s ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
       }
+    // a probe whose checkpoints are freed when it returns
+    def ts(name: String)(f: => Long): Unit = t(name)(Checkpoint.scope(f))
     val docs = Tables.documents(spark, dir)
     val n0 = docs.count()
     // shifted copies: ids and sources offset per replica so near-dup blocks
@@ -33,12 +35,12 @@ object ScaleProbe {
     // select the SAME documents in every replica — otherwise each replica
     // contributes a different eval slice and decontamination nukes the
     // whole manifest at high mult.
-    val big = (0 until mult).map { r =>
+    val big = Checkpoint((0 until mult).map { r =>
       docs.select(
         (col("doc_id") + lit(r.toLong * 1000019L)).as("doc_id"),
         concat(col("source"), lit(s"_r$r")).as("source"),
         col("lang"), col("text"))
-    }.reduce(_ unionByName _).localCheckpoint(true)
+    }.reduce(_ unionByName _))
     println(s"SCALE corpus ${n0} -> ${big.count()} docs (${mult}x)")
     t(s"d1 exact dedup ${mult}x") {
       Dedup.exactByCanonicalTokens(big, col("text"), col("doc_id")).count()
@@ -95,7 +97,7 @@ object ScaleProbe {
       Curation.dedupSpansAcrossDocs(big, col("text"), col("doc_id"),
         window = 8, hashKeys = true).count()
     }
-    t(s"d14 dual labels + agreement ${mult}x") {
+    ts(s"d14 dual labels + agreement ${mult}x") {
       // the store-build shape the d7/d12/d12b/d14 gates share: both
       // clusterings once (this is the dominant cost, ~d7+d12b), then the
       // agreement report is one contingency-table aggregation over the
@@ -104,7 +106,6 @@ object ScaleProbe {
       val labeled = Dedup.dualClusterLabels(big, col("text"), col("doc_id"),
         threshold = 0.9, numHashes = 16, bands = 2)
       val n = Dedup.agreementFromLabels(labeled).count()
-      org.apache.spark.sql.graftbridge.Bridge.release(labeled)
       n
     }
     t(s"c19c incremental span store ${mult}x") {
@@ -163,7 +164,7 @@ object ScaleProbe {
       }
       Curation.readLabelsSnapshot(spark, s"$base/labels").count()
     }
-    t(s"d16 simhash label build ${mult}x") {
+    ts(s"d16 simhash label build ${mult}x") {
       // the store-build leg behind the d16 histogram at mult× dup mass:
       // replicas are exact dups ⇒ identical fingerprints, so the
       // fingerprint rep collapse must absorb the replication BEFORE the
@@ -172,7 +173,6 @@ object ScaleProbe {
       val sc = Dedup.simHashDocLabels(big, col("text"), col("doc_id"),
         nBits = 24, maxDist = 2, "sc")
       val n = sc.count()
-      org.apache.spark.sql.graftbridge.Bridge.release(sc)
       n
     }
     t(s"mm9 image-text pair dedup ${mult}x") {
@@ -294,18 +294,17 @@ object ScaleProbe {
         col("n_tokens"), col("lang"), col("source"),
         Seq(col("doc_id")), budget = 1000000L, calibration = cal).count()
     }
-    t(s"c11c mega-source mix ${mult}x") {
+    ts(s"c11c mega-source mix ${mult}x") {
       // 90% of rows in ONE source: the plain budget mix funnels the
       // mega slice into a single prefix-sum task; the distributed form
       // spreads it across (source, bucket) tasks AND prunes buckets
       // past the budget before the window. Printed pair: scalable vs
       // exact window on the same frame.
-      val mega = big.select(col("doc_id"),
+      val mega = Checkpoint(big.select(col("doc_id"),
         when(col("doc_id") % 10 =!= 0, lit("mega"))
           .otherwise(col("source")).as("source"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"),
-        ((col("doc_id") * 37L) % 1000000L).as("quality"))
-        .localCheckpoint(true)
+        ((col("doc_id") * 37L) % 1000000L).as("quality")))
       val budget = 500L * mult
       val t0 = System.nanoTime()
       val nS = Curation.tokenBudgetMixScalable(mega, col("n_tokens"),
@@ -317,7 +316,6 @@ object ScaleProbe {
         Seq(col("quality").desc, col("doc_id")), budget).count()
       println(f"SCALE   c11c scalable $tS%.2f s ($nS rows) vs exact " +
         f"window ${(System.nanoTime() - t1) / 1e9}%.2f s ($nE rows)")
-      org.apache.spark.sql.graftbridge.Bridge.release(mega)
       nS
     }
     t(s"c39 mixture apply ${mult}x") {
@@ -331,7 +329,7 @@ object ScaleProbe {
       graft.text.DomainMixture.applyMixture(big, col("source"),
         col("doc_id"), w, budget = 300L * mult).count()
     }
-    t(s"c39b mega-domain fill ${mult}x") {
+    ts(s"c39b mega-domain fill ${mult}x") {
       // the dominance case (the c21/c22 probe convention): ~90% of
       // documents in ONE domain — the real web-corpus shape, where the
       // exact c39 form funnels the whole mega slice through a single
@@ -340,16 +338,14 @@ object ScaleProbe {
       // cost must stay near the corpus scan as the mega domain grows.
       // Printed triple: two-phase vs exact window vs mega-domain solve
       // (the c37 stage-1 aggregate under the same skew).
-      val mega = big.select(col("doc_id"),
+      val mega = Checkpoint(big.select(col("doc_id"),
         when(col("doc_id") % 10 =!= 0, lit("mega"))
-          .otherwise(col("source")).as("source"), col("text"))
-        .localCheckpoint(true)
+          .otherwise(col("source")).as("source"), col("text")))
       // fixed weights (no solver confound): deep quota for the mega
       // domain so the fill actually ranks, token ones for the rest
-      val w = mega.select(col("source").as("domain")).distinct()
+      val w = Checkpoint(mega.select(col("source").as("domain")).distinct()
         .withColumn("weight_micro",
-          when(col("domain") === "mega", lit(900000L)).otherwise(lit(1000L)))
-        .localCheckpoint(true)
+          when(col("domain") === "mega", lit(900000L)).otherwise(lit(1000L))))
       val budget = n0 * mult / 2
       val t0 = System.nanoTime()
       val nTwo = graft.text.DomainMixture.applyMixtureScalable(mega,
@@ -366,11 +362,9 @@ object ScaleProbe {
       println(f"SCALE   c39b two-phase $tTwo%.2f s ($nTwo rows) vs exact " +
         f"window $tEx%.2f s ($nEx rows); mega-domain c37 solve " +
         f"${(System.nanoTime() - t2) / 1e9}%.2f s")
-      org.apache.spark.sql.graftbridge.Bridge.release(mega)
-      org.apache.spark.sql.graftbridge.Bridge.release(w)
       nTwo
     }
-    t(s"c1b degenerate modal sort key ${mult}x") {
+    ts(s"c1b degenerate modal sort key ${mult}x") {
       // the boundary-bucket degeneracy the level-2 split exists for:
       // 90% of a mega key's rows share ONE sort value (same-length web
       // snippets), so they all land in a single level-1 bucket — which
@@ -378,12 +372,11 @@ object ScaleProbe {
       // the funnel it removed. With spark.graft.boundarySplit the rank
       // runs over (sort, tie-id range) sub-buckets and must stay flat.
       // Printed triple: split fill vs single-level fill vs exact window.
-      val mega = big.select(col("doc_id"),
+      val mega = Checkpoint(big.select(col("doc_id"),
         when(col("doc_id") % 10 =!= 0, lit("mega"))
           .otherwise(col("source")).as("source"),
         when(col("doc_id") % 10 =!= 3, lit(5L))
-          .otherwise((col("doc_id") % 40).cast("long")).as("len"))
-        .localCheckpoint(true)
+          .otherwise((col("doc_id") % 40).cast("long")).as("len")))
       val quota = (n0 * mult / 2).toInt
       val t0 = System.nanoTime()
       val nSp = Curation.quotaPerKeyScalable(mega, col("source"), quota,
@@ -414,10 +407,9 @@ object ScaleProbe {
         budget = (n0 * mult / 2), bucketWidth = 1L).count()
       println(f"SCALE   c11c modal split $tPs%.2f s ($nPs rows) vs " +
         f"single-level ${(System.nanoTime() - t4) / 1e9}%.2f s ($nP1 rows)")
-      org.apache.spark.sql.graftbridge.Bridge.release(mega)
       nSp
     }
-    t(s"c10b calibrated keep ${mult}x") {
+    ts(s"c10b calibrated keep ${mult}x") {
       // fixed weights (no training confound, the c36 probe convention):
       // two map-side-combined scoring passes + the broadcast cutoff —
       // must track the corpus scan, with the histogram/window stages
@@ -428,7 +420,6 @@ object ScaleProbe {
       val n = graft.text.Perceptron.calibratedKeep(feats,
         (-1 until 64).map(d => d -> (d % 7 - 3).toLong).toMap,
         targetRecallPermille = 900).count()
-      org.apache.spark.sql.graftbridge.Bridge.release(feats)
       n
     }
     t(s"c37 domain mixture ${mult}x") {
@@ -555,14 +546,14 @@ object ScaleProbe {
       }.reduce(_ unionByName _)
       graft.sim.Similarity.pqEncode(bigEmb).count()
     }
-    t(s"sim16 ivf assign inc ${mult}x") {
+    ts(s"sim16 ivf assign inc ${mult}x") {
       // frozen centroids, 3 assign batches: per-batch cost must track
       // BATCH size (scan + broadcast argmin), not index-store life
       val emb = Tables.embeddings(spark, dir)
-      val bigEmb = (0 until mult).map { r =>
+      val bigEmb = Checkpoint((0 until mult).map { r =>
         emb.select((col("vec_id") + lit(r.toLong * 10000000L)).as("vec_id"),
           col("embedding"), col("label"))
-      }.reduce(_ unionByName _).localCheckpoint(true)
+      }.reduce(_ unionByName _))
       val cs = graft.sim.Similarity.ivfTrain(emb, nCentroids = 16, iters = 1)
       val tmp = Drives.tempDir("probe_ivf")
       val times = (0 to 2).map { r =>
@@ -574,7 +565,6 @@ object ScaleProbe {
       println(f"SCALE   sim16 per-batch ${times.map(t => f"$t%.2f").mkString("/")} s")
       val n = graft.sim.Similarity.assignmentsFromStore(spark,
         s"$tmp/assign").count()
-      org.apache.spark.sql.graftbridge.Bridge.release(bigEmb)
       n
     }
     t(s"sim10 pq adc knn ${mult}x") {
@@ -617,25 +607,25 @@ object ScaleProbe {
     }
     // replicated events: ids and users shifted per replica so per-user
     // event counts (funnel depth, per-user sequences) keep their original
-    // shape — user count scales, per-user history does not.
-    lazy val bigEv = {
+    // shape — user count scales, per-user history does not. Taken here,
+    // outside every probe's scope: all the event probes below read it.
+    val bigEv = {
       val e = Tables.events(spark, dir)
-      (0 until mult).map { r =>
+      Checkpoint((0 until mult).map { r =>
         e.select((col("event_id") + lit(r.toLong * 1000000000L)).as("event_id"),
           col("ts"), (col("user_id") + lit(r.toLong * 10000000L)).as("user_id"),
           col("event_type"), col("value"))
-      }.reduce(_ unionByName _).localCheckpoint(true)
+      }.reduce(_ unionByName _))
     }
-    t(s"j2b mega-entity lead ${mult}x") {
+    ts(s"j2b mega-entity lead ${mult}x") {
       // 90% of purchases on ONE user: the exact lead window funnels the
       // mega entity's whole history into one task; the bucketed form
       // leads within (user, hour-bucket) + the broadcast carry and must
       // stay near the corpus scan. Printed pair: bucketed vs exact.
-      val mega = bigEv.filter(col("event_type") === "purchase")
+      val mega = Checkpoint(bigEv.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("ts"),
           when(col("event_id") % 10 =!= 0, lit(1L))
-            .otherwise(col("user_id")).as("user_id"))
-        .localCheckpoint(true)
+            .otherwise(col("user_id")).as("user_id")))
       val t0 = System.nanoTime()
       val nB = graft.ops.Intervals.ingestionIntervalsScalable(mega,
         Seq("user_id"), "ts", "event_id", bucketWidthMs = 3600000L).count()
@@ -645,27 +635,24 @@ object ScaleProbe {
         Seq("user_id"), "ts", "event_id").count()
       println(f"SCALE   j2b bucketed $tB%.2f s ($nB rows) vs exact " +
         f"window ${(System.nanoTime() - t1) / 1e9}%.2f s ($nE rows)")
-      org.apache.spark.sql.graftbridge.Bridge.release(mega)
       nB
     }
-    t(s"j2b high-card carry join ${mult}x") {
+    ts(s"j2b high-card carry join ${mult}x") {
       // the OTHER j2b regime: ~10^5 distinct (instance, table)-like
       // keys, so the carry frame is one row per (key, hour-bucket) —
       // corpus-bounded, far past any broadcast threshold. With the
       // forced broadcast removed this must stay flat: the carry join
       // is a plain equi-join co-partitioned with the in-bucket lead's
       // own shuffle (Redset's real key shape at the 100 TB point).
-      val wide = bigEv
+      val wide = Checkpoint(bigEv
         .select(col("event_id"), col("ts"),
-          (col("event_id") % 100000L).as("user_id"))
-        .localCheckpoint(true)
+          (col("event_id") % 100000L).as("user_id")))
       val keys = wide.select(col("user_id")).distinct().count()
       val t0 = System.nanoTime()
       val nB = graft.ops.Intervals.ingestionIntervalsScalable(wide,
         Seq("user_id"), "ts", "event_id", bucketWidthMs = 3600000L).count()
       println(f"SCALE   j2b high-card ${(System.nanoTime() - t0) / 1e9}%.2f s " +
         f"($nB rows, $keys keys)")
-      org.apache.spark.sql.graftbridge.Bridge.release(wide)
       nB
     }
     t(s"st5 ewma streaming ${mult}x") {
@@ -709,15 +696,14 @@ object ScaleProbe {
       } finally q.stop()
       base.length.toLong * rep * 2
     }
-    t(s"c34b mega-language ccnet ${mult}x") {
+    ts(s"c34b mega-language ccnet ${mult}x") {
       // 90% of documents in ONE language (English is half the web):
       // the exact ntile(3) funnels the mega language into one task;
       // the quota reformulation exact-ranks only the boundary score
       // bucket. Printed pair: quota form vs exact ntile.
-      val mega = big.select(col("doc_id"), col("text"),
+      val mega = Checkpoint(big.select(col("doc_id"), col("text"),
         when(col("doc_id") % 10 =!= 0, lit("mega"))
-          .otherwise(col("lang")).as("lang"))
-        .localCheckpoint(true)
+          .otherwise(col("lang")).as("lang")))
       val t0 = System.nanoTime()
       val nS = graft.text.TextAnalysis.ccnetKeepIdsScalable(mega,
         col("text"), col("doc_id"), col("lang")).count()
@@ -727,7 +713,6 @@ object ScaleProbe {
         col("doc_id"), col("lang")).count()
       println(f"SCALE   c34b quota form $tS%.2f s ($nS kept) vs exact " +
         f"ntile ${(System.nanoTime() - t1) / 1e9}%.2f s ($nE kept)")
-      org.apache.spark.sql.graftbridge.Bridge.release(mega)
       nS
     }
     t(s"sk1b kmv aggregator ${mult}x") {
@@ -796,8 +781,8 @@ object ScaleProbe {
       graft.ops.PageRank.ranks(edges, iters = 3).count()
     }
     t(s"sk4 ams f2 ${mult}x") {
-      val u = bigEv.groupBy(col("user_id"))
-        .agg(count(lit(1)).cast("long").as("cnt")).localCheckpoint(true)
+      val u = Checkpoint(bigEv.groupBy(col("user_id"))
+        .agg(count(lit(1)).cast("long").as("cnt")))
       val sgn = u.select(col("user_id"), col("cnt"),
           explode(sequence(lit(0), lit(63))).as("j"))
         .withColumn("s",
@@ -992,7 +977,7 @@ object ScaleProbe {
       graft.text.TextAnalysis.vocabGrowth(big, col("text"), col("doc_id"),
         nBuckets = 10).count()
     }
-    t(s"c25 perceptron train ${mult}x") {
+    ts(s"c25 perceptron train ${mult}x") {
       // corpus pass (feature build) + 4 iterations over the cached
       // doc_id-partitioned frame; iteration cost should track corpus
       // rows with NO extra exchanges (scoring rides the partitioning)
@@ -1000,7 +985,6 @@ object ScaleProbe {
         col("doc_id"), when(col("lang") === "en", lit(1)).otherwise(lit(-1)),
         dims = 64)
       val (w, trace) = graft.text.Perceptron.train(feats, k = 4, dims = 64)
-      org.apache.spark.sql.graftbridge.Bridge.release(feats)
       trace.map(_._2).sum + w.size.toLong
     }
     t(s"c29 gopher panel ${mult}x") {
@@ -1044,7 +1028,7 @@ object ScaleProbe {
       // LM token groupBy dominates and must stay corpus-linear
       graft.curation.Curation.publishedFunnel(big).count()
     }
-    t(s"c36 gains table ${mult}x") {
+    ts(s"c36 gains table ${mult}x") {
       // isolates the c36 plan (scoring pass + histogram + two windows
       // over the post-reduction distinct scores) under FIXED weights —
       // no training confound; must track the c32 scoring increment
@@ -1054,10 +1038,9 @@ object ScaleProbe {
       val fixed = (0 until 64).map(d => d -> ((d % 7) - 3).toLong).toMap +
         (-1 -> 0L)
       val n = graft.text.Perceptron.gainsTable(feats, fixed).count()
-      org.apache.spark.sql.graftbridge.Bridge.release(feats)
       n
     }
-    t(s"c32 roc auc ${mult}x") {
+    ts(s"c32 roc auc ${mult}x") {
       // scoring pass over the feature frame + score histogram; the
       // global cumsum runs over distinct INTEGER scores (post-reduction)
       val feats = graft.text.Perceptron.features(big, col("text"),
@@ -1065,7 +1048,6 @@ object ScaleProbe {
         dims = 64)
       val (w, _) = graft.text.Perceptron.train(feats, k = 4, dims = 64)
       val n = graft.text.Perceptron.rocAuc(feats, w).count()
-      org.apache.spark.sql.graftbridge.Bridge.release(feats)
       n
     }
     t(s"c42-44 diff/compact/apply ${mult}x") {
@@ -1222,7 +1204,7 @@ object ScaleProbe {
       println(f"SCALE   c66 feed 0->5 (5 logs)    ${(System.nanoTime() - tF) / 1e9}%.2f s ($nf net rows)")
       n
     }
-    t(s"c53 maintained audit ${mult}x") {
+    ts(s"c53 maintained audit ${mult}x") {
       // the c49 scale note closed: the direct audit recomputes the OLD
       // corpus' distinct signatures per audit (a corpus-scale text scan
       // + distinct); the maintained store pre-reduces them once and the
@@ -1238,14 +1220,13 @@ object ScaleProbe {
       Curation.sigStoreApplyBatch(
         Curation.corpusDiffFull(old.limit(0), old), sigDir, 0L,
         nBuckets = 256)
-      val refresh = Curation.corpusDiffFull(old, snapB).localCheckpoint(true)
+      val refresh = Checkpoint(Curation.corpusDiffFull(old, snapB))
       val tD = System.nanoTime()
       Curation.refreshAudit(old, snapB).count()
       println(f"SCALE   c53 direct audit          ${(System.nanoTime() - tD) / 1e9}%.2f s")
       val tM = System.nanoTime()
       val n = Curation.refreshAuditMaintained(refresh, sigDir).count()
       println(f"SCALE   c53 maintained audit      ${(System.nanoTime() - tM) / 1e9}%.2f s")
-      org.apache.spark.sql.graftbridge.Bridge.release(refresh)
       n
     }
     t(s"c54b sig compaction cadence ${mult}x") {
@@ -1268,15 +1249,14 @@ object ScaleProbe {
         .select(col("doc_id"), lit("changed").as("status"),
           col("text").as("old_text"),
           concat(col("text"), lit(s" c$r")).as("new_text"))
-      (1 to 24).foreach { r =>
-        val log = churn(r).localCheckpoint(true)
+      for (r <- 1 to 24) Checkpoint.scope {
+        val log = Checkpoint(churn(r))
         Curation.sigStoreApplyBatch(log, dirA, r.toLong, nBuckets = 64)
         Curation.sigStoreApplyBatch(log, dirB, r.toLong, nBuckets = 64)
         if ((r + 1) % 8 == 0)
           Curation.compactCountedStore(spark, dirB,
             Curation.sigStoreStagedSchema, committedThrough = r - 1L,
             owner = "scale_probe")
-        org.apache.spark.sql.graftbridge.Bridge.release(log)
       }
       def batchDirs(d: String) = {
         val p = new org.apache.hadoop.fs.Path(d)
@@ -1294,7 +1274,7 @@ object ScaleProbe {
       println(f"SCALE   c54b read, compacted      ${(System.nanoTime() - tB) / 1e9}%.2f s (${batchDirs(dirB)} dirs)")
       n
     }
-    t(s"c61 isolated store ${mult}x") {
+    ts(s"c61 isolated store ${mult}x") {
       // reader isolation priced against the in-place store: the SAME
       // bootstrap + churn fold through snapshotApplyBatch (in-place
       // dynamic overwrite) and snapshotApplyBatchIsolated (own gen dir
@@ -1303,13 +1283,12 @@ object ScaleProbe {
       // not a different fold shape.
       val bootstrap = big.select(col("doc_id"), lit("added").as("status"),
         col("text"))
-      val churn = big
+      val churn = Checkpoint(big
         .filter(pmod(xxhash64(col("doc_id")), lit(97L)) === 0)
         .select(col("doc_id"),
           when(col("doc_id") % 2 === 0, lit("changed"))
             .otherwise(lit("removed")).as("status"),
-          concat(col("text"), lit(" u")).as("text"))
-        .localCheckpoint(true)
+          concat(col("text"), lit(" u")).as("text")))
       val baseA = Drives.tempDir("probe_iso_a")
       val baseB = Drives.tempDir("probe_iso_b")
       Curation.snapshotApplyBatch(bootstrap, s"$baseA/snap", nBuckets = 256)
@@ -1322,7 +1301,6 @@ object ScaleProbe {
       Curation.snapshotApplyBatchIsolated(churn, s"$baseB/store", 1L,
         nBuckets = 256)
       println(f"SCALE   c61 isolated fold         ${(System.nanoTime() - tB) / 1e9}%.2f s")
-      org.apache.spark.sql.graftbridge.Bridge.release(churn)
       val tR = System.nanoTime()
       val n = Curation.readSnapshotCommitted(spark, s"$baseB/store").count()
       println(f"SCALE   c61 committed read        ${(System.nanoTime() - tR) / 1e9}%.2f s")
@@ -1339,7 +1317,7 @@ object ScaleProbe {
       Curation.refreshAudit(big.select(col("doc_id"), col("text")),
         snapB).count()
     }
-    t(s"c63 isolated growth loop ${mult}x") {
+    ts(s"c63 isolated growth loop ${mult}x") {
       // the maintained-isolated ingest's loop body priced head-on: the
       // dual-id sequence (migration 2·bid, fold 2·bid+1) driven exactly
       // as snapshotIngestMaintainedIsolated drives it — bootstrap at 64
@@ -1350,11 +1328,10 @@ object ScaleProbe {
       // corpus-scale step; folds stay O(touched buckets).
       val base = Drives.tempDir("probe_iso_growth")
       val store = s"$base/store"
-      def churn(r: Int) = big
+      def churn(r: Int) = Checkpoint(big
         .filter(pmod(xxhash64(col("doc_id")), lit(211L)) === r)
         .select(col("doc_id"), lit("changed").as("status"),
-          concat(col("text"), lit(s" g$r")).as("text"))
-        .localCheckpoint(true)
+          concat(col("text"), lit(s" g$r")).as("text")))
       Curation.snapshotApplyBatchIsolated(
         big.select(col("doc_id"), lit("added").as("status"), col("text")),
         store, 1L, nBuckets = 64) // batch 0's fold (manifest 2·0+1)
@@ -1370,14 +1347,13 @@ object ScaleProbe {
       val tG = System.nanoTime()
       Curation.snapshotApplyBatchIsolated(c2, store, 5L, nBuckets = grown)
       println(f"SCALE   c63 fold @$grown%-4d           ${(System.nanoTime() - tG) / 1e9}%.2f s")
-      Seq(c1, c2).foreach(org.apache.spark.sql.graftbridge.Bridge.release)
       Curation.pruneSnapshotGens(spark, store, retainManifests = 2)
       val tR = System.nanoTime()
       val n = Curation.readSnapshotCommitted(spark, store).count()
       println(f"SCALE   c63 committed read       ${(System.nanoTime() - tR) / 1e9}%.2f s")
       n
     }
-    t(s"c65 committed sig store ${mult}x") {
+    ts(s"c65 committed sig store ${mult}x") {
       // the manifest-committed sig store priced against the in-place
       // store: the SAME bootstrap + 8 churn folds into both, then each
       // store's own compaction (stage-and-swap vs segment-merge commit)
@@ -1388,21 +1364,19 @@ object ScaleProbe {
       val old = big.select(col("doc_id"), col("text"))
       val root = Drives.tempDir("probe_csig")
       val dirA = s"$root/inplace"; val dirB = s"$root/committed"
-      val boot = Curation.corpusDiffFull(old.limit(0), old)
-        .localCheckpoint(true)
+      val boot = Checkpoint(Curation.corpusDiffFull(old.limit(0), old))
       Curation.sigStoreApplyBatch(boot, dirA, 0L, nBuckets = 64)
       val tB0 = System.nanoTime()
       Curation.sigStoreApplyBatchCommitted(boot, dirB, 0L, nBuckets = 64)
       println(f"SCALE   c65 committed bootstrap  ${(System.nanoTime() - tB0) / 1e9}%.2f s")
-      org.apache.spark.sql.graftbridge.Bridge.release(boot)
       def churn(r: Int) = big
         .filter(pmod(col("doc_id"), lit(211L)) === r)
         .select(col("doc_id"), lit("changed").as("status"),
           col("text").as("old_text"),
           concat(col("text"), lit(s" s$r")).as("new_text"))
       var tIn = 0L; var tC = 0L
-      (1 to 8).foreach { r =>
-        val log = churn(r).localCheckpoint(true)
+      for (r <- 1 to 8) Checkpoint.scope {
+        val log = Checkpoint(churn(r))
         val t0 = System.nanoTime()
         Curation.sigStoreApplyBatch(log, dirA, r.toLong, nBuckets = 64)
         tIn += System.nanoTime() - t0
@@ -1410,7 +1384,6 @@ object ScaleProbe {
         Curation.sigStoreApplyBatchCommitted(log, dirB, r.toLong,
           nBuckets = 64)
         tC += System.nanoTime() - t1
-        org.apache.spark.sql.graftbridge.Bridge.release(log)
       }
       println(f"SCALE   c65 8 folds in-place     ${tIn / 1e9}%.2f s")
       println(f"SCALE   c65 8 folds committed    ${tC / 1e9}%.2f s")

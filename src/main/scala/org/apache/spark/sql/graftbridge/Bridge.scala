@@ -40,29 +40,4 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.createOrReplaceTempFunction(
         name, builder, "built-in")
-
-  /** The persisted RDD backing a `localCheckpoint(true)`-ed frame, if this
-    * frame IS such a checkpoint (its analyzed plan is the bare LogicalRDD).
-    */
-  private def checkpointRdd(df: org.apache.spark.sql.Dataset[_])
-      : Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-      case _ => None
-    }
-
-  /** True iff the frame is already a materialized checkpoint — callers use
-    * this to skip a redundant second `localCheckpoint`.
-    */
-  def isMaterialized(df: org.apache.spark.sql.Dataset[_]): Boolean =
-    checkpointRdd(df).isDefined
-
-  /** Release the storage blocks behind a checkpointed frame once it is dead
-    * (checkpoint-lifecycle hygiene: in a long-lived session orphaned blocks
-    * accumulate otherwise). No-op on non-checkpoint frames. The frame must
-    * not be used afterwards — local checkpoints have no lineage to recompute
-    * from.
-    */
-  def release(df: org.apache.spark.sql.Dataset[_]): Unit =
-    checkpointRdd(df).foreach(_.unpersist(blocking = false))
 }

@@ -39,22 +39,23 @@ class BpeTrainSpec extends AnyFunSuite {
     val corpus = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
       Seq.fill(6)("newest") ++ Seq.fill(3)("widest")).mkString(" ")
     val words = BpeTrain.wordFreq(Seq(corpus).toDF("text"), col("text"))
-    val (merges, vocab) = BpeTrain.trainMerges(words, 4)
-    // Hand-run: pair counts round 1 — (e,s)=9, (s,t)=9, (w,e)=8, (l,o)=7,
-    // (o,w)=7, ... tie (e,s)/(s,t) broken lexicographically -> (e,s).
-    // Round 2: (es,t)=9 wins. Round 3: (w,est)=8? no — after es,t merge:
-    // newest = n|e|w|est, widest = w|i|d|est: (w,est)=6, (d,est)=3,
-    // (l,o)=7, (o,w)=7 -> tie (l,o)/(o,w) -> (l,o) wins lex. Round 4:
-    // (lo,w)=7.
-    assert(merges.map(m => (m.step, m.lft, m.rgt, m.c)) == Seq(
-      (1, "e", "s", 9L), (2, "es", "t", 9L), (3, "l", "o", 7L),
-      (4, "lo", "w", 7L)))
-    val vocabMap = vocab.select("word", "syms").as[(String, String)]
-      .collect().toMap
-    assert(vocabMap == Map(
-      "low" -> "low", "lower" -> "low|e|r", "newest" -> "n|e|w|est",
-      "widest" -> "w|i|d|est"))
-    org.apache.spark.sql.graftbridge.Bridge.release(vocab)
+    Checkpoint.scope {
+      val (merges, vocab) = BpeTrain.trainMerges(words, 4)
+      // Hand-run: pair counts round 1 — (e,s)=9, (s,t)=9, (w,e)=8, (l,o)=7,
+      // (o,w)=7, ... tie (e,s)/(s,t) broken lexicographically -> (e,s).
+      // Round 2: (es,t)=9 wins. Round 3: (w,est)=8? no — after es,t merge:
+      // newest = n|e|w|est, widest = w|i|d|est: (w,est)=6, (d,est)=3,
+      // (l,o)=7, (o,w)=7 -> tie (l,o)/(o,w) -> (l,o) wins lex. Round 4:
+      // (lo,w)=7.
+      assert(merges.map(m => (m.step, m.lft, m.rgt, m.c)) == Seq(
+        (1, "e", "s", 9L), (2, "es", "t", 9L), (3, "l", "o", 7L),
+        (4, "lo", "w", 7L)))
+      val vocabMap = vocab.select("word", "syms").as[(String, String)]
+        .collect().toMap
+      assert(vocabMap == Map(
+        "low" -> "low", "lower" -> "low|e|r", "newest" -> "n|e|w|est",
+        "widest" -> "w|i|d|est"))
+    }
   }
 
   test("trainMerges: driver path equals the distributed loop on random corpora") {
@@ -65,10 +66,11 @@ class BpeTrainSpec extends AnyFunSuite {
           .mkString)
       val corpus = Seq.fill(120)(vocabWords(rnd.nextInt(30))).mkString(" ")
       val words = BpeTrain.wordFreq(Seq(corpus).toDF("text"), col("text"))
-      val (mD, vD) = BpeTrain.trainMergesDistributed(words, 5)
-      val distVocab = vD.select("word", "syms", "cnt")
-        .as[(String, String, Long)].collect().sorted.toSeq
-      org.apache.spark.sql.graftbridge.Bridge.release(vD)
+      val (mD, distVocab) = Checkpoint.scope {
+        val (m, v) = BpeTrain.trainMergesDistributed(words, 5)
+        (m, v.select("word", "syms", "cnt")
+          .as[(String, String, Long)].collect().sorted.toSeq)
+      }
       val (mL, vL) = BpeTrain.trainMerges(words, 5)
       val localVocab = vL.select("word", "syms", "cnt")
         .as[(String, String, Long)].collect().sorted.toSeq
@@ -80,11 +82,12 @@ class BpeTrainSpec extends AnyFunSuite {
   test("trainMerges runs dry gracefully when pairs are exhausted") {
     // Single 2-char word: exactly one merge possible, then no pairs left.
     val words = BpeTrain.wordFreq(Seq("ab").toDF("text"), col("text"))
-    val (merges, vocab) = BpeTrain.trainMerges(words, 10)
-    assert(merges.map(m => (m.lft, m.rgt, m.c)) == Seq(("a", "b", 1L)))
-    assert(vocab.as[(String, String, Long)].collect().toSeq ==
-      Seq(("ab", "ab", 1L)))
-    org.apache.spark.sql.graftbridge.Bridge.release(vocab)
+    Checkpoint.scope {
+      val (merges, vocab) = BpeTrain.trainMerges(words, 10)
+      assert(merges.map(m => (m.lft, m.rgt, m.c)) == Seq(("a", "b", 1L)))
+      assert(vocab.as[(String, String, Long)].collect().toSeq ==
+        Seq(("ab", "ab", 1L)))
+    }
   }
 
   test("tokenCounts: trained-vocab lookup counts per document") {
@@ -235,11 +238,12 @@ class BpeTrainSpec extends AnyFunSuite {
       .map(i => (i, (1 to 1 + rnd.nextInt(12)).map(_ => word())
         .mkString(" ")))
       .toDF("doc_id", "text")
-    val (_, vocab) = BpeTrain.trainMerges(
-      BpeTrain.wordFreq(docs, col("text")), k = 6)
-    val bad = BpeTrain.detokenize(docs, col("text"), col("doc_id"), vocab)
-      .filter(!col("roundtrip_ok")).count()
-    assert(bad == 0L)
-    org.apache.spark.sql.graftbridge.Bridge.release(vocab)
+    Checkpoint.scope {
+      val (_, vocab) = BpeTrain.trainMerges(
+        BpeTrain.wordFreq(docs, col("text")), k = 6)
+      val bad = BpeTrain.detokenize(docs, col("text"), col("doc_id"), vocab)
+        .filter(!col("roundtrip_ok")).count()
+      assert(bad == 0L)
+    }
   }
 }

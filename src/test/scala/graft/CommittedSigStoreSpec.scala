@@ -46,12 +46,13 @@ class CommittedSigStoreSpec extends AnyFunSuite {
     val pIn = s"$base/inplace"; val pC = s"$base/committed"
     Seq(0L -> full(snapA.limit(0), snapA), 1L -> full(snapA, snapB),
       2L -> full(snapB, snapC)).foreach { case (bid, log) =>
-      val l = log.localCheckpoint(true)
-      Curation.sigStoreApplyBatch(l, pIn, bid, nBuckets = 4)
-      Curation.sigStoreApplyBatchCommitted(l, pC, bid, nBuckets = 4)
-      assert(census(pC) == Curation.readSigStore(spark, pIn)
-        .as[(String, Long)].collect().toMap, s"batch $bid diverged")
-      org.apache.spark.sql.graftbridge.Bridge.release(l)
+      Checkpoint.scope {
+        val l = Checkpoint(log)
+        Curation.sigStoreApplyBatch(l, pIn, bid, nBuckets = 4)
+        Curation.sigStoreApplyBatchCommitted(l, pC, bid, nBuckets = 4)
+        assert(census(pC) == Curation.readSigStore(spark, pIn)
+          .as[(String, Long)].collect().toMap, s"batch $bid diverged")
+      }
     }
   }
 
@@ -199,18 +200,19 @@ class CommittedSigStoreSpec extends AnyFunSuite {
   test("refreshAuditMaintainedCommitted equals the direct audit and the in-place maintained audit") {
     val base = graft.queries.Drives.tempDir("graft_csig_audit")
     val pIn = s"$base/inplace"; val pC = s"$base/committed"
-    val boot = full(snapA.limit(0), snapA).localCheckpoint(true)
-    val refresh = full(snapA, snapB).localCheckpoint(true)
-    Curation.sigStoreApplyBatch(boot, pIn, 0L, nBuckets = 4)
-    Curation.sigStoreApplyBatchCommitted(boot, pC, 0L, nBuckets = 4)
-    val direct = Curation.refreshAudit(snapA, snapB)
-      .as[(String, Long)].collect().toSeq
-    val maintained = Curation.refreshAuditMaintained(refresh, pIn)
-      .as[(String, Long)].collect().toSeq
-    val committed = Curation.refreshAuditMaintainedCommitted(refresh, pC)
-      .as[(String, Long)].collect().toSeq
-    assert(committed == direct, "committed audit != direct audit")
-    assert(committed == maintained, "committed audit != maintained audit")
-    Seq(boot, refresh).foreach(org.apache.spark.sql.graftbridge.Bridge.release)
+    Checkpoint.scope {
+      val boot = Checkpoint(full(snapA.limit(0), snapA))
+      val refresh = Checkpoint(full(snapA, snapB))
+      Curation.sigStoreApplyBatch(boot, pIn, 0L, nBuckets = 4)
+      Curation.sigStoreApplyBatchCommitted(boot, pC, 0L, nBuckets = 4)
+      val direct = Curation.refreshAudit(snapA, snapB)
+        .as[(String, Long)].collect().toSeq
+      val maintained = Curation.refreshAuditMaintained(refresh, pIn)
+        .as[(String, Long)].collect().toSeq
+      val committed = Curation.refreshAuditMaintainedCommitted(refresh, pC)
+        .as[(String, Long)].collect().toSeq
+      assert(committed == direct, "committed audit != direct audit")
+      assert(committed == maintained, "committed audit != maintained audit")
+    }
   }
 }

@@ -172,32 +172,33 @@ class DedupSpec extends AnyFunSuite {
       val toks = (0 until 8).map(j => s"t${(base / 3) * 2 + j}")
       (i, toks.mkString(" "))
     }.toDF("doc_id", "text")
-    val labels = Dedup.tripleClusterLabels(corpus, col("text"),
-      col("doc_id"), threshold = 0.9, numHashes = 16, bands = 2,
-      nBits = 24, maxDist = 2)
-    val report = Dedup.dedupAuditReport(labels)
-    def h(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(h(report.histExact) == h(Dedup.nearDupClusterHistogram(corpus,
-      col("text"), col("doc_id"), 0.9)))
-    assert(h(report.histLsh) == h(Dedup.lshClusterHistogram(corpus,
-      col("text"), col("doc_id"), numHashes = 16, bands = 2)))
-    // sc histogram against an INDEPENDENT composition: components over
-    // the verified banded Hamming pairs (no rep collapse on this side)
-    assert(h(report.histSimHash) == h(Dedup.clusterHistogramFromEdges(
-      corpus.select(col("doc_id")),
-      Dedup.simHashNearPairsPortable(corpus, col("text"), col("doc_id"),
-        nBits = 24, maxDist = 2))))
-    assert(report.agreementLsh.collect().map(_.toSeq).toSeq ==
-      Dedup.lshDedupAgreement(corpus, col("text"), col("doc_id"),
-        threshold = 0.9, numHashes = 16, bands = 2)
-        .collect().map(_.toSeq).toSeq)
-    assert(report.agreementSimHash.collect().map(_.toSeq).toSeq ==
-      Dedup.simHashDedupAgreement(corpus, col("text"), col("doc_id"),
-        threshold = 0.9, nBits = 24, maxDist = 2)
-        .collect().map(_.toSeq).toSeq)
-    report.release()
-    org.apache.spark.sql.graftbridge.Bridge.release(labels)
+    // the report's cube lives in this scope, freed with the labels at exit
+    Checkpoint.scope {
+      val labels = Dedup.tripleClusterLabels(corpus, col("text"),
+        col("doc_id"), threshold = 0.9, numHashes = 16, bands = 2,
+        nBits = 24, maxDist = 2)
+      val report = Dedup.dedupAuditReport(labels)
+      def h(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(h(report.histExact) == h(Dedup.nearDupClusterHistogram(corpus,
+        col("text"), col("doc_id"), 0.9)))
+      assert(h(report.histLsh) == h(Dedup.lshClusterHistogram(corpus,
+        col("text"), col("doc_id"), numHashes = 16, bands = 2)))
+      // sc histogram against an INDEPENDENT composition: components over
+      // the verified banded Hamming pairs (no rep collapse on this side)
+      assert(h(report.histSimHash) == h(Dedup.clusterHistogramFromEdges(
+        corpus.select(col("doc_id")),
+        Dedup.simHashNearPairsPortable(corpus, col("text"), col("doc_id"),
+          nBits = 24, maxDist = 2))))
+      assert(report.agreementLsh.collect().map(_.toSeq).toSeq ==
+        Dedup.lshDedupAgreement(corpus, col("text"), col("doc_id"),
+          threshold = 0.9, numHashes = 16, bands = 2)
+          .collect().map(_.toSeq).toSeq)
+      assert(report.agreementSimHash.collect().map(_.toSeq).toSeq ==
+        Dedup.simHashDedupAgreement(corpus, col("text"), col("doc_id"),
+          threshold = 0.9, nBits = 24, maxDist = 2)
+          .collect().map(_.toSeq).toSeq)
+    }
   }
 
   test("keepOneFromLabels: rows missing from a stale snapshot survive as singletons") {

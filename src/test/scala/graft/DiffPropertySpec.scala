@@ -111,11 +111,10 @@ class DiffPropertySpec extends AnyFunSuite {
   }
 
   test("catch-up fold, sig store and maintained audit track random 4-chains (3 seeds)") {
-    for (seed <- 30L to 32L) {
+    for (seed <- 30L to 32L) Checkpoint.scope {
       val universe = 40
-      val snaps = (0 to 3).map(k =>
-        snapshot(seed * 15485863L + k * 31L, universe).toDF("doc_id", "text")
-          .localCheckpoint(true))
+      val snaps = (0 to 3).map(k => Checkpoint(
+        snapshot(seed * 15485863L + k * 31L, universe).toDF("doc_id", "text")))
       val chain = snaps.head.limit(0) +: snaps
       // 1. snapshotCatchUp over the whole backlog lands on the LAST
       //    snapshot (N-log compaction fold, not just the 2-log case)
@@ -152,7 +151,6 @@ class DiffPropertySpec extends AnyFunSuite {
       assert(Curation.readSigStore(spark, sigPath)
         .as[(String, Long)].collect().toMap == directCensus(asSet(snaps(3))),
         s"seed=$seed sig store at D != direct census")
-      snaps.foreach(org.apache.spark.sql.graftbridge.Bridge.release)
     }
   }
 
@@ -163,11 +161,10 @@ class DiffPropertySpec extends AnyFunSuite {
     // must land on its shipped-prefix state, and the sig store must
     // census the head exactly — quarantine correctness under chains
     // nobody designed.
-    for (seed <- 50L to 52L) {
+    for (seed <- 50L to 52L) Checkpoint.scope {
       val universe = 40
-      val snaps = (0 to 4).map(k =>
-        snapshot(seed * 49979687L + k * 31L, universe).toDF("doc_id", "text")
-          .localCheckpoint(true))
+      val snaps = (0 to 4).map(k => Checkpoint(
+        snapshot(seed * 49979687L + k * 31L, universe).toDF("doc_id", "text")))
       val base = graft.queries.Drives.tempDir("graft_mv_prop")
       val rules = Seq("id_not_null" -> col("doc_id").isNotNull)
       val census = Seq("removed_max_30pct" ->
@@ -205,7 +202,6 @@ class DiffPropertySpec extends AnyFunSuite {
           v.toLong)) == expectedByVersion(v.toLong),
           s"seed=$seed asOf=$v diverged")
       }
-      snaps.foreach(org.apache.spark.sql.graftbridge.Bridge.release)
     }
   }
 
@@ -213,27 +209,24 @@ class DiffPropertySpec extends AnyFunSuite {
     // the reader-isolated manifest store must land on the identical
     // corpus as the in-place bucket store after EVERY hop of chains
     // nobody designed — same fold semantics, different commit protocol.
-    for (seed <- 60L to 62L) {
+    for (seed <- 60L to 62L) Checkpoint.scope {
       val universe = 40
-      val snaps = (0 to 3).map(k =>
-        snapshot(seed * 27644437L + k * 31L, universe).toDF("doc_id", "text")
-          .localCheckpoint(true))
+      val snaps = (0 to 3).map(k => Checkpoint(
+        snapshot(seed * 27644437L + k * 31L, universe).toDF("doc_id", "text")))
       val base = graft.queries.Drives.tempDir("graft_iso_prop")
       val pIn = s"$base/snap"; val pIso = s"$base/store"
       (snaps.head.limit(0) +: snaps).sliding(2).zipWithIndex.foreach {
         case (Seq(a, b), v) =>
-          val log = cl(a, b).localCheckpoint(true)
+          val log = Checkpoint(cl(a, b))
           Curation.snapshotApplyBatch(log, pIn, nBuckets = 4)
           Curation.snapshotApplyBatchIsolated(log, pIso, v.toLong,
             nBuckets = 4)
           assert(asSet(Curation.readSnapshotCommitted(spark, pIso))
             == asSet(Curation.readSnapshot(spark, pIn)),
             s"seed=$seed hop=$v stores diverged")
-          org.apache.spark.sql.graftbridge.Bridge.release(log)
       }
       assert(asSet(Curation.readSnapshotCommitted(spark, pIso))
         == asSet(snaps(3)), s"seed=$seed final != direct D")
-      snaps.foreach(org.apache.spark.sql.graftbridge.Bridge.release)
     }
   }
 
@@ -244,11 +237,10 @@ class DiffPropertySpec extends AnyFunSuite {
     // shipped hops after EVERY hop (not just at the end: a refused
     // batch must leave no manifest), and the sig store must census the
     // head exactly.
-    for (seed <- 70L to 72L) {
+    for (seed <- 70L to 72L) Checkpoint.scope {
       val universe = 40
-      val snaps = (0 to 4).map(k =>
-        snapshot(seed * 15485863L + k * 31L, universe).toDF("doc_id", "text")
-          .localCheckpoint(true))
+      val snaps = (0 to 4).map(k => Checkpoint(
+        snapshot(seed * 15485863L + k * 31L, universe).toDF("doc_id", "text")))
       val base = graft.queries.Drives.tempDir("graft_mi_prop")
       val rules = Seq("id_not_null" -> col("doc_id").isNotNull)
       val census = Seq("removed_max_30pct" ->
@@ -275,7 +267,6 @@ class DiffPropertySpec extends AnyFunSuite {
       assert(Curation.readSigStoreCommitted(spark, s"$base/sig")
         .as[(String, Long)].collect().toMap == expCensus,
         s"seed=$seed sig census diverged")
-      snaps.foreach(org.apache.spark.sql.graftbridge.Bridge.release)
     }
   }
 
@@ -286,11 +277,10 @@ class DiffPropertySpec extends AnyFunSuite {
     // committed head must track the shipped fold after EVERY hop, and
     // every as-of read must land on its shipped-prefix state through
     // readSnapshotAsOfCommitted's manifest-capped walk-back.
-    for (seed <- 80L to 82L) {
+    for (seed <- 80L to 82L) Checkpoint.scope {
       val universe = 40
-      val snaps = (0 to 4).map(k =>
-        snapshot(seed * 86028121L + k * 31L, universe).toDF("doc_id", "text")
-          .localCheckpoint(true))
+      val snaps = (0 to 4).map(k => Checkpoint(
+        snapshot(seed * 86028121L + k * 31L, universe).toDF("doc_id", "text")))
       val base = graft.queries.Drives.tempDir("graft_vi_prop")
       val rules = Seq("id_not_null" -> col("doc_id").isNotNull)
       val census = Seq("removed_max_30pct" ->
@@ -325,7 +315,6 @@ class DiffPropertySpec extends AnyFunSuite {
       assert(Curation.readSigStoreCommitted(spark, s"$base/sig")
         .as[(String, Long)].collect().toMap == expCensus,
         s"seed=$seed sig census diverged")
-      snaps.foreach(org.apache.spark.sql.graftbridge.Bridge.release)
     }
   }
 
@@ -335,11 +324,10 @@ class DiffPropertySpec extends AnyFunSuite {
     // the endpoint snapshots (net churn only, removed-then-re-added-
     // identical docs normalized away) — the O(churn) catch-up feed
     // proven against the O(corpus) diff it replaces.
-    for (seed <- 90L to 92L) {
+    for (seed <- 90L to 92L) Checkpoint.scope {
       val universe = 40
-      val snaps = (0 to 3).map(k =>
-        snapshot(seed * 67867967L + k * 31L, universe).toDF("doc_id", "text")
-          .localCheckpoint(true))
+      val snaps = (0 to 3).map(k => Checkpoint(
+        snapshot(seed * 67867967L + k * 31L, universe).toDF("doc_id", "text")))
       val base = graft.queries.Drives.tempDir("graft_cbv_prop")
       (snaps.head.limit(0) +: snaps).sliding(2).zipWithIndex.foreach {
         case (Seq(a, b), v) =>
@@ -358,16 +346,14 @@ class DiffPropertySpec extends AnyFunSuite {
           .filter(col("status") =!= "unchanged"))
         assert(got == expect, s"seed=$seed $from->$to feed diverged")
       }
-      snaps.foreach(org.apache.spark.sql.graftbridge.Bridge.release)
     }
   }
 
   test("time travel reconstructs every version of random 4-chains (3 seeds)") {
-    for (seed <- 40L to 42L) {
+    for (seed <- 40L to 42L) Checkpoint.scope {
       val universe = 40
-      val snaps = (0 to 3).map(k =>
-        snapshot(seed * 32452843L + k * 31L, universe).toDF("doc_id", "text")
-          .localCheckpoint(true))
+      val snaps = (0 to 3).map(k => Checkpoint(
+        snapshot(seed * 32452843L + k * 31L, universe).toDF("doc_id", "text")))
       val chain = snaps.head.limit(0) +: snaps
       val base = graft.queries.Drives.tempDir("graft_tt_prop")
       chain.sliding(2).zipWithIndex.foreach { case (Seq(a, b), v) =>
@@ -382,7 +368,6 @@ class DiffPropertySpec extends AnyFunSuite {
       }
       assert(Curation.readSnapshotAsOf(spark, base, -1L).count() == 0,
         s"seed=$seed pre-bootstrap corpus must be empty")
-      snaps.foreach(org.apache.spark.sql.graftbridge.Bridge.release)
     }
   }
 }

@@ -346,22 +346,34 @@ class DriverSolveSpec extends AnyFunSuite {
     assert(decision(Seq(Seq(1f, 2f), Seq(3f)).toDF("v"), "v").contains(2))
   }
 
-  test("DriverSolve releases a checkpointed frame on every exit, and only then") {
+  test("DriverSolve leaves a checkpointed frame to its caller's scope") {
     import spark.implicits._
     val sc = spark.sparkContext
     def live(df: DataFrame) = df.queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         sc.getPersistentRDDs.contains(l.rdd.id)
     }
-    val declined = Seq((1L, Option.empty[Long])).toDF("a", "b")
-      .localCheckpoint(true)
-    assert(decision(declined, "a", "b").isEmpty && live(declined))
-    val solved = Seq((1L, 2L)).toDF("a", "b").localCheckpoint(true)
-    assert(decision(solved, "a", "b").contains(1) && !live(solved))
-    val thrown = Seq((1L, 2L)).toDF("a", "b").localCheckpoint(true)
-    intercept[IllegalStateException] {
-      DriverSolve(thrown, Seq("a"))(_ => throw new IllegalStateException("x"))
+    // `use` runs on a checkpoint of `rows` inside a scope; the checkpoint
+    // is returned for the check at the scope's exit
+    def atExit(rows: DataFrame)(use: DataFrame => Any): DataFrame = {
+      var ck: DataFrame = null
+      try Checkpoint.scope { ck = Checkpoint(rows); use(ck); () }
+      catch { case _: IllegalStateException => }
+      ck
     }
-    assert(!live(thrown))
+    val declined = atExit(Seq((1L, Option.empty[Long])).toDF("a", "b")) { ck =>
+      assert(decision(ck, "a", "b").isEmpty && live(ck))
+    }
+    val solved = atExit(Seq((1L, 2L)).toDF("a", "b")) { ck =>
+      assert(decision(ck, "a", "b").contains(1) && live(ck))
+    }
+    var threw = false
+    val thrown = atExit(Seq((1L, 2L)).toDF("a", "b")) { ck =>
+      threw = true
+      DriverSolve(ck, Seq("a"))(_ => throw new IllegalStateException("x"))
+      threw = false
+    }
+    assert(threw)
+    Seq(declined, solved, thrown).foreach(ck => assert(!live(ck)))
   }
 }

@@ -229,6 +229,25 @@ class ExprSpec extends AnyFunSuite {
       .coverageKeptIndices(col("fs"), col("n"), 8)).head().isNullAt(0))
   }
 
+  test("interpreted set natives refuse unsorted or duplicated input") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
+    import graft.expr.{CoverageKeptIndices, SortedIntersectCount}
+    def longs(xs: Long*) = Literal.create(xs, ArrayType(LongType, false))
+    def ints(xs: Int*) = Literal.create(xs, ArrayType(IntegerType, false))
+    assert(SortedIntersectCount(longs(1L, 2L, 5L), longs(2L, 5L)).eval() == 2L)
+    intercept[IllegalArgumentException](
+      SortedIntersectCount(longs(3L, 1L), longs(1L, 2L)).eval())
+    intercept[IllegalArgumentException](
+      SortedIntersectCount(longs(1L, 2L), longs(2L, 2L)).eval())
+    def kept(starts: Literal, n: Int) = CoverageKeptIndices(starts,
+      Literal(n), 2).eval()
+      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      .toIntArray().toSeq
+    assert(kept(ints(2, 2), 4) == Seq(1, 4)) // repeated starts are sorted
+    intercept[IllegalArgumentException](kept(ints(4, 2), 5))
+  }
+
   test("graft_table_ids is SQL-callable, default and explicit sentinel") {
     graft.ext.GraftExtensions.register(spark)
     val got = spark.sql(

@@ -50,10 +50,9 @@ class QuotaPropertySpec extends AnyFunSuite {
     // genuinely mixes engaged and plain keys within one frame
     spark.conf.set("spark.graft.boundarySplit.rows", "20")
     try {
-      for (seed <- 1L to 12L) {
-        val df = corpus(seed * 977L)
-          .toDF("doc_id", "key", "n_tokens", "quality")
-          .localCheckpoint(true)
+      for (seed <- 1L to 12L) Checkpoint.scope {
+        val df = Checkpoint(corpus(seed * 977L)
+          .toDF("doc_id", "key", "n_tokens", "quality"))
         val n = (seed % 5).toInt * 13 // 0, 13, 26, 39, 52
         val exact = Curation.quotaPerKey(df, col("key"), n,
             Seq(col("quality").asc, col("doc_id")))
@@ -66,7 +65,6 @@ class QuotaPropertySpec extends AnyFunSuite {
             .select("doc_id").as[Long].collect().toSet
           assert(got == exact, s"seed=$seed n=$n w=$w split=$split")
         }
-        org.apache.spark.sql.graftbridge.Bridge.release(df)
       }
     } finally spark.conf.unset("spark.graft.boundarySplit.rows")
   }
@@ -74,10 +72,9 @@ class QuotaPropertySpec extends AnyFunSuite {
   test("tokenBudgetMixScalable ≡ window form on 12 random corpora × widths × split") {
     spark.conf.set("spark.graft.boundarySplit.rows", "20")
     try {
-      for (seed <- 1L to 12L) {
-        val df = corpus(seed * 1259L)
-          .toDF("doc_id", "key", "n_tokens", "quality")
-          .localCheckpoint(true)
+      for (seed <- 1L to 12L) Checkpoint.scope {
+        val df = Checkpoint(corpus(seed * 1259L)
+          .toDF("doc_id", "key", "n_tokens", "quality"))
         val budget = Seq(0L, 25L, 120L, 1000000L)((seed % 4).toInt)
         val exact = Curation.tokenBudgetMix(df, col("n_tokens"), col("key"),
             Seq(col("quality").asc, col("doc_id")), budget)
@@ -90,7 +87,6 @@ class QuotaPropertySpec extends AnyFunSuite {
             .select("doc_id", "cum_tokens").as[(Long, Long)].collect().toSet
           assert(got == exact, s"seed=$seed budget=$budget w=$w split=$split")
         }
-        org.apache.spark.sql.graftbridge.Bridge.release(df)
       }
     } finally spark.conf.unset("spark.graft.boundarySplit.rows")
   }
@@ -102,17 +98,17 @@ class QuotaPropertySpec extends AnyFunSuite {
     // must keep the single-level plan — both bit-identical to the window
     // form. The plan check keys on the second level's struct sub-bucket.
     spark.conf.set("spark.graft.boundarySplit.rows", "50")
-    try {
+    try Checkpoint.scope {
       // modal: one key, 90% of rows share quality 7 → with width 8 the
       // boundary bucket holds ~360 rows (> 50): engages.
-      val modal = (1 to 400).map { i =>
+      val modal = Checkpoint((1 to 400).map { i =>
         (i.toLong, "k0", 1L, Some(if (i % 10 != 3) 7L else i.toLong % 30L))
-      }.toDF("doc_id", "key", "n_tokens", "quality").localCheckpoint(true)
+      }.toDF("doc_id", "key", "n_tokens", "quality"))
       // uniform: 4 keys × 100 rows spread over qualities 0..999 → every
       // width-8 bucket holds ≤ a handful of rows: stays single-level.
-      val uniform = (1 to 400).map { i =>
+      val uniform = Checkpoint((1 to 400).map { i =>
         (i.toLong, s"k${i % 4}", 1L, Some(i.toLong * 31L % 1000L))
-      }.toDF("doc_id", "key", "n_tokens", "quality").localCheckpoint(true)
+      }.toDF("doc_id", "key", "n_tokens", "quality"))
       def run(df: org.apache.spark.sql.DataFrame, n: Int) =
         Curation.quotaPerKeyScalable(df, col("key"), n,
           col("quality"), col("doc_id"), bucketWidth = 8L)
@@ -130,8 +126,6 @@ class QuotaPropertySpec extends AnyFunSuite {
         .contains("__b2"))
       assert(!run(uniform, 50).queryExecution.optimizedPlan.toString
         .contains("__b2"))
-      org.apache.spark.sql.graftbridge.Bridge.release(modal)
-      org.apache.spark.sql.graftbridge.Bridge.release(uniform)
     } finally spark.conf.unset("spark.graft.boundarySplit.rows")
   }
 }

@@ -337,14 +337,14 @@ class ServingConsistencySpec extends AnyFunSuite {
         .select(col("text")).as[String].collect()
         .map(t => t.split(" ").distinct.sorted.mkString(" "))
         .groupBy(identity).map { case (k, v) => k -> v.size.toLong }
-    for (crashAfter <- Seq("report", "archive", "snap", "sig")) {
+    for (crashAfter <- Seq("report", "archive", "snap", "sig")) Checkpoint.scope {
       val base = graft.queries.Drives.tempDir(s"graft_crash_$crashAfter")
       val corpus = s"$base/corpus"
       def applyFull(v: Long, log: org.apache.spark.sql.DataFrame) =
         Curation.managedVersionedApplyBatch(log, v, corpus, s"$base/sig",
           s"$base/report", rules, nBuckets = 2)
       assert(applyFull(0L, full(snapA.limit(0), snapA)))
-      val log1 = full(snapA, snapB).localCheckpoint(true)
+      val log1 = Checkpoint(full(snapA, snapB))
       // drive the torn prefix
       val steps = Seq("report", "archive", "snap", "sig")
       steps.take(steps.indexOf(crashAfter) + 1).foreach {
@@ -389,7 +389,6 @@ class ServingConsistencySpec extends AnyFunSuite {
       assert(Curation.readSigStore(spark, s"$base/sig")
         .as[(String, Long)].collect().toMap == census(snapB),
         s"crash=$crashAfter: sig census diverged")
-      org.apache.spark.sql.graftbridge.Bridge.release(log1)
     }
   }
 
@@ -444,14 +443,14 @@ class ServingConsistencySpec extends AnyFunSuite {
         .select(col("text")).as[String].collect()
         .map(t => t.split(" ").distinct.sorted.mkString(" "))
         .groupBy(identity).map { case (k, v) => k -> v.size.toLong }
-    for (crashAfter <- Seq("report", "archive", "snap", "sig")) {
+    for (crashAfter <- Seq("report", "archive", "snap", "sig")) Checkpoint.scope {
       val base = graft.queries.Drives.tempDir(s"graft_vi_crash_$crashAfter")
       val corpus = s"$base/corpus"
       def applyFull(v: Long, log: org.apache.spark.sql.DataFrame) =
         Curation.managedVersionedApplyBatchIsolated(log, v, corpus,
           s"$base/sig", s"$base/report", rules, nBuckets = 2)
       assert(applyFull(0L, full(snapA.limit(0), snapA)))
-      val log1 = full(snapA, snapB).localCheckpoint(true)
+      val log1 = Checkpoint(full(snapA, snapB))
       val steps = Seq("report", "archive", "snap", "sig")
       steps.take(steps.indexOf(crashAfter) + 1).foreach {
         case "report" =>
@@ -494,7 +493,6 @@ class ServingConsistencySpec extends AnyFunSuite {
       assert(Curation.readSigStoreCommitted(spark, s"$base/sig")
         .as[(String, Long)].collect().toMap == census(snapB),
         s"crash=$crashAfter: sig census diverged")
-      org.apache.spark.sql.graftbridge.Bridge.release(log1)
     }
   }
 

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Each consolidated mechanism stays in its one home under
   * `src/main/scala`: the session builder in [[graft.Session]], memo maps
-  * and temp dirs in [[graft.queries.Drives]].
+  * and temp dirs in [[graft.queries.Drives]], eager checkpoints in
+  * [[graft.Checkpoint]].
   */
 class SourceLayoutSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -33,6 +34,13 @@ class SourceLayoutSpec extends AnyFunSuite {
   test("memo maps and temp dirs only in graft.queries.Drives") {
     Seq("ConcurrentHashMap", "createTempDirectory").foreach { t =>
       assert(strays(t, "graft/queries/Drives.scala").isEmpty, t)
+    }
+  }
+
+  test("eager checkpoints only through graft.Checkpoint, no hand release") {
+    assert(strays("localCheckpoint(", "graft/Checkpoint.scala").isEmpty)
+    Seq("Bridge.release", "isMaterialized").foreach { t =>
+      assert(strays(t, "").isEmpty, t)
     }
   }
 }
