@@ -16,15 +16,14 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     def build(): SparkSession = {
       val s = Session(cpus)
-      // untimed warmup: codegen + parquet footer/file-status caches for
-      // EVERY table, so neither the first timed query nor the post-recycle
-      // rerun pass is charged cold-scan costs (lineitem-only warmup left
-      // the d-family reruns paying cold documents footers: 13.4 s rerun vs
-      // 9.4 s in-suite for d7 in the r8 dev run)
+      // untimed warmup: codegen, and every table resolved in this session
+      // (Tables' per-session cache) and scanned once, so neither the first
+      // timed query nor the post-recycle rerun pass is charged cold-scan
+      // costs (lineitem-only warmup left the d-family reruns paying cold
+      // documents footers: 13.4 s rerun vs 9.4 s in-suite for d7 in the r8
+      // dev run)
       try {
-        Seq("lineitem", "orders", "customer", "part", "supplier", "nation",
-          "region", "events", "documents", "embeddings")
-          .foreach(t => s.read.parquet(s"$sfDir/$t.parquet").count())
+        Tables.names.foreach(t => Tables.table(s, sfDir, t).count())
         SparkEntry.queries("q1_pricing_summary")(s, sfDir).count()
       } catch { case _: Throwable => }
       s

@@ -288,10 +288,12 @@ object RedsetPipeline {
                            extraParts: Seq[String] = Nil): Unit = {
         // repartition on the FULL partition-column tuple: each task then
         // owns exactly one output dir (still one file per dir — no
-        // small-files regression), but writer parallelism is the number of
-        // (bucket, day) dirs instead of just buckets — a 16-bucket × 30-day
-        // batch engages every core instead of 16 writers doing 30
-        // sequential file opens each. Same layout, same file count.
+        // small-files regression). Same layout, same file count. Writer
+        // parallelism is bounded by the (bucket, day) dirs, not the
+        // buckets, only while AQE keeps the shuffle's partitions apart: at
+        // fixture sizes (about 10,000 records a batch) it coalesces them
+        // into ONE task, so a single writer opens every dir in turn, and
+        // the output_table write is incrementalBatch's largest job.
         val partCols = ("bucket" +: extraParts).map(col)
         df.repartition(partCols: _*).write.mode("overwrite")
           .partitionBy("bucket" +: extraParts: _*).parquet(tmp)

@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column <-> Expression bridge. Spark 4 made these helpers private[sql];
@@ -12,6 +13,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A DataFrame over `plan` (`classic.Dataset.ofRows`, private[sql]). */
+  def ofPlan(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** Decompose a `.asc`/`.desc` Column into
     * `(child, isDescending, isDefaultNullOrdering)`; None for a plain

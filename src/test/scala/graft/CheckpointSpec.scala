@@ -84,30 +84,11 @@ class CheckpointSpec extends AnyFunSuite {
   }
 
   test("Checkpoint of a bare checkpoint is the frame itself and runs no job") {
-    val sc = spark.sparkContext
     val ck = Checkpoint(frame(3))
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(String.valueOf(
-          Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
-    sc.addSparkListener(listener)
     try {
-      sc.setJobGroup("checkpoint-again", "checkpoint a checkpoint")
-      assert(Checkpoint(ck) eq ck)
-      sc.setJobGroup("checkpoint-flush", "listener flush")
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 60000000000L
-      while (!jobs.contains("checkpoint-flush") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(jobs.contains("checkpoint-flush"))
-      assert(!jobs.contains("checkpoint-again"))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-      free(ck)
-    }
+      val (again, jobs) = TestSpark.jobsDuring(Checkpoint(ck))
+      assert((again eq ck) && jobs == 0)
+    } finally free(ck)
   }
 
   test("Checkpoint.next holds at most two rounds of a loop") {

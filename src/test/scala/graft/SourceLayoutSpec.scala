@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Each consolidated mechanism stays in its one home under
   * `src/main/scala`: the session builder in [[graft.Session]], memo maps
   * and temp dirs in [[graft.queries.Drives]], eager checkpoints in
-  * [[graft.Checkpoint]].
+  * [[graft.Checkpoint]], fixture file reads in [[graft.Tables]].
   */
 class SourceLayoutSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -35,6 +35,16 @@ class SourceLayoutSpec extends AnyFunSuite {
     Seq("ConcurrentHashMap", "createTempDirectory").foreach { t =>
       assert(strays(t, "graft/queries/Drives.scala").isEmpty, t)
     }
+  }
+
+  test("fixture files (<sf dir>/<table>.parquet) opened only in graft.Tables") {
+    // a name or interpolation directly before `.parquet"`: `$t.parquet"`,
+    // `${name}.parquet"`, `events.parquet"`; not a bare `".parquet"` suffix
+    val fixture = "[A-Za-z0-9_}]\\.parquet\"".r
+    val opened = sources.collect {
+      case (f, src) if f != "graft/Tables.scala" && fixture.findFirstIn(src).nonEmpty => f
+    }
+    assert(opened.isEmpty, opened)
   }
 
   test("eager checkpoints only through graft.Checkpoint, no hand release") {
